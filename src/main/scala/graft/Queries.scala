@@ -228,7 +228,7 @@ object Queries {
     * fixed load/commit file round trip per micro-batch regardless of
     * row volume. The count is pinned into the CHECKPOINT at first start,
     * so it must be sized to expected state volume up front: the round-11
-    * diagnosis (tools/StreamDiag) measured the 40k-row interval join at
+    * diagnosis (StreamDiag probe) measured the 40k-row interval join at
     * 9.9 s under the inherited 32-partition default (128 instances × 3
     * batches of pure per-instance overhead) vs 3.9 s at 4 partitions.
     * At 100 TB/day the same knob is sized UP (state volume / a few
@@ -6172,7 +6172,7 @@ object Queries {
       // rows of state, so 4 state partitions (16 store instances, not
       // 128); the inner join emits matches in the arrival batch, so the
       // trailing no-data eviction batch is skipped — result-identical,
-      // measured 9.9 s -> 3.9 s (tools/StreamDiag, round 11).
+      // measured 9.9 s -> 3.9 s (StreamDiag probe, round 11).
       withStreamingConfs(s, statePartitions = 4, noDataBatch = false) {
         val cs = s.readStream.schema(clicks.schema)
           .option("maxFilesPerTrigger", 1).parquet(s"$base/clicks")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesizes an sf1-equivalent corpus by replicating the sf0.1
@@ -61,13 +61,7 @@ object ScaleData {
     require(args.length >= 2, "usage: ScaleData <srcDir> <dstDir> [copies]")
     val (srcDir, dstDir) = (args(0), args(1))
     val copies = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .appName("graft-scaledata")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session()
 
     def src(t: String) = spark.read.parquet(s"$srcDir/$t.parquet")
 

@@ -1,34 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // raw local FileContext — same rationale and measurement as
-      // Bench.scala: the correctness dump must exercise the exact
-      // checkpoint I/O stack the bench times
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        "org.apache.hadoop.fs.local.RawLocalFs")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // skip .crc sidecar writes on the cached local FileSystem — the
-    // FileSystem-API twin of the FileContext rebind above (see
-    // Bench.scala for the rationale and the RocksDB caveat)
-    locally {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI("file:///"), spark.sparkContext.hadoopConfiguration)
-      fs.setWriteChecksum(false)
-      fs.setVerifyChecksum(false)
-    }
-    GraftExtensions.applyRecommendedConfs(spark)
+    // Bench's profile: the correctness dump checks the plans the bench times
+    val spark = Bench.session()
     new java.io.File(outDir).mkdirs()
     // Failures must be LOUD: a query that throws writes no parquet, so the
     // driver's correctness file would silently shrink (it did in round 8,

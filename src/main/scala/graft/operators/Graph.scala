@@ -303,10 +303,11 @@ object Graph {
     import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
     val childF = edgeSchema("child")
     val parentF = edgeSchema("parent")
+    // the distributed rounds' schema, nullability included
     val schema = StructType(Seq(
-      StructField("child", childF.dataType, childF.nullable),
-      StructField("ancestor", parentF.dataType, parentF.nullable),
-      StructField("depth", IntegerType, nullable = false)))
+      StructField("child", childF.dataType, nullable = true),
+      StructField("ancestor", parentF.dataType, nullable = true),
+      StructField("depth", IntegerType, nullable = true)))
     Some(spark.createDataFrame(out.asJava, schema))
   }
 
@@ -562,9 +563,10 @@ object Graph {
     nRows.foreach(r => out += Row(r.get(0), rank.get(r.get(0))))
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    // the distributed rounds' schema, nullability included
     val schema = StructType(Seq(
       StructField("node", nodeField.dataType, nodeField.nullable),
-      StructField("rank_scaled", LongType, nullable = false)))
+      StructField("rank_scaled", LongType, nullable = true)))
     spark.createDataFrame(out.asJava, schema)
   }
 
@@ -705,10 +707,11 @@ object Graph {
       hubs.getOrDefault(r.get(0), 0L), auths.getOrDefault(r.get(0), 0L)))
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    // the distributed rounds' schema, nullability included
     val schema = StructType(Seq(
       StructField("node", nodeField.dataType, nodeField.nullable),
-      StructField("hub_scaled", LongType, nullable = false),
-      StructField("auth_scaled", LongType, nullable = false)))
+      StructField("hub_scaled", LongType, nullable = true),
+      StructField("auth_scaled", LongType, nullable = true)))
     spark.createDataFrame(out.asJava, schema)
   }
 
@@ -750,9 +753,10 @@ object Graph {
     nRows.foreach(r => out += Row(r.get(0), rank.get(r.get(0))))
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    // the distributed rounds' schema, nullability included
     val schema = StructType(Seq(
       StructField("node", nodeField.dataType, nodeField.nullable),
-      StructField("rank_scaled", LongType, nullable = false)))
+      StructField("rank_scaled", LongType, nullable = true)))
     spark.createDataFrame(out.asJava, schema)
   }
 
@@ -803,15 +807,17 @@ object Graph {
     nRows.foreach(r => out += Row(r.get(0), rank.get(r.get(0))))
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    // the distributed rounds' schema, nullability included
     val schema = StructType(Seq(
       StructField("node", nodeField.dataType, nodeField.nullable),
-      StructField("rank_scaled", LongType, nullable = false)))
+      StructField("rank_scaled", LongType, nullable = true)))
     spark.createDataFrame(out.asJava, schema)
   }
 
   /** Connected components by iterative min-label propagation: every node
-    * adopts the smallest id reachable so far; converges in O(diameter)
-    * rounds (near-dup clusters are shallow, so typically 2-4). Each round
+    * adopts the smallest id reachable so far; the loop runs until no
+    * label changes, which takes at most diameter rounds (near-dup
+    * clusters are shallow, so typically 2-4). Each round
     * is one keyed join + a min-aggregate; the previous label rides along
     * through that same aggregate, so convergence is a cheap scan of the
     * already-materialized round output — no extra join, no recompute.
@@ -835,7 +841,7 @@ object Graph {
     * component = min node id in the cluster. Isolated nodes only appear
     * if present as self-edges or in `extraNodes`.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 20,
+  def connectedComponents(edges: DataFrame,
                           extraNodes: Option[DataFrame] = None,
                           workDir: Option[String] = None,
                           checkpointInterval: Int = 2,
@@ -894,17 +900,17 @@ object Graph {
     var finalName = "labels-1"
     var converged = labels.filter(col("component") =!= col("prev")).isEmpty
     var iter = 1
-    while (iter < maxIter && !converged) {
-      val rounds = math.min(checkpointInterval, maxIter - iter)
-      // chain `rounds` propagation rounds lazily into ONE write. In each
-      // round, neighbor-propagated candidates carry prev=null and each
-      // node's own row carries prev through; min(prev) ignores nulls and
-      // every node has exactly one own-row per round, so the BLOCK-START
-      // label survives to the materialization, where the changed-test is
-      // a plain scan of the files just written — no extra join.
+    while (!converged) {
+      // chain `checkpointInterval` propagation rounds lazily into ONE
+      // write. In each round, neighbor-propagated candidates carry
+      // prev=null and each node's own row carries prev through;
+      // min(prev) ignores nulls and every node has exactly one own-row
+      // per round, so the BLOCK-START label survives to the
+      // materialization, where the changed-test is a plain scan of the
+      // files just written — no extra join.
       var cur = labels.select(col("node"), col("component"),
         col("component").as("prev"))
-      for (_ <- 1 to rounds) {
+      for (_ <- 1 to checkpointInterval) {
         val candidates = sym.alias("s").join(cur.alias("l"),
             col("s.dst") === col("l.node"))
           .select(col("s.src").as("node"), col("l.component").as("component"),
@@ -913,7 +919,7 @@ object Graph {
         cur = candidates.groupBy("node")
           .agg(min(col("component")).as("component"), min(col("prev")).as("prev"))
       }
-      iter += rounds
+      iter += checkpointInterval
       val next = save(cur, s"labels-$iter")
       converged = next.filter(col("component") =!= col("prev")).isEmpty
       labels = next
@@ -1253,9 +1259,10 @@ object Graph {
     hop.forEach((v, d) => out += Row(v, d))
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    // the distributed rounds' schema, nullability included
     spark.createDataFrame(out.asJava, StructType(Seq(
       StructField("vertex", vertexField.dataType, vertexField.nullable),
-      StructField("hop", LongType, nullable = false))))
+      StructField("hop", LongType, nullable = true))))
   }
 
   /** Bounded single/multi-source shortest paths over an undirected
@@ -1350,9 +1357,10 @@ object Graph {
     cost.forEach((v, c) => out += Row(v, c))
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    // the distributed rounds' schema, nullability included
     spark.createDataFrame(out.asJava, StructType(Seq(
       StructField("vertex", vertexField.dataType, vertexField.nullable),
-      StructField("cost", LongType, nullable = false))))
+      StructField("cost", LongType, nullable = true))))
   }
 
   /** Common-neighbor link prediction: for every NON-adjacent canonical
@@ -1544,9 +1552,10 @@ object Graph {
     labels.forEach((v, l) => out += Row(v, l))
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.types.{StructField, StructType}
+    // the distributed rounds' schema, nullability included
     spark.createDataFrame(out.asJava, StructType(Seq(
       StructField("vertex", vertexField.dataType, vertexField.nullable),
-      StructField("label", vertexField.dataType, vertexField.nullable))))
+      StructField("label", vertexField.dataType, nullable = true))))
   }
 
   /** Bounded k-core peeling: `rounds` synchronous rounds of "drop every

@@ -313,7 +313,7 @@ object Dedup {
     * one side is new, ordered id_a < id_b.
     *
     * maxBucket is a pure cost knob (never recall): the r15 sf10 ladder
-    * (tools/SimhashCapProbe, caps 8000/2000/1000/500, pair set
+    * (SimhashCapProbe, caps 8000/2000/1000/500, pair set
     * hash-identical at every cap) measured the probe leg FLAT across
     * caps within single-box noise (9.6-20 s at 500k docs), so the
     * default matches the batch operator's measured optimum.
@@ -346,8 +346,7 @@ object Dedup {
     // whole new-vs-store candidate verify (output >> input — the shape
     // AQE's input-size coalescing cannot see) runs in one or two tasks.
     // An explicit-count repartition is exempt from AQE coalescing.
-    val shuffleN = math.max(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt, 1)
+    val shuffleN = spark.sessionState.conf.defaultNumShufflePartitions
     val storeB = chunkBuckets(store).repartition(shuffleN, col("chunk"), col("cv"))
     val hot = storeB.groupBy(col("chunk"), col("cv"))
       .agg(count(lit(1)).as("__n"))
@@ -424,7 +423,7 @@ object Dedup {
     * OUTPUT is itself quadratic, so generation is output-bound.
     *
     * Where on the ladder to sit: the r15 sf10 probe
-    * (tools/SimhashCapProbe; pair set hash-identical at every cap)
+    * (SimhashCapProbe; pair set hash-identical at every cap)
     * measured 8000 ≫ lower caps for this batch path — 24.8 s vs 27.9 /
     * 113.7 / 141.8 s at caps 2000/1000/500 on 500k docs: descending a
     * refine level re-explodes every hot bucket ×(maxHamming+1), so
@@ -454,8 +453,7 @@ object Dedup {
     // output dwarfs its input (the classic exploding-stage shape AQE
     // cannot see). An explicit-count repartition is exempt from AQE
     // coalescing, so the pair loops run at full width.
-    val shuffleN = math.max(
-      docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, 1)
+    val shuffleN = docs.sparkSession.sessionState.conf.defaultNumShufflePartitions
     val grouped = buckets.repartition(shuffleN, col("chunk"), col("cv"))
       .groupBy(col("chunk"), col("cv"))
       .agg(collect_list(struct(col(idCol), col("simhash"))).as("__m"))

@@ -1,11 +1,23 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Clean, Graph}
 import graft.schema.TmdbCorpus
 
 class GraphSpec extends SparkTestBase {
   import spark.implicits._
+
+  /** An adaptive graph op's driver twin (under the default driverRows)
+    * and its distributed loop (driverRows = 0) must return the same
+    * schema, nullability included, and the same rows.
+    */
+  private def assertTwins(op: Int => DataFrame): Unit = {
+    val (driver, dist) = (op(100000), op(0))
+    assert(driver.schema == dist.schema)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(driver) == rows(dist))
+  }
 
   test("J3: edge builder drops edges with missing endpoints (MATCH semantics)") {
     val cands = Seq((1L, 10L), (1L, 99L), (7L, 10L)).toDF("head_id", "tail_id")
@@ -50,13 +62,10 @@ class GraphSpec extends SparkTestBase {
       (5L, 6L), (6L, 5L),                     // 2-cycle
       (7L, 8L), (7L, 8L)                      // duplicate edge
     ).toDF("child", "parent")
-    def sorted(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    val driver = Graph.ancestorClosure(edges) // under threshold
-    val dist = Graph.ancestorClosure(edges, driverRows = 0) // force loop
-    assert(sorted(driver) == sorted(dist))
+    assertTwins(d => Graph.ancestorClosure(edges, driverRows = d))
     // per-path multiplicity preserved: (1, 4, 2) appears twice
-    assert(sorted(driver).count(_ == (1L, 4L, 2)) == 2)
+    assert(Graph.ancestorClosure(edges).collect()
+      .count(r => (r.getLong(0), r.getLong(1), r.getInt(2)) == (1L, 4L, 2)) == 2)
   }
 
   test("J4: recursive-CTE idiom agrees with the iterative closure") {
@@ -111,10 +120,7 @@ class GraphSpec extends SparkTestBase {
     // and a non-node source that must carry no rank
     val messy = Seq((1L, 2L), (1L, 99L), (98L, 1L), (2L, 1L)).toDF("src", "dst")
     val mn = Seq(1L, 2L, 3L).toDF("node")
-    def ranksOf(driverRows: Int) =
-      Graph.pageRankScaled(messy, mn, iterations = 3, driverRows = driverRows)
-        .collect().map(x => (x.getLong(0), x.getLong(1))).toMap
-    assert(ranksOf(100000) == ranksOf(0))
+    assertTwins(d => Graph.pageRankScaled(messy, mn, iterations = 3, driverRows = d))
   }
 
   test("pageRankWeightedScaled: weights steer the flow; driver == distributed") {
@@ -139,10 +145,7 @@ class GraphSpec extends SparkTestBase {
     // driver fast path == distributed rounds bit for bit
     val big = Seq((1L, 2L, 5L), (2L, 3L, 2L), (3L, 1L, 7L), (1L, 3L, 1L))
       .toDF("src", "dst", "w")
-    def of(driverRows: Int) =
-      Graph.pageRankWeightedScaled(big, n, iterations = 3, driverRows = driverRows)
-        .collect().map(x => (x.getLong(0), x.getLong(1))).toMap
-    assert(of(100000) == of(0))
+    assertTwins(d => Graph.pageRankWeightedScaled(big, n, iterations = 3, driverRows = d))
   }
 
   test("personalizedPageRankScaled: seed restart by hand; driver == distributed") {
@@ -162,11 +165,8 @@ class GraphSpec extends SparkTestBase {
     val messy = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 99L), (98L, 2L))
       .toDF("src", "dst")
     val seeds = Seq(1L, 1L, 3L, 77L).toDF("node")
-    def of(driverRows: Int) =
-      Graph.personalizedPageRankScaled(messy, n, seeds, iterations = 3,
-          driverRows = driverRows)
-        .collect().map(x => (x.getLong(0), x.getLong(1))).toMap
-    assert(of(100000) == of(0))
+    assertTwins(d => Graph.personalizedPageRankScaled(messy, n, seeds, iterations = 3,
+      driverRows = d))
   }
 
   test("hitsScaled: star graph by hand, checkpoint invariance, edgeless zeros") {
@@ -197,10 +197,7 @@ class GraphSpec extends SparkTestBase {
     // driver fast path == distributed rounds bit for bit, incl. edges
     // with a non-node endpoint (dropped on both paths)
     val messy = e.union(Seq((1L, 99L), (98L, 2L)).toDF("src", "dst"))
-    def hitsOf(driverRows: Int) =
-      Graph.hitsScaled(messy, n, iterations = 2, driverRows = driverRows)
-        .collect().map(x => (x.getLong(0), (x.getLong(1), x.getLong(2)))).toMap
-    assert(hitsOf(100000) == hitsOf(0))
+    assertTwins(d => Graph.hitsScaled(messy, n, iterations = 2, driverRows = d))
   }
 
   test("resourceAllocation: hand-computed hub discount, adjacency excluded") {
@@ -245,9 +242,14 @@ class GraphSpec extends SparkTestBase {
 
   test("connected components converge on a long path within diameter rounds") {
     val path = (1L until 20L).map(i => (i, i + 1)).toDF("src", "dst")
-    val comps = Graph.connectedComponents(path, maxIter = 25)
+    val comps = Graph.connectedComponents(path)
     assert(comps.select("component").distinct().count() == 1)
     assert(comps.filter(col("component") =!= 1L).isEmpty)
+    // diameter 59: the distributed loop must run past any fixed round
+    // budget and still reach the driver union-find's labels
+    val long = (1L until 60L).map(i => (i, i + 1)).toDF("src", "dst")
+    assertTwins(d => Graph.connectedComponents(long, driverRows = d))
+    assert(Graph.connectedComponents(long).filter(col("component") =!= 1L).isEmpty)
   }
 
   test("large-star/small-star components match min-label on random graphs") {
@@ -261,17 +263,14 @@ class GraphSpec extends SparkTestBase {
       // three independent solvers must agree: driver union-find (the
       // small-graph fast path), the distributed min-label loop
       // (driverRows=0 forces it), and large-star/small-star
-      val byUnionFind = Graph.connectedComponents(edges, maxIter = 50,
-          extraNodes = Some(nodes))
-        .as[(Long, Long)].collect().toMap
-      val byLabel = Graph.connectedComponents(edges, maxIter = 50,
-          extraNodes = Some(nodes), driverRows = 0)
+      assertTwins(d => Graph.connectedComponents(edges,
+        extraNodes = Some(nodes), driverRows = d))
+      val byUnionFind = Graph.connectedComponents(edges, extraNodes = Some(nodes))
         .as[(Long, Long)].collect().toMap
       val byStar = Graph.connectedComponentsStar(edges,
           extraNodes = Some(nodes))
         .as[(Long, Long)].collect().toMap
-      assert(byStar == byLabel, s"trial $trial: algorithms disagree")
-      assert(byUnionFind == byLabel, s"trial $trial: driver path disagrees")
+      assert(byStar == byUnionFind, s"trial $trial: algorithms disagree")
     }
   }
 
@@ -383,29 +382,19 @@ class GraphSpec extends SparkTestBase {
       (7L, 8L)                                // separate component
     ).toDF("src", "dst")
     val seeds = Seq(1L, 42L).toDF("n") // 42 is not in the graph
-    def bfs(driverRows: Int) =
-      Graph.bfsHops(edges, "src", "dst", seeds, "n", maxHops = 3,
-        driverRows = driverRows).as[(Long, Long)].collect().toMap
-    assert(bfs(100000) == bfs(0))
+    assertTwins(d => Graph.bfsHops(edges, "src", "dst", seeds, "n", maxHops = 3,
+      driverRows = d))
 
     val wedges = Seq(
       (1L, 2L, 1L), (2L, 3L, 2L), (3L, 4L, 1L), (4L, 1L, 10L),
       (1L, 3L, 7L), (1L, 3L, 5L) // parallel edges, min collapses
     ).toDF("src", "dst", "w")
-    def sssp(driverRows: Int) =
-      Graph.ssspBounded(wedges, "src", "dst", "w", seeds, "n", maxHops = 3,
-        driverRows = driverRows).as[(Long, Long)].collect().toMap
-    assert(sssp(100000) == sssp(0))
-
-    def lp(driverRows: Int) =
-      Graph.labelPropagation(edges, "src", "dst", rounds = 3,
-        driverRows = driverRows).as[(Long, Long)].collect().toMap
-    assert(lp(100000) == lp(0))
-
-    def core(driverRows: Int) =
-      Graph.kCore(edges, "src", "dst", k = 2L, rounds = 3,
-        driverRows = driverRows).as[(Long, Long)].collect().toMap
-    assert(core(100000) == core(0))
+    assertTwins(d => Graph.ssspBounded(wedges, "src", "dst", "w", seeds, "n",
+      maxHops = 3, driverRows = d))
+    assertTwins(d => Graph.labelPropagation(edges, "src", "dst", rounds = 3,
+      driverRows = d))
+    assertTwins(d => Graph.kCore(edges, "src", "dst", k = 2L, rounds = 3,
+      driverRows = d))
 
     // null ids must take the distributed loop, not NPE in the twin
     val withNull = Seq((Some(1L), Some(2L)), (None, Some(3L)))

@@ -77,7 +77,7 @@ class SkewExtensionsSpec extends SparkTestBase {
     // salting spreads the hot key over (key, salt) partitions BEFORE the
     // exchange, so AQE should find nothing left to split — and the
     // result must equal the plain join with AQE on or off.
-    // Threshold calibration, MEASURED via tools/SkewProbe (map-output
+    // Threshold calibration, MEASURED by a SkewProbe run (map-output
     // bytesByPartitionId on this exact fixture): the hot key carries 90%
     // of 200k rows -> the unsalted join's hot post-shuffle partition is
     // ~962KB; after 16 salts the largest partition (3 colliding salts)

@@ -5,19 +5,15 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session across all suites (getOrCreate returns the
   * same session; ScalaTest runs suites in one JVM with Test/fork=true).
+  * It is Bench's profile at a fixed 4 cores, so plan-shape assertions do
+  * not follow the host's core count.
   */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    // a static conf, so a system property read when the first session
+    // is built; ScaleSpec looks for its managed tables here
+    System.setProperty("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
+    Bench.session("4")
   }
 
   def sf(name: String) = s"/root/testdata/$name"
