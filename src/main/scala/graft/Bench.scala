@@ -42,6 +42,7 @@ object Bench {
     // cliff instead of a breakage. Failures keep their elapsed time but
     // are also named in an "errors" key on the output line.
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    val (gcCount0, gcMs0) = gcTotals()
     val results = selected.map { case (name, fn) =>
       val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
@@ -55,6 +56,9 @@ object Bench {
       Queries.drainScratch()
       name -> times.min
     }
+    // GC over the timed loop, all collectors: what the heap size costs
+    // on this host's core count, next to the query times it bought
+    val (gcCount1, gcMs1) = gcTotals()
     // centisecond-rounded per-query values (trailing zeros stripped) keep
     // the ONE output line well under a bounded log-tail capture even at
     // ~85 queries; finer precision adds nothing at this noise floor. The
@@ -63,6 +67,8 @@ object Bench {
     import java.math.{BigDecimal => JBD, RoundingMode}
     def cents(v: Double): JBD = new JBD(v).setScale(2, RoundingMode.HALF_UP)
     def js(b: JBD): String = b.stripTrailingZeros.toPlainString
+    val gcField =
+      s""""gc_count":${gcCount1 - gcCount0},"gc_s":${js(cents((gcMs1 - gcMs0) / 1e3))},"""
     val rounded = results.map { case (k, v) => k -> cents(v) }
     val qs = rounded.map { case (k, b) => "\"" + k + "\":" + js(b) }
       .mkString("{", ",", "}")
@@ -76,7 +82,7 @@ object Bench {
     val errs = if (failed.isEmpty) ""
       else failed.map("\"" + _ + "\"").mkString(",\"errors\":[", ",", "]")
     val line =
-      s"""{"metric":"total","value":${js(total)},"unit":"sec","queries":$qs,"sf":"$sfName"$errs}"""
+      s"""{"metric":"total","value":${js(total)},"unit":"sec",$gcField"queries":$qs,"sf":"$sfName"$errs}"""
     println(line)
     // durable twin of the stdout line: tail captures are bounded (2000
     // chars), and the line crosses that around ~88 queries — the file
@@ -128,7 +134,7 @@ object Bench {
         .getBytes("UTF-8"))
       h.take(6).map("%02x".format(_)).mkString
     }
-    val head = s"""{"metric":"total","value":${js(total)},"unit":"sec","n_queries":${rounded.size},$subsetField"names_hash":"$namesHash",$valuesField"queries_file":"BENCH_LAST.json","sf":"$sfName"$errs,"queries":{"""
+    val head = s"""{"metric":"total","value":${js(total)},"unit":"sec","n_queries":${rounded.size},$gcField$subsetField"names_hash":"$namesHash",$valuesField"queries_file":"BENCH_LAST.json","sf":"$sfName"$errs,"queries":{"""
     val budget = 1800 - head.length - 2
     val kept = scala.collection.mutable.ListBuffer.empty[String]
     var used = 0
@@ -139,6 +145,13 @@ object Bench {
     println(head + kept.mkString(",") + "}}")
     Tables.invalidate(spark)
     spark.stop()
+  }
+
+  /** (collections, collection ms) summed over every garbage collector. */
+  private def gcTotals(): (Long, Long) = {
+    import scala.jdk.CollectionConverters._
+    val beans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
+    (beans.map(_.getCollectionCount.max(0L)).sum, beans.map(_.getCollectionTime.max(0L)).sum)
   }
 
   /** The engine's one session profile. Bench, Verify, Explain, Stress,

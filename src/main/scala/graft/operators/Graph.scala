@@ -41,6 +41,9 @@ object Graph {
       "file:" + dir.toString
     }
     private val written = scala.collection.mutable.ArrayBuffer.empty[String]
+    // the RDDs each in-memory round's localCheckpoint persisted, by round
+    private val checkpointed =
+      scala.collection.mutable.Map.empty[String, Iterable[org.apache.spark.rdd.RDD[_]]]
     // set after the FIRST save (always the algorithm's base table — edge
     // list / depth-1 frontier) lands on files: a tiny base means every
     // later round is tiny too, so rounds localCheckpoint in memory
@@ -62,6 +65,8 @@ object Graph {
         val beforeIds = spark.sparkContext.getPersistentRDDs.keySet
         val before = checkpointedBytes
         val cp = df.localCheckpoint(true)
+        val blocks = spark.sparkContext.getPersistentRDDs
+          .filter { case (id, _) => !beforeIds.contains(id) }.values
         // re-check per save: closures/frontiers can outgrow a small base
         // by orders of magnitude (e.g. deep ancestor closures), and every
         // oversized checkpointed round pins executor memory. Once one
@@ -74,11 +79,12 @@ object Graph {
           val path = s"$base/$name"
           cp.write.mode("overwrite").parquet(path)
           written += name
-          spark.sparkContext.getPersistentRDDs
-            .filter { case (id, _) => !beforeIds.contains(id) }
-            .values.foreach(_.unpersist(blocking = false))
+          blocks.foreach(_.unpersist(blocking = false))
           spark.read.parquet(path)
-        } else cp
+        } else {
+          checkpointed(name) = blocks
+          cp
+        }
       } else {
         val path = s"$base/$name"
         df.write.mode("overwrite").parquet(path)
@@ -106,13 +112,17 @@ object Graph {
         .getContentSummary(p).getLength
     }
 
-    /** Drop every owned written table except `keep` (the tables the
-      * returned frame may still read). No-op when the caller owns the
-      * dir. Small-graph checkpointed rounds are self-contained (lineage
-      * truncated), so only file tables need bookkeeping.
+    /** Drop every owned round except `keep` (the tables the returned
+      * frame may still read): unpersist the other in-memory rounds'
+      * checkpoint blocks, which would otherwise stay in the block manager
+      * until a GC lets the ContextCleaner find them, and delete the other
+      * file tables. No-op when the caller owns the dir (its rounds are
+      * all files, by request).
       */
     def cleanupExcept(keep: String*): Unit = if (owned) {
       val ks = keep.toSet
+      checkpointed.filterNot { case (name, _) => ks(name) }
+        .values.flatten.foreach(_.unpersist(blocking = false))
       val conf = spark.sparkContext.hadoopConfiguration
       val basePath = new org.apache.hadoop.fs.Path(base)
       val fs = basePath.getFileSystem(conf)
@@ -128,6 +138,25 @@ object Graph {
   private object RoundStore {
     /** Base-table size under which rounds stay in memory (64 MB). */
     val smallGraphBytes: Long = 64L << 20
+  }
+
+  /** Whether collected values of these key columns hash and compare by
+    * value, as the driver twins' java.util maps and sets need. Binary
+    * values collect as `Array[Byte]`, which compares by reference (also
+    * inside a struct or array), where the distributed joins compare
+    * bytes — so a binary-keyed graph takes the distributed loop. The
+    * long-only twins (components, bfs, sssp, label propagation, k-core)
+    * already exclude it by their LongType gate.
+    */
+  private def valueKeyed(keys: org.apache.spark.sql.types.StructField*): Boolean = {
+    import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StructType}
+    def binary(t: DataType): Boolean = t match {
+      case BinaryType    => true
+      case s: StructType => s.fields.exists(f => binary(f.dataType))
+      case a: ArrayType  => binary(a.elementType)
+      case _             => false
+    }
+    !keys.exists(k => binary(k.dataType))
   }
 
   /** J1/J2 "does this key already exist" probe, set-oriented: keep only
@@ -207,16 +236,18 @@ object Graph {
     val spark = edges.sparkSession
     val cp = edges.select(col("child"), col("parent"))
     val probe = cp.limit(driverRows + 1).collect()
-    if (probe.length <= driverRows) {
+    if (probe.length <= driverRows &&
+        valueKeyed(cp.schema("child"), cp.schema("parent"))) {
       driverClosure(spark, edges.schema, probe, maxDepth, driverRows) match {
         case Some(out) => return out
         case None      => () // path-count blowup: distributed loop below
       }
     }
-    // Small-edge-list fallback (driver BFS refused on path-count blowup):
-    // the full edge set is ALREADY on the driver — seed the loop from the
-    // collected rows instead of re-running the edges lineage, which may
-    // be an arbitrary upstream pipeline that the probe just paid for.
+    // Small-edge-list fallback (driver BFS refused on binary keys or on
+    // path-count blowup): the full edge set is ALREADY on the driver —
+    // seed the loop from the collected rows instead of re-running the
+    // edges lineage, which may be an arbitrary upstream pipeline that the
+    // probe just paid for.
     val src =
       if (probe.length <= driverRows)
         spark.createDataFrame(spark.sparkContext.parallelize(
@@ -359,7 +390,8 @@ object Graph {
     require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
     val spark = edges.sparkSession
     val eProbe = edges.select(col("src"), col("dst")).limit(driverRows + 1).collect()
-    if (eProbe.length <= driverRows) {
+    if (eProbe.length <= driverRows &&
+        valueKeyed(edges.schema("src"), edges.schema("dst"), nodes.schema("node"))) {
       val nProbe = nodes.select(col("node")).limit(driverRows + 1).collect()
       if (nProbe.length <= driverRows)
         return driverPageRank(spark, nodes.schema("node"), eProbe, nProbe,
@@ -426,7 +458,9 @@ object Graph {
     require(iterations >= 1, "iterations must be >= 1")
     val spark = edges.sparkSession
     val eProbe = edges.select(col("src"), col("dst")).limit(driverRows + 1).collect()
-    if (eProbe.length <= driverRows) {
+    if (eProbe.length <= driverRows &&
+        valueKeyed(edges.schema("src"), edges.schema("dst"), nodes.schema("node"),
+          seeds.schema("node"))) {
       val nProbe = nodes.select(col("node")).limit(driverRows + 1).collect()
       if (nProbe.length <= driverRows) {
         val sProbe = seeds.select(col("node")).limit(driverRows + 1).collect()
@@ -496,7 +530,8 @@ object Graph {
     val spark = edges.sparkSession
     val eProbe = edges.select(col("src"), col("dst"), col("w"))
       .limit(driverRows + 1).collect()
-    if (eProbe.length <= driverRows) {
+    if (eProbe.length <= driverRows &&
+        valueKeyed(edges.schema("src"), edges.schema("dst"), nodes.schema("node"))) {
       val nProbe = nodes.select(col("node")).limit(driverRows + 1).collect()
       if (nProbe.length <= driverRows)
         return driverWeightedPageRank(spark, nodes.schema("node"), eProbe,
@@ -606,7 +641,8 @@ object Graph {
     // distributed loop because every step is order-independent integer
     // arithmetic (equality pinned in GraphSpec)
     val eProbe = edges.select(col("src"), col("dst")).limit(driverRows + 1).collect()
-    if (eProbe.length <= driverRows) {
+    if (eProbe.length <= driverRows &&
+        valueKeyed(edges.schema("src"), edges.schema("dst"), nodes.schema("node"))) {
       val nProbe = nodes.select(col("node")).limit(driverRows + 1).collect()
       if (nProbe.length <= driverRows)
         return driverHits(spark, nodes.schema("node"), eProbe, nProbe,

@@ -15,9 +15,10 @@ class GraphSpec extends SparkTestBase {
   private def assertTwins(op: Int => DataFrame): Unit = {
     val (driver, dist) = (op(100000), op(0))
     assert(driver.schema == dist.schema)
-    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
     assert(rows(driver) == rows(dist))
   }
+
+  private def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
 
   test("J3: edge builder drops edges with missing endpoints (MATCH semantics)") {
     val cands = Seq((1L, 10L), (1L, 99L), (7L, 10L)).toDF("head_id", "tail_id")
@@ -300,6 +301,37 @@ class GraphSpec extends SparkTestBase {
     // self-contained, so the owned work dirs are removed entirely
     val created = roundDirs -- before
     assert(created.isEmpty, s"leaked owned work dirs: $created")
+  }
+
+  test("a small-graph distributed closure keeps only its result's checkpoint blocks") {
+    // on a small graph every round after the first is localCheckpointed
+    // in memory; once the closure is saved, the per-depth frontiers'
+    // blocks are released at once instead of waiting for a GC to reach
+    // the ContextCleaner
+    val sc = spark.sparkContext
+    val chain = (1L to 6L).map(i => (i, i + 1)).toDF("child", "parent")
+    val before = sc.getPersistentRDDs.keySet
+    val closure = Graph.ancestorClosure(chain, driverRows = 0)
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.size == 1, s"persisted RDDs left behind: $added")
+    assert(closure.count() == 21)
+  }
+
+  test("binary node keys take the distributed loop and match the string-keyed run") {
+    // Array[Byte] compares by reference in the driver twins' hash maps;
+    // at the default driverRows the unhex-ed graph must still rank and
+    // close exactly like its hex-string twin
+    val e = Seq(("0A", "0B"), ("0B", "0C"), ("0C", "0A"), ("0A", "0C"), ("0D", "0A"))
+      .toDF("src", "dst")
+    val n = Seq("0A", "0B", "0C", "0D").toDF("node")
+    def unhexed(df: DataFrame) = df.select(df.columns.map(c => unhex(col(c)).as(c)): _*)
+    def hexed(df: DataFrame, keys: String*) =
+      df.select(df.columns.map(c => if (keys.contains(c)) hex(col(c)).as(c) else col(c)): _*)
+    assert(rows(hexed(Graph.pageRankScaled(unhexed(e), unhexed(n), iterations = 3),
+      "node")) == rows(Graph.pageRankScaled(e, n, iterations = 3)))
+    val parents = e.toDF("child", "parent")
+    assert(rows(hexed(Graph.ancestorClosure(unhexed(parents), maxDepth = 4),
+      "child", "ancestor")) == rows(Graph.ancestorClosure(parents, maxDepth = 4)))
   }
 
   test("incremental components equal a full recompute and keep labels stable") {

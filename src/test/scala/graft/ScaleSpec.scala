@@ -391,6 +391,33 @@ class ScaleSpec extends SparkTestBase {
       "per-half language ID must not shuffle")
   }
 
+  test("pareto_front and er_fuzzy_pairs execute their explicit-count repartition") {
+    // REPARTITION_BY_NUM is exempt from AQE coalescing: losing it (e.g. a
+    // repartition by column alone) lets AQE collapse the row-count-heavy
+    // sweep or pair stage back to a few tasks (r18's serial hot spots)
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val width = spark.sessionState.conf.defaultNumShufflePartitions
+    Seq("pareto_front", "er_fuzzy_pairs").foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sf("sf0.001"))
+      df.collect() // finalizes the adaptive plan
+      val pinned = aqe.collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e
+      }
+      assert(pinned.nonEmpty, s"$name lost its explicit-count repartition")
+      assert(pinned.forall(_.numPartitions == width), s"$name repartition width")
+    }
+  }
+
+  test("small-graph personalized_pagerank answers from a LocalRelation (driver path)") {
+    val df = SparkEntry.queries("personalized_pagerank")(spark, sf("sf0.001"))
+    val leaves = df.queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.nonEmpty && leaves.forall(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]),
+      s"expected the driver twin's LocalRelation, got: ${leaves.map(_.nodeName)}")
+  }
+
   test("prefix-filtered set-sim join: banded vocab rank, no forced broadcast") {
     val ab = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
