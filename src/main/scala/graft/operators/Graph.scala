@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import graft.functions.GraftFunctions.relationshipId
 import graft.plans.Materialize.CheckpointOps
 
@@ -40,10 +43,10 @@ object Graph {
         else java.nio.file.Files.createTempDirectory("graft-rounds")
       "file:" + dir.toString
     }
-    private val written = scala.collection.mutable.ArrayBuffer.empty[String]
+    private val written = mutable.ArrayBuffer.empty[String]
     // the RDDs each in-memory round's localCheckpoint persisted, by round
     private val checkpointed =
-      scala.collection.mutable.Map.empty[String, Iterable[org.apache.spark.rdd.RDD[_]]]
+      mutable.Map.empty[String, Iterable[org.apache.spark.rdd.RDD[_]]]
     // set after the FIRST save (always the algorithm's base table — edge
     // list / depth-1 frontier) lands on files: a tiny base means every
     // later round is tiny too, so rounds localCheckpoint in memory
@@ -144,12 +147,10 @@ object Graph {
     * value, as the driver twins' java.util maps and sets need. Binary
     * values collect as `Array[Byte]`, which compares by reference (also
     * inside a struct or array), where the distributed joins compare
-    * bytes — so a binary-keyed graph takes the distributed loop. The
-    * long-only twins (components, bfs, sssp, label propagation, k-core)
-    * already exclude it by their LongType gate.
+    * bytes — so a binary-keyed graph takes the distributed loop.
     */
   private def valueKeyed(keys: org.apache.spark.sql.types.StructField*): Boolean = {
-    import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StructType}
+    import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType}
     def binary(t: DataType): Boolean = t match {
       case BinaryType    => true
       case s: StructType => s.fields.exists(f => binary(f.dataType))
@@ -158,6 +159,33 @@ object Graph {
     }
     !keys.exists(k => binary(k.dataType))
   }
+
+  /** The driver-or-distributed choice of every adaptive graph operator
+    * (the `maxHotKeys+1` collect idiom of adaptive salting, applied to
+    * iteration): graphs under the bound are dimension-sized, and there
+    * the distributed loop's per-round job launches dominate. Probes
+    * `inputs` in order, one early-terminating job each capped one row
+    * past `driverRows`, and stops at the first that does not fit. When
+    * all fit, `twin` computes the result from the collected rows,
+    * returned as a local relation over `schema` — the distributed
+    * loop's output schema, nullability included. None (run the
+    * distributed loop) when `driverRows <= 0`, a key column is binary
+    * ([[valueKeyed]]), a probed value is null (the twins' hash maps
+    * would match a null key, which the distributed equi-joins never
+    * do), or `twin` declines. Big graphs pay one capped partial scan
+    * and never collect the full input.
+    */
+  private def onDriver(driverRows: Int, schema: StructType, inputs: DataFrame*)(
+      twin: Seq[Array[Row]] => Option[Iterable[Row]]): Option[DataFrame] =
+    if (driverRows <= 0 || !valueKeyed(inputs.flatMap(_.schema.fields): _*)) None
+    else {
+      // lazy: a probe runs only while every earlier one fit
+      val probes = inputs.iterator.map(_.limit(driverRows + 1).collect())
+        .takeWhile(p => p.length <= driverRows && !p.exists(_.anyNull)).toVector
+      if (probes.length < inputs.length) None
+      else twin(probes).map(out =>
+        inputs.head.sparkSession.createDataFrame(out.toSeq.asJava, schema))
+    }
 
   /** J1/J2 "does this key already exist" probe, set-oriented: keep only
     * incoming rows whose key is NOT present (utils/etl.py:41-58, 169-181).
@@ -215,44 +243,36 @@ object Graph {
     * the whole closure), so work is proportional to path count; maxDepth
     * bounds the number of shuffles.
     *
-    * Adaptive small-hierarchy path (the [[graft.ops.Skew]] philosophy
-    * applied to iteration): parent hierarchies are usually DIMENSION
-    * data — thousands of companies, not billions — and for those the
-    * per-round job launches dominate. A capped `limit(driverRows+1)`
-    * probe (the `maxHotKeys+1` collect idiom from adaptive salting)
-    * decides in ONE early-terminating job: when the edge list fits, the
-    * closure is a driver BFS over the collected edges (bounded model
-    * state, the IVF codebook precedent) with IDENTICAL semantics —
-    * per-path multiplicity, pair-level cycle guard against earlier
-    * depths. The driver result is capped at 10×`driverRows` rows (a
-    * dense DAG's path count can explode combinatorially); on breach the
-    * operator falls back to the distributed loop, which shares the
-    * blowup across executors. Big graphs pay one capped partial scan
-    * and never collect the full edge set.
+    * Adaptive small-hierarchy path ([[onDriver]]): parent hierarchies
+    * are usually DIMENSION data — thousands of companies, not billions.
+    * When the edge list fits, the closure is a driver BFS over the
+    * collected edges (bounded model state, the IVF codebook precedent)
+    * with IDENTICAL semantics — per-path multiplicity, pair-level cycle
+    * guard against earlier depths. The driver result is capped at
+    * 10×`driverRows` rows (a dense DAG's path count can explode
+    * combinatorially); on breach the operator falls back to the
+    * distributed loop, which shares the blowup across executors.
     */
   def ancestorClosure(edges: DataFrame, maxDepth: Int = 20,
                       workDir: Option[String] = None,
                       driverRows: Int = 100000): DataFrame = {
     val spark = edges.sparkSession
     val cp = edges.select(col("child"), col("parent"))
-    val probe = cp.limit(driverRows + 1).collect()
-    if (probe.length <= driverRows &&
-        valueKeyed(cp.schema("child"), cp.schema("parent"))) {
-      driverClosure(spark, edges.schema, probe, maxDepth, driverRows) match {
-        case Some(out) => return out
-        case None      => () // path-count blowup: distributed loop below
-      }
-    }
-    // Small-edge-list fallback (driver BFS refused on binary keys or on
-    // path-count blowup): the full edge set is ALREADY on the driver —
+    // on path-count blowup the full edge set is ALREADY on the driver:
     // seed the loop from the collected rows instead of re-running the
     // edges lineage, which may be an arbitrary upstream pipeline that the
-    // probe just paid for.
-    val src =
-      if (probe.length <= driverRows)
-        spark.createDataFrame(spark.sparkContext.parallelize(
-          probe.toIndexedSeq), cp.schema)
-      else cp
+    // probe just paid for
+    var collected: Option[Array[Row]] = None
+    val driver = onDriver(driverRows, new StructType()
+        .add("child", cp.schema("child").dataType)
+        .add("ancestor", cp.schema("parent").dataType)
+        .add("depth", IntegerType), cp) { p =>
+      collected = Some(p.head)
+      driverClosure(p.head, maxDepth, driverRows)
+    }
+    if (driver.isDefined) return driver.get
+    val src = collected.fold(cp)(rows =>
+      spark.createDataFrame(spark.sparkContext.parallelize(rows.toIndexedSeq), cp.schema))
     // write-then-read: one computation per frontier, lineage truncated via
     // reliable files (an executor loss replays from the last frontier,
     // where localCheckpoint would fail the job)
@@ -296,12 +316,8 @@ object Graph {
     * 10×`driverRows` (combinatorial path blowup in a dense DAG) — the
     * caller then runs the distributed loop instead.
     */
-  private def driverClosure(spark: SparkSession,
-                            edgeSchema: org.apache.spark.sql.types.StructType,
-                            base: Array[org.apache.spark.sql.Row],
-                            maxDepth: Int, driverRows: Int): Option[DataFrame] = {
-    import org.apache.spark.sql.Row
-    import scala.collection.mutable
+  private def driverClosure(base: Array[Row], maxDepth: Int,
+                            driverRows: Int): Option[Iterable[Row]] = {
     val parents = new java.util.HashMap[Any, mutable.ArrayBuffer[Any]]()
     base.foreach { r =>
       parents.computeIfAbsent(r.get(0), _ => mutable.ArrayBuffer.empty[Any]) += r.get(1)
@@ -330,16 +346,7 @@ object Graph {
       frontier = next
       depth += 1
     }
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    val childF = edgeSchema("child")
-    val parentF = edgeSchema("parent")
-    // the distributed rounds' schema, nullability included
-    val schema = StructType(Seq(
-      StructField("child", childF.dataType, nullable = true),
-      StructField("ancestor", parentF.dataType, nullable = true),
-      StructField("depth", IntegerType, nullable = true)))
-    Some(spark.createDataFrame(out.asJava, schema))
+    Some(out)
   }
 
   /** Scaled-integer PageRank — link authority for corpus weighting (the
@@ -367,64 +374,28 @@ object Graph {
     * a typical 5-10 iteration run executes as one job over the
     * materialized edge table, with exchange reuse across rounds.
     *
-    * Adaptive small-graph path (the [[ancestorClosure]] treatment):
-    * capped `limit(driverRows+1)` probes on edges and nodes decide in
-    * two early-terminating jobs; under the bound the loop runs as a
-    * driver tight loop over the collected graph — and because every
-    * step is order-independent integer arithmetic, the driver result
-    * is bit-identical to the distributed rounds (equality pinned in
+    * Adaptive small-graph path ([[onDriver]]): capped probes on edges
+    * and nodes; under the bound the loop runs as a driver tight loop
+    * over the collected graph — and because every step is
+    * order-independent integer arithmetic, the driver result is
+    * bit-identical to the distributed rounds (equality pinned in
     * `GraphSpec`), with no blowup risk: rank state is exactly one long
     * per node per round.
     *
     * `edges`: (src, dst); `nodes`: (node) — node values must be UNIQUE
     * (it is a node set; duplicated node rows would double contribution
-    * mass in the distributed join). Returns (node, rank_scaled).
+    * mass in the distributed join). Returns (node, rank_scaled). The
+    * [[pageRank]] loop with every weight 1: `(rank·1) div Σ1` is
+    * `rank div outdeg`, bit for bit.
     */
   def pageRankScaled(edges: DataFrame, nodes: DataFrame,
                      iterations: Int = 5,
                      baseScaled: Long = 1000000000L,
                      workDir: Option[String] = None,
                      checkpointInterval: Int = 10,
-                     driverRows: Int = 100000): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
-    val spark = edges.sparkSession
-    val eProbe = edges.select(col("src"), col("dst")).limit(driverRows + 1).collect()
-    if (eProbe.length <= driverRows &&
-        valueKeyed(edges.schema("src"), edges.schema("dst"), nodes.schema("node"))) {
-      val nProbe = nodes.select(col("node")).limit(driverRows + 1).collect()
-      if (nProbe.length <= driverRows)
-        return driverPageRank(spark, nodes.schema("node"), eProbe, nProbe,
-          iterations, baseScaled)
-    }
-    val store = new RoundStore(spark, workDir)
-    // materialize (src, dst, outdeg) once: every round joins against it
-    val e = store.save(
-      edges.join(edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src")
-        .select(col("src"), col("dst"), col("outdeg")),
-      "edges")
-    val n = nodes.select(col("node"))
-    val baseShare = baseScaled * 15L / 100L
-    var ranks = n.withColumn("rank_scaled", lit(baseScaled))
-    for (i <- 1 to iterations) {
-      val contrib = e
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"), expr("rank_scaled div outdeg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("sc"))
-      val next = n.alias("n")
-        .join(contrib.alias("c"), col("n.node") === col("c.dst"), "left")
-        .select(col("n.node").as("node"),
-          (lit(baseShare) +
-            expr("(85 * coalesce(sc, CAST(0 AS BIGINT))) div 100")).as("rank_scaled"))
-      ranks =
-        if (i % checkpointInterval == 0 && i < iterations)
-          store.save(next, s"ranks-$i")
-        else next
-    }
-    val out = store.save(ranks, "ranks")
-    store.cleanupExcept("ranks")
-    out
-  }
+                     driverRows: Int = 100000): DataFrame =
+    pageRank(edges, lit(1L), nodes, None, iterations, baseScaled, workDir,
+      checkpointInterval, driverRows)
 
   /** Personalized PageRank, integer-scaled like [[pageRankScaled]]:
     * the teleport mass restarts at the SEED SET instead of uniformly —
@@ -437,74 +408,21 @@ object Graph {
     * join + a map-side-combinable contribution sum — edge-linear per
     * round at any scale. Vertices unreachable from the seeds hold rank
     * 0 and are emitted (the caller filters if only the neighborhood
-    * matters).
+    * matters). Seeds outside `nodes` are ignored.
     *
-    * Adaptive small-graph path (the [[pageRankScaled]] treatment, which
-    * this operator was missing — r18 JobProfile measured 25 driver-
-    * synchronized jobs / 1.5 s wall with only 0.36 s of task time at
-    * sf0.1, i.e. the distributed rounds were pure scheduling overhead at
-    * gate scale): capped `limit(driverRows+1)` probes on edges, nodes
-    * and seeds; under the bound the rounds run as a driver tight loop —
-    * bit-identical to the distributed rounds because every step is
-    * order-independent truncating integer arithmetic (equality pinned in
-    * `GraphSpec`). Over the cap, the distributed loop is unchanged.
+    * Adaptive small-graph path as [[pageRankScaled]], with the seeds
+    * probed third: at gate scale the distributed rounds are pure
+    * scheduling overhead (25 driver-synchronized jobs, 1.5 s wall for
+    * 0.36 s of task time at sf0.1).
     */
   def personalizedPageRankScaled(edges: DataFrame, nodes: DataFrame,
                                  seeds: DataFrame, iterations: Int = 5,
                                  baseScaled: Long = 1000000000L,
                                  workDir: Option[String] = None,
                                  checkpointInterval: Int = 10,
-                                 driverRows: Int = 100000): DataFrame = {
-    require(iterations >= 1, "iterations must be >= 1")
-    val spark = edges.sparkSession
-    val eProbe = edges.select(col("src"), col("dst")).limit(driverRows + 1).collect()
-    if (eProbe.length <= driverRows &&
-        valueKeyed(edges.schema("src"), edges.schema("dst"), nodes.schema("node"),
-          seeds.schema("node"))) {
-      val nProbe = nodes.select(col("node")).limit(driverRows + 1).collect()
-      if (nProbe.length <= driverRows) {
-        val sProbe = seeds.select(col("node")).limit(driverRows + 1).collect()
-        if (sProbe.length <= driverRows)
-          return driverPersonalizedPageRank(spark, nodes.schema("node"),
-            eProbe, nProbe, sProbe, iterations, baseScaled)
-      }
-    }
-    val store = new RoundStore(spark, workDir)
-    val e = store.save(
-      edges.join(edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg")), "src")
-        .select(col("src"), col("dst"), col("outdeg")),
-      "edges")
-    // seed membership rides the node table as a 0/1 flag — one narrow
-    // broadcast-or-shuffle join at build, reused by every round
-    val n = store.save(
-      nodes.select(col("node"))
-        .join(seeds.select(col("node")).distinct()
-          .withColumn("__seed", lit(1)), Seq("node"), "left")
-        .select(col("node"), coalesce(col("__seed"), lit(0)).as("__seed")),
-      "nodes")
-    val baseShare = baseScaled * 15L / 100L
-    var ranks = n.select(col("node"),
-      (col("__seed") * baseScaled).cast("long").as("rank_scaled"))
-    for (i <- 1 to iterations) {
-      val contrib = e
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"), expr("rank_scaled div outdeg").as("c"))
-        .groupBy(col("dst")).agg(sum(col("c")).as("sc"))
-      val next = n.alias("n")
-        .join(contrib.alias("c"), col("n.node") === col("c.dst"), "left")
-        .select(col("n.node").as("node"),
-          ((col("n.__seed") * baseShare).cast("long") +
-            expr("(85 * coalesce(sc, CAST(0 AS BIGINT))) div 100"))
-            .as("rank_scaled"))
-      ranks =
-        if (i % checkpointInterval == 0 && i < iterations)
-          store.save(next, s"ranks-$i")
-        else next
-    }
-    val out = store.save(ranks, "ranks")
-    store.cleanupExcept("ranks")
-    out
-  }
+                                 driverRows: Int = 100000): DataFrame =
+    pageRank(edges, lit(1L), nodes, Some(seeds), iterations, baseScaled, workDir,
+      checkpointInterval, driverRows)
 
   /** Edge-weighted PageRank: rank flows along each out-edge in
     * proportion to its weight — contribution = (rank·w) div Σw(src) —
@@ -525,26 +443,48 @@ object Graph {
                              baseScaled: Long = 1000000000L,
                              workDir: Option[String] = None,
                              checkpointInterval: Int = 10,
-                             driverRows: Int = 100000): DataFrame = {
+                             driverRows: Int = 100000): DataFrame =
+    pageRank(edges, col("w"), nodes, None, iterations, baseScaled, workDir,
+      checkpointInterval, driverRows)
+
+  /** The one loop behind the three PageRank entries: each edge carries
+    * `(rank·w) div Σw(src)`, and the round-0 rank and the 15 % restart
+    * share go only to seed-flagged nodes. Without `seeds` every node is
+    * flagged by the constant 1 (a join against the node set itself
+    * would zero a null node); with them the flag is one narrow join at
+    * build, saved and reused by every round.
+    */
+  private def pageRank(edges: DataFrame, w: Column, nodes: DataFrame,
+                       seeds: Option[DataFrame], iterations: Int, baseScaled: Long,
+                       workDir: Option[String], checkpointInterval: Int,
+                       driverRows: Int): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val spark = edges.sparkSession
-    val eProbe = edges.select(col("src"), col("dst"), col("w"))
-      .limit(driverRows + 1).collect()
-    if (eProbe.length <= driverRows &&
-        valueKeyed(edges.schema("src"), edges.schema("dst"), nodes.schema("node"))) {
-      val nProbe = nodes.select(col("node")).limit(driverRows + 1).collect()
-      if (nProbe.length <= driverRows)
-        return driverWeightedPageRank(spark, nodes.schema("node"), eProbe,
-          nProbe, iterations, baseScaled)
+    require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
+    val ew = edges.select(col("src"), col("dst"), w.as("w"))
+    val driver = onDriver(driverRows,
+        new StructType().add(nodes.schema("node")).add("rank_scaled", LongType),
+        Seq(ew, nodes.select(col("node"))) ++ seeds.map(_.select(col("node"))): _*) { p =>
+      Some(driverPageRank(p(0), p(1), p.lift(2), iterations, baseScaled))
     }
-    val store = new RoundStore(spark, workDir)
+    if (driver.isDefined) return driver.get
+    val store = new RoundStore(edges.sparkSession, workDir)
+    // materialize (src, dst, w, Σw) once: every round joins against it
     val e = store.save(
-      edges.join(edges.groupBy(col("src")).agg(sum(col("w")).as("sw")), "src")
+      ew.join(ew.groupBy(col("src")).agg(sum(col("w")).as("sw")), "src")
         .select(col("src"), col("dst"), col("w"), col("sw")),
       "edges")
-    val n = nodes.select(col("node"))
+    val n = seeds match {
+      case Some(s) => store.save(
+        nodes.select(col("node"))
+          .join(s.select(col("node")).distinct()
+            .withColumn("__seed", lit(1)), Seq("node"), "left")
+          .select(col("node"), coalesce(col("__seed"), lit(0)).as("__seed")),
+        "nodes")
+      case None => nodes.select(col("node"), lit(1).as("__seed"))
+    }
     val baseShare = baseScaled * 15L / 100L
-    var ranks = n.withColumn("rank_scaled", lit(baseScaled))
+    var ranks = n.select(col("node"),
+      (col("__seed") * baseScaled).cast("long").as("rank_scaled"))
     for (i <- 1 to iterations) {
       val contrib = e
         .join(ranks.withColumnRenamed("node", "src"), "src")
@@ -553,8 +493,9 @@ object Graph {
       val next = n.alias("n")
         .join(contrib.alias("c"), col("n.node") === col("c.dst"), "left")
         .select(col("n.node").as("node"),
-          (lit(baseShare) +
-            expr("(85 * coalesce(sc, CAST(0 AS BIGINT))) div 100")).as("rank_scaled"))
+          ((col("n.__seed") * baseShare).cast("long") +
+            expr("(85 * coalesce(sc, CAST(0 AS BIGINT))) div 100"))
+            .as("rank_scaled"))
       ranks =
         if (i % checkpointInterval == 0 && i < iterations)
           store.save(next, s"ranks-$i")
@@ -565,44 +506,41 @@ object Graph {
     out
   }
 
-  /** Driver twin of [[pageRankWeightedScaled]] — identical truncating
-    * steps, bit-equal by order-independence (pinned in GraphSpec). */
-  private def driverWeightedPageRank(spark: SparkSession,
-                                     nodeField: org.apache.spark.sql.types.StructField,
-                                     eRows: Array[org.apache.spark.sql.Row],
-                                     nRows: Array[org.apache.spark.sql.Row],
-                                     iterations: Int, baseScaled: Long): DataFrame = {
-    import org.apache.spark.sql.Row
-    import scala.collection.mutable
+  /** Driver twin of [[pageRank]]'s rounds: the same integer steps in
+    * the same structure (contribution only from srcs that ARE nodes,
+    * destinations outside `nodes` dropped, restart share on the seeds —
+    * every node when there are none; distinct seeds, those outside
+    * `nodes` ignored) — exact equality with the distributed loop is an
+    * arithmetic fact, not an approximation, because no step depends on
+    * order.
+    */
+  private def driverPageRank(eRows: Array[Row], nRows: Array[Row],
+                             sRows: Option[Array[Row]],
+                             iterations: Int, baseScaled: Long): Iterable[Row] = {
     val sw = new java.util.HashMap[Any, Long]()
     eRows.foreach(r => sw.merge(r.get(0), r.getLong(2), (a, b) => a + b))
+    val seedSet = new java.util.HashSet[Any]()
+    sRows.foreach(_.foreach(r => seedSet.add(r.get(0))))
+    val nodes = nRows.map(r => (r.get(0), sRows.isEmpty || seedSet.contains(r.get(0))))
     val baseShare = baseScaled * 15L / 100L
     var rank = new java.util.HashMap[Any, Long]()
-    nRows.foreach(r => rank.put(r.get(0), baseScaled))
+    nodes.foreach { case (n, seed) => rank.put(n, if (seed) baseScaled else 0L) }
     for (_ <- 1 to iterations) {
       val contrib = new java.util.HashMap[Any, Long]()
       eRows.foreach { r =>
         val src = r.get(0)
         if (rank.containsKey(src))
-          contrib.merge(r.get(1),
-            rank.get(src) * r.getLong(2) / sw.get(src), (a, b) => a + b)
+          contrib.merge(r.get(1), rank.get(src) * r.getLong(2) / sw.get(src),
+            (a, b) => a + b)
       }
       val next = new java.util.HashMap[Any, Long]()
-      nRows.foreach { r =>
-        val n = r.get(0)
-        next.put(n, baseShare + (85L * contrib.getOrDefault(n, 0L)) / 100L)
+      nodes.foreach { case (n, seed) =>
+        next.put(n, (if (seed) baseShare else 0L) +
+          (85L * contrib.getOrDefault(n, 0L)) / 100L)
       }
       rank = next
     }
-    val out = mutable.ArrayBuffer.empty[Row]
-    nRows.foreach(r => out += Row(r.get(0), rank.get(r.get(0))))
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    // the distributed rounds' schema, nullability included
-    val schema = StructType(Seq(
-      StructField("node", nodeField.dataType, nodeField.nullable),
-      StructField("rank_scaled", LongType, nullable = true)))
-    spark.createDataFrame(out.asJava, schema)
+    nodes.map { case (n, _) => Row(n, rank.get(n)) }
   }
 
   /** HITS hubs-and-authorities (Kleinberg 1999), integer-scaled for
@@ -634,22 +572,17 @@ object Graph {
                  checkpointInterval: Int = 10,
                  driverRows: Int = 100000): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
-    val spark = edges.sparkSession
-    // adaptive small-graph path (the pageRankScaled treatment): capped
-    // probes decide in two early-terminating jobs; under the bound the
-    // rounds run as a driver tight loop — bit-identical to the
-    // distributed loop because every step is order-independent integer
-    // arithmetic (equality pinned in GraphSpec)
-    val eProbe = edges.select(col("src"), col("dst")).limit(driverRows + 1).collect()
-    if (eProbe.length <= driverRows &&
-        valueKeyed(edges.schema("src"), edges.schema("dst"), nodes.schema("node"))) {
-      val nProbe = nodes.select(col("node")).limit(driverRows + 1).collect()
-      if (nProbe.length <= driverRows)
-        return driverHits(spark, nodes.schema("node"), eProbe, nProbe,
-          iterations, scale)
-    }
-    val store = new RoundStore(spark, workDir)
     val n = nodes.select(col("node"))
+    // adaptive small-graph path (the pageRankScaled treatment): the
+    // driver rounds are bit-identical to the distributed loop because
+    // every step is order-independent integer arithmetic (GraphSpec)
+    val driver = onDriver(driverRows, new StructType().add(nodes.schema("node"))
+        .add("hub_scaled", LongType).add("auth_scaled", LongType),
+        edges.select(col("src"), col("dst")), n) { p =>
+      Some(driverHits(p(0), p(1), iterations, scale))
+    }
+    if (driver.isDefined) return driver.get
+    val store = new RoundStore(edges.sparkSession, workDir)
     // node-restricted edge table, materialized once; every half-round
     // is one equi-join + one map-side-combinable sum against it
     val e = store.save(
@@ -702,13 +635,8 @@ object Graph {
     * distributed loop is an arithmetic fact (no step depends on
     * order), pinned in GraphSpec.
     */
-  private def driverHits(spark: SparkSession,
-                         nodeField: org.apache.spark.sql.types.StructField,
-                         eRows: Array[org.apache.spark.sql.Row],
-                         nRows: Array[org.apache.spark.sql.Row],
-                         iterations: Int, scale: Long): DataFrame = {
-    import org.apache.spark.sql.Row
-    import scala.collection.mutable
+  private def driverHits(eRows: Array[Row], nRows: Array[Row],
+                         iterations: Int, scale: Long): Iterable[Row] = {
     val nodeSet = new java.util.HashSet[Any]()
     nRows.foreach(r => nodeSet.add(r.get(0)))
     val e = eRows.filter(r => nodeSet.contains(r.get(0)) && nodeSet.contains(r.get(1)))
@@ -738,116 +666,8 @@ object Graph {
         hubSum.merge(r.get(0), auths.getOrDefault(r.get(1), 0L), (a, b) => a + b))
       hubs = maxNorm(hubSum)
     }
-    val out = mutable.ArrayBuffer.empty[Row]
-    nRows.foreach(r => out += Row(r.get(0),
+    nRows.map(r => Row(r.get(0),
       hubs.getOrDefault(r.get(0), 0L), auths.getOrDefault(r.get(0), 0L)))
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    // the distributed rounds' schema, nullability included
-    val schema = StructType(Seq(
-      StructField("node", nodeField.dataType, nodeField.nullable),
-      StructField("hub_scaled", LongType, nullable = true),
-      StructField("auth_scaled", LongType, nullable = true)))
-    spark.createDataFrame(out.asJava, schema)
-  }
-
-  /** Driver twin of [[pageRankScaled]]'s rounds: same integer steps in
-    * the same structure (contribution only for srcs that ARE nodes,
-    * destinations outside `nodes` dropped, base share for everyone) —
-    * exact equality with the distributed loop is an arithmetic fact,
-    * not an approximation, because no step depends on order.
-    */
-  private def driverPageRank(spark: SparkSession,
-                             nodeField: org.apache.spark.sql.types.StructField,
-                             eRows: Array[org.apache.spark.sql.Row],
-                             nRows: Array[org.apache.spark.sql.Row],
-                             iterations: Int, baseScaled: Long): DataFrame = {
-    import org.apache.spark.sql.Row
-    import scala.collection.mutable
-    val outdeg = new java.util.HashMap[Any, Long]()
-    eRows.foreach(r => outdeg.merge(r.get(0), 1L, (a, b) => a + b))
-    val baseShare = baseScaled * 15L / 100L
-    var rank = new java.util.HashMap[Any, Long]()
-    nRows.foreach(r => rank.put(r.get(0), baseScaled))
-    for (_ <- 1 to iterations) {
-      val contrib = new java.util.HashMap[Any, Long]()
-      eRows.foreach { r =>
-        val src = r.get(0)
-        // srcs that are not nodes carry no rank (inner join semantics)
-        if (rank.containsKey(src))
-          contrib.merge(r.get(1), rank.get(src) / outdeg.get(src), (a, b) => a + b)
-      }
-      val next = new java.util.HashMap[Any, Long]()
-      nRows.foreach { r =>
-        val n = r.get(0)
-        val sc = contrib.getOrDefault(n, 0L)
-        next.put(n, baseShare + (85L * sc) / 100L)
-      }
-      rank = next
-    }
-    val out = mutable.ArrayBuffer.empty[Row]
-    nRows.foreach(r => out += Row(r.get(0), rank.get(r.get(0))))
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    // the distributed rounds' schema, nullability included
-    val schema = StructType(Seq(
-      StructField("node", nodeField.dataType, nodeField.nullable),
-      StructField("rank_scaled", LongType, nullable = true)))
-    spark.createDataFrame(out.asJava, schema)
-  }
-
-  /** Driver twin of [[personalizedPageRankScaled]] — identical
-    * truncating steps and seed semantics (seed-only rank at round 0,
-    * restart share only on seeds, seeds outside the node set ignored),
-    * bit-equal by order-independence (pinned in GraphSpec). */
-  private def driverPersonalizedPageRank(spark: SparkSession,
-                                         nodeField: org.apache.spark.sql.types.StructField,
-                                         eRows: Array[org.apache.spark.sql.Row],
-                                         nRows: Array[org.apache.spark.sql.Row],
-                                         sRows: Array[org.apache.spark.sql.Row],
-                                         iterations: Int, baseScaled: Long): DataFrame = {
-    import org.apache.spark.sql.Row
-    import scala.collection.mutable
-    val outdeg = new java.util.HashMap[Any, Long]()
-    eRows.foreach(r => outdeg.merge(r.get(0), 1L, (a, b) => a + b))
-    // the distributed build left-joins distinct seeds onto the node set:
-    // membership is a 0/1 flag, seeds not in `nodes` never materialize,
-    // and a NULL seed value can never flag a node (equi-join semantics)
-    val seedSet = new java.util.HashSet[Any]()
-    sRows.foreach(r => if (!r.isNullAt(0)) seedSet.add(r.get(0)))
-    val baseShare = baseScaled * 15L / 100L
-    var rank = new java.util.HashMap[Any, Long]()
-    nRows.foreach(r =>
-      rank.put(r.get(0), if (seedSet.contains(r.get(0))) baseScaled else 0L))
-    for (_ <- 1 to iterations) {
-      val contrib = new java.util.HashMap[Any, Long]()
-      eRows.foreach { r =>
-        val src = r.get(0)
-        // srcs that are not nodes carry no rank, and a NULL src or dst
-        // never matches in the distributed equi-joins
-        if (src != null && !r.isNullAt(1) && rank.containsKey(src))
-          contrib.merge(r.get(1), rank.get(src) / outdeg.get(src), (a, b) => a + b)
-      }
-      val next = new java.util.HashMap[Any, Long]()
-      nRows.foreach { r =>
-        val n = r.get(0)
-        // a NULL node can neither be flagged as a seed nor receive
-        // contributions (both distributed joins are null-dropping)
-        val seedShare = if (n != null && seedSet.contains(n)) baseShare else 0L
-        val sc = if (n == null) 0L else contrib.getOrDefault(n, 0L)
-        next.put(n, seedShare + (85L * sc) / 100L)
-      }
-      rank = next
-    }
-    val out = mutable.ArrayBuffer.empty[Row]
-    nRows.foreach(r => out += Row(r.get(0), rank.get(r.get(0))))
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    // the distributed rounds' schema, nullability included
-    val schema = StructType(Seq(
-      StructField("node", nodeField.dataType, nodeField.nullable),
-      StructField("rank_scaled", LongType, nullable = true)))
-    spark.createDataFrame(out.asJava, schema)
   }
 
   /** Connected components by iterative min-label propagation: every node
@@ -894,32 +714,24 @@ object Graph {
     // symmetric orientation itself is a narrow re-read of the files, not
     // worth a second table.
     val e0 = save(edges.select(col("src"), col("dst")), "edges")
-    // Adaptive small-graph path (the ancestorClosure treatment): the
-    // probe reads the MATERIALIZED edge table — a capped file read, so
-    // the upstream pair pipeline is never recomputed on either path.
-    // Near-dup edge sets are usually tiny relative to the corpus (most
-    // docs are singletons, handled by the scale-safe anti-join below
-    // regardless of path), and for those the per-round job launches
-    // dominate. Components are a SET property — driver union-find gives
-    // exactly the (node, min-id) labels the rounds converge to. Long
-    // ids only: the loop itself is long-typed (the prev column).
-    val driverOut: Option[DataFrame] =
-      if (driverRows > 0 &&
-          e0.schema("src").dataType == org.apache.spark.sql.types.LongType &&
-          e0.schema("dst").dataType == org.apache.spark.sql.types.LongType) {
-        val probe = e0.limit(driverRows + 1).collect()
-        // null endpoints are outside the pair contract: keep the loop's
-        // behavior for them instead of silently diverging
-        if (probe.length <= driverRows &&
-            !probe.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-          val out = driverComponents(spark, probe, e0.schema("src").nullable)
-          store.cleanupExcept()
-          Some(out)
-        } else None
-      } else None
-    driverOut match {
-      case Some(out) => return appendSingletons(out, extraNodes)
-      case None      => ()
+    // Adaptive small-graph path ([[onDriver]]): the probe reads the
+    // MATERIALIZED edge table — a capped file read, so the upstream pair
+    // pipeline is never recomputed on either path. Near-dup edge sets
+    // are usually tiny relative to the corpus (most docs are singletons,
+    // handled by the scale-safe anti-join below regardless of path).
+    // Components are a SET property — driver union-find gives exactly
+    // the (node, min-id) labels the rounds converge to. Long ids only:
+    // the loop itself is long-typed (the prev column).
+    val ids = e0.schema("src")
+    val driver =
+      if (ids.dataType != LongType || e0.schema("dst").dataType != LongType) None
+      else onDriver(driverRows, new StructType().add("node", LongType, ids.nullable)
+          .add("component", LongType, ids.nullable), e0) { p =>
+        Some(driverComponents(p.head))
+      }
+    if (driver.isDefined) {
+      store.cleanupExcept()
+      return appendSingletons(driver.get, extraNodes)
     }
     val sym = e0.unionByName(
       e0.select(col("dst").as("src"), col("src").as("dst")))
@@ -988,11 +800,7 @@ object Graph {
     * per root — the exact fixpoint min-label converges to, computed as
     * a set property rather than iterated.
     */
-  private def driverComponents(spark: SparkSession,
-                               edgeRows: Array[org.apache.spark.sql.Row],
-                               nullableIds: Boolean): DataFrame = {
-    import org.apache.spark.sql.Row
-    import scala.collection.mutable
+  private def driverComponents(edgeRows: Array[Row]): Iterable[Row] = {
     val parent = new java.util.HashMap[Long, Long]()
     def find(x0: Long): Long = {
       var x = x0
@@ -1014,16 +822,7 @@ object Graph {
     parent.keySet().forEach { n =>
       minOf.merge(find(n), n, (a, b) => math.min(a, b))
     }
-    val out = mutable.ArrayBuffer.empty[Row]
-    parent.keySet().forEach { n =>
-      out += Row(n, minOf.get(find(n)))
-    }
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(Seq(
-      StructField("node", LongType, nullableIds),
-      StructField("component", LongType, nullableIds)))
-    spark.createDataFrame(out.asJava, schema)
+    parent.keySet().asScala.toSeq.map(n => Row(n, minOf.get(find(n))))
   }
 
   /** Incremental connected components: fold a previous run's
@@ -1046,80 +845,6 @@ object Graph {
     connectedComponents(starEdges.unionByName(
       newEdges.select(col("src"), col("dst"))), extraNodes = extraNodes,
       workDir = workDir)
-  }
-
-  /** Connected components by alternating large-star / small-star
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond"):
-    * converges in O(log n) rounds regardless of component DIAMETER,
-    * where min-label propagation needs O(diameter) rounds — the right
-    * algorithm when components can be chain-shaped (long reply threads,
-    * crawl link paths). Each round is two grouped-min aggregations +
-    * joins over the current edge set; rounds persist write-then-read
-    * like [[connectedComponents]].
-    *
-    * Same contract as [[connectedComponents]]: (node, component) with
-    * component = min node id; isolated nodes appear only via
-    * `extraNodes`. Prefer [[connectedComponents]] for known-shallow
-    * cluster shapes (near-dup groups): fewer jobs per round wins there.
-    */
-  def connectedComponentsStar(edges: DataFrame, maxIter: Int = 30,
-                              extraNodes: Option[DataFrame] = None,
-                              workDir: Option[String] = None): DataFrame = {
-    val spark = edges.sparkSession
-    val store = new RoundStore(spark, workDir)
-    def save(df: DataFrame, name: String): DataFrame = store.save(df, name)
-    val nodes = edges.select(col("src").as("node"))
-      .unionByName(edges.select(col("dst").as("node")))
-      .unionByName(extraNodes.map(_.select(col("node"))).getOrElse(
-        edges.sparkSession.emptyDataFrame.withColumn("node", lit(0L)).limit(0)))
-      .distinct()
-    // canonical (u > v) edge list, self-loops dropped
-    var e = save(edges
-      .select(greatest(col("src"), col("dst")).as("u"),
-        least(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v")).distinct(), "e-0")
-    var finalName = "e-0"
-    var iter = 0
-    var converged = e.isEmpty
-    while (iter < maxIter && !converged) {
-      // LARGE-STAR: per node u over the SYMMETRIC neighborhood, attach
-      // every strictly-larger neighbor to m = min(neighbors ∪ {u})
-      val sym = e.select(col("u"), col("v"))
-        .unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      val mL = sym.groupBy("u").agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      val ls = sym.join(mL, "u").filter(col("v") > col("u"))
-        .select(col("v").as("a"), col("m").as("b"))
-        .filter(col("a") =!= col("b"))
-        .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
-        .distinct()
-      // SMALL-STAR: on the (u > v) orientation, attach u and all its
-      // smaller neighbors to u's minimum neighbor
-      val mS = ls.groupBy("u").agg(min(col("v")).as("m"))
-      val ss = ls.join(mS, "u")
-        .select(col("v").as("a"), col("m"))
-        .unionByName(mS.select(col("u").as("a"), col("m")))
-        .filter(col("a") =!= col("m"))
-        .select(greatest(col("a"), col("m")).as("u"), least(col("a"), col("m")).as("v"))
-        .distinct()
-      val next = save(ss, s"e-${iter + 1}")
-      // star forest test: converged when every edge points at a root
-      // (no u appears as a v of some other edge with a larger partner),
-      // equivalently the edge set is unchanged by another round
-      converged = next.unionByName(e).distinct().count() == e.count() &&
-        next.count() == e.count()
-      e = next
-      finalName = s"e-${iter + 1}"
-      iter += 1
-    }
-    // the output reads only the fixpoint edge table — drop earlier rounds
-    store.cleanupExcept(finalName)
-    // at the fixpoint e is a star forest (node -> root); roots and
-    // isolated nodes are their own component
-    nodes.join(e.select(col("u").as("node"), col("v").as("component")),
-        Seq("node"), "left_outer")
-      .groupBy("node")
-      .agg(min(coalesce(col("component"), col("node"))).as("component"))
   }
 
   /** K8 rollback semantics: cascading delete of one key across child
@@ -1231,23 +956,19 @@ object Graph {
       .distinct()
       .checkpointAt("Graph.bfsHops.adj")
     val seedSet = seeds.select(col(seedCol).as("vertex")).distinct()
-    // Adaptive small-graph path (the connectedComponents/pageRank
-    // treatment): capped probes on the MATERIALIZED adjacency and the
-    // seed set; under the cap the layered expansion runs as a driver
-    // tight loop. Level-order BFS assigns each vertex its minimum hop
-    // — exactly what min-over-layers converges to — so the driver
-    // result is row-identical (equality pinned in GraphSpec). Null ids
-    // or non-long ids fall back to the distributed loop unchanged.
-    if (adj.schema("a").dataType == org.apache.spark.sql.types.LongType) {
-      val eProbe = adj.limit(driverRows + 1).collect()
-      if (eProbe.length <= driverRows &&
-          !eProbe.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        val sProbe = seedSet.limit(driverRows + 1).collect()
-        if (sProbe.length <= driverRows && !sProbe.exists(_.isNullAt(0)))
-          return driverBfsHops(edges.sparkSession,
-            seedSet.schema("vertex"), eProbe, sProbe, maxHops)
+    // Adaptive small-graph path ([[onDriver]]): probes on the
+    // MATERIALIZED adjacency and the seed set; under the cap the layered
+    // expansion runs as a driver tight loop. Level-order BFS assigns
+    // each vertex its minimum hop — exactly what min-over-layers
+    // converges to — so the driver result is row-identical (equality
+    // pinned in GraphSpec). Long ids only.
+    val driver =
+      if (adj.schema("a").dataType != LongType) None
+      else onDriver(driverRows, new StructType().add(seedSet.schema("vertex"))
+          .add("hop", LongType), adj, seedSet) { p =>
+        Some(driverBfsHops(p(0), p(1), maxHops))
       }
-    }
+    if (driver.isDefined) return driver.get
     var frontier = seedSet.localCheckpoint(true)
     val layers = scala.collection.mutable.ArrayBuffer(
       frontier.withColumn("hop", lit(0L)))
@@ -1261,13 +982,8 @@ object Graph {
       .groupBy(col("vertex")).agg(min(col("hop")).as("hop"))
   }
 
-  private def driverBfsHops(spark: SparkSession,
-                            vertexField: org.apache.spark.sql.types.StructField,
-                            eRows: Array[org.apache.spark.sql.Row],
-                            sRows: Array[org.apache.spark.sql.Row],
-                            maxHops: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    import scala.collection.mutable
+  private def driverBfsHops(eRows: Array[Row], sRows: Array[Row],
+                            maxHops: Int): Iterable[Row] = {
     val adj = new java.util.HashMap[Long, mutable.ArrayBuffer[Long]]()
     eRows.foreach { r =>
       adj.computeIfAbsent(r.getLong(0), _ => mutable.ArrayBuffer.empty[Long]) +=
@@ -1291,14 +1007,7 @@ object Graph {
       frontier = next
       h += 1
     }
-    val out = mutable.ArrayBuffer.empty[Row]
-    hop.forEach((v, d) => out += Row(v, d))
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    // the distributed rounds' schema, nullability included
-    spark.createDataFrame(out.asJava, StructType(Seq(
-      StructField("vertex", vertexField.dataType, vertexField.nullable),
-      StructField("hop", LongType, nullable = true))))
+    hop.asScala.toSeq.map { case (v, d) => Row(v, d) }
   }
 
   /** Bounded single/multi-source shortest paths over an undirected
@@ -1336,21 +1045,15 @@ object Graph {
     // the collected min-collapsed adjacency — each round is
     // labels := min(labels, labels+edge) exactly like the distributed
     // union+min — so bounded-walk costs are bit-identical (GraphSpec).
-    // Long ids/weights only; nulls fall back.
-    locally {
-      import org.apache.spark.sql.types.LongType
-      if (adj.schema("a").dataType == LongType &&
-          adj.schema("w").dataType == LongType) {
-        val eProbe = adj.limit(driverRows + 1).collect()
-        if (eProbe.length <= driverRows &&
-            !eProbe.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2))) {
-          val sProbe = seedSet.limit(driverRows + 1).collect()
-          if (sProbe.length <= driverRows && !sProbe.exists(_.isNullAt(0)))
-            return driverSsspBounded(edges.sparkSession,
-              seedSet.schema("vertex"), eProbe, sProbe, maxHops)
-        }
+    // Long ids/weights only.
+    val driver =
+      if (adj.schema("a").dataType != LongType || adj.schema("w").dataType != LongType)
+        None
+      else onDriver(driverRows, new StructType().add(seedSet.schema("vertex"))
+          .add("cost", LongType), adj, seedSet) { p =>
+        Some(driverSsspBounded(p(0), p(1), maxHops))
       }
-    }
+    if (driver.isDefined) return driver.get
     var labels = seedSet
       .withColumn("cost", lit(0L))
       .localCheckpoint(true)
@@ -1364,13 +1067,8 @@ object Graph {
     labels
   }
 
-  private def driverSsspBounded(spark: SparkSession,
-                                vertexField: org.apache.spark.sql.types.StructField,
-                                eRows: Array[org.apache.spark.sql.Row],
-                                sRows: Array[org.apache.spark.sql.Row],
-                                maxHops: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    import scala.collection.mutable
+  private def driverSsspBounded(eRows: Array[Row], sRows: Array[Row],
+                                maxHops: Int): Iterable[Row] = {
     val adj = new java.util.HashMap[Long, mutable.ArrayBuffer[(Long, Long)]]()
     eRows.foreach { r =>
       adj.computeIfAbsent(r.getLong(0),
@@ -1389,14 +1087,7 @@ object Graph {
       }
       cost = next
     }
-    val out = mutable.ArrayBuffer.empty[Row]
-    cost.forEach((v, c) => out += Row(v, c))
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    // the distributed rounds' schema, nullability included
-    spark.createDataFrame(out.asJava, StructType(Seq(
-      StructField("vertex", vertexField.dataType, vertexField.nullable),
-      StructField("cost", LongType, nullable = true))))
+    cost.asScala.toSeq.map { case (v, c) => Row(v, c) }
   }
 
   /** Common-neighbor link prediction: for every NON-adjacent canonical
@@ -1528,14 +1219,15 @@ object Graph {
     // twin runs the SAME synchronous rounds — every vertex adopts the
     // mode label among its neighbors, ties to the smallest label — so
     // the converging assignment is row-identical (GraphSpec). Long ids
-    // only; nulls fall back.
-    if (adj.schema("a").dataType == org.apache.spark.sql.types.LongType) {
-      val eProbe = adj.limit(driverRows + 1).collect()
-      if (eProbe.length <= driverRows &&
-          !eProbe.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        return driverLabelPropagation(edges.sparkSession,
-          adj.schema("a"), eProbe, rounds)
-    }
+    // only.
+    val ids = adj.schema("a")
+    val driver =
+      if (ids.dataType != LongType) None
+      else onDriver(driverRows, new StructType().add("vertex", LongType, ids.nullable)
+          .add("label", LongType), adj) { p =>
+        Some(driverLabelPropagation(p.head, rounds))
+      }
+    if (driver.isDefined) return driver.get
     var labels = adj.select(col("a").as("vertex")).distinct()
       .withColumn("label", col("vertex"))
       .localCheckpoint(true)
@@ -1552,12 +1244,7 @@ object Graph {
     labels
   }
 
-  private def driverLabelPropagation(spark: SparkSession,
-                                     vertexField: org.apache.spark.sql.types.StructField,
-                                     eRows: Array[org.apache.spark.sql.Row],
-                                     rounds: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    import scala.collection.mutable
+  private def driverLabelPropagation(eRows: Array[Row], rounds: Int): Iterable[Row] = {
     val adj = new java.util.HashMap[Long, mutable.ArrayBuffer[Long]]()
     eRows.foreach { r =>
       adj.computeIfAbsent(r.getLong(0), _ => mutable.ArrayBuffer.empty[Long]) +=
@@ -1584,14 +1271,7 @@ object Graph {
       }
       labels = next
     }
-    val out = mutable.ArrayBuffer.empty[Row]
-    labels.forEach((v, l) => out += Row(v, l))
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{StructField, StructType}
-    // the distributed rounds' schema, nullability included
-    spark.createDataFrame(out.asJava, StructType(Seq(
-      StructField("vertex", vertexField.dataType, vertexField.nullable),
-      StructField("label", vertexField.dataType, nullable = true))))
+    labels.asScala.toSeq.map { case (v, l) => Row(v, l) }
   }
 
   /** Bounded k-core peeling: `rounds` synchronous rounds of "drop every
@@ -1625,14 +1305,15 @@ object Graph {
     // Adaptive small-graph path (the bfsHops treatment): the driver
     // twin peels the SAME `rounds` synchronous rounds over the
     // collected canonical edge set (GraphSpec pins equality). Long ids
-    // only; nulls fall back.
-    if (live.schema("u").dataType == org.apache.spark.sql.types.LongType) {
-      val eProbe = live.limit(driverRows + 1).collect()
-      if (eProbe.length <= driverRows &&
-          !eProbe.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        return driverKCore(edges.sparkSession, live.schema("u"),
-          eProbe, k, rounds)
-    }
+    // only.
+    val ids = live.schema("u")
+    val driver =
+      if (ids.dataType != LongType) None
+      else onDriver(driverRows, new StructType().add("vertex", LongType, ids.nullable)
+          .add("core_deg", LongType, nullable = false), live) { p =>
+        Some(driverKCore(p.head, k, rounds))
+      }
+    if (driver.isDefined) return driver.get
     for (_ <- 1 to rounds) {
       val deg = live.select(col("u").as("x"))
         .union(live.select(col("v").as("x")))
@@ -1649,12 +1330,7 @@ object Graph {
       .groupBy(col("x").as("vertex")).agg(count(lit(1)).as("core_deg"))
   }
 
-  private def driverKCore(spark: SparkSession,
-                          vertexField: org.apache.spark.sql.types.StructField,
-                          eRows: Array[org.apache.spark.sql.Row],
-                          k: Long, rounds: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    import scala.collection.mutable
+  private def driverKCore(eRows: Array[Row], k: Long, rounds: Int): Iterable[Row] = {
     var live = mutable.ArrayBuffer.empty[(Long, Long)]
     eRows.foreach(r => live += ((r.getLong(0), r.getLong(1))))
     for (_ <- 1 to rounds) {
@@ -1668,12 +1344,6 @@ object Graph {
     live.foreach { case (u, v) =>
       deg.merge(u, 1L, (x, y) => x + y); deg.merge(v, 1L, (x, y) => x + y)
     }
-    val out = mutable.ArrayBuffer.empty[Row]
-    deg.forEach((v, d) => out += Row(v, d))
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    spark.createDataFrame(out.asJava, StructType(Seq(
-      StructField("vertex", vertexField.dataType, vertexField.nullable),
-      StructField("core_deg", LongType, nullable = false))))
+    deg.asScala.toSeq.map { case (v, d) => Row(v, d) }
   }
 }

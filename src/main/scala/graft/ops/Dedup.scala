@@ -551,12 +551,11 @@ object Dedup {
     */
   def nearDupClusters(docs: DataFrame, idCol: String, textCol: String,
                       n: Int = 3, k: Int = 32, bands: Int = 16,
-                      threshold: Double = 0.5,
-                      deepComponents: Boolean = false): DataFrame =
+                      threshold: Double = 0.5): DataFrame =
     clustersFromPairs(
       minhashLshPairs(docs, idCol, textCol, n, k, bands, threshold)
         .select(col("id_a"), col("id_b")),
-      docs, idCol, deepComponents)
+      docs, idCol)
 
   /** Clustering half of [[nearDupClusters]], over ANY (id_a, id_b) pair
     * set — minhash LSH, simhash, exact Jaccard, embedding-cosine — so the
@@ -564,18 +563,12 @@ object Dedup {
     * Returns (idCol, component, is_canonical, cluster_size); docs with no
     * pair are singleton clusters.
     */
-  def clustersFromPairs(pairs: DataFrame, docs: DataFrame, idCol: String,
-                        deepComponents: Boolean = false): DataFrame = {
+  def clustersFromPairs(pairs: DataFrame, docs: DataFrame, idCol: String): DataFrame = {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
     val allDocs = docs.select(col(idCol).as("node"))
-    // near-dup clusters are shallow (min-label converges in 2-4 rounds);
-    // deepComponents switches to large-star/small-star (O(log n) rounds)
-    // for corpora where duplicate chains run long
+    // near-dup clusters are shallow (min-label converges in 2-4 rounds)
     val comps =
-      if (deepComponents)
-        graft.operators.Graph.connectedComponentsStar(edges, extraNodes = Some(allDocs))
-      else
-        graft.operators.Graph.connectedComponents(edges, extraNodes = Some(allDocs))
+      graft.operators.Graph.connectedComponents(edges, extraNodes = Some(allDocs))
     val sizes = comps.groupBy("component").agg(count(lit(1)).as("cluster_size"))
     comps.join(sizes, "component")
       .select(col("node").as(idCol), col("component"),
@@ -601,8 +594,7 @@ object Dedup {
     * (partition x component). Nothing quadratic, nothing sorted.
     */
   def clusterRepresentatives(pairs: DataFrame, docs: DataFrame, idCol: String,
-                             qualityCol: String,
-                             deepComponents: Boolean = false): DataFrame = {
+                             qualityCol: String): DataFrame = {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
     val allDocs = docs.select(col(idCol).as("node"))
     // raw component labels, NOT clustersFromPairs: the cluster size
@@ -610,10 +602,7 @@ object Dedup {
     // where the labelled form would pay a separate sizes aggregation
     // plus a join back — one shuffle and one join fewer for the same rows
     val comps =
-      if (deepComponents)
-        graft.operators.Graph.connectedComponentsStar(edges, extraNodes = Some(allDocs))
-      else
-        graft.operators.Graph.connectedComponents(edges, extraNodes = Some(allDocs))
+      graft.operators.Graph.connectedComponents(edges, extraNodes = Some(allDocs))
     docs.select(col(idCol), col(qualityCol))
       .join(comps.withColumnRenamed("node", idCol), idCol)
       .groupBy(col("component"))

@@ -168,6 +168,14 @@ class GraphSpec extends SparkTestBase {
     val seeds = Seq(1L, 1L, 3L, 77L).toDF("node")
     assertTwins(d => Graph.personalizedPageRankScaled(messy, n, seeds, iterations = 3,
       driverRows = d))
+
+    // every node a seed: the personalized entry is the global one, row
+    // for row, on both paths (the premise of their shared loop)
+    Seq(100000, 0).foreach { d =>
+      assert(rows(Graph.personalizedPageRankScaled(messy, n, n, iterations = 3,
+        driverRows = d)) == rows(Graph.pageRankScaled(messy, n, iterations = 3,
+        driverRows = d)))
+    }
   }
 
   test("hitsScaled: star graph by hand, checkpoint invariance, edgeless zeros") {
@@ -253,35 +261,29 @@ class GraphSpec extends SparkTestBase {
     assert(Graph.connectedComponents(long).filter(col("component") =!= 1L).isEmpty)
   }
 
-  test("large-star/small-star components match min-label on random graphs") {
+  test("components: union-find and min-label agree on random graphs") {
     val rng = new scala.util.Random(11)
     (0 until 3).foreach { trial =>
       val n = 40 + trial * 20
-      val edges = (0 until n).map { _ =>
-        (rng.nextInt(n).toLong, rng.nextInt(n).toLong)
-      }.toDF("src", "dst")
+      val pairs = (0 until n).map(_ => (rng.nextInt(n).toLong, rng.nextInt(n).toLong))
+      val edges = pairs.toDF("src", "dst")
       val nodes = (0L until n.toLong).toDF("node")
       // three independent solvers must agree: driver union-find (the
       // small-graph fast path), the distributed min-label loop
-      // (driverRows=0 forces it), and large-star/small-star
+      // (driverRows=0 forces it), and a plain reachability walk here
       assertTwins(d => Graph.connectedComponents(edges,
         extraNodes = Some(nodes), driverRows = d))
       val byUnionFind = Graph.connectedComponents(edges, extraNodes = Some(nodes))
         .as[(Long, Long)].collect().toMap
-      val byStar = Graph.connectedComponentsStar(edges,
-          extraNodes = Some(nodes))
-        .as[(Long, Long)].collect().toMap
-      assert(byStar == byUnionFind, s"trial $trial: algorithms disagree")
+      val adj = (pairs ++ pairs.map(_.swap)).groupMap(_._1)(_._2)
+      def reach(v: Long): Set[Long] = Iterator.iterate((Set(v), Set(v))) {
+        case (seen, frontier) =>
+          val next = frontier.flatMap(adj.getOrElse(_, Nil)) -- seen
+          (seen ++ next, next)
+      }.dropWhile(_._2.nonEmpty).next()._1
+      assert(byUnionFind == (0L until n.toLong).map(v => v -> reach(v).min).toMap,
+        s"trial $trial: algorithms disagree")
     }
-  }
-
-  test("large-star/small-star collapses a 500-node chain in O(log n) rounds") {
-    // a path graph has diameter 499: min-label needs ~500 rounds, the
-    // star algorithm converges within its default maxIter of 30
-    val chain = (0L until 499L).map(i => (i, i + 1)).toDF("src", "dst")
-    val comps = Graph.connectedComponentsStar(chain)
-    assert(comps.select("component").distinct().as[Long].collect().toSeq == Seq(0L))
-    assert(comps.count() == 500)
   }
 
   test("iterative operators clean owned temp work dirs down to the final table") {
@@ -332,6 +334,22 @@ class GraphSpec extends SparkTestBase {
     val parents = e.toDF("child", "parent")
     assert(rows(hexed(Graph.ancestorClosure(unhexed(parents), maxDepth = 4),
       "child", "ancestor")) == rows(Graph.ancestorClosure(parents, maxDepth = 4)))
+  }
+
+  test("null node keys take the distributed loop: closure, PageRank and HITS twins agree") {
+    // a driver twin's hash map matches a null key, the distributed
+    // equi-joins never do: a null parent must not chain to a null
+    // child, a null source must pass no rank on, and the null node's
+    // HITS row must drop as in the distributed final inner join
+    val parents = Seq((Some(1L), None), (None, Some(2L))).toDF("child", "parent")
+    assertTwins(d => Graph.ancestorClosure(parents, driverRows = d))
+    val e = Seq((Some(1L), Some(2L)), (None, Some(1L)), (Some(2L), None), (Some(2L), Some(1L)))
+      .toDF("src", "dst")
+    val n = Seq(Some(1L), Some(2L), None).toDF("node")
+    assertTwins(d => Graph.pageRankScaled(e, n, iterations = 3, driverRows = d))
+    assertTwins(d => Graph.pageRankWeightedScaled(e.withColumn("w", lit(2L)), n,
+      iterations = 3, driverRows = d))
+    assertTwins(d => Graph.hitsScaled(e, n, iterations = 2, driverRows = d))
   }
 
   test("incremental components equal a full recompute and keep labels stable") {
