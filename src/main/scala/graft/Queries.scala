@@ -42,17 +42,8 @@ object Queries {
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
 
   private lazy val scratchCleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      scratchCreated.forEach { root =>
-        try {
-          val walk = java.nio.file.Files.walk(root)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => try java.nio.file.Files.deleteIfExists(p)
-              catch { case _: Exception => () })
-          finally walk.close()
-        } catch { case _: Exception => () }
-      }
-    }, "graft-scratch-cleanup"))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      scratchCreated.forEach(root => deleteTree(root)), "graft-scratch-cleanup"))
 
   /** Eagerly delete every scratch store created so far. Safe BETWEEN
     * ledger queries: each query call constructs its own per-call store
@@ -65,19 +56,19 @@ object Queries {
     * 15.3 s isolated to exactly this class of pressure). Verify and
     * Bench drain between queries, outside any timer.
     */
-  def drainScratch(): Unit = {
-    var root = scratchCreated.poll()
-    while (root != null) {
-      try {
-        val walk = java.nio.file.Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => try java.nio.file.Files.deleteIfExists(p)
-            catch { case _: Exception => () })
-        finally walk.close()
-      } catch { case _: Exception => () }
-      root = scratchCreated.poll()
-    }
-  }
+  def drainScratch(): Unit =
+    Iterator.continually(scratchCreated.poll()).takeWhile(_ != null)
+      .foreach(deleteTree)
+
+  /** Best-effort recursive delete, deepest entries first. */
+  private def deleteTree(root: java.nio.file.Path): Unit =
+    try {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => try java.nio.file.Files.deleteIfExists(p)
+          catch { case _: Exception => () })
+      finally walk.close()
+    } catch { case _: Exception => () }
 
   /** Shard-capped block key for the label-blocked embedding queries
     * (`dedup_embedding_cosine`, `knn_graph_blocked`): an oversized label
@@ -211,15 +202,15 @@ object Queries {
           java.nio.file.attribute.FileTime.fromMillis(t0 + i * 1000L))
       }
       // staging (and any crc sidecars) is garbage once the moves land
-      val walk = Files.walk(stageRoot)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { Files.deleteIfExists(p); () })
-      finally walk.close()
+      deleteTree(stageRoot)
     }
   }
 
-  /** Run a streaming job under state-sized confs, restoring the session
-    * confs afterwards. Two knobs, both provisioning decisions the batch
+  /** Run one streaming job to completion — `writer` started with
+    * `Trigger.AvailableNow`, checkpointed under `ckpt` — under
+    * state-sized confs, restoring the session confs afterwards (a key
+    * the session had not set is unset again). `writer` is built inside
+    * the conf scope. Two knobs, both provisioning decisions the batch
     * defaults get wrong for stateful streams:
     *
     * `statePartitions` — a stateful operator opens one state store per
@@ -242,53 +233,35 @@ object Queries {
     * produce identical results without it, so those queries skip its
     * full state load/commit cycle.
     *
+    * `providerClass` pins a state store provider for queries whose
+    * operator requires one (transformWithState needs RocksDB).
+    *
     * Conf set/restore is safe here: the streaming job runs to completion
-    * (AvailableNow + awaitTermination) inside `body`, and the queries'
+    * (AvailableNow + awaitTermination) inside the scope, and the queries'
     * downstream BATCH plans execute after restore, at `.count()` time.
     */
-  private def withStreamingConfs[A](s: org.apache.spark.sql.SparkSession,
+  private def runAvailableNow(s: SparkSession, ckpt: String,
       statePartitions: Int, noDataBatch: Boolean,
-      providerClass: Option[String] = None)(body: => A): A = {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val chlogKey = "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled"
+      providerClass: Option[String] = None)(
+      writer: => org.apache.spark.sql.streaming.DataStreamWriter[_]): Unit = {
     val conf = s.conf
-    val prevP = conf.get("spark.sql.shuffle.partitions")
-    val prevN = conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val prevS = conf.get(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-    val prevC = conf.get(chlogKey, "false")
-    conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noDataBatch.toString)
-    // experiment knobs (results are state-store-independent, so these
-    // change only WHERE checkpoint bytes go, never what a query emits):
-    // SPARK_GRAFT_STREAM_PROVIDER=rocksdb forces the RocksDB provider
-    // onto every scoped job; SPARK_GRAFT_STREAM_CHANGELOG=true turns on
-    // RocksDB changelog checkpointing (per-batch delta upload instead
-    // of a full snapshot zip — the round-11 diagnosis priced the
-    // per-micro-batch cost as checkpoint I/O, and this is the Spark 4
-    // knob aimed at exactly that cost)
-    val envProvider = sys.env.get("SPARK_GRAFT_STREAM_PROVIDER").map {
-      case "rocksdb" => "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider"
-      case fqcn => fqcn
-    }
-    // an EXPLICIT per-query provider is semantic (transformWithState
-    // queries REQUIRE RocksDB), so it wins over the global experiment
-    // env var; the env knob fills in only for unpinned queries
-    for (e <- envProvider; p <- providerClass; if e != p)
-      System.err.println(s"[graft] SPARK_GRAFT_STREAM_PROVIDER=$e ignored: " +
-        s"query pins $p")
-    val provider = providerClass.orElse(envProvider)
-    provider.foreach(conf.set(providerKey, _))
-    sys.env.get("SPARK_GRAFT_STREAM_CHANGELOG").foreach(conf.set(chlogKey, _))
-    try body finally {
-      conf.set("spark.sql.shuffle.partitions", prevP)
-      conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevN)
-      conf.set(providerKey, prevS)
-      conf.set(chlogKey, prevC)
+    val scoped = Seq(
+      "spark.sql.shuffle.partitions" -> Some(statePartitions.toString),
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> Some(noDataBatch.toString),
+      "spark.sql.streaming.stateStore.providerClass" -> providerClass)
+    val explicit = conf.getAll
+    val prev = scoped.map { case (k, _) => k -> explicit.get(k) }
+    for ((k, v) <- scoped; x <- v) conf.set(k, x)
+    try writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .option("checkpointLocation", ckpt).start().awaitTermination()
+    finally prev.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
     }
   }
+
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** State shard count derived from the state VOLUME a streaming job
     * will hold, not a gate-SF constant: ~250k keys per shard keeps an
@@ -584,7 +557,7 @@ object Queries {
           concat(lit("N"), col("n_nationkey").cast("string")).as("child"),
           concat(lit("R"), col("n_regionkey").cast("string")).as("parent")))
         .createOrReplaceTempView("graft_hier_edges")
-      s.sql("""
+      val out = s.sql("""
         WITH RECURSIVE anc(child, ancestor, depth) AS (
           SELECT child, parent, 1 FROM graft_hier_edges
           UNION ALL
@@ -592,6 +565,9 @@ object Queries {
           FROM anc a JOIN graft_hier_edges e ON e.child = a.ancestor
         )
         SELECT child, ancestor, depth FROM anc""")
+      // the analyzed plan already holds the view's plan
+      s.catalog.dropTempView("graft_hier_edges")
+      out
     },
     Some("""WITH RECURSIVE e AS (
               SELECT 'S' || s_suppkey AS child, 'N' || s_nationkey AS parent FROM supplier
@@ -989,15 +965,21 @@ object Queries {
       .select(explode(col("mg")).as(Seq("event_type", "est_count"))),
     Some("SELECT event_type, count(*) AS est_count FROM events GROUP BY 1"))
 
-  // 60-bit hash both engines derive identically: nibble-decode 15 hex
-  // chars of an ALREADY-computed md5 column (Spark conv(hex) == DuckDB
-  // instr-on-nibbles, the 15-digit generalization of duckBucket).
-  // Callers bind md5(...) in a prior CTE so it runs once per row, not
-  // once per nibble term.
-  private def duckHex60(hexCol: String): String =
-    (1 to 15).map(i =>
-      s"(instr('0123456789abcdef', substr($hexCol, $i, 1)) - 1) * ${BigInt(16).pow(15 - i)}")
+  // The leading `nibbles` hex digits of an md5 hex column as an integer
+  // both engines derive identically (Spark conv(hex) == DuckDB
+  // instr-on-nibbles). Callers bind md5(...) in a prior CTE so it runs
+  // once per row, not once per nibble term.
+  private def duckHexPrefix(hexCol: String, nibbles: Int): String =
+    (1 to nibbles).map(i =>
+      s"(instr('0123456789abcdef', substr($hexCol, $i, 1)) - 1) * ${BigInt(16).pow(nibbles - i)}")
       .mkString("(", " + ", ")")
+
+  // 60-bit hash: 15 nibbles
+  private def duckHex60(hexCol: String): String = duckHexPrefix(hexCol, 15)
+
+  // 20-bit md5 content bucket: 5 nibbles, matching
+  // Expressions.md5_bits(text, 5)
+  private def duckBucket20(hexCol: String): String = duckHexPrefix(hexCol, 5)
 
   // rank of the highest set bit in the 52-bit HLL payload, as a CASE
   // chain (floor(log2) is banned: libm divergence)
@@ -1049,11 +1031,9 @@ object Queries {
             JOIN (SELECT event_type, count(*) AS n_rows
                   FROM events GROUP BY 1) n USING (event_type)"""))
 
-  // the 2-hex-char md5 bucket of an arbitrary SQL expression (the
-  // parameterized form of duckBucket)
+  // the first-byte (2-nibble) md5 bucket of an arbitrary SQL expression
   private def duckBucketOf(expr: String): String =
-    s"""CAST((instr('0123456789abcdef', substr(md5($expr), 1, 1)) - 1) * 16
-       + instr('0123456789abcdef', substr(md5($expr), 2, 1)) - 1 AS BIGINT)"""
+    s"CAST(${duckHexPrefix(s"md5($expr)", 2)} AS BIGINT)"
 
   // Count-Min frequency sketch, cross-engine exact like the HLL: buckets
   // from a shared md5 derivation, counters and min-estimates in pure
@@ -1544,11 +1524,13 @@ object Queries {
       nation(s, d).createOrReplaceTempView("gs_nation")
       // integer cents: the () grouping set is a grand total with the
       // same order-dependent double-sum exposure as cube_agg at scale
-      s.sql("""SELECT n_name, c_mktsegment, count(*) AS n_cust,
+      val out = s.sql("""SELECT n_name, c_mktsegment, count(*) AS n_cust,
                  CAST(sum(CAST(floor(c_acctbal * 100 + 0.5)
                    AS DECIMAL(38,0))) AS BIGINT) AS acctbal_cents
                FROM gs_customer JOIN gs_nation ON c_nationkey = n_nationkey
                GROUP BY GROUPING SETS ((n_name), (c_mktsegment), ())""")
+      Seq("gs_customer", "gs_nation").foreach(s.catalog.dropTempView)
+      out
     },
     Some("""SELECT n_name, c_mktsegment, count(*) AS n_cust,
               CAST(sum(CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT))
@@ -1664,12 +1646,9 @@ object Queries {
               AND ts <= TIMESTAMP '2024-01-15 00:00:00'
             GROUP BY 1, 2"""))
 
-  // session_window (declarative gap sessionization) against a lag/cumsum
-  // oracle: new session when the inter-event gap >= 30 min (micros exact)
-  private val sessionize = Q(
-    "sessionize_gap",
-    (s, d) => graft.streaming.Sessionize.sessionWindows(events(s, d), "ts", "user_id"),
-    Some("""WITH t AS (
+  // the lag/cumsum sessionization oracle prefix: session id `sid` per
+  // user, a new session when the inter-event gap >= 30 min (micros exact)
+  private val duckSessionIds = """WITH t AS (
               SELECT user_id, ts, value,
                 CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER (
                     PARTITION BY user_id ORDER BY ts, event_id)) < 1800000000
@@ -1679,12 +1658,22 @@ object Queries {
               SELECT user_id, ts, value,
                 sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
                   ROWS UNBOUNDED PRECEDING) AS sid
-              FROM t)
+              FROM t)"""
+
+  // one row per session, the shape session_window emits
+  private val duckSessions = duckSessionIds + """
             SELECT user_id,
               CAST(min(ts) AS TIMESTAMP) AS session_start,
               CAST(max(ts) + INTERVAL 30 MINUTE AS TIMESTAMP) AS session_end,
               count(*) AS n_events, round(sum(value), 2) AS sum_value
-            FROM s GROUP BY user_id, sid"""))
+            FROM s GROUP BY user_id, sid"""
+
+  // session_window (declarative gap sessionization) against the
+  // lag/cumsum oracle
+  private val sessionize = Q(
+    "sessionize_gap",
+    (s, d) => graft.streaming.Sessionize.sessionWindows(events(s, d), "ts", "user_id"),
+    Some(duckSessions))
 
   // the declarative session_window run as a REAL streaming job: two
   // micro-batch parquet drops (disjoint halves of events), stateful
@@ -1706,37 +1695,21 @@ object Queries {
       val stream = s.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1).parquet(inDir)
       val qname = "graft_sess_stream_out"
-      s.catalog.dropTempView(qname)
       // complete mode re-emits the whole session table every batch, so
       // the trailing no-data batch is a pure re-emit — skip it; state is
-      // session-count-sized, so 4 partitions (see withStreamingConfs).
-      withStreamingConfs(s, statePartitions = 4, noDataBatch = false) {
+      // session-count-sized, so 4 partitions (see runAvailableNow).
+      runAvailableNow(s, ckpt, statePartitions = 4, noDataBatch = false) {
         graft.streaming.Sessionize.streamingSessions(stream, "ts", "user_id")
           .writeStream.outputMode("complete").format("memory").queryName(qname)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start().awaitTermination()
       }
-      s.table(qname).select(col("user_id"), col("session_start"),
+      // the analyzed plan holds the sink; the memory-sink view can go
+      val out = s.table(qname).select(col("user_id"), col("session_start"),
         col("session_end"), col("n_events"),
         round(col("sum_value"), 2).as("sum_value"))
+      s.catalog.dropTempView(qname)
+      out
     },
-    Some("""WITH t AS (
-              SELECT user_id, ts, value,
-                CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER (
-                    PARTITION BY user_id ORDER BY ts, event_id)) < 1800000000
-                  THEN 0 ELSE 1 END AS new_s
-              FROM events),
-            s AS (
-              SELECT user_id, ts, value,
-                sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                  ROWS UNBOUNDED PRECEDING) AS sid
-              FROM t)
-            SELECT user_id,
-              CAST(min(ts) AS TIMESTAMP) AS session_start,
-              CAST(max(ts) + INTERVAL 30 MINUTE AS TIMESTAMP) AS session_end,
-              count(*) AS n_events, round(sum(value), 2) AS sum_value
-            FROM s GROUP BY user_id, sid"""))
+    Some(duckSessions))
 
   // session-level analytics — the rollup consumers actually run on
   // sessionized data: per user, session count, event volume, and
@@ -1751,17 +1724,7 @@ object Queries {
         sum(col("n_events")).as("total_events"),
         sum(col("dur_us")).as("total_dur_us"),
         max(col("dur_us")).as("max_dur_us")),
-    Some("""WITH t AS (
-              SELECT user_id, ts, value,
-                CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER (
-                    PARTITION BY user_id ORDER BY ts, event_id)) < 1800000000
-                  THEN 0 ELSE 1 END AS new_s
-              FROM events),
-            s AS (
-              SELECT user_id, ts, value,
-                sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                  ROWS UNBOUNDED PRECEDING) AS sid
-              FROM t),
+    Some(duckSessionIds + """,
             sess AS (
               SELECT user_id, count(*) AS n_events,
                 epoch_us(max(ts) + INTERVAL 30 MINUTE) - epoch_us(min(ts)) AS dur_us
@@ -1913,12 +1876,9 @@ object Queries {
       // volume, not the session-wide batch default: 8 keeps the anti-join
       // and the partitioned rewrite at a few MB per task without a
       // 32-way fan-out of near-empty files per batch.
-      withStreamingConfs(s, statePartitions = 8, noDataBatch = true) {
+      runAvailableNow(s, ckpt, statePartitions = 8, noDataBatch = true) {
         Incremental.foreachBatchMergePartitioned(stream, table,
-            keys = Seq("event_id"), partCol = "event_type")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .start().awaitTermination()
+          keys = Seq("event_id"), partCol = "event_type")
       }
       Incremental.weeklyCounts(s.read.parquet(table), "ts", "event_type")
     },
@@ -1989,17 +1949,13 @@ object Queries {
       val words = math.max(131072L, nKeys * 250 / 64 / 8).toInt
       // only 8 shard keys exist, so >8 state partitions are pure empty
       // store overhead; NoTimeout state means the no-data batch does
-      // nothing (no timeouts to fire) — skip it (see withStreamingConfs).
-      withStreamingConfs(s, statePartitions = 8, noDataBatch = false) {
+      // nothing (no timeouts to fire) — skip it (see runAvailableNow).
+      runAvailableNow(s, ckpt, statePartitions = 8, noDataBatch = false) {
         streaming.Incremental.bloomDedupStream(
             stream.select(col("event_id")).as[Long],
             shards = 8, numWords = words, numHashes = 5)
-          .writeStream.format("parquet")
-          .option("path", outDir)
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .writeStream.format("parquet").option("path", outDir)
           .outputMode("append")
-          .start().awaitTermination()
       }
       s.read.parquet(outDir).select(col("value").as("event_id"))
     },
@@ -2162,39 +2118,60 @@ object Queries {
                 || '/Path/' || doc_id || '?id=' || doc_id AS url_norm
             FROM documents"""))
 
-  // Link authority over a crawl graph (what html_outlinks feeds at
-  // scale): scaled-integer PageRank, oracle-EXACT because every step is
-  // order-independent 64-bit arithmetic — contribution = rank div
-  // outdeg, damping = (85*sum) div 100 — so DuckDB rebuilding the same
-  // five iterations as chained CTEs lands on identical integers (the
-  // HLL/CMS integer-scaling treatment applied to an iterative
-  // algorithm; float PageRank would diverge in sum order alone). The
-  // synthetic graph gives every doc two id-derived outlinks.
-  private def duckPageRankSql(iterations: Int): String = {
-    val rounds = (1 to iterations).map { i =>
-      s"""r$i AS (
+  /** The doc-circulant graph of the PageRank/HITS queries: one node per
+    * doc, and each doc links to (3·id + 1) mod n and (7·id + 3) mod n,
+    * n the doc count.
+    */
+  private final case class DocGraph(docs: DataFrame, n: Long) {
+    def nodes: DataFrame = docs.select(col("doc_id").as("node"))
+    /** Both chords; each chord's rows also carry its `extra` columns. */
+    def edges(extra3: Seq[Column] = Nil, extra7: Seq[Column] = Nil): DataFrame =
+      chord(3, 1, extra3).unionByName(chord(7, 3, extra7))
+    private def chord(k: Int, c: Int, extra: Seq[Column]): DataFrame =
+      docs.select(Seq(col("doc_id").as("src"),
+        ((col("doc_id") * k + c) % n).as("dst")) ++ extra: _*)
+  }
+
+  private def docGraph(s: SparkSession, d: String): DocGraph = {
+    val docs = documents(s, d).select(col("doc_id"))
+    // graph size pins the modulus; a bounded metadata count, not data
+    DocGraph(docs, docs.count())
+  }
+
+  // the doc-circulant graph in DuckDB: nodes(node, seed), the doc count
+  // nn, and edges e(src, dst, w), with per-query seed and chord weights
+  private def duckDocGraph(seed: String = "1", w3: String = "1",
+                           w7: String = "1"): String =
+    s"""nodes AS (SELECT doc_id AS node, $seed AS seed FROM documents),
+          nn AS (SELECT count(*) AS n FROM documents),
+          e AS (
+            SELECT doc_id AS src, (doc_id * 3 + 1) % (SELECT n FROM nn) AS dst,
+              $w3 AS w
+            FROM documents
+            UNION ALL
+            SELECT doc_id, (doc_id * 7 + 3) % (SELECT n FROM nn), $w7
+            FROM documents)"""
+
+  // The integer PageRank rounds r0..r<iterations> of Graph.pageRank over
+  // the CTEs nodes(node, seed) and e(src, dst, w): contribution
+  // (rank·w) div Σw(src), the restart share to seed = 1 rows (seed = 1
+  // everywhere for global PageRank, w = 1 for unweighted graphs).
+  private def duckPageRankRounds(iterations: Int): String =
+    """sw AS (SELECT src, CAST(SUM(w) AS BIGINT) AS sw FROM e GROUP BY 1),
+          ej AS (SELECT e.src, e.dst, e.w, sw.sw FROM e JOIN sw USING (src)),
+          r0 AS (SELECT node, CAST(seed * 1000000000 AS BIGINT) AS rank_scaled
+                 FROM nodes)""" + (1 to iterations).map { i =>
+      s""",
+          r$i AS (
            SELECT n.node,
-             CAST(150000000 AS BIGINT) +
-             CAST((85 * COALESCE(SUM(r.rank_scaled // ej.outdeg), 0)) // 100
+             CAST(n.seed * 150000000 AS BIGINT) +
+             CAST((85 * COALESCE(SUM((r.rank_scaled * ej.w) // ej.sw), 0)) // 100
                AS BIGINT) AS rank_scaled
            FROM nodes n
            LEFT JOIN ej ON ej.dst = n.node
            LEFT JOIN r${i - 1} r ON r.node = ej.src
-           GROUP BY n.node)"""
-    }.mkString(",\n")
-    s"""WITH nodes AS (SELECT doc_id AS node FROM documents),
-          nn AS (SELECT count(*) AS n FROM documents),
-          e AS (
-            SELECT doc_id AS src, (doc_id * 3 + 1) % (SELECT n FROM nn) AS dst
-            FROM documents
-            UNION ALL
-            SELECT doc_id, (doc_id * 7 + 3) % (SELECT n FROM nn) FROM documents),
-          od AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
-          ej AS (SELECT e.src, e.dst, od.outdeg FROM e JOIN od USING (src)),
-          r0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS rank_scaled FROM nodes),
-          $rounds
-        SELECT node AS doc_id, rank_scaled FROM r$iterations"""
-  }
+           GROUP BY n.node, n.seed)"""
+    }.mkString
 
   // TextRank keywords: adjacent-token cooccurrence edges + the integer
   // PageRank rounds, top 20 by (rank, word). The oracle rebuilds the
@@ -2204,19 +2181,7 @@ object Queries {
     "textrank_keywords",
     (s, d) => ops.TextAnalysis.textrankKeywords(documents(s, d), "doc_id",
       "text", iterations = 3, topK = 20),
-    Some {
-      val rounds = (1 to 3).map { i =>
-        s"""r$i AS (
-             SELECT n.node,
-               CAST(150000000 AS BIGINT) +
-               CAST((85 * COALESCE(SUM(r.rank_scaled // ej.outdeg), 0)) // 100
-                 AS BIGINT) AS rank_scaled
-             FROM nodes n
-             LEFT JOIN ej ON ej.dst = n.node
-             LEFT JOIN r${i - 1} r ON r.node = ej.src
-             GROUP BY n.node)"""
-      }.mkString(",\n")
-      s"""WITH tok AS (
+    Some(s"""WITH tok AS (
             SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS ts
             FROM documents),
           pos AS (
@@ -2225,24 +2190,12 @@ object Queries {
           canon AS (
             SELECT DISTINCT least(w, w2) AS u, greatest(w, w2) AS v
             FROM pos WHERE w2 IS NOT NULL AND w <> w2),
-          e AS (SELECT u AS src, v AS dst FROM canon
-                UNION ALL SELECT v, u FROM canon),
-          nodes AS (SELECT DISTINCT w AS node FROM pos),
-          od AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
-          ej AS (SELECT e.src, e.dst, od.outdeg FROM e JOIN od USING (src)),
-          r0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS rank_scaled
-                 FROM nodes),
-          $rounds
+          e AS (SELECT u AS src, v AS dst, 1 AS w FROM canon
+                UNION ALL SELECT v, u, 1 FROM canon),
+          nodes AS (SELECT DISTINCT w AS node, 1 AS seed FROM pos),
+          ${duckPageRankRounds(3)}
           SELECT node AS word, rank_scaled FROM r3
-          ORDER BY rank_scaled DESC, node LIMIT 20"""
-    })
-
-  // 20-bit md5 content bucket in DuckDB SQL: the 5-nibble prefix as an
-  // integer, matching Expressions.md5_bits(text, 5) — shared by the
-  // weighted-sampling oracles.
-  private val duckBucket20 = (1 to 5).map(i =>
-    s"(instr('0123456789abcdef', substr(md5(text), $i, 1)) - 1) * ${BigInt(16).pow(5 - i)}")
-    .mkString("(", " + ", ")")
+          ORDER BY rank_scaled DESC, node LIMIT 20"""))
 
   // Score-weighted deterministic sampling (what a pipeline runs AFTER
   // pagerank/quality scoring): keep test is 64-bit integer arithmetic
@@ -2259,21 +2212,18 @@ object Queries {
           "score_scaled", targetPermille = 400)
         .select(col("doc_id"), col("score_scaled"))
     },
-    Some {
-      val bucket20 = duckBucket20
-      s"""WITH st AS (
+    Some(s"""WITH st AS (
             SELECT SUM(500000000 + (doc_id % 1000) * 1000000) AS s,
                    COUNT(*) AS n
             FROM documents),
           b AS (
             SELECT doc_id,
               500000000 + (doc_id % 1000) * 1000000 AS score_scaled,
-              $bucket20 AS bucket
+              ${duckBucket20("md5(text)")} AS bucket
             FROM documents)
           SELECT doc_id, score_scaled
           FROM b, st
-          WHERE bucket * (s // n) < ((score_scaled * 400) // 1000) * 1048576"""
-    })
+          WHERE bucket * (s // n) < ((score_scaled * 400) // 1000) * 1048576"""))
 
   // sqrt-temperature source rebalancing (alpha=0.5 mixture): per-source
   // keep rates from pure integer arithmetic over one IEEE-exact sqrt,
@@ -2500,9 +2450,7 @@ object Queries {
     (s, d) => ops.Splits.prioritySample(documents(s, d), "doc_id", "text",
       "n_chars", "source", k = 50),
     Some {
-      val hex8 = (1 to 8).map(i =>
-        s"(instr('0123456789abcdef', substr(mh, $i, 1)) - 1) * ${BigInt(16).pow(8 - i)}")
-        .mkString("(", " + ", ")")
+      val hex8 = duckHexPrefix("mh", 8)
       s"""WITH md AS (
             SELECT doc_id, source, n_chars, md5(text) AS mh FROM documents),
           q AS (
@@ -2542,40 +2490,7 @@ object Queries {
               FROM c, t)
             SELECT d.doc_id, d.source, r.keep_permille
             FROM documents d JOIN r USING (source)
-            WHERE $duckBucket20 * 1000 < keep_permille * 1048576"""))
-
-  // round-unrolled oracle for personalized PageRank: identical integer
-  // steps (div-truncating), teleport mass restricted to the seed set
-  private def duckPprSql(iterations: Int): String = {
-    val rounds = (1 to iterations).map { i =>
-      s"""r$i AS (
-           SELECT n.node,
-             CAST(n.seed * 150000000 AS BIGINT) +
-             CAST((85 * COALESCE(SUM(r.rank_scaled // ej.outdeg), 0)) // 100
-               AS BIGINT) AS rank_scaled
-           FROM nodes n
-           LEFT JOIN ej ON ej.dst = n.node
-           LEFT JOIN r${i - 1} r ON r.node = ej.src
-           GROUP BY n.node, n.seed)"""
-    }.mkString(",\n")
-    s"""WITH nodes AS (
-            SELECT doc_id AS node,
-              CASE WHEN doc_id % 100 = 0 THEN 1 ELSE 0 END AS seed
-            FROM documents),
-          nn AS (SELECT count(*) AS n FROM documents),
-          e AS (
-            SELECT doc_id AS src, (doc_id * 3 + 1) % (SELECT n FROM nn) AS dst
-            FROM documents
-            UNION ALL
-            SELECT doc_id, (doc_id * 7 + 3) % (SELECT n FROM nn) FROM documents),
-          od AS (SELECT src, count(*) AS outdeg FROM e GROUP BY 1),
-          ej AS (SELECT e.src, e.dst, od.outdeg FROM e JOIN od USING (src)),
-          r0 AS (
-            SELECT node, CAST(seed * 1000000000 AS BIGINT) AS rank_scaled
-            FROM nodes),
-          $rounds
-        SELECT node AS doc_id, rank_scaled FROM r$iterations"""
-  }
+            WHERE ${duckBucket20("md5(text)")} * 1000 < keep_permille * 1048576"""))
 
   // round-unrolled oracle for integer-scaled HITS: per round an
   // in-edge hub sum + max-normalize, then an out-edge authority sum +
@@ -2606,13 +2521,7 @@ object Queries {
                AS BIGINT) AS hub
            FROM h${i}f, (SELECT MAX(h) AS mx FROM h${i}f))"""
     }.mkString(",\n")
-    s"""WITH nodes AS (SELECT doc_id AS node FROM documents),
-          nn AS (SELECT count(*) AS n FROM documents),
-          e AS (
-            SELECT doc_id AS src, (doc_id * 3 + 1) % (SELECT n FROM nn) AS dst
-            FROM documents
-            UNION ALL
-            SELECT doc_id, (doc_id * 7 + 3) % (SELECT n FROM nn) FROM documents),
+    s"""WITH ${duckDocGraph()},
           h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS hub FROM nodes),
           $rounds
         SELECT h$iterations.node AS doc_id, h$iterations.hub AS hub_scaled,
@@ -2628,14 +2537,8 @@ object Queries {
   private val hitsScores = Q(
     "hits_scores",
     (s, d) => {
-      val docs = documents(s, d).select(col("doc_id"))
-      val nDocs = docs.count()
-      val edges = docs
-        .select(col("doc_id").as("src"), ((col("doc_id") * 3 + 1) % nDocs).as("dst"))
-        .unionByName(docs
-          .select(col("doc_id").as("src"), ((col("doc_id") * 7 + 3) % nDocs).as("dst")))
-      Graph.hitsScaled(edges, docs.select(col("doc_id").as("node")),
-          iterations = 3)
+      val g = docGraph(s, d)
+      Graph.hitsScaled(g.edges(), g.nodes, iterations = 3)
         .select(col("node").as("doc_id"), col("hub_scaled"), col("auth_scaled"))
     },
     Some(duckHitsSql(3)))
@@ -2648,83 +2551,51 @@ object Queries {
   private val personalizedPagerank = Q(
     "personalized_pagerank",
     (s, d) => {
-      val docs = documents(s, d).select(col("doc_id"))
-      val nDocs = docs.count()
-      val edges = docs
-        .select(col("doc_id").as("src"), ((col("doc_id") * 3 + 1) % nDocs).as("dst"))
-        .unionByName(docs
-          .select(col("doc_id").as("src"), ((col("doc_id") * 7 + 3) % nDocs).as("dst")))
-      Graph.personalizedPageRankScaled(edges,
-          docs.select(col("doc_id").as("node")),
-          docs.filter(col("doc_id") % 100 === 0).select(col("doc_id").as("node")),
-          iterations = 5)
+      val g = docGraph(s, d)
+      Graph.personalizedPageRankScaled(g.edges(), g.nodes,
+          g.nodes.filter(col("node") % 100 === 0), iterations = 5)
         .select(col("node").as("doc_id"), col("rank_scaled"))
     },
-    Some(duckPprSql(5)))
+    Some(s"""WITH ${duckDocGraph(seed = "CASE WHEN doc_id % 100 = 0 THEN 1 ELSE 0 END")},
+          ${duckPageRankRounds(5)}
+        SELECT node AS doc_id, rank_scaled FROM r5"""))
 
   // edge-weighted PageRank over the circulant graph with deterministic
-  // weights (src%5 + 1): flow proportional to (rank·w) div Σw — the
-  // TextRank-style weighted walk, rounds unrolled in the oracle
+  // weights (src%5 + 1, src%3 + 1 per chord): flow proportional to
+  // (rank·w) div Σw — the TextRank-style weighted walk, rounds unrolled
+  // in the oracle
   private val pagerankWeightedQ = Q(
     "pagerank_weighted",
     (s, d) => {
-      val docs = documents(s, d).select(col("doc_id"))
-      val nDocs = docs.count()
-      val edges = docs
-        .select(col("doc_id").as("src"), ((col("doc_id") * 3 + 1) % nDocs).as("dst"),
-          (col("doc_id") % 5 + 1).cast("long").as("w"))
-        .unionByName(docs
-          .select(col("doc_id").as("src"), ((col("doc_id") * 7 + 3) % nDocs).as("dst"),
-            (col("doc_id") % 3 + 1).cast("long").as("w")))
-      Graph.pageRankWeightedScaled(edges, docs.select(col("doc_id").as("node")),
-          iterations = 5)
+      val g = docGraph(s, d)
+      Graph.pageRankWeightedScaled(
+          g.edges(Seq((col("doc_id") % 5 + 1).cast("long").as("w")),
+            Seq((col("doc_id") % 3 + 1).cast("long").as("w"))),
+          g.nodes, iterations = 5)
         .select(col("node").as("doc_id"), col("rank_scaled"))
     },
-    Some {
-      val rounds = (1 to 5).map { i =>
-        s"""r$i AS (
-             SELECT n.node,
-               CAST(150000000 AS BIGINT) +
-               CAST((85 * COALESCE(SUM((r.rank_scaled * ej.w) // ej.sw), 0)) // 100
-                 AS BIGINT) AS rank_scaled
-             FROM nodes n
-             LEFT JOIN ej ON ej.dst = n.node
-             LEFT JOIN r${i - 1} r ON r.node = ej.src
-             GROUP BY n.node)"""
-      }.mkString(",\n")
-      s"""WITH nodes AS (SELECT doc_id AS node FROM documents),
-            nn AS (SELECT count(*) AS n FROM documents),
-            e AS (
-              SELECT doc_id AS src, (doc_id * 3 + 1) % (SELECT n FROM nn) AS dst,
-                doc_id % 5 + 1 AS w
-              FROM documents
-              UNION ALL
-              SELECT doc_id, (doc_id * 7 + 3) % (SELECT n FROM nn),
-                doc_id % 3 + 1
-              FROM documents),
-            sw AS (SELECT src, CAST(SUM(w) AS BIGINT) AS sw FROM e GROUP BY 1),
-            ej AS (SELECT e.src, e.dst, e.w, sw.sw FROM e JOIN sw USING (src)),
-            r0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS rank_scaled
-                   FROM nodes),
-            $rounds
-          SELECT node AS doc_id, rank_scaled FROM r5"""
-    })
+    Some(s"""WITH ${duckDocGraph(w3 = "doc_id % 5 + 1", w7 = "doc_id % 3 + 1")},
+          ${duckPageRankRounds(5)}
+        SELECT node AS doc_id, rank_scaled FROM r5"""))
 
+  // Link authority over a crawl graph (what html_outlinks feeds at
+  // scale): scaled-integer PageRank, oracle-EXACT because every step is
+  // order-independent 64-bit arithmetic — contribution = (rank·w) div
+  // Σw(src), damping = (85*sum) div 100 — so DuckDB rebuilding the same
+  // rounds as chained CTEs lands on identical integers (the HLL/CMS
+  // integer-scaling treatment applied to an iterative algorithm; float
+  // PageRank would diverge in sum order alone). The synthetic graph
+  // gives every doc two id-derived outlinks.
   private val pagerankScaled = Q(
     "pagerank_scaled",
     (s, d) => {
-      val docs = documents(s, d).select(col("doc_id"))
-      // graph size pins the modulus; a bounded metadata count, not data
-      val nDocs = docs.count()
-      val edges = docs
-        .select(col("doc_id").as("src"), ((col("doc_id") * 3 + 1) % nDocs).as("dst"))
-        .unionByName(docs
-          .select(col("doc_id").as("src"), ((col("doc_id") * 7 + 3) % nDocs).as("dst")))
-      Graph.pageRankScaled(edges, docs.select(col("doc_id").as("node")),
-          iterations = 5)
+      val g = docGraph(s, d)
+      Graph.pageRankScaled(g.edges(), g.nodes, iterations = 5)
         .select(col("node").as("doc_id"), col("rank_scaled"))
     },
-    Some(duckPageRankSql(5)))
+    Some(s"""WITH ${duckDocGraph()},
+          ${duckPageRankRounds(5)}
+        SELECT node AS doc_id, rank_scaled FROM r5"""))
 
   // JSON document access: typed extraction from the semi-structured props
   // column (from_json with a pinned schema — the engine's explicit-schema
@@ -2752,15 +2623,10 @@ object Queries {
               min(doc_id) AS keep_id, count(*) AS n_dups
             FROM documents GROUP BY 1"""))
 
-  // exact duplicate-span detection (fixed-window simplification of
-  // suffix-array substring dedup): corpus-wide repeated 8-token windows
-  // with document + position, shuffling only (md5, doc, pos)
-  private val dedupSpanExact = Q(
-    "dedup_span_exact",
-    (s, d) => Dedup.duplicateSpans(documents(s, d), "doc_id", "text", 8)
-      .select(col("doc_id"), col("pos").cast("long").as("pos"),
-        col("span_key"), col("n_occurrences")),
-    Some(s"""WITH tok AS (
+  // the 8-token window oracle prefix of the span-dedup queries:
+  // tok(doc_id, ts) and spans(doc_id, pos, span_key), one row per window
+  // start with the 60-bit key of the window's md5
+  private val duckSpanKeys = s"""WITH tok AS (
               SELECT doc_id,
                 string_split_regex(lower(trim(text)), '\\s+') AS ts
               FROM documents),
@@ -2770,7 +2636,17 @@ object Queries {
               FROM tok, unnest(range(1, greatest(len(ts) - 6, 1))) AS t(i)),
             spans AS (
               SELECT doc_id, pos, ${duckHex60("mh")} AS span_key
-              FROM hashed),
+              FROM hashed)"""
+
+  // exact duplicate-span detection (fixed-window simplification of
+  // suffix-array substring dedup): corpus-wide repeated 8-token windows
+  // with document + position, shuffling only (md5, doc, pos)
+  private val dedupSpanExact = Q(
+    "dedup_span_exact",
+    (s, d) => Dedup.duplicateSpans(documents(s, d), "doc_id", "text", 8)
+      .select(col("doc_id"), col("pos").cast("long").as("pos"),
+        col("span_key"), col("n_occurrences")),
+    Some(duckSpanKeys + """,
             counted AS (
               SELECT doc_id, pos, span_key,
                 count(*) OVER (PARTITION BY span_key) AS n_occurrences
@@ -2786,17 +2662,7 @@ object Queries {
   private val dedupSpanMaximal = Q(
     "dedup_span_maximal",
     (s, d) => Dedup.maximalDuplicateSpans(documents(s, d), "doc_id", "text", 8),
-    Some(s"""WITH tok AS (
-              SELECT doc_id,
-                string_split_regex(lower(trim(text)), '\\s+') AS ts
-              FROM documents),
-            hashed AS (
-              SELECT doc_id, i AS pos,
-                md5(array_to_string(ts[i:i+7], ' ')) AS mh
-              FROM tok, unnest(range(1, greatest(len(ts) - 6, 1))) AS t(i)),
-            spans AS (
-              SELECT doc_id, pos, ${duckHex60("mh")} AS span_key
-              FROM hashed),
+    Some(duckSpanKeys + """,
             counted AS (
               SELECT doc_id, pos,
                 count(*) OVER (PARTITION BY span_key) AS n
@@ -2825,17 +2691,7 @@ object Queries {
   private val dedupSpanExcise = Q(
     "dedup_span_excise",
     (s, d) => Dedup.exciseDuplicateSpans(documents(s, d), "doc_id", "text", 8),
-    Some(s"""WITH tok AS (
-              SELECT doc_id,
-                string_split_regex(lower(trim(text)), '\\s+') AS ts
-              FROM documents),
-            hashed AS (
-              SELECT doc_id, i AS pos,
-                md5(array_to_string(ts[i:i+7], ' ')) AS mh
-              FROM tok, unnest(range(1, greatest(len(ts) - 6, 1))) AS t(i)),
-            spans AS (
-              SELECT doc_id, pos, ${duckHex60("mh")} AS span_key
-              FROM hashed),
+    Some(duckSpanKeys + """,
             kc AS (SELECT span_key, count(*) AS n FROM spans GROUP BY 1),
             dup AS (
               SELECT s.doc_id, s.pos, s.span_key
@@ -2937,6 +2793,37 @@ object Queries {
               FROM all_docs)
             SELECT doc_id, q FROM ranked WHERE rn = 1"""))
 
+  // the trigram shingle CTEs shared by the ngram-jaccard, containment,
+  // prefix-join, minhash, and clusters oracles (Spark side:
+  // word_shingles(tokens(text), 3))
+  private val duckShingles: String =
+    """tok AS (
+              SELECT doc_id,
+                unnest(string_split_regex(lower(trim(text)), '\s+')) AS w,
+                generate_subscripts(string_split_regex(lower(trim(text)), '\s+'), 1) AS pos
+              FROM documents),
+            sh0 AS (
+              SELECT DISTINCT a.doc_id, a.w || ' ' || b.w || ' ' || c.w AS shingle
+              FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
+                         JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
+              UNION
+              SELECT doc_id,
+                array_to_string(string_split_regex(lower(trim(text)), '\s+'), ' ') AS shingle
+              FROM documents
+              WHERE len(string_split_regex(lower(trim(text)), '\s+')) < 3)"""
+
+  // exact trigram overlap per doc pair over the df <= 10 shingles
+  // (maxDf=10): sizes(doc_id, n_sh) and inter(id_a < id_b, n_inter)
+  private val duckShingleInter: String = duckShingles + """,
+            shf AS (SELECT doc_id, shingle,
+                      count(*) OVER (PARTITION BY shingle) AS df FROM sh0),
+            sh AS (SELECT doc_id, shingle FROM shf WHERE df <= 10),
+            sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
+            inter AS (
+              SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS n_inter
+              FROM sh x JOIN sh y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
+              GROUP BY 1, 2)"""
+
   // trigram shingles, not bigrams: the harness vocabulary is ~30 words, so
   // bigram shingle frequency explodes the inverted-index self-join
   // quadratically at sf0.1; trigrams cut per-shingle doc frequency ~30x.
@@ -2950,28 +2837,7 @@ object Queries {
     "setsim_containment_join",
     (s, d) => Dedup.containmentPairs(documents(s, d), "doc_id", "text", 3,
       thresholdPermille = 300, maxDf = 10),
-    Some("""WITH tok AS (
-              SELECT doc_id,
-                unnest(string_split_regex(lower(trim(text)), '\s+')) AS w,
-                generate_subscripts(string_split_regex(lower(trim(text)), '\s+'), 1) AS pos
-              FROM documents),
-            sh0 AS (
-              SELECT DISTINCT a.doc_id, a.w || ' ' || b.w || ' ' || c.w AS shingle
-              FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-                         JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-              UNION
-              SELECT doc_id,
-                array_to_string(string_split_regex(lower(trim(text)), '\s+'), ' ') AS shingle
-              FROM documents
-              WHERE len(string_split_regex(lower(trim(text)), '\s+')) < 3),
-            shf AS (SELECT doc_id, shingle,
-                      count(*) OVER (PARTITION BY shingle) AS df FROM sh0),
-            sh AS (SELECT doc_id, shingle FROM shf WHERE df <= 10),
-            sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-            inter AS (
-              SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS n_inter
-              FROM sh x JOIN sh y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-              GROUP BY 1, 2),
+    Some(s"""WITH $duckShingleInter,
             directed AS (
               SELECT id_a AS id_contained, id_b AS id_container, n_inter FROM inter
               UNION ALL
@@ -2988,28 +2854,7 @@ object Queries {
     "dedup_ngram_jaccard",
     (s, d) => Dedup.ngramJaccardPairs(documents(s, d), "doc_id", "text", 3, 0.1,
       maxDf = 10),
-    Some("""WITH tok AS (
-              SELECT doc_id,
-                unnest(string_split_regex(lower(trim(text)), '\s+')) AS w,
-                generate_subscripts(string_split_regex(lower(trim(text)), '\s+'), 1) AS pos
-              FROM documents),
-            sh0 AS (
-              SELECT DISTINCT a.doc_id, a.w || ' ' || b.w || ' ' || c.w AS shingle
-              FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-                         JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-              UNION
-              SELECT doc_id,
-                array_to_string(string_split_regex(lower(trim(text)), '\s+'), ' ') AS shingle
-              FROM documents
-              WHERE len(string_split_regex(lower(trim(text)), '\s+')) < 3),
-            shf AS (SELECT doc_id, shingle,
-                      count(*) OVER (PARTITION BY shingle) AS df FROM sh0),
-            sh AS (SELECT doc_id, shingle FROM shf WHERE df <= 10),
-            sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-            inter AS (
-              SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS n_inter
-              FROM sh x JOIN sh y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-              GROUP BY 1, 2)
+    Some(s"""WITH $duckShingleInter
             SELECT id_a, id_b, n_inter,
               sa.n_sh + sb.n_sh - n_inter AS n_union,
               n_inter / (sa.n_sh + sb.n_sh - n_inter) AS jaccard
@@ -3017,24 +2862,6 @@ object Queries {
             JOIN sizes sa ON sa.doc_id = id_a
             JOIN sizes sb ON sb.doc_id = id_b
             WHERE n_inter >= 0.1 * (sa.n_sh + sb.n_sh - n_inter)"""))
-
-  // the trigram shingle CTEs shared by the ngram-jaccard, minhash, and
-  // clusters oracles (Spark side: word_shingles(tokens(text), 3))
-  private val duckShingles: String =
-    """tok AS (
-              SELECT doc_id,
-                unnest(string_split_regex(lower(trim(text)), '\s+')) AS w,
-                generate_subscripts(string_split_regex(lower(trim(text)), '\s+'), 1) AS pos
-              FROM documents),
-            sh0 AS (
-              SELECT DISTINCT a.doc_id, a.w || ' ' || b.w || ' ' || c.w AS shingle
-              FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-                         JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-              UNION
-              SELECT doc_id,
-                array_to_string(string_split_regex(lower(trim(text)), '\s+'), ' ') AS shingle
-              FROM documents
-              WHERE len(string_split_regex(lower(trim(text)), '\s+')) < 3)"""
 
   // MinHash+LSH verified END TO END against an independent rebuild: the
   // signature family is md5-based mod-2^60 arithmetic (see
@@ -3196,29 +3023,7 @@ object Queries {
   // Shared oracle prefix for the component-based dedup queries: exact
   // 3-gram Jaccard pairs (maxDf=10) -> WITH RECURSIVE min-label closure
   // -> comp(node, component) + csize(component, cluster_size).
-  private val jaccardComponentsCte = """WITH RECURSIVE
-            tok AS (
-              SELECT doc_id,
-                unnest(string_split_regex(lower(trim(text)), '\s+')) AS w,
-                generate_subscripts(string_split_regex(lower(trim(text)), '\s+'), 1) AS pos
-              FROM documents),
-            sh0 AS (
-              SELECT DISTINCT a.doc_id, a.w || ' ' || b.w || ' ' || c.w AS shingle
-              FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-                         JOIN tok c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-              UNION
-              SELECT doc_id,
-                array_to_string(string_split_regex(lower(trim(text)), '\s+'), ' ') AS shingle
-              FROM documents
-              WHERE len(string_split_regex(lower(trim(text)), '\s+')) < 3),
-            shf AS (SELECT doc_id, shingle,
-                      count(*) OVER (PARTITION BY shingle) AS df FROM sh0),
-            sh AS (SELECT doc_id, shingle FROM shf WHERE df <= 10),
-            sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1),
-            inter AS (
-              SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS n_inter
-              FROM sh x JOIN sh y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-              GROUP BY 1, 2),
+  private val jaccardComponentsCte = s"""WITH RECURSIVE $duckShingleInter,
             pairs AS (
               SELECT id_a, id_b FROM inter
               JOIN sizes sa ON sa.doc_id = id_a
@@ -3397,19 +3202,11 @@ object Queries {
             FROM x JOIN rm ON rm.i = x.i
             GROUP BY 1, 2"""))
 
-  // Binary-quantized ANN: 1-bit sign codes (two packed 32-bit words per
-  // 64-dim vector), Hamming-popcount candidate generation, exact cosine
-  // rerank of the 20 survivors. The oracle rebuilds the identical codes
-  // in BIGINT arithmetic (32-bit words keep every value positive) and
-  // replays both deterministic-tie windows.
-  private val annBinaryHamming = Q(
-    "ann_binary_hamming",
-    (s, d) => {
-      val emb = embeddings(s, d)
-      Similarity.binaryHammingTopK(emb, emb.filter(col("vec_id") < 10),
-        "vec_id", "embedding", dim = 64, k = 5, candidates = 20)
-    },
-    Some("""WITH codes AS (
+  // the binary-quantized ANN oracle prefix: sign codes (two packed
+  // 32-bit words per 64-dim vector, BIGINT arithmetic keeps every value
+  // positive) and pool, each probe's 20 nearest codes by Hamming
+  // popcount, ties by id
+  private val duckHammingPool = """codes AS (
               SELECT vec_id, embedding,
                 CAST(list_sum(list_transform(list_zip(embedding[1:32], range(1, 33)),
                   z -> CASE WHEN z[1] >= 0 THEN 1::BIGINT << (z[2] - 1)
@@ -3429,7 +3226,21 @@ object Queries {
               SELECT * FROM (
                 SELECT *, row_number() OVER (PARTITION BY probe_id
                   ORDER BY hamming, cand_id) AS hrank
-                FROM cand) WHERE hrank <= 20),
+                FROM cand) WHERE hrank <= 20)"""
+
+  // Binary-quantized ANN: 1-bit sign codes (two packed 32-bit words per
+  // 64-dim vector), Hamming-popcount candidate generation, exact cosine
+  // rerank of the 20 survivors. The oracle rebuilds the identical codes
+  // in BIGINT arithmetic (32-bit words keep every value positive) and
+  // replays both deterministic-tie windows.
+  private val annBinaryHamming = Q(
+    "ann_binary_hamming",
+    (s, d) => {
+      val emb = embeddings(s, d)
+      Similarity.binaryHammingTopK(emb, emb.filter(col("vec_id") < 10),
+        "vec_id", "embedding", dim = 64, k = 5, candidates = 20)
+    },
+    Some(s"""WITH $duckHammingPool,
             rescored AS (
               SELECT probe_id, cand_id, CAST(hamming AS INTEGER) AS hamming,
                 round(list_dot_product(pv::DOUBLE[], cv::DOUBLE[])
@@ -3465,7 +3276,7 @@ object Queries {
           coalesce(col("n_hits"), lit(0L)).as("n_hits"))
         .withColumn("recall_milli", expr("(n_hits * 1000) div 5"))
     },
-    Some("""WITH scored AS (
+    Some(s"""WITH scored AS (
               SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
                 round(list_dot_product(p.embedding::DOUBLE[], c.embedding::DOUBLE[])
                   / (sqrt(list_dot_product(p.embedding::DOUBLE[], p.embedding::DOUBLE[]))
@@ -3479,27 +3290,7 @@ object Queries {
                   row_number() OVER (PARTITION BY probe_id
                     ORDER BY score DESC, cand_id) AS rank
                 FROM scored) WHERE rank <= 5),
-            codes AS (
-              SELECT vec_id, embedding,
-                CAST(list_sum(list_transform(list_zip(embedding[1:32], range(1, 33)),
-                  z -> CASE WHEN z[1] >= 0 THEN 1::BIGINT << (z[2] - 1)
-                       ELSE 0 END)) AS BIGINT) AS sig0,
-                CAST(list_sum(list_transform(list_zip(embedding[33:64], range(1, 33)),
-                  z -> CASE WHEN z[1] >= 0 THEN 1::BIGINT << (z[2] - 1)
-                       ELSE 0 END)) AS BIGINT) AS sig1
-              FROM embeddings),
-            cand AS (
-              SELECT p.vec_id AS probe_id, c.vec_id AS cand_id,
-                bit_count(xor(p.sig0, c.sig0))
-                  + bit_count(xor(p.sig1, c.sig1)) AS hamming,
-                p.embedding AS pv, c.embedding AS cv
-              FROM codes p JOIN codes c ON p.vec_id <> c.vec_id
-              WHERE p.vec_id < 10),
-            pool AS (
-              SELECT * FROM (
-                SELECT *, row_number() OVER (PARTITION BY probe_id
-                  ORDER BY hamming, cand_id) AS hrank
-                FROM cand) WHERE hrank <= 20),
+            $duckHammingPool,
             rescored AS (
               SELECT probe_id, cand_id,
                 round(list_dot_product(pv::DOUBLE[], cv::DOUBLE[])
@@ -4136,6 +3927,20 @@ object Queries {
           FROM m"""
     })
 
+  // the hashed token features both oracles below rebuild: per token the
+  // 64-way bucket of its 20-bit md5 prefix and the 6th-nibble parity sign
+  private val duckHashedTokens = s"""WITH tok AS (
+            SELECT doc_id,
+              unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
+            FROM documents),
+          md AS (SELECT doc_id, md5(w) AS mh FROM tok),
+          h AS (
+            SELECT doc_id,
+              CAST(${duckBucket20("mh")} % 64 AS BIGINT) AS bucket,
+              CASE WHEN (instr('0123456789abcdef', substr(mh, 6, 1)) - 1) % 2 = 0
+                THEN 1 ELSE -1 END AS sgn
+            FROM md)"""
+
   // Feature hashing (the hashing trick): vocabulary folded into 64
   // fixed buckets by the 20-bit md5 token prefix, signed by 6th-nibble
   // parity so collisions cancel in expectation. The md5-nibble bucket
@@ -4145,25 +3950,10 @@ object Queries {
     "feature_hash_bow",
     (s, d) => TextAnalysis.hashedBowFeatures(documents(s, d), "doc_id", "text",
       buckets = 64),
-    Some {
-      val bucket20 = (1 to 5).map(i =>
-        s"(instr('0123456789abcdef', substr(mh, $i, 1)) - 1) * ${BigInt(16).pow(5 - i)}")
-        .mkString("(", " + ", ")")
-      s"""WITH tok AS (
-            SELECT doc_id,
-              unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-            FROM documents),
-          md AS (SELECT doc_id, md5(w) AS mh FROM tok),
-          h AS (
-            SELECT doc_id,
-              CAST($bucket20 % 64 AS BIGINT) AS bucket,
-              CASE WHEN (instr('0123456789abcdef', substr(mh, 6, 1)) - 1) % 2 = 0
-                THEN 1 ELSE -1 END AS sgn
-            FROM md)
+    Some(duckHashedTokens + """
           SELECT doc_id, bucket, count(*) AS n,
             CAST(sum(sgn) AS BIGINT) AS signed_sum
-          FROM h GROUP BY 1, 2"""
-    })
+          FROM h GROUP BY 1, 2"""))
 
   // Linear quality scorer over the hashed features (the fastText-style
   // learned gate): score = sum over buckets of w[bucket]*signed_count
@@ -4176,21 +3966,7 @@ object Queries {
     "quality_score_linear",
     (s, d) => TextAnalysis.linearQualityScore(documents(s, d), "doc_id", "text",
       buckets = 64),
-    Some {
-      val bucket20 = (1 to 5).map(i =>
-        s"(instr('0123456789abcdef', substr(mh, $i, 1)) - 1) * ${BigInt(16).pow(5 - i)}")
-        .mkString("(", " + ", ")")
-      s"""WITH tok AS (
-            SELECT doc_id,
-              unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
-            FROM documents),
-          md AS (SELECT doc_id, md5(w) AS mh FROM tok),
-          h AS (
-            SELECT doc_id,
-              CAST($bucket20 % 64 AS BIGINT) AS bucket,
-              CASE WHEN (instr('0123456789abcdef', substr(mh, 6, 1)) - 1) % 2 = 0
-                THEN 1 ELSE -1 END AS sgn
-            FROM md),
+    Some(duckHashedTokens + """,
           f AS (
             SELECT doc_id, bucket, CAST(sum(sgn) AS BIGINT) AS signed_sum
             FROM h GROUP BY 1, 2)
@@ -4200,8 +3976,7 @@ object Queries {
               AS BIGINT) AS score,
             CAST(sum(signed_sum * ((bucket * 2654435761) % 1001 - 500))
               AS BIGINT) >= 0 AS label_keep
-          FROM f GROUP BY 1"""
-    })
+          FROM f GROUP BY 1"""))
 
   // Within-document line dedup (the C4/RefinedWeb boilerplate-removal
   // pass): the newline-free corpus is decomposed into fixed-width
@@ -4241,8 +4016,8 @@ object Queries {
         length(col("text_dedup")).cast("long").as("text_len"),
         fp.as("line_order_fp"))
     },
-    Some("""WITH toks AS (
-              SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS t
+    Some(s"""WITH toks AS (
+              SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
               FROM documents),
             lin AS (
               SELECT doc_id,
@@ -4262,16 +4037,8 @@ object Queries {
               CAST(sum(n) AS BIGINT) AS n_lines_total,
               CAST(count(*) AS BIGINT) AS n_lines_kept,
               CAST(sum(line_len) + count(*) - 1 AS BIGINT) AS text_len,
-              CAST(sum(
-                ( (instr('0123456789abcdef', substr(md5(line), 1, 1)) - 1) * (1::BIGINT << 28)
-                + (instr('0123456789abcdef', substr(md5(line), 2, 1)) - 1) * (1::BIGINT << 24)
-                + (instr('0123456789abcdef', substr(md5(line), 3, 1)) - 1) * (1::BIGINT << 20)
-                + (instr('0123456789abcdef', substr(md5(line), 4, 1)) - 1) * (1::BIGINT << 16)
-                + (instr('0123456789abcdef', substr(md5(line), 5, 1)) - 1) * (1::BIGINT << 12)
-                + (instr('0123456789abcdef', substr(md5(line), 6, 1)) - 1) * (1::BIGINT << 8)
-                + (instr('0123456789abcdef', substr(md5(line), 7, 1)) - 1) * (1::BIGINT << 4)
-                + (instr('0123456789abcdef', substr(md5(line), 8, 1)) - 1)
-                ) * rk) AS BIGINT) AS line_order_fp
+              CAST(sum(${duckHexPrefix("md5(line)", 8)} * rk) AS BIGINT)
+                AS line_order_fp
             FROM ranked GROUP BY 1"""))
 
   // Gopher-style repetition filters: duplicate-bigram fraction and
@@ -4428,10 +4195,8 @@ object Queries {
 
   // ---------------------------------------------------------------- splits / mixing / packing
   // deterministic md5-bucket assignment — both engines compute the same
-  // first-byte bucket (Spark conv(hex) == DuckDB instr-on-nibbles)
-  private val duckBucket =
-    """CAST((instr('0123456789abcdef', substr(md5(text), 1, 1)) - 1) * 16
-       + instr('0123456789abcdef', substr(md5(text), 2, 1)) - 1 AS BIGINT)"""
+  // first-byte bucket of the text (duckBucketOf)
+  private val duckBucket = duckBucketOf("text")
 
   // Leakage-safe splitting: assignment keyed on the near-dup cluster
   // representative's content (components over the n-gram Jaccard
@@ -4446,19 +4211,10 @@ object Queries {
         maxDf = 10)),
     Some(s"""$jaccardComponentsCte
             SELECT c.node AS doc_id, c.component,
-              CAST((instr('0123456789abcdef', substr(md5(r.text), 1, 1)) - 1)
-                * 16
-                + instr('0123456789abcdef', substr(md5(r.text), 2, 1)) - 1
-                AS BIGINT) AS bucket,
+              ${duckBucketOf("r.text")} AS bucket,
               CASE
-                WHEN (instr('0123456789abcdef', substr(md5(r.text), 1, 1)) - 1)
-                  * 16
-                  + instr('0123456789abcdef', substr(md5(r.text), 2, 1)) - 1
-                  < 205 THEN 'train'
-                WHEN (instr('0123456789abcdef', substr(md5(r.text), 1, 1)) - 1)
-                  * 16
-                  + instr('0123456789abcdef', substr(md5(r.text), 2, 1)) - 1
-                  < 230 THEN 'val'
+                WHEN ${duckBucketOf("r.text")} < 205 THEN 'train'
+                WHEN ${duckBucketOf("r.text")} < 230 THEN 'val'
                 ELSE 'test'
               END AS split
             FROM comp c JOIN documents r ON r.doc_id = c.component"""))
@@ -5199,6 +4955,24 @@ object Queries {
               RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW)"""))
 
   // ---------------------------------------------------------------- multimodal (real codecs)
+  // the synthetic-media generator's closed form in DuckDB, shared by the
+  // two multimodal oracles: ids, image sizes img0 with their red/green
+  // gradient column sums imgx/imgy, and video frame counts vid0
+  private val duckMediaGen = """WITH ids AS (
+              SELECT CAST(i AS BIGINT) AS media_id FROM range(0, 200) t(i)),
+            img0 AS (
+              SELECT media_id, 16 + media_id % 32 AS w, 16 + media_id % 24 AS h
+              FROM ids WHERE media_id % 3 = 0),
+            imgx AS (
+              SELECT media_id, SUM((x * 255) // w) AS sx
+              FROM img0, unnest(range(0, w)) AS tx(x) GROUP BY media_id),
+            imgy AS (
+              SELECT media_id, SUM((y * 255) // h) AS sy
+              FROM img0, unnest(range(0, h)) AS ty(y) GROUP BY media_id),
+            vid0 AS (
+              SELECT media_id, 4 + media_id % 6 AS nf
+              FROM ids WHERE media_id % 3 = 2)"""
+
   // Feature correctness, oracled: the scaled-integer twin of the float
   // feature path. Each value is computed from the DECODED payload in
   // 64-bit integer space (micro-unit channel means via truncating
@@ -5210,17 +4984,7 @@ object Queries {
   private val multimodalFeatures = Q(
     "multimodal_features",
     (s, d) => Multimodal.featureStats(Multimodal.syntheticMedia(s, 200)).toDF(),
-    Some("""WITH ids AS (
-              SELECT CAST(i AS BIGINT) AS media_id FROM range(0, 200) t(i)),
-            img0 AS (
-              SELECT media_id, 16 + media_id % 32 AS w, 16 + media_id % 24 AS h
-              FROM ids WHERE media_id % 3 = 0),
-            imgx AS (
-              SELECT media_id, SUM((x * 255) // w) AS sx
-              FROM img0, unnest(range(0, w)) AS tx(x) GROUP BY media_id),
-            imgy AS (
-              SELECT media_id, SUM((y * 255) // h) AS sy
-              FROM img0, unnest(range(0, h)) AS ty(y) GROUP BY media_id),
+    Some(duckMediaGen + """,
             img AS (
               SELECT i.media_id, 'image' AS kind,
                 CAST(3 + length(CAST(w AS VARCHAR)) + 1
@@ -5239,9 +5003,6 @@ object Queries {
                 CAST(32000 AS BIGINT) AS aud_byte_rate,
                 CAST(2 AS BIGINT) AS aud_block_align
               FROM ids WHERE media_id % 3 = 1),
-            vid0 AS (
-              SELECT media_id, 4 + media_id % 6 AS nf
-              FROM ids WHERE media_id % 3 = 2),
             vidf AS (
               SELECT media_id, f,
                 SUM(299 * ((((x + f) % 8) * 255) // 8)
@@ -5301,17 +5062,7 @@ object Queries {
   private val multimodalDecodeStats = Q(
     "multimodal_decode_stats",
     (s, d) => Multimodal.decodeStats(Multimodal.syntheticMedia(s, 200)).toDF(),
-    Some("""WITH ids AS (
-              SELECT CAST(i AS BIGINT) AS media_id FROM range(0, 200) t(i)),
-            img0 AS (
-              SELECT media_id, 16 + media_id % 32 AS w, 16 + media_id % 24 AS h
-              FROM ids WHERE media_id % 3 = 0),
-            imgx AS (
-              SELECT media_id, SUM((x * 255) // w) AS sx
-              FROM img0, unnest(range(0, w)) AS tx(x) GROUP BY media_id),
-            imgy AS (
-              SELECT media_id, SUM((y * 255) // h) AS sy
-              FROM img0, unnest(range(0, h)) AS ty(y) GROUP BY media_id),
+    Some(duckMediaGen + """,
             img AS (
               SELECT i.media_id, 'image' AS kind,
                 CAST(3 + length(CAST(w AS VARCHAR)) + 1
@@ -5327,9 +5078,6 @@ object Queries {
                 CAST(256 + media_id % 128 AS BIGINT) AS n_samples,
                 CAST(16000 AS BIGINT) AS sample_rate
               FROM ids WHERE media_id % 3 = 1),
-            vid0 AS (
-              SELECT media_id, 4 + media_id % 6 AS nf
-              FROM ids WHERE media_id % 3 = 2),
             vidsum AS (
               SELECT media_id,
                 SUM(((x + f) % 8) * 255 // 8 + (y * 255) // 6 + (f * 40) % 256)
@@ -5769,39 +5517,55 @@ object Queries {
               min(value) AS low, max(value) AS high
             FROM r GROUP BY 1, 2"""))
 
-  // per-vertex triangle counts over a sparse circulant graph on the
-  // part table (nodes = p_partkey mod N, chords +1/+2/7n+3 — triangle-
-  // rich at constant degree, so the graph SCALES with the table instead
-  // of densifying: a co-occurrence graph over bucketed keys saturates
-  // to a clique as SF grows). The oracle replays degree-ordered
-  // orientation with the same row-wise (degree, vertex) total order
-  private val triangleCountQ = Q(
-    "triangle_count",
-    (s, d) => {
-      val p = part(s, d)
-      val nTot = p.agg(count(lit(1)).as("n_tot"))
-      val base = p.select((col("p_partkey") % 2000).as("n"))
-        .crossJoin(broadcast(nTot))
-        .withColumn("n_nodes", least(col("n_tot"), lit(2000L)))
-      val edges = base.select(col("n").as("src"),
-          ((col("n") + 1) % col("n_nodes")).as("dst"))
-        .union(base.select(col("n").as("src"),
-          ((col("n") + 2) % col("n_nodes")).as("dst")))
-        .union(base.select(col("n").as("src"),
-          ((col("n") * 7 + 3) % col("n_nodes")).as("dst")))
-      Graph.triangleCounts(edges, "src", "dst")
-    },
-    Some("""WITH nt AS (
+  // The part-circulant graph of the graph-algorithm queries: nodes =
+  // p_partkey mod N (N = the part row count, capped at 2000) and the
+  // directed chords +1/+2/7n+3 — triangle-rich at constant degree, so
+  // the graph SCALES with the table instead of densifying (a
+  // co-occurrence graph over bucketed keys saturates to a clique as SF
+  // grows). partChords are the chord targets over base's n/n_nodes.
+  private val partChords: Seq[Column] = Seq(
+    (col("n") + 1) % col("n_nodes"), (col("n") + 2) % col("n_nodes"),
+    (col("n") * 7 + 3) % col("n_nodes"))
+
+  /** (base, edges): one row per part with its node `n` and the node
+    * count `n_nodes`, and the unweighted chords as (src, dst).
+    */
+  private def partGraph(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val p = part(s, d)
+    val nTot = p.agg(count(lit(1)).as("n_tot"))
+    val base = p.select((col("p_partkey") % 2000).as("n"))
+      .crossJoin(broadcast(nTot))
+      .withColumn("n_nodes", least(col("n_tot"), lit(2000L)))
+    (base, partChords.map(dst => base.select(col("n").as("src"), dst.as("dst")))
+      .reduce(_ union _))
+  }
+
+  // the same graph in DuckDB, as nested prefixes: nt + base, then the
+  // chords raw(src, dst), then the undirected simple edges canon(u < v)
+  private val duckPartBase = """WITH nt AS (
               SELECT least(count(*), 2000) AS n_nodes FROM part),
             base AS (
-              SELECT p_partkey % 2000 AS n, n_nodes FROM part CROSS JOIN nt),
+              SELECT p_partkey % 2000 AS n, n_nodes FROM part CROSS JOIN nt)"""
+  private val duckPartRaw = duckPartBase + """,
             raw AS (
               SELECT n AS src, (n + 1) % n_nodes AS dst FROM base
               UNION ALL SELECT n, (n + 2) % n_nodes FROM base
-              UNION ALL SELECT n, (n * 7 + 3) % n_nodes FROM base),
+              UNION ALL SELECT n, (n * 7 + 3) % n_nodes FROM base)"""
+  private val duckPartCanon = duckPartRaw + """,
             canon AS (
               SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-              FROM raw WHERE src <> dst),
+              FROM raw WHERE src <> dst)"""
+
+  // per-vertex triangle counts over the part-circulant graph. The oracle
+  // replays degree-ordered orientation with the same row-wise (degree,
+  // vertex) total order
+  private val triangleCountQ = Q(
+    "triangle_count",
+    (s, d) => {
+      val (_, edges) = partGraph(s, d)
+      Graph.triangleCounts(edges, "src", "dst")
+    },
+    Some(duckPartCanon + """,
             deg AS (
               SELECT x, count(*) AS d FROM (
                 SELECT u AS x FROM canon UNION ALL SELECT v FROM canon)
@@ -5971,30 +5735,10 @@ object Queries {
   private val linkPredRaQ = Q(
     "link_pred_ra",
     (s, d) => {
-      val p = part(s, d)
-      val nTot = p.agg(count(lit(1)).as("n_tot"))
-      val base = p.select((col("p_partkey") % 2000).as("n"))
-        .crossJoin(broadcast(nTot))
-        .withColumn("n_nodes", least(col("n_tot"), lit(2000L)))
-      val edges = base.select(col("n").as("src"),
-          ((col("n") + 1) % col("n_nodes")).as("dst"))
-        .union(base.select(col("n").as("src"),
-          ((col("n") + 2) % col("n_nodes")).as("dst")))
-        .union(base.select(col("n").as("src"),
-          ((col("n") * 7 + 3) % col("n_nodes")).as("dst")))
+      val (_, edges) = partGraph(s, d)
       Graph.resourceAllocation(edges, "src", "dst", minCommon = 2L)
     },
-    Some("""WITH nt AS (
-              SELECT least(count(*), 2000) AS n_nodes FROM part),
-            base AS (
-              SELECT p_partkey % 2000 AS n, n_nodes FROM part CROSS JOIN nt),
-            raw AS (
-              SELECT n AS src, (n + 1) % n_nodes AS dst FROM base
-              UNION ALL SELECT n, (n + 2) % n_nodes FROM base
-              UNION ALL SELECT n, (n * 7 + 3) % n_nodes FROM base),
-            canon AS (
-              SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-              FROM raw WHERE src <> dst),
+    Some(duckPartCanon + """,
             adj AS (
               SELECT u AS a, v AS b FROM canon
               UNION ALL SELECT v, u FROM canon),
@@ -6017,30 +5761,10 @@ object Queries {
   private val commonNeighborsQ = Q(
     "common_neighbors",
     (s, d) => {
-      val p = part(s, d)
-      val nTot = p.agg(count(lit(1)).as("n_tot"))
-      val base = p.select((col("p_partkey") % 2000).as("n"))
-        .crossJoin(broadcast(nTot))
-        .withColumn("n_nodes", least(col("n_tot"), lit(2000L)))
-      val edges = base.select(col("n").as("src"),
-          ((col("n") + 1) % col("n_nodes")).as("dst"))
-        .union(base.select(col("n").as("src"),
-          ((col("n") + 2) % col("n_nodes")).as("dst")))
-        .union(base.select(col("n").as("src"),
-          ((col("n") * 7 + 3) % col("n_nodes")).as("dst")))
+      val (_, edges) = partGraph(s, d)
       Graph.commonNeighbors(edges, "src", "dst", minCommon = 2L)
     },
-    Some("""WITH nt AS (
-              SELECT least(count(*), 2000) AS n_nodes FROM part),
-            base AS (
-              SELECT p_partkey % 2000 AS n, n_nodes FROM part CROSS JOIN nt),
-            raw AS (
-              SELECT n AS src, (n + 1) % n_nodes AS dst FROM base
-              UNION ALL SELECT n, (n + 2) % n_nodes FROM base
-              UNION ALL SELECT n, (n * 7 + 3) % n_nodes FROM base),
-            canon AS (
-              SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-              FROM raw WHERE src <> dst),
+    Some(duckPartCanon + """,
             adj AS (
               SELECT u AS a, v AS b FROM canon
               UNION ALL SELECT v, u FROM canon),
@@ -6119,17 +5843,13 @@ object Queries {
       // pressure the r13 bench measured (39 s in-fleet vs 7.96 s
       // isolated with 4 in-heap shards).
       val shards = stateShardsFor(ev.count())
-      withStreamingConfs(s, statePartitions = shards, noDataBatch = false,
-        providerClass = Some("org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider")) {
+      runAvailableNow(s, ckpt, statePartitions = shards, noDataBatch = false,
+          providerClass = Some(RocksDbProvider)) {
         s.readStream.schema(ev.schema)
           .option("maxFilesPerTrigger", 1).parquet(inDir)
           .withWatermark("ts", "90 days")
           .dropDuplicatesWithinWatermark("event_id")
           .writeStream.format("parquet").option("path", table)
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start().awaitTermination()
       }
       s.read.parquet(table)
         .groupBy(col("event_type"))
@@ -6168,12 +5888,12 @@ object Queries {
         s"$base/purch" -> Seq(
           purch.filter(col("purchase_id") % 2 === 0),
           purch.filter(col("purchase_id") % 2 =!= 0))))
-      // state-sized confs (see withStreamingConfs): the join keeps ~40k
+      // state-sized confs (see runAvailableNow): the join keeps ~40k
       // rows of state, so 4 state partitions (16 store instances, not
       // 128); the inner join emits matches in the arrival batch, so the
       // trailing no-data eviction batch is skipped — result-identical,
       // measured 9.9 s -> 3.9 s (StreamDiag probe, round 11).
-      withStreamingConfs(s, statePartitions = 4, noDataBatch = false) {
+      runAvailableNow(s, s"$base/ckpt", statePartitions = 4, noDataBatch = false) {
         val cs = s.readStream.schema(clicks.schema)
           .option("maxFilesPerTrigger", 1).parquet(s"$base/clicks")
           .withWatermark("click_ts", "90 days")
@@ -6186,9 +5906,6 @@ object Queries {
               cs("click_ts") >= ps("purchase_ts") - expr("INTERVAL 3600 SECOND"))
           .select(col("p_user_id"), col("purchase_id"), col("click_id"))
           .writeStream.format("parquet").option("path", s"$base/table")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start().awaitTermination()
       }
       s.read.parquet(s"$base/table")
         .groupBy(col("p_user_id").as("user_id"))
@@ -6326,7 +6043,7 @@ object Queries {
   // processor emits a key's updated totals per batch; counts are
   // strictly monotone per key, so max/max_by selects the converged row,
   // and the oracle is the plain batch aggregate. RocksDB state store
-  // scoped via withStreamingConfs (a transformWithState contract).
+  // scoped via runAvailableNow (a transformWithState contract).
   private val incrRunningTotals = Q(
     "incr_running_totals",
     (s, d) => {
@@ -6338,9 +6055,8 @@ object Queries {
       writeDrops(inDir, Seq(
         ev.filter(col("event_id") % 2 === 0).select("user_id", "cents"),
         ev.filter(col("event_id") % 2 =!= 0).select("user_id", "cents")))
-      withStreamingConfs(s, statePartitions = 4, noDataBatch = false,
-        providerClass = Some("org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider")) {
+      runAvailableNow(s, ckpt, statePartitions = 4, noDataBatch = false,
+          providerClass = Some(RocksDbProvider)) {
         val stream = s.readStream
           .schema("user_id LONG, cents LONG")
           .option("maxFilesPerTrigger", 1).parquet(inDir)
@@ -6348,10 +6064,7 @@ object Queries {
         streaming.Stateful.runningTotals(stream)
           .toDF("user_id", "n_events", "value_cents")
           .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .outputMode("append")
-          .start().awaitTermination()
       }
       s.read.parquet(outDir)
         .groupBy(col("user_id"))
@@ -6379,9 +6092,8 @@ object Queries {
       writeDrops(inDir, Seq(
         ev.filter(col("event_id") % 2 === 0).select("event_type", "user_id"),
         ev.filter(col("event_id") % 2 =!= 0).select("event_type", "user_id")))
-      withStreamingConfs(s, statePartitions = 4, noDataBatch = false,
-        providerClass = Some("org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider")) {
+      runAvailableNow(s, ckpt, statePartitions = 4, noDataBatch = false,
+          providerClass = Some(RocksDbProvider)) {
         val stream = s.readStream
           .schema("event_type STRING, user_id LONG")
           .option("maxFilesPerTrigger", 1).parquet(inDir)
@@ -6389,10 +6101,7 @@ object Queries {
         streaming.Stateful.topKMembers(stream, 3)
           .toDF("event_type", "n_seen", "user_id", "n_events", "rank")
           .writeStream.format("parquet").option("path", outDir)
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .outputMode("append")
-          .start().awaitTermination()
       }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("event_type"))
@@ -6454,7 +6163,7 @@ object Queries {
           purch.filter(unix_micros(col("purchase_ts")) < mid),
           purch.filter(unix_micros(col("purchase_ts")) >= mid)
             .unionByName(sentinel("purchase_id", "purchase_ts", "p_user_id")))))
-      withStreamingConfs(s, statePartitions = 4, noDataBatch = true) {
+      runAvailableNow(s, s"$base/ckpt", statePartitions = 4, noDataBatch = true) {
         val cs = s.readStream.schema(clicks.schema)
           .option("maxFilesPerTrigger", 1).parquet(s"$base/clicks")
           .withWatermark("click_ts", "1 minute")
@@ -6468,9 +6177,6 @@ object Queries {
             "leftOuter")
           .select(col("p_user_id"), col("purchase_id"), col("click_id"))
           .writeStream.format("parquet").option("path", s"$base/table")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start().awaitTermination()
       }
       s.read.parquet(s"$base/table")
         .filter(col("p_user_id") =!= -1)
@@ -6643,28 +6349,11 @@ object Queries {
   private val bfsHopsQ = Q(
     "bfs_hops",
     (s, d) => {
-      val p = part(s, d)
-      val nTot = p.agg(count(lit(1)).as("n_tot"))
-      val base = p.select((col("p_partkey") % 2000).as("n"))
-        .crossJoin(broadcast(nTot))
-        .withColumn("n_nodes", least(col("n_tot"), lit(2000L)))
-      val edges = base.select(col("n").as("src"),
-          ((col("n") + 1) % col("n_nodes")).as("dst"))
-        .union(base.select(col("n").as("src"),
-          ((col("n") + 2) % col("n_nodes")).as("dst")))
-        .union(base.select(col("n").as("src"),
-          ((col("n") * 7 + 3) % col("n_nodes")).as("dst")))
+      val (base, edges) = partGraph(s, d)
       val seeds = base.select(col("n")).filter(col("n") < 10)
       Graph.bfsHops(edges, "src", "dst", seeds, "n", maxHops = 3)
     },
-    Some("""WITH nt AS (
-              SELECT least(count(*), 2000) AS n_nodes FROM part),
-            base AS (
-              SELECT p_partkey % 2000 AS n, n_nodes FROM part CROSS JOIN nt),
-            raw AS (
-              SELECT n AS src, (n + 1) % n_nodes AS dst FROM base
-              UNION ALL SELECT n, (n + 2) % n_nodes FROM base
-              UNION ALL SELECT n, (n * 7 + 3) % n_nodes FROM base),
+    Some(duckPartRaw + """,
             adj AS (
               SELECT DISTINCT src AS a, dst AS b FROM (
                 SELECT src, dst FROM raw
@@ -6762,24 +6451,15 @@ object Queries {
   private val ssspBoundedQ = Q(
     "sssp_bounded",
     (s, d) => {
-      val p = part(s, d)
-      val nTot = p.agg(count(lit(1)).as("n_tot"))
-      val base = p.select((col("p_partkey") % 2000).as("n"))
-        .crossJoin(broadcast(nTot))
-        .withColumn("n_nodes", least(col("n_tot"), lit(2000L)))
-      val edges = base.select(col("n").as("src"),
-          ((col("n") + 1) % col("n_nodes")).as("dst"), lit(1L).as("w"))
-        .union(base.select(col("n").as("src"),
-          ((col("n") + 2) % col("n_nodes")).as("dst"), lit(2L).as("w")))
-        .union(base.select(col("n").as("src"),
-          ((col("n") * 7 + 3) % col("n_nodes")).as("dst"), lit(3L).as("w")))
+      val (base, _) = partGraph(s, d)
+      // chord k (1-based) costs k
+      val edges = partChords.zipWithIndex.map { case (dst, i) =>
+        base.select(col("n").as("src"), dst.as("dst"), lit(i + 1L).as("w"))
+      }.reduce(_ union _)
       val seeds = base.select(col("n")).filter(col("n") < 5)
       Graph.ssspBounded(edges, "src", "dst", "w", seeds, "n", maxHops = 3)
     },
-    Some("""WITH nt AS (
-              SELECT least(count(*), 2000) AS n_nodes FROM part),
-            base AS (
-              SELECT p_partkey % 2000 AS n, n_nodes FROM part CROSS JOIN nt),
+    Some(duckPartBase + """,
             raw AS (
               SELECT n AS src, (n + 1) % n_nodes AS dst, 1 AS w FROM base
               UNION ALL SELECT n, (n + 2) % n_nodes, 2 FROM base
@@ -7093,17 +6773,15 @@ object Queries {
                 AS BIGINT) AS credited_value_micro
             FROM credited GROUP BY 1"""))
 
-  // sweep-line peak concurrency per event_type over half-open synthetic
-  // intervals [ts, ts + (event_id%57+3) min); ends net against starts
-  // at the same instant, so the peak and its first instant are exact
-  private val maxConcurrencyQ = Q(
-    "max_concurrency",
-    (s, d) => TimeSeries.maxConcurrency(
-      events(s, d).select(col("event_type"), col("ts").as("start_ts"),
-        (col("ts") + expr("(event_id % 57 + 3) * INTERVAL '1' MINUTE"))
-          .as("end_ts")),
-      "event_type", "start_ts", "end_ts"),
-    Some("""WITH iv AS (
+  // the synthetic half-open intervals [ts, ts + (event_id%57+3) min) of
+  // the two sweep-line queries, and their oracle prefix: the per-instant
+  // net count of starts minus ends, net(event_type, t, net)
+  private def eventIntervals(s: SparkSession, d: String): DataFrame =
+    events(s, d).select(col("event_type"), col("ts").as("start_ts"),
+      (col("ts") + expr("(event_id % 57 + 3) * INTERVAL '1' MINUTE"))
+        .as("end_ts"))
+
+  private val duckIntervalNet = """WITH iv AS (
               SELECT event_type, ts AS s,
                 ts + (event_id % 57 + 3) * INTERVAL 1 MINUTE AS e
               FROM events),
@@ -7111,7 +6789,16 @@ object Queries {
               SELECT event_type, s AS t, 1 AS delta FROM iv
               UNION ALL SELECT event_type, e, -1 FROM iv),
             net AS (
-              SELECT event_type, t, sum(delta) AS net FROM d GROUP BY 1, 2),
+              SELECT event_type, t, sum(delta) AS net FROM d GROUP BY 1, 2)"""
+
+  // sweep-line peak concurrency per event_type over half-open synthetic
+  // intervals [ts, ts + (event_id%57+3) min); ends net against starts
+  // at the same instant, so the peak and its first instant are exact
+  private val maxConcurrencyQ = Q(
+    "max_concurrency",
+    (s, d) => TimeSeries.maxConcurrency(
+      eventIntervals(s, d), "event_type", "start_ts", "end_ts"),
+    Some(duckIntervalNet + """,
             run AS (
               SELECT event_type, t,
                 sum(net) OVER (PARTITION BY event_type ORDER BY t) AS conc
@@ -7130,34 +6817,14 @@ object Queries {
   private val kCoreQ = Q(
     "k_core",
     (s, d) => {
-      val p = part(s, d)
-      val nTot = p.agg(count(lit(1)).as("n_tot"))
-      val base = p.select((col("p_partkey") % 2000).as("n"))
-        .crossJoin(broadcast(nTot))
-        .withColumn("n_nodes", least(col("n_tot"), lit(2000L)))
-      val edges = base.select(col("n").as("src"),
-          ((col("n") + 1) % col("n_nodes")).as("dst"))
-        .union(base.select(col("n").as("src"),
-          ((col("n") + 2) % col("n_nodes")).as("dst")))
-        .union(base.select(col("n").as("src"),
-          ((col("n") * 7 + 3) % col("n_nodes")).as("dst")))
+      val (_, edges) = partGraph(s, d)
       Graph.kCore(edges, "src", "dst", k = 6L, rounds = 3)
     },
-    Some("""WITH nt AS (
-              SELECT least(count(*), 2000) AS n_nodes FROM part),
-            base AS (
-              SELECT p_partkey % 2000 AS n, n_nodes FROM part CROSS JOIN nt),
-            raw AS (
-              SELECT n AS src, (n + 1) % n_nodes AS dst FROM base
-              UNION ALL SELECT n, (n + 2) % n_nodes FROM base
-              UNION ALL SELECT n, (n * 7 + 3) % n_nodes FROM base),
-            e0 AS (
-              SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-              FROM raw WHERE src <> dst),
+    Some(duckPartCanon + """,
             d1 AS (SELECT x, count(*) AS d FROM (
-              SELECT u AS x FROM e0 UNION ALL SELECT v FROM e0) GROUP BY 1),
+              SELECT u AS x FROM canon UNION ALL SELECT v FROM canon) GROUP BY 1),
             k1 AS (SELECT x FROM d1 WHERE d >= 6),
-            e1 AS (SELECT u, v FROM e0
+            e1 AS (SELECT u, v FROM canon
               WHERE u IN (SELECT x FROM k1) AND v IN (SELECT x FROM k1)),
             d2 AS (SELECT x, count(*) AS d FROM (
               SELECT u AS x FROM e1 UNION ALL SELECT v FROM e1) GROUP BY 1),
@@ -7253,19 +6920,8 @@ object Queries {
   private val intervalCoverageQ = Q(
     "interval_coverage",
     (s, d) => TimeSeries.intervalCoverage(
-      events(s, d).select(col("event_type"), col("ts").as("start_ts"),
-        (col("ts") + expr("(event_id % 57 + 3) * INTERVAL '1' MINUTE"))
-          .as("end_ts")),
-      "event_type", "start_ts", "end_ts"),
-    Some("""WITH iv AS (
-              SELECT event_type, ts AS s,
-                ts + (event_id % 57 + 3) * INTERVAL 1 MINUTE AS e
-              FROM events),
-            d AS (
-              SELECT event_type, s AS t, 1 AS delta FROM iv
-              UNION ALL SELECT event_type, e, -1 FROM iv),
-            net AS (
-              SELECT event_type, t, sum(delta) AS net FROM d GROUP BY 1, 2),
+      eventIntervals(s, d), "event_type", "start_ts", "end_ts"),
+    Some(duckIntervalNet + """,
             run0 AS (
               SELECT event_type, t,
                 sum(net) OVER (PARTITION BY event_type ORDER BY t) AS conc
@@ -7511,33 +7167,13 @@ object Queries {
   private val labelPropagationQ = Q(
     "label_propagation",
     (s, d) => {
-      val p = part(s, d)
-      val nTot = p.agg(count(lit(1)).as("n_tot"))
-      val base = p.select((col("p_partkey") % 2000).as("n"))
-        .crossJoin(broadcast(nTot))
-        .withColumn("n_nodes", least(col("n_tot"), lit(2000L)))
-      val edges = base.select(col("n").as("src"),
-          ((col("n") + 1) % col("n_nodes")).as("dst"))
-        .union(base.select(col("n").as("src"),
-          ((col("n") + 2) % col("n_nodes")).as("dst")))
-        .union(base.select(col("n").as("src"),
-          ((col("n") * 7 + 3) % col("n_nodes")).as("dst")))
+      val (_, edges) = partGraph(s, d)
       Graph.labelPropagation(edges, "src", "dst", rounds = 3)
     },
-    Some("""WITH nt AS (
-              SELECT least(count(*), 2000) AS n_nodes FROM part),
-            base AS (
-              SELECT p_partkey % 2000 AS n, n_nodes FROM part CROSS JOIN nt),
-            raw AS (
-              SELECT n AS src, (n + 1) % n_nodes AS dst FROM base
-              UNION ALL SELECT n, (n + 2) % n_nodes FROM base
-              UNION ALL SELECT n, (n * 7 + 3) % n_nodes FROM base),
-            e0 AS (
-              SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-              FROM raw WHERE src <> dst),
+    Some(duckPartCanon + """,
             adj AS (
-              SELECT u AS a, v AS b FROM e0
-              UNION ALL SELECT v, u FROM e0),
+              SELECT u AS a, v AS b FROM canon
+              UNION ALL SELECT v, u FROM canon),
             l0 AS (SELECT DISTINCT a AS vertex, a AS label FROM adj),
             r1 AS (
               SELECT adj.b AS vx, l0.label, count(*) AS n

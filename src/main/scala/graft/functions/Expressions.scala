@@ -123,6 +123,14 @@ object Expressions {
     }
   }
 
+  // Codegen note (applies to every expression below): instead of
+  // CodegenFallback — which knocks the WHOLE operator out of whole-stage
+  // codegen — each expression generates a call to its own compiled
+  // `compute` method via `ctx.addReferenceObj`. The tight primitive loop
+  // runs as plain JIT-compiled bytecode, the surrounding projection
+  // stays inside the WholeStageCodegen span, and the interpreted
+  // `nullSafeEval` path runs the same `compute`.
+
   /** Sequential double-precision dot product over two float vectors.
     * Accumulation order is left-to-right, matching the HOF formulation
     * and the DuckDB oracle exactly (bit-identical).
@@ -132,9 +140,7 @@ object Expressions {
     override def dataType: DataType = DoubleType
     override def prettyName: String = "float_vector_dot"
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
+    def compute(x: ArrayData, y: ArrayData): Double = {
       val n = math.min(x.numElements(), y.numElements())
       var s = 0d
       var i = 0
@@ -142,20 +148,13 @@ object Expressions {
       s
     }
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val n = ctx.freshName("n")
-        val i = ctx.freshName("i")
-        val s = ctx.freshName("s")
-        s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |double $s = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $s += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-           |}
-           |${ev.value} = $s;
-         """.stripMargin
-      })
+    override def nullSafeEval(a: Any, b: Any): Any =
+      compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("fdot", this, classOf[FloatVectorDot].getName)
+      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
+    }
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
@@ -173,9 +172,7 @@ object Expressions {
     override def dataType: DataType = LongType
     override def prettyName: String = "long_vector_dot"
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
+    def compute(x: ArrayData, y: ArrayData): Long = {
       val n = math.min(x.numElements(), y.numElements())
       var s = 0L
       var i = 0
@@ -183,20 +180,13 @@ object Expressions {
       s
     }
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val n = ctx.freshName("n")
-        val i = ctx.freshName("i")
-        val s = ctx.freshName("s")
-        s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |long $s = 0L;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $s += $a.getLong($i) * $b.getLong($i);
-           |}
-           |${ev.value} = $s;
-         """.stripMargin
-      })
+    override def nullSafeEval(a: Any, b: Any): Any =
+      compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("ldot", this, classOf[LongVectorDot].getName)
+      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
+    }
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
@@ -216,8 +206,7 @@ object Expressions {
     override def dataType: DataType = LongType
     override def prettyName: String = "sign_bits_packed"
 
-    override def nullSafeEval(v: Any): Any = {
-      val x = v.asInstanceOf[ArrayData]
+    def compute(x: ArrayData): Long = {
       val n = x.numElements()
       var s = 0L
       var i = 0
@@ -229,21 +218,12 @@ object Expressions {
       s
     }
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, v => {
-        val n = ctx.freshName("n")
-        val i = ctx.freshName("i")
-        val s = ctx.freshName("s")
-        s"""
-           |int $n = $v.numElements();
-           |long $s = 0L;
-           |for (int $i = 0; $i < 32; $i++) {
-           |  int pos = $start + $i;
-           |  if (pos < $n && $v.getFloat(pos) >= 0f) $s |= 1L << $i;
-           |}
-           |${ev.value} = $s;
-         """.stripMargin
-      })
+    override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("signbits", this, classOf[SignBitsPacked].getName)
+      nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $ref.compute($v);")
+    }
 
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
@@ -264,9 +244,7 @@ object Expressions {
     override def dataType: DataType = IntegerType
     override def prettyName: String = "hamming_packed"
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
+    def compute(x: ArrayData, y: ArrayData): Int = {
       val n = x.numElements()
       if (n != y.numElements())
         throw new IllegalArgumentException(
@@ -277,25 +255,13 @@ object Expressions {
       s
     }
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val n = ctx.freshName("n")
-        val i = ctx.freshName("i")
-        val s = ctx.freshName("s")
-        s"""
-           |int $n = $a.numElements();
-           |if ($n != $b.numElements()) {
-           |  throw new IllegalArgumentException(
-           |    "hamming_packed: code length mismatch (" + $n + " vs " +
-           |    $b.numElements() + " words)");
-           |}
-           |int $s = 0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $s += java.lang.Long.bitCount($a.getLong($i) ^ $b.getLong($i));
-           |}
-           |${ev.value} = $s;
-         """.stripMargin
-      })
+    override def nullSafeEval(a: Any, b: Any): Any =
+      compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("hamming", this, classOf[HammingPacked].getName)
+      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
+    }
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
@@ -307,13 +273,6 @@ object Expressions {
     * ONCE (md5), then the k permutations are cheap affine+avalanche mixes.
     * The md5 base + mod-2^60 arithmetic make every component rebuildable
     * by an independent SQL oracle — see MinHashFamily.
-    */
-  /** Codegen note (applies to every expression below): instead of
-    * CodegenFallback — which knocks the WHOLE operator out of whole-stage
-    * codegen — each expression generates a call to its own compiled
-    * `compute` method via `ctx.addReferenceObj`. The tight primitive loop
-    * runs as plain JIT-compiled bytecode and the surrounding projection
-    * stays inside the WholeStageCodegen span.
     */
   case class MinHashSignature(child: Expression, k: Int)
       extends UnaryExpression {

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import graft.functions.GraftFunctions.relationshipId
@@ -460,7 +460,12 @@ object Graph {
                        driverRows: Int): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
-    val ew = edges.select(col("src"), col("dst"), w.as("w"))
+    // an int/short/byte weight widens to long (the driver twin reads
+    // w with getLong); other weight types pass through as they are
+    val wType = edges.select(w).schema.head.dataType
+    val ew = edges.select(col("src"), col("dst"),
+      (if (Seq(ByteType, ShortType, IntegerType).contains(wType)) w.cast(LongType)
+       else w).as("w"))
     val driver = onDriver(driverRows,
         new StructType().add(nodes.schema("node")).add("rank_scaled", LongType),
         Seq(ew, nodes.select(col("node"))) ++ seeds.map(_.select(col("node"))): _*) { p =>

@@ -15,7 +15,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
   * Requires the RocksDB state store provider (a transformWithState
   * contract, enforced by Spark at query start) — callers scope
   * `spark.sql.streaming.stateStore.providerClass` around the stream the
-  * way Queries.withStreamingConfs scopes partition sizing.
+  * way Queries.runAvailableNow scopes partition sizing.
   */
 object Stateful {
 

@@ -147,6 +147,14 @@ class GraphSpec extends SparkTestBase {
     val big = Seq((1L, 2L, 5L), (2L, 3L, 2L), (3L, 1L, 7L), (1L, 3L, 1L))
       .toDF("src", "dst", "w")
     assertTwins(d => Graph.pageRankWeightedScaled(big, n, iterations = 3, driverRows = d))
+
+    // an int-typed weight column ranks exactly like the long-typed one,
+    // on the driver and the distributed path
+    val bigInt = big.withColumn("w", col("w").cast("int"))
+    Seq(100000, 0).foreach { d =>
+      assert(rows(Graph.pageRankWeightedScaled(bigInt, n, iterations = 3, driverRows = d)) ==
+        rows(Graph.pageRankWeightedScaled(big, n, iterations = 3, driverRows = d)))
+    }
   }
 
   test("personalizedPageRankScaled: seed restart by hand; driver == distributed") {
