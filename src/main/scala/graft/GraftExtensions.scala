@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GetStructField}
 import graft.functions.Expressions._
 
 /** SparkSessionExtensions entry point: registers the engine's custom
@@ -36,6 +36,66 @@ object GraftExtensions {
       if (!spark.sessionState.conf.contains(k)) spark.conf.set(k, v)
     }
 
+  private def int(e: Expression): Int = e.eval().asInstanceOf[Number].intValue()
+  private def str(e: Expression): String = e.eval().toString
+  // the one-field HtmlExtract behind html_text / html_attr
+  private def firstMatch(html: Expression, selector: Expression,
+                         attr: Option[String]): Expression =
+    GetStructField(HtmlExtract(html, Seq(("v", str(selector), attr))), 0, Some("v"))
+
+  /** Every SQL function, as (name, usage, builder): the one table both
+    * [[register]] and the builder-installed [[GraftExtensions]] install.
+    */
+  private val functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("float_vector_dot",
+      "_FUNC_(a, b) - sequential double dot product of two float vectors",
+      a => FloatVectorDot(a(0), a(1))),
+    ("minhash_signature", "_FUNC_(tokens, k) - k-component minhash signature",
+      a => MinHashSignature(a(0), int(a(1)))),
+    ("simhash60", "_FUNC_(tokens) - 60-bit md5-derived simhash of a token array",
+      a => SimHash60(a(0))),
+    ("md5_bits", "_FUNC_(str, nibbles) - value of the first n hex digits of md5(str)",
+      a => Md5Bits(a(0), int(a(1)))),
+    ("max_by_row",
+      "_FUNC_(value, ord[, tie]) - hash-aggregable argmax: value of the row with the greatest ord; ord-ties to the smallest tie (nulls first)",
+      a => (if (a.length > 2) MaxByRow(a(0), a(1), a(2)) else MaxByRow(a(0), a(1)))
+        .toAggregateExpression(isDistinct = false)),
+    ("word_shingles", "_FUNC_(tokens, n) - distinct word n-gram shingles",
+      a => WordShingles(a(0), int(a(1)))),
+    ("hyperplane_signatures",
+      "_FUNC_(vec, dim, bits, bands[, seed]) - per-band random-hyperplane LSH signatures",
+      a => HyperplaneSignatures(a(0), int(a(1)), int(a(2)), int(a(3)),
+        if (a.length > 4) int(a(4)) else 42)),
+    ("signature_agreement",
+      "_FUNC_(sig_a, sig_b) - count of agreeing components of two long-array signatures",
+      a => SignatureAgreement(a(0), a(1))),
+    ("sorted_intersect_count",
+      "_FUNC_(a, b) - count of common distinct values of two SORTED long arrays",
+      a => SortedIntersectCount(a(0), a(1))),
+    ("sorted_id_pairs", "_FUNC_(ids) - strictly-ordered (a,b) pairs of a long-id array",
+      a => SortedIdPairs(a(0))),
+    ("simhash_id_pairs",
+      "_FUNC_(members, max_hamming) - bucket-local simhash pairs within a hamming radius",
+      a => SimhashIdPairs(a(0), int(a(1)))),
+    ("ngram_stats",
+      "_FUNC_(tokens, n) - (total, n_distinct, top_freq) over overlapping word n-grams",
+      a => NgramStats(a(0), int(a(1)))),
+    ("z_value", "_FUNC_(coords, n_cols, bits) - bit-interleaved z-order value",
+      a => ZValue(a(0), int(a(1)), int(a(2)))),
+    ("html_text",
+      "_FUNC_(html, selector) - trimmed text of the first CSS-selector match, null when absent",
+      a => firstMatch(a(0), a(1), None)),
+    ("html_attr",
+      "_FUNC_(html, selector, attr) - attribute of the first CSS-selector match, null when absent",
+      a => firstMatch(a(0), a(1), Some(str(a(2))))),
+    ("html_to_text",
+      "_FUNC_(html) - whole-page visible text, script/style excluded, whitespace-collapsed",
+      a => HtmlToText(a(0))),
+    ("html_links", "_FUNC_(html) - non-empty anchor hrefs in document order",
+      a => HtmlLinks(a(0))),
+    ("nfc_normalize", "_FUNC_(text) - Unicode NFC canonical composition (UAX #15)",
+      a => NfcNormalize(a(0))))
+
   /** Runtime registration for sessions that already exist (builder
     * extensions only apply at construction time).
     */
@@ -44,53 +104,13 @@ object GraftExtensions {
     // runtime parity with the builder-installed extension: the strategy
     // and the rank-filter -> heap-top-k rewrite rule (both idempotent)
     graft.plans.TopKRewrite.install(spark)
-    import org.apache.spark.sql.graftbridge.Bridge.registerFunction
-    registerFunction(spark, "float_vector_dot", args => FloatVectorDot(args(0), args(1)))
-    registerFunction(spark, "minhash_signature", args => MinHashSignature(args(0),
-      args(1).eval().asInstanceOf[Number].intValue()))
-    registerFunction(spark, "simhash60", args => SimHash60(args(0)))
-    registerFunction(spark, "md5_bits", args => Md5Bits(args(0),
-      args(1).eval().asInstanceOf[Number].intValue()))
-    registerFunction(spark, "max_by_row", args =>
-      (if (args.length > 2) MaxByRow(args(0), args(1), args(2))
-       else MaxByRow(args(0), args(1)))
-        .toAggregateExpression(isDistinct = false))
-    registerFunction(spark, "word_shingles", args => WordShingles(args(0),
-      args(1).eval().asInstanceOf[Number].intValue()))
-    registerFunction(spark, "hyperplane_signatures", args => HyperplaneSignatures(args(0),
-      args(1).eval().asInstanceOf[Number].intValue(),
-      args(2).eval().asInstanceOf[Number].intValue(),
-      args(3).eval().asInstanceOf[Number].intValue(),
-      if (args.length > 4) args(4).eval().asInstanceOf[Number].intValue() else 42))
-    registerFunction(spark, "signature_agreement",
-      args => SignatureAgreement(args(0), args(1)))
-    registerFunction(spark, "sorted_intersect_count",
-      args => SortedIntersectCount(args(0), args(1)))
-    registerFunction(spark, "sorted_id_pairs", args => SortedIdPairs(args(0)))
-    registerFunction(spark, "simhash_id_pairs", args => SimhashIdPairs(args(0),
-      args(1).eval().asInstanceOf[Number].intValue()))
-    registerFunction(spark, "ngram_stats", args => NgramStats(args(0),
-      args(1).eval().asInstanceOf[Number].intValue()))
-    registerFunction(spark, "z_value", args => ZValue(args(0),
-      args(1).eval().asInstanceOf[Number].intValue(),
-      args(2).eval().asInstanceOf[Number].intValue()))
-    registerFunction(spark, "html_text", args =>
-      org.apache.spark.sql.catalyst.expressions.GetStructField(
-        HtmlExtract(args(0), Seq(("v", args(1).eval().toString, None))), 0, Some("v")))
-    registerFunction(spark, "html_attr", args =>
-      org.apache.spark.sql.catalyst.expressions.GetStructField(
-        HtmlExtract(args(0),
-          Seq(("v", args(1).eval().toString, Some(args(2).eval().toString)))), 0, Some("v")))
-    registerFunction(spark, "html_to_text", args => HtmlToText(args(0)))
-    registerFunction(spark, "html_links", args => HtmlLinks(args(0)))
-    registerFunction(spark, "nfc_normalize", args => NfcNormalize(args(0)))
+    functions.foreach { case (name, _, builder) =>
+      org.apache.spark.sql.graftbridge.Bridge.registerFunction(spark, name, builder)
+    }
   }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "")
 
   override def apply(e: SparkSessionExtensions): Unit = {
     // one-shot conf application for builder-installed sessions: the
@@ -114,81 +134,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // declarative row_number()-rank filters rewrite to the bounded-heap
     // top-k operator when provably semantics-preserving (see TopKRewrite)
     e.injectOptimizerRule(session => graft.plans.TopKRewrite(session))
-    e.injectFunction((FunctionIdentifier("float_vector_dot"),
-      info("float_vector_dot", "_FUNC_(a, b) - sequential double dot product of two float vectors"),
-      (args: Seq[Expression]) => FloatVectorDot(args(0), args(1))))
-    e.injectFunction((FunctionIdentifier("minhash_signature"),
-      info("minhash_signature", "_FUNC_(tokens, k) - k-component minhash signature"),
-      (args: Seq[Expression]) => MinHashSignature(args(0),
-        args(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((FunctionIdentifier("simhash60"),
-      info("simhash60", "_FUNC_(tokens) - 60-bit md5-derived simhash of a token array"),
-      (args: Seq[Expression]) => SimHash60(args(0))))
-    e.injectFunction((FunctionIdentifier("md5_bits"),
-      info("md5_bits", "_FUNC_(str, nibbles) - value of the first n hex digits of md5(str)"),
-      (args: Seq[Expression]) => Md5Bits(args(0),
-        args(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((FunctionIdentifier("max_by_row"),
-      info("max_by_row",
-        "_FUNC_(value, ord[, tie]) - hash-aggregable argmax: value of the row with the greatest ord; ord-ties to the smallest tie (nulls first)"),
-      (args: Seq[Expression]) =>
-        (if (args.length > 2) MaxByRow(args(0), args(1), args(2))
-         else MaxByRow(args(0), args(1)))
-          .toAggregateExpression(isDistinct = false)))
-    e.injectFunction((FunctionIdentifier("word_shingles"),
-      info("word_shingles", "_FUNC_(tokens, n) - distinct word n-gram shingles"),
-      (args: Seq[Expression]) => WordShingles(args(0),
-        args(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((FunctionIdentifier("hyperplane_signatures"),
-      info("hyperplane_signatures",
-        "_FUNC_(vec, dim, bits, bands[, seed]) - per-band random-hyperplane LSH signatures"),
-      (args: Seq[Expression]) => HyperplaneSignatures(args(0),
-        args(1).eval().asInstanceOf[Number].intValue(),
-        args(2).eval().asInstanceOf[Number].intValue(),
-        args(3).eval().asInstanceOf[Number].intValue(),
-        if (args.length > 4) args(4).eval().asInstanceOf[Number].intValue() else 42)))
-    e.injectFunction((FunctionIdentifier("signature_agreement"),
-      info("signature_agreement",
-        "_FUNC_(sig_a, sig_b) - count of agreeing components of two long-array signatures"),
-      (args: Seq[Expression]) => SignatureAgreement(args(0), args(1))))
-    e.injectFunction((FunctionIdentifier("sorted_intersect_count"),
-      info("sorted_intersect_count",
-        "_FUNC_(a, b) - count of common distinct values of two SORTED long arrays"),
-      (args: Seq[Expression]) => SortedIntersectCount(args(0), args(1))))
-    e.injectFunction((FunctionIdentifier("sorted_id_pairs"),
-      info("sorted_id_pairs", "_FUNC_(ids) - strictly-ordered (a,b) pairs of a long-id array"),
-      (args: Seq[Expression]) => SortedIdPairs(args(0))))
-    e.injectFunction((FunctionIdentifier("simhash_id_pairs"),
-      info("simhash_id_pairs",
-        "_FUNC_(members, max_hamming) - bucket-local simhash pairs within a hamming radius"),
-      (args: Seq[Expression]) => SimhashIdPairs(args(0),
-        args(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((FunctionIdentifier("ngram_stats"),
-      info("ngram_stats",
-        "_FUNC_(tokens, n) - (total, n_distinct, top_freq) over overlapping word n-grams"),
-      (args: Seq[Expression]) => NgramStats(args(0),
-        args(1).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((FunctionIdentifier("z_value"),
-      info("z_value", "_FUNC_(coords, n_cols, bits) - bit-interleaved z-order value"),
-      (args: Seq[Expression]) => ZValue(args(0),
-        args(1).eval().asInstanceOf[Number].intValue(),
-        args(2).eval().asInstanceOf[Number].intValue())))
-    e.injectFunction((FunctionIdentifier("html_text"),
-      info("html_text", "_FUNC_(html, selector) - trimmed text of the first CSS-selector match, null when absent"),
-      (args: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.GetStructField(
-          HtmlExtract(args(0), Seq(("v", args(1).eval().toString, None))), 0, Some("v"))))
-    e.injectFunction((FunctionIdentifier("html_attr"),
-      info("html_attr", "_FUNC_(html, selector, attr) - attribute of the first CSS-selector match, null when absent"),
-      (args: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.GetStructField(
-          HtmlExtract(args(0),
-            Seq(("v", args(1).eval().toString, Some(args(2).eval().toString)))), 0, Some("v"))))
-    e.injectFunction((FunctionIdentifier("html_to_text"),
-      info("html_to_text", "_FUNC_(html) - whole-page visible text, script/style excluded, whitespace-collapsed"),
-      (args: Seq[Expression]) => HtmlToText(args(0))))
-    e.injectFunction((FunctionIdentifier("html_links"),
-      info("html_links", "_FUNC_(html) - non-empty anchor hrefs in document order"),
-      (args: Seq[Expression]) => HtmlLinks(args(0))))
+    GraftExtensions.functions.foreach { case (name, usage, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft", null, name, usage, ""), builder))
+    }
   }
 }

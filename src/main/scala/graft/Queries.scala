@@ -2738,16 +2738,10 @@ object Queries {
     "dedup_cross_source",
     (s, d) => Dedup.crossSourceSpanMatrix(documents(s, d), "doc_id", "text",
       "source", 8),
-    Some(s"""WITH tok AS (
-              SELECT doc_id, source,
-                string_split_regex(lower(trim(text)), '\\s+') AS ts
-              FROM documents),
-            hashed AS (
-              SELECT doc_id, source, md5(array_to_string(ts[i:i+7], ' ')) AS mh
-              FROM tok, unnest(range(1, greatest(len(ts) - 6, 1))) AS t(i)),
+    Some(duckSpanKeys + """,
             sc AS (
-              SELECT ${duckHex60("mh")} AS span_key, source, count(*) AS c
-              FROM hashed GROUP BY 1, 2),
+              SELECT span_key, source, count(*) AS c
+              FROM spans JOIN documents USING (doc_id) GROUP BY 1, 2),
             tot AS (
               SELECT span_key FROM sc GROUP BY span_key
               HAVING sum(c) > 1 AND sum(c) <= 100000),
@@ -3228,6 +3222,22 @@ object Queries {
                   ORDER BY hamming, cand_id) AS hrank
                 FROM cand) WHERE hrank <= 20)"""
 
+  // the binary-quantized ANN rerank tail: the exact cosine of each pooled
+  // candidate, then each probe's top 5 by (score desc, id)
+  private val duckBinaryTop5 = s"""$duckHammingPool,
+            rescored AS (
+              SELECT probe_id, cand_id, hamming,
+                round(list_dot_product(pv::DOUBLE[], cv::DOUBLE[])
+                  / (sqrt(list_dot_product(pv::DOUBLE[], pv::DOUBLE[]))
+                   * sqrt(list_dot_product(cv::DOUBLE[], cv::DOUBLE[]))), 6)
+                  AS score
+              FROM pool),
+            bin AS (
+              SELECT * FROM (
+                SELECT *, CAST(row_number() OVER (PARTITION BY probe_id
+                  ORDER BY score DESC, cand_id) AS INTEGER) AS rank
+                FROM rescored) WHERE rank <= 5)"""
+
   // Binary-quantized ANN: 1-bit sign codes (two packed 32-bit words per
   // 64-dim vector), Hamming-popcount candidate generation, exact cosine
   // rerank of the 20 survivors. The oracle rebuilds the identical codes
@@ -3240,18 +3250,9 @@ object Queries {
       Similarity.binaryHammingTopK(emb, emb.filter(col("vec_id") < 10),
         "vec_id", "embedding", dim = 64, k = 5, candidates = 20)
     },
-    Some(s"""WITH $duckHammingPool,
-            rescored AS (
-              SELECT probe_id, cand_id, CAST(hamming AS INTEGER) AS hamming,
-                round(list_dot_product(pv::DOUBLE[], cv::DOUBLE[])
-                  / (sqrt(list_dot_product(pv::DOUBLE[], pv::DOUBLE[]))
-                   * sqrt(list_dot_product(cv::DOUBLE[], cv::DOUBLE[]))), 6)
-                  AS score
-              FROM pool)
-            SELECT probe_id, cand_id, hamming, score, rank FROM (
-              SELECT *, CAST(row_number() OVER (PARTITION BY probe_id
-                ORDER BY score DESC, cand_id) AS INTEGER) AS rank
-              FROM rescored) WHERE rank <= 5"""))
+    Some(s"""WITH $duckBinaryTop5
+            SELECT probe_id, cand_id, CAST(hamming AS INTEGER) AS hamming, score, rank
+            FROM bin"""))
 
   // ANN recall audit as a first-class query: the binary-quantized
   // search's top-5 intersected with exact brute-force top-5 per probe,
@@ -3290,20 +3291,7 @@ object Queries {
                   row_number() OVER (PARTITION BY probe_id
                     ORDER BY score DESC, cand_id) AS rank
                 FROM scored) WHERE rank <= 5),
-            $duckHammingPool,
-            rescored AS (
-              SELECT probe_id, cand_id,
-                round(list_dot_product(pv::DOUBLE[], cv::DOUBLE[])
-                  / (sqrt(list_dot_product(pv::DOUBLE[], pv::DOUBLE[]))
-                   * sqrt(list_dot_product(cv::DOUBLE[], cv::DOUBLE[]))), 6)
-                  AS score
-              FROM pool),
-            bin AS (
-              SELECT probe_id, cand_id FROM (
-                SELECT probe_id, cand_id,
-                  row_number() OVER (PARTITION BY probe_id
-                    ORDER BY score DESC, cand_id) AS rank
-                FROM rescored) WHERE rank <= 5),
+            $duckBinaryTop5,
             hits AS (
               SELECT b.probe_id, count(*) AS n_hits
               FROM brute b
@@ -4956,7 +4944,7 @@ object Queries {
 
   // ---------------------------------------------------------------- multimodal (real codecs)
   // the synthetic-media generator's closed form in DuckDB, shared by the
-  // two multimodal oracles: ids, image sizes img0 with their red/green
+  // four media oracles: ids, image sizes img0 with their red/green
   // gradient column sums imgx/imgy, and video frame counts vid0
   private val duckMediaGen = """WITH ids AS (
               SELECT CAST(i AS BIGINT) AS media_id FROM range(0, 200) t(i)),
@@ -6212,11 +6200,7 @@ object Queries {
         channel = 0)
       .toDF().groupBy(col("hash_hi"), col("hash_lo"))
       .agg(count(lit(1)).as("n_images"), min(col("media_id")).as("min_media_id")),
-    Some("""WITH ids AS (
-              SELECT CAST(i AS BIGINT) AS media_id FROM range(0, 200) t(i)),
-            img0 AS (
-              SELECT media_id, 16 + media_id % 32 AS w, 16 + media_id % 24 AS h
-              FROM ids WHERE media_id % 3 = 0),
+    Some(duckMediaGen + """,
             px AS (
               SELECT media_id, (x * 8) // w AS bx, (x * 255) // w AS v
               FROM img0, unnest(range(0, w)) AS tx(x)),
@@ -6429,11 +6413,7 @@ object Queries {
     "video_frame_stats",
     (s, d) => Multimodal.frameDecodeStats(Multimodal.syntheticMedia(s, 200),
       stride = 2).toDF(),
-    Some("""WITH ids AS (
-              SELECT CAST(i AS BIGINT) AS media_id FROM range(0, 200) t(i)),
-            vid AS (
-              SELECT media_id, 4 + media_id % 6 AS nf
-              FROM ids WHERE media_id % 3 = 2),
+    Some(duckMediaGen + """,
             rs AS (SELECT SUM((k * 255) // 8) AS sx FROM range(0, 8) t(k)),
             gs AS (SELECT SUM((y * 255) // 6) AS sy FROM range(0, 6) t(y))
             SELECT media_id, CAST(f AS BIGINT) AS frame_idx,
@@ -6441,7 +6421,7 @@ object Queries {
               CAST(6 * sx AS BIGINT) AS px_r_sum,
               CAST(8 * sy AS BIGINT) AS px_g_sum,
               CAST(48 * ((f * 40) % 256) AS BIGINT) AS px_b_sum
-            FROM vid, unnest(range(0, nf)) t(f), rs, gs
+            FROM vid0, unnest(range(0, nf)) t(f), rs, gs
             WHERE f % 2 = 0"""))
 
   // bounded weighted shortest paths on the circulant graph: chord type

@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -13,8 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * zip_with) evaluate their lambdas interpreted — per-element virtual
   * dispatch and boxing — which made the HOF formulations dominate the
   * benchmark. These expressions do the same math in tight primitive
-  * loops (and, for the dot product, whole-stage codegen), turning
-  * signature computation back into a scan-speed narrow transform.
+  * loops inside whole-stage codegen ([[Expressions.UnaryKernel]],
+  * [[Expressions.BinaryKernel]]), turning signature computation back
+  * into a scan-speed narrow transform.
   */
 object Expressions {
 
@@ -49,6 +51,43 @@ object Expressions {
     v >>> 4
   }
 
+  /** The kernel contract of a one-input expression: the concrete class
+    * defines `compute`, a tight primitive loop over the non-null input,
+    * and both evaluation paths call it. Instead of CodegenFallback —
+    * which knocks the WHOLE operator out of whole-stage codegen — the
+    * generated code calls the concrete class's own compiled `compute`
+    * through `ctx.addReferenceObj` (typed as the concrete class, so Java
+    * binds the primitive-returning overload, not the erased bridge). The
+    * loop runs as plain JIT-compiled bytecode, the surrounding projection
+    * stays inside the WholeStageCodegen span, and the interpreted
+    * `nullSafeEval` runs the same `compute`. Null input yields null.
+    */
+  trait UnaryKernel[I, O] extends UnaryExpression {
+    def compute(input: I): O
+
+    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[I])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj(prettyName, this, getClass.getName)
+      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
+    }
+  }
+
+  /** [[UnaryKernel]]'s contract for two inputs: `compute(left, right)`,
+    * null when either input is null.
+    */
+  trait BinaryKernel[L, R, O] extends BinaryExpression {
+    def compute(left: L, right: R): O
+
+    override def nullSafeEval(left: Any, right: Any): Any =
+      compute(left.asInstanceOf[L], right.asInstanceOf[R])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj(prettyName, this, getClass.getName)
+      nullSafeCodeGen(ctx, ev, (l, r) => s"${ev.value} = $ref.compute($l, $r);")
+    }
+  }
+
   /** The value of the first `nibbles` hex digits of md5(input) — the
     * codegen'd twin of `conv(substring(md5(x), 1, nibbles), 16, 10)`,
     * which Catalyst evaluates through hex-encode / substring / radix-conv
@@ -59,16 +98,9 @@ object Expressions {
     * nibble-decode SQL while the Spark side runs at scan speed.
     */
   case class Md5Bits(child: Expression, nibbles: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[UTF8String, Long] with ExpectsInputTypes {
     require(nibbles >= 1 && nibbles <= 15, "1..15 hex digits fit a signed long")
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case StringType =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"md5_bits requires a string input, got ${other.sql}")
-      }
+    override def inputTypes = Seq(StringType)
     override def dataType: DataType = LongType
     override def prettyName: String = "md5_bits"
 
@@ -82,14 +114,6 @@ object Expressions {
         i += 1
       }
       v
-    }
-
-    override def nullSafeEval(input: Any): Any =
-      java.lang.Long.valueOf(compute(input.asInstanceOf[UTF8String]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("md5bits", this, classOf[Md5Bits].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -123,20 +147,12 @@ object Expressions {
     }
   }
 
-  // Codegen note (applies to every expression below): instead of
-  // CodegenFallback — which knocks the WHOLE operator out of whole-stage
-  // codegen — each expression generates a call to its own compiled
-  // `compute` method via `ctx.addReferenceObj`. The tight primitive loop
-  // runs as plain JIT-compiled bytecode, the surrounding projection
-  // stays inside the WholeStageCodegen span, and the interpreted
-  // `nullSafeEval` path runs the same `compute`.
-
   /** Sequential double-precision dot product over two float vectors.
     * Accumulation order is left-to-right, matching the HOF formulation
     * and the DuckDB oracle exactly (bit-identical).
     */
   case class FloatVectorDot(left: Expression, right: Expression)
-      extends BinaryExpression {
+      extends BinaryKernel[ArrayData, ArrayData, Double] {
     override def dataType: DataType = DoubleType
     override def prettyName: String = "float_vector_dot"
 
@@ -146,14 +162,6 @@ object Expressions {
       var i = 0
       while (i < n) { s += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
       s
-    }
-
-    override def nullSafeEval(a: Any, b: Any): Any =
-      compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("fdot", this, classOf[FloatVectorDot].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
     }
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
@@ -168,7 +176,7 @@ object Expressions {
     * the interpreted zip_with/aggregate HOF path.
     */
   case class LongVectorDot(left: Expression, right: Expression)
-      extends BinaryExpression {
+      extends BinaryKernel[ArrayData, ArrayData, Long] {
     override def dataType: DataType = LongType
     override def prettyName: String = "long_vector_dot"
 
@@ -178,14 +186,6 @@ object Expressions {
       var i = 0
       while (i < n) { s += x.getLong(i) * y.getLong(i); i += 1 }
       s
-    }
-
-    override def nullSafeEval(a: Any, b: Any): Any =
-      compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("ldot", this, classOf[LongVectorDot].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
     }
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
@@ -202,7 +202,7 @@ object Expressions {
     * can rebuild it in BIGINT arithmetic without sign wrap.
     */
   case class SignBitsPacked(child: Expression, start: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, Long] {
     override def dataType: DataType = LongType
     override def prettyName: String = "sign_bits_packed"
 
@@ -216,13 +216,6 @@ object Expressions {
         i += 1
       }
       s
-    }
-
-    override def nullSafeEval(v: Any): Any = compute(v.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("signbits", this, classOf[SignBitsPacked].getName)
-      nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $ref.compute($v);")
     }
 
     override protected def withNewChildInternal(c: Expression): Expression =
@@ -240,7 +233,7 @@ object Expressions {
     * downstream ranking.
     */
   case class HammingPacked(left: Expression, right: Expression)
-      extends BinaryExpression {
+      extends BinaryKernel[ArrayData, ArrayData, Int] {
     override def dataType: DataType = IntegerType
     override def prettyName: String = "hamming_packed"
 
@@ -255,14 +248,6 @@ object Expressions {
       s
     }
 
-    override def nullSafeEval(a: Any, b: Any): Any =
-      compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("hamming", this, classOf[HammingPacked].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
-    }
-
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
   }
@@ -275,7 +260,7 @@ object Expressions {
     * by an independent SQL oracle — see MinHashFamily.
     */
   case class MinHashSignature(child: Expression, k: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, ArrayData] {
     require(k > 0 && k <= 1024)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "minhash_signature"
@@ -303,13 +288,6 @@ object Expressions {
       new GenericArrayData(mins)
     }
 
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("minhash", this, classOf[MinHashSignature].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -322,7 +300,7 @@ object Expressions {
     * signed BIGINT.
     */
   case class SimHash60(child: Expression)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, Long] {
     override def dataType: DataType = LongType
     override def prettyName: String = "simhash60"
 
@@ -348,14 +326,6 @@ object Expressions {
       out
     }
 
-    override def nullSafeEval(input: Any): Any =
-      java.lang.Long.valueOf(compute(input.asInstanceOf[ArrayData]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("simhash", this, classOf[SimHash60].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -364,7 +334,7 @@ object Expressions {
     * transform(sequence…, slice…) HOF chain.
     */
   case class WordShingles(child: Expression, n: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, ArrayData] {
     require(n >= 1)
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
     override def prettyName: String = "word_shingles"
@@ -392,13 +362,6 @@ object Expressions {
       new GenericArrayData(out.toArray.asInstanceOf[Array[Any]])
     }
 
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("shingles", this, classOf[WordShingles].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -412,7 +375,7 @@ object Expressions {
     */
   case class HyperplaneSignatures(child: Expression, dim: Int, bits: Int,
                                   bands: Int, seed: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, ArrayData] {
     require(dim > 0 && bits > 0 && bits <= 63 && bands > 0)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "hyperplane_signatures"
@@ -446,13 +409,6 @@ object Expressions {
       new GenericArrayData(out)
     }
 
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("hyperplanes", this, classOf[HyperplaneSignatures].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -462,7 +418,7 @@ object Expressions {
     * interpreted per element.
     */
   case class SignatureAgreement(left: Expression, right: Expression)
-      extends BinaryExpression {
+      extends BinaryKernel[ArrayData, ArrayData, Long] {
     override def dataType: DataType = LongType
     override def prettyName: String = "signature_agreement"
 
@@ -472,15 +428,6 @@ object Expressions {
       var i = 0
       while (i < n) { if (a.getLong(i) == b.getLong(i)) agree += 1; i += 1 }
       agree
-    }
-
-    override def nullSafeEval(a: Any, b: Any): Any =
-      java.lang.Long.valueOf(
-        compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("sigagree", this, classOf[SignatureAgreement].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
     }
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
@@ -501,15 +448,8 @@ object Expressions {
     * name says sorted.
     */
   case class SortedIntersectCount(left: Expression, right: Expression)
-      extends BinaryExpression {
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"sorted_intersect_count requires two array<bigint>, got $other")
-      }
+      extends BinaryKernel[ArrayData, ArrayData, Long] with ExpectsInputTypes {
+    override def inputTypes = Seq(ArrayType(LongType), ArrayType(LongType))
     override def dataType: DataType = LongType
     override def prettyName: String = "sorted_intersect_count"
 
@@ -529,16 +469,6 @@ object Expressions {
       n
     }
 
-    override def nullSafeEval(a: Any, b: Any): Any =
-      java.lang.Long.valueOf(
-        compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData]))
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("sortedinter", this,
-        classOf[SortedIntersectCount].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.compute($a, $b);")
-    }
-
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
   }
@@ -555,17 +485,10 @@ object Expressions {
     * against the sizing overflow since maxBucket is caller-settable.
     */
   case class SortedIdPairs(child: Expression)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, ArrayData] with ExpectsInputTypes {
     // wrong-typed callers must fail at analysis time, not be silently
     // misread through ArrayData.getLong
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(LongType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"sorted_id_pairs requires array<bigint>, got ${other.sql}")
-      }
+    override def inputTypes = Seq(ArrayType(LongType))
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("a", LongType, nullable = false),
       StructField("b", LongType, nullable = false))), containsNull = false)
@@ -595,13 +518,6 @@ object Expressions {
         else java.util.Arrays.copyOf(out.asInstanceOf[Array[AnyRef]], k))
     }
 
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("idpairs", this, classOf[SortedIdPairs].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -615,16 +531,9 @@ object Expressions {
     * Documents shorter than n words report (0, 0, 0).
     */
   case class NgramStats(child: Expression, n: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, InternalRow] with ExpectsInputTypes {
     require(n >= 1, "n-gram order must be at least 1")
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(StringType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"ngram_stats requires array<string>, got ${other.sql}")
-      }
+    override def inputTypes = Seq(ArrayType(StringType))
     override def dataType: DataType = StructType(Seq(
       StructField("total", LongType, nullable = false),
       StructField("n_distinct", LongType, nullable = false),
@@ -655,13 +564,6 @@ object Expressions {
       InternalRow(total.toLong, counts.size.toLong, top.toLong)
     }
 
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("ngstats", this, classOf[NgramStats].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -673,7 +575,7 @@ object Expressions {
     * verify join of the window+self-join formulation into one shuffle.
     */
   case class SimhashIdPairs(child: Expression, maxHamming: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, ArrayData] {
     require(maxHamming >= 0)
     override def dataType: DataType = ArrayType(StructType(Seq(
       StructField("a", LongType, nullable = false),
@@ -710,13 +612,6 @@ object Expressions {
       new GenericArrayData(out.toArray)
     }
 
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("simpairs", this, classOf[SimhashIdPairs].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -731,17 +626,10 @@ object Expressions {
     * `Layout.zOrdered`); nCols * bits must stay under 64.
     */
   case class ZValue(child: Expression, nCols: Int, bits: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, Long] with ExpectsInputTypes {
     require(bits >= 1 && nCols >= 1 && nCols * bits <= 63,
       "z-value needs 1..63 total output bits")
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(LongType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"z_value requires array<bigint> coordinates, got ${other.sql}")
-      }
+    override def inputTypes = Seq(ArrayType(LongType))
     override def dataType: DataType = LongType
     override def prettyName: String = "z_value"
 
@@ -766,13 +654,6 @@ object Expressions {
       z
     }
 
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("zvalue", this, classOf[ZValue].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -790,16 +671,9 @@ object Expressions {
     * Null coordinates cluster at the origin, matching ZValue.
     */
   case class HilbertValue(child: Expression, bits: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, Long] with ExpectsInputTypes {
     require(bits >= 1 && 2 * bits <= 62, "hilbert needs 1..31 bits per axis")
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(LongType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"hilbert_value requires array<bigint> coordinates, got ${other.sql}")
-      }
+    override def inputTypes = Seq(ArrayType(LongType))
     override def dataType: DataType = LongType
     override def prettyName: String = "hilbert_value"
 
@@ -823,13 +697,6 @@ object Expressions {
         s >>= 1
       }
       d
-    }
-
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("hilbert", this, classOf[HilbertValue].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -970,16 +837,9 @@ object Expressions {
     */
   case class HtmlExtract(child: Expression,
                          specs: Seq[(String, String, Option[String])])
-      extends UnaryExpression {
+      extends UnaryKernel[UTF8String, InternalRow] with ExpectsInputTypes {
     require(specs.nonEmpty, "html_extract needs at least one field spec")
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case StringType =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"html_extract requires a string input, got ${other.sql}")
-      }
+    override def inputTypes = Seq(StringType)
     override def dataType: DataType = StructType(
       specs.map { case (name, _, _) => StructField(name, StringType, nullable = true) })
     override def prettyName: String = "html_extract"
@@ -1009,14 +869,6 @@ object Expressions {
       InternalRow(out: _*)
     }
 
-    override def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("htmlex", this, classOf[HtmlExtract].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -1027,28 +879,14 @@ object Expressions {
     * selectors) is [[HtmlExtract]]'s job; this is the page-level
     * default when no template knowledge exists.
     */
-  case class HtmlToText(child: Expression) extends UnaryExpression {
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case StringType =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"html_to_text requires a string input, got ${other.sql}")
-      }
+  case class HtmlToText(child: Expression)
+      extends UnaryKernel[UTF8String, UTF8String] with ExpectsInputTypes {
+    override def inputTypes = Seq(StringType)
     override def dataType: DataType = StringType
     override def prettyName: String = "html_to_text"
 
     def compute(s: UTF8String): UTF8String =
       UTF8String.fromString(Html.visibleText(Html.parse(s.toString)))
-
-    override def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("htmltext", this, classOf[HtmlToText].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
@@ -1057,22 +895,16 @@ object Expressions {
     * first pass of every LLM text-cleaning pipeline: combining
     * sequences compose ("e" + U+0301 -> "é"), singleton canonical
     * equivalents unify, so exact-dedup hashes and tokenizers see ONE
-    * byte form per canonically-equal string. Pure per-row compute in
-    * whole-stage codegen via the compute/addReferenceObj pattern; NFC
-    * is stable across Unicode versions for assigned codepoints, which
-    * is what lets a DuckDB (utf8proc) oracle hash-match the JDK
-    * implementation. Fast path: `Normalizer.isNormalized` skips the
-    * rebuild for already-NFC text (nearly all real corpora).
+    * byte form per canonically-equal string. A [[UnaryKernel]], so it
+    * runs inside whole-stage codegen; NFC is stable across Unicode
+    * versions for assigned codepoints, which is what lets a DuckDB
+    * (utf8proc) oracle hash-match the JDK implementation. Fast path:
+    * `Normalizer.isNormalized` skips the rebuild for already-NFC text
+    * (nearly all real corpora).
     */
-  case class NfcNormalize(child: Expression) extends UnaryExpression {
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case StringType =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"nfc_normalize requires a string input, got ${other.sql}")
-      }
+  case class NfcNormalize(child: Expression)
+      extends UnaryKernel[UTF8String, UTF8String] with ExpectsInputTypes {
+    override def inputTypes = Seq(StringType)
     override def dataType: DataType = StringType
     override def prettyName: String = "nfc_normalize"
 
@@ -1083,14 +915,6 @@ object Expressions {
         java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
     }
 
-    override def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("nfc", this, classOf[NfcNormalize].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -1098,29 +922,15 @@ object Expressions {
     * order — the per-page edge list a crawl-frontier or link-graph
     * (domain-quality, PageRank-ish) step consumes after an `explode`.
     */
-  case class HtmlLinks(child: Expression) extends UnaryExpression {
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case StringType =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"html_links requires a string input, got ${other.sql}")
-      }
+  case class HtmlLinks(child: Expression)
+      extends UnaryKernel[UTF8String, ArrayData] with ExpectsInputTypes {
+    override def inputTypes = Seq(StringType)
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
     override def prettyName: String = "html_links"
 
     def compute(s: UTF8String): ArrayData = {
       val hrefs = Html.links(Html.parse(s.toString))
       new GenericArrayData(hrefs.map(UTF8String.fromString).toArray[Any])
-    }
-
-    override def nullSafeEval(input: Any): Any =
-      compute(input.asInstanceOf[UTF8String])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("htmllinks", this, classOf[HtmlLinks].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -1194,15 +1004,8 @@ object Expressions {
     */
   case class BloomMightContain(child: Expression,
                                bloomBc: org.apache.spark.broadcast.Broadcast[LongBloom])
-      extends UnaryExpression {
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case LongType | IntegerType | ShortType | ByteType =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"bloom_might_contain requires an integral key, got ${other.sql}")
-      }
+      extends UnaryExpression with ExpectsInputTypes {
+    override def inputTypes = Seq(org.apache.spark.sql.graftbridge.Bridge.integralKey)
     override def dataType: DataType = BooleanType
     override def prettyName: String = "bloom_might_contain"
 
@@ -1235,7 +1038,7 @@ object Expressions {
     * interpreted lambda.
     */
   case class SpanWindows(child: Expression, n: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, ArrayData] {
     require(n >= 1)
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
     override def prettyName: String = "span_windows"
@@ -1260,13 +1063,6 @@ object Expressions {
       new GenericArrayData(out)
     }
 
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("spanwin", this, classOf[SpanWindows].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -1279,7 +1075,7 @@ object Expressions {
     * a span-length string. Empty when the document is shorter than n.
     */
   case class SpanKeys(child: Expression, n: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, ArrayData] {
     require(n >= 1)
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "span_keys"
@@ -1331,13 +1127,6 @@ object Expressions {
       new GenericArrayData(out)
     }
 
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("spankeys", this, classOf[SpanKeys].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -1349,15 +1138,9 @@ object Expressions {
     * and to any SQL oracle; the tight loop just avoids the per-row
     * interpreted-lambda and array-of-boxed costs on the corpus pass.
     */
-  case class QuantizeMicro(child: Expression) extends UnaryExpression {
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(FloatType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"quantize_micro requires array<float>, got ${other.sql}")
-      }
+  case class QuantizeMicro(child: Expression)
+      extends UnaryKernel[ArrayData, ArrayData] with ExpectsInputTypes {
+    override def inputTypes = Seq(ArrayType(FloatType))
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "quantize_micro"
 
@@ -1372,13 +1155,6 @@ object Expressions {
       new GenericArrayData(out)
     }
 
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("qmicro", this, classOf[QuantizeMicro].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -1390,16 +1166,9 @@ object Expressions {
     * × dim longs — model bytes, not data).
     */
   case class NearestCellQ(child: Expression, centroids: Array[Array[Long]])
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, Int] with ExpectsInputTypes {
     require(centroids.nonEmpty)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(LongType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"nearest_cell_q requires array<bigint>, got ${other.sql}")
-      }
+    override def inputTypes = Seq(ArrayType(LongType))
     override def dataType: DataType = IntegerType
     override def prettyName: String = "nearest_cell_q"
 
@@ -1429,13 +1198,6 @@ object Expressions {
       best
     }
 
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("nearestcell", this, classOf[NearestCellQ].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
-    }
-
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -1452,16 +1214,9 @@ object Expressions {
     */
   case class NearestCellsQ(child: Expression, centroids: Array[Array[Long]],
                            nProbe: Int)
-      extends UnaryExpression {
+      extends UnaryKernel[ArrayData, ArrayData] with ExpectsInputTypes {
     require(centroids.nonEmpty && nProbe >= 1)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(LongType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"nearest_cells_q requires array<bigint>, got ${other.sql}")
-      }
+    override def inputTypes = Seq(ArrayType(LongType))
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
     override def prettyName: String = "nearest_cells_q"
 
@@ -1508,13 +1263,6 @@ object Expressions {
       val out = new Array[Int](filled)
       System.arraycopy(bc, 0, out, 0, filled)
       org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
-    }
-
-    override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("nearestcells", this, classOf[NearestCellsQ].getName)
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
     }
 
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)

@@ -134,8 +134,9 @@ class SkewExtensionsSpec extends SparkTestBase {
   }
 
   test("extensions register SQL functions with tight-loop implementations") {
-    // getOrCreate returns the suite session, so use runtime registration
-    // (the builder-extensions path is exercised at session construction)
+    // getOrCreate returns the suite session, which Bench.session builds
+    // without extensions, so use runtime registration (the next test
+    // checks the builder path installs the same functions)
     val s2 = spark
     GraftExtensions.register(s2)
     val r = s2.sql(
@@ -169,5 +170,20 @@ class SkewExtensionsSpec extends SparkTestBase {
     assert(r3.getLong(0) >= 0L && r3.getLong(0) <= 255L)
     assert(r3.getLong(1) == 2L, "argmax by q picks x=2")
     assert(r2.getLong(2) == 7L)
+  }
+
+  test("builder extension and runtime register install the same SQL functions") {
+    val injected =
+      org.apache.spark.sql.graftbridge.InjectedFunctions.names(new GraftExtensions)
+    // a fresh session of the suite's context: its registry holds only the
+    // builtins, and register's confs and rules stay off the suite session
+    val fresh = spark.newSession()
+    val registry = fresh.sessionState.functionRegistry
+    val builtins = registry.listFunction().map(_.funcName).toSet
+    GraftExtensions.register(fresh)
+    val registered = registry.listFunction().map(_.funcName).toSet -- builtins
+    assert(registered.contains("nfc_normalize") && registered.contains("max_by_row"))
+    assert(injected == registered,
+      s"builder only: ${injected -- registered}; register only: ${registered -- injected}")
   }
 }
