@@ -1992,10 +1992,10 @@ object Queries {
   // driven end-to-end: pages are synthesized with three markup variants
   // — double-quoted, single-quoted + nested inline tags, reordered
   // attributes + comments splitting tag from text — that all carry the
-  // same id-derived values; the DOM extractors must read through every
-  // variant, so the oracle is pure arithmetic on event_id. (The regex
-  // battery CANNOT pass this query: variants 1 and 2 break it by
-  // construction — HtmlSpec pins that asymmetry.)
+  // same id-derived values; the C12 extractor must read through every
+  // variant, so the oracle is pure arithmetic on event_id. (A regexp
+  // over the raw page text cannot: variants 1 and 2 break it by
+  // construction.)
   private val parseRatingsDom = Q(
     "parse_ratings_dom",
     (s, d) => {
@@ -2026,7 +2026,7 @@ object Queries {
           lit(" Reviews</a><span class=\"v\" slot=\"audienceScore\"><!-- x -->"), aPct,
           lit("%</span><a data-x=\"1\" slot=\"audienceReviews\">"), aCnt,
           lit(" Ratings</a></div>")))
-      operators.Ratings.rottenTomatoesRatingsDom(
+      operators.Ratings.rottenTomatoesRatings(
         e.select(col("event_id"), html.as("html")), "event_id")
     },
     Some("""SELECT event_id,
@@ -3799,9 +3799,9 @@ object Queries {
     "text_langid",
     (s, d) => {
       val scores = langNames.map(l =>
-        TextAnalysis.langScore("text", l).cast("long").as(s"s_$l")) // len() is BIGINT
+        TextAnalysis.langScore(col("text"), l).cast("long").as(s"s_$l")) // len() is BIGINT
       documents(s, d).select(
-        (col("doc_id") +: scores :+ TextAnalysis.langId("text").as("lang_pred")): _*)
+        (col("doc_id") +: scores :+ TextAnalysis.langId(col("text")).as("lang_pred")): _*)
     },
     Some {
       val scoreCols = langNames.map(l => s"${duckLangScore(l)} AS s_$l").mkString(", ")

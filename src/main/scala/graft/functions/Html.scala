@@ -4,14 +4,11 @@ import scala.collection.mutable.ArrayBuffer
 
 /** A small, lenient HTML parser + CSS-subset selector engine, pure
   * Scala (the container has no DOM library and no egress to fetch one).
-  * This is the DOM-fidelity upgrade over the regex extraction battery
-  * in [[graft.operators.Ratings]]: the reference parses rating pages
-  * with BeautifulSoup (/root/reference/src/movie_etl/tasks/etl_task.py:129),
+  * The C9-C12 extractors in [[graft.operators.Ratings]] run on it: the
+  * reference parses rating pages with BeautifulSoup (etl_task.py:129),
   * whose value is exactly that markup noise — attribute order, quote
   * style, comments, nesting, whitespace inside tags — doesn't break
-  * extraction. The regex battery stays as the fast path; the DOM path
-  * is verified equal on clean pages and strictly better on messy ones
-  * (HtmlSpec).
+  * extraction (HtmlSpec, ExternalRatingsSpec).
   *
   * Parsing model (HTML5-lenient, not validating):
   *  - void elements (br/img/meta/...) and self-closed tags never nest;

@@ -864,6 +864,23 @@ object Graph {
   def withRelationshipId(df: DataFrame, headKey: Column, tailKey: Column): DataFrame =
     df.withColumn("relationship_id", relationshipId(headKey, tailKey))
 
+  /** The undirected simple graph of `edges` as canonical pairs (u, v),
+    * u = the lesser endpoint: self-loops dropped, distinct. Lazy — each
+    * caller materializes it (or its [[bothWays]] adjacency) under its
+    * own tag.
+    */
+  private def undirected(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges
+      .select(least(col(srcCol), col(dstCol)).as("u"),
+        greatest(col(srcCol), col(dstCol)).as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct()
+
+  /** Both directions (a, b) of an [[undirected]] pair set. */
+  private def bothWays(canon: DataFrame): DataFrame =
+    canon.select(col("u").as("a"), col("v").as("b"))
+      .union(canon.select(col("v").as("a"), col("u").as("b")))
+
   /** Per-vertex triangle counts by the degree-ordered compact-forward
     * algorithm (Latapy 2008; the cohesion/clustering-coefficient
     * numerator). Edges canonicalize to undirected-distinct first, then
@@ -883,7 +900,6 @@ object Graph {
     */
   def triangleCounts(edges: DataFrame, srcCol: String,
                      dstCol: String): DataFrame = {
-    // canonical undirected-distinct edges, self-loops dropped.
     // Materialized EAGERLY (MEMORY_AND_DISK, lineage truncated): the
     // plan references it ~10 ways (degrees twice, the degree attach,
     // both wedge sides, both closing orientations), and each reference
@@ -893,11 +909,7 @@ object Graph {
     // dominant cost at bench scale and re-deriving the input up to the
     // exchange-reuse cap at any scale. Same bet as [[bfsHops]]' frontier
     // checkpoints: a lost block fails the job and the caller retries.
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val canon = undirected(edges, srcCol, dstCol)
       .checkpointAt("Graph.triangleCounts.canon")
     val deg = canon.select(col("u").as("x"))
       .union(canon.select(col("v").as("x")))
@@ -1120,15 +1132,10 @@ object Graph {
     // table and the non-adjacency anti-join — without truncation the
     // caller's edge subtree is replicated ~7x in the plan (108 scans /
     // 140 Exchanges measured r17)
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val canon = undirected(edges, srcCol, dstCol)
       .checkpointAt("Graph.commonNeighbors.canon")
     // full adjacency (both directions) for wedges and degrees
-    val adj = canon.select(col("u").as("a"), col("v").as("b"))
-      .union(canon.select(col("v").as("a"), col("u").as("b")))
+    val adj = bothWays(canon)
     val deg = adj.groupBy(col("a")).agg(count(lit(1)).as("d"))
     val pairs = adj.alias("e1").join(adj.alias("e2"),
         col("e1.a") === col("e2.a") && col("e1.b") < col("e2.b"))
@@ -1165,14 +1172,9 @@ object Graph {
                          minCommon: Long = 2L): DataFrame = {
     // eager materialization — see [[triangleCounts]] (84 duplicated
     // scans / 108 Exchanges measured r17 without it)
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val canon = undirected(edges, srcCol, dstCol)
       .checkpointAt("Graph.resourceAllocation.canon")
-    val adj = canon.select(col("u").as("a"), col("v").as("b"))
-      .union(canon.select(col("v").as("a"), col("u").as("b")))
+    val adj = bothWays(canon)
     val deg = adj.groupBy(col("a")).agg(count(lit(1)).as("d"))
     // degree rides the left adjacency into the wedge join (edge-scale)
     val adjd = adj.join(deg, "a")
@@ -1209,16 +1211,10 @@ object Graph {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int, driverRows: Int = 100000): DataFrame = {
     require(rounds >= 1, "rounds must be positive")
-    val canon = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
     // adjacency materialized once — see [[bfsHops]]: every propagation
     // round joins it, so truncation stops the per-round replay of the
     // canon distinct and the caller's edge derivation
-    val adj = canon.select(col("u").as("a"), col("v").as("b"))
-      .union(canon.select(col("v").as("a"), col("u").as("b")))
+    val adj = bothWays(undirected(edges, srcCol, dstCol))
       .checkpointAt("Graph.labelPropagation.adj")
     // Adaptive small-graph path (the bfsHops treatment): the driver
     // twin runs the SAME synchronous rounds — every vertex adopts the
@@ -1301,12 +1297,8 @@ object Graph {
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
             k: Long, rounds: Int, driverRows: Int = 100000): DataFrame = {
     require(rounds >= 1, "rounds must be positive")
-    var live = edges
-      .select(least(col(srcCol), col(dstCol)).as("u"),
-        greatest(col(srcCol), col(dstCol)).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
+    var live = undirected(edges, srcCol, dstCol)
+      .checkpointAt("Graph.kCore.canon")
     // Adaptive small-graph path (the bfsHops treatment): the driver
     // twin peels the SAME `rounds` synchronous rounds over the
     // collected canonical edge set (GraphSpec pins equality). Long ids

@@ -2,48 +2,62 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Expressions.html_extract
 import graft.functions.GraftFunctions._
 
-/** C9-C12 scrape-extraction operators (SURVEY.md §2.2): the reference
-  * parses rating pages with a DOM library; Spark has no DOM, so the
-  * extraction battery is regexp expressions over the raw page text —
-  * fully codegen'd, no UDFs. Each extractor takes a DataFrame with an
-  * id column and an `html` string column.
+/** C9-C12 scrape-extraction operators (SURVEY.md §2.2). The reference
+  * parses rating pages with a DOM library, and so do these: each
+  * extractor parses the page ONCE per row into a tree
+  * (graft.functions.Html via `html_extract`) and reads every field off it
+  * with a CSS selector — attribute order, quote style, comments,
+  * interleaved inline markup and whitespace inside tags cannot break
+  * them (HtmlSpec, ExternalRatingsSpec). Each extractor takes a
+  * DataFrame with an id column and an `html` string column.
   */
 object Ratings {
 
-  private def attr(html: Column, marker: String): Column =
-    nullIfEmpty(regexp_extract(html, marker + "=\"([^\"]*)\"", 1))
+  /** `df` plus the struct column `__ex`: one string field per
+    * (name, selector, attribute) spec, null when the selector misses.
+    */
+  private def extract(df: DataFrame, specs: (String, String, Option[String])*): DataFrame =
+    df.withColumn("__ex", html_extract(col("html"), specs))
 
   /** C9 clean_wikidata (etl_task.py:329-347): pull the IMDB / Metacritic /
     * Rotten-Tomatoes external ids out of a wikidata-entity-like page. We
     * key on `data-prop` markers (our canonical serialization of the
     * property divs P345/P1712/P1258).
     */
-  def wikidataIds(df: DataFrame, idCol: String): DataFrame = df.select(
-    col(idCol),
-    nullIfEmpty(regexp_extract(col("html"), "data-prop=\"P345\"[^>]*>([^<]*)<", 1)).as("imdb_id"),
-    nullIfEmpty(regexp_extract(col("html"), "data-prop=\"P1712\"[^>]*>([^<]*)<", 1)).as("metacritic_id"),
-    nullIfEmpty(regexp_extract(col("html"), "data-prop=\"P1258\"[^>]*>([^<]*)<", 1)).as("rotten_tomatoes_id"))
+  def wikidataIds(df: DataFrame, idCol: String): DataFrame =
+    extract(df,
+      ("imdb", "[data-prop=P345]", None),
+      ("mc",   "[data-prop=P1712]", None),
+      ("rt",   "[data-prop=P1258]", None)).select(
+      col(idCol),
+      nullIfEmpty(col("__ex.imdb")).as("imdb_id"),
+      nullIfEmpty(col("__ex.mc")).as("metacritic_id"),
+      nullIfEmpty(col("__ex.rt")).as("rotten_tomatoes_id"))
 
   /** C10 clean_imdb_ratings (etl_task.py:349-380): star score (0-10, one
     * decimal) scaled x10 to 0-100, magnitude-suffixed vote count
     * ("1.2K" -> 1200).
     */
-  def imdbRatings(df: DataFrame, idCol: String): DataFrame = df.select(
-    col(idCol),
-    scaleScore(regexp_extract(col("html"), "data-rating=\"([0-9.]+)\"", 1)).as("user_score"),
-    parseMagnitude(regexp_extract(col("html"), "data-rating-count=\"([0-9.KM]+)\"", 1))
-      .cast("long").as("num_user"))
+  def imdbRatings(df: DataFrame, idCol: String): DataFrame =
+    extract(df,
+      ("rating", "[data-rating]", Some("data-rating")),
+      ("count",  "[data-rating-count]", Some("data-rating-count"))).select(
+      col(idCol),
+      scaleScore(col("__ex.rating")).as("user_score"),
+      parseMagnitude(col("__ex.count")).cast("long").as("num_user"))
 
   /** C11 clean_metacritic_ratings (etl_task.py:382-414 + utils/etl.py:60-85):
     * critic (0-100) and user (0-10, x10-scaled when fractional) scores,
     * sentiment counts via the `N Reviews/Ratings` pattern, percentages,
-    * num_reviews = positive + neutral + negative.
+    * num_reviews = positive + neutral + negative. The section subtree is
+    * located structurally; the sentiment phrases inside it are read with
+    * numeric patterns over the section's text (that text IS the data,
+    * not markup).
     */
   def metacriticRatings(df: DataFrame, idCol: String): DataFrame = {
-    def section(name: String): Column = regexp_extract(col("html"),
-      "<section id=\"" + name + "\">(.*?)</section>", 1)
     def sentiments(sec: Column) = {
       val pos = regexp_extract(sec, "([0-9]+) (?:Reviews|Ratings|Review|Rating)[^|]*positive", 1).cast("int")
       val neu = regexp_extract(sec, "([0-9]+) (?:Reviews|Ratings|Review|Rating)[^|]*neutral", 1).cast("int")
@@ -52,96 +66,15 @@ object Ratings {
     }
     def pct(sec: Column, label: String) =
       regexp_extract(sec, "([0-9]+)%[^|]*" + label, 1).cast("int")
-    val critic = section("critic-reviews")
-    val user   = section("user-reviews")
-    val (cp, cn, cg) = sentiments(critic)
-    val (up, un, ug) = sentiments(user)
-    df.select(
-      col(idCol),
-      scaleScore(regexp_extract(critic, "score=\"([0-9.]+)\"", 1)).as("critic_score"),
-      (cp + cn + cg).as("num_critic"),
-      pct(critic, "positive").as("critic_positive"),
-      pct(critic, "neutral").as("critic_neutral"),
-      pct(critic, "negative").as("critic_negative"),
-      scaleScore(regexp_extract(user, "score=\"([0-9.]+)\"", 1)).as("user_score"),
-      (up + un + ug).as("num_user"),
-      pct(user, "positive").as("user_positive"),
-      pct(user, "neutral").as("user_neutral"),
-      pct(user, "negative").as("user_negative"))
-  }
-
-  /** C12 clean_rotten_tomatoes_ratings (etl_task.py:416-447): critic and
-    * audience percent scores + comma-grouped review counts; each pair
-    * independently NULL on parse failure (the reference's try/except).
-    */
-  def rottenTomatoesRatings(df: DataFrame, idCol: String): DataFrame = {
-    def slot(name: String): Column =
-      regexp_extract(col("html"), "slot=\"" + name + "\"[^>]*>([^<]*)<", 1)
-    df.select(
-      col(idCol),
-      parsePercent(slot("criticsScore")).as("critic_score"),
-      parseGroupedCount(slot("criticsReviews")).as("num_critic"),
-      parsePercent(slot("audienceScore")).as("user_score"),
-      parseGroupedCount(slot("audienceReviews")).as("num_user"))
-  }
-
-  // ---- DOM-fidelity twins (graft.functions.Html via html_extract) ----
-  //
-  // Same output contracts as the regex batteries above, but extraction
-  // goes through a real parse tree — attribute order, quote style,
-  // comments, interleaved markup, and whitespace inside tags cannot
-  // break them (HtmlSpec pins cases where the regexes DO break). The
-  // page is parsed ONCE per row regardless of the number of fields.
-  import graft.functions.Expressions.html_extract
-
-  /** DOM twin of [[wikidataIds]]. */
-  def wikidataIdsDom(df: DataFrame, idCol: String): DataFrame = {
-    val ex = html_extract(col("html"), Seq(
-      ("imdb", "[data-prop=P345]", None),
-      ("mc",   "[data-prop=P1712]", None),
-      ("rt",   "[data-prop=P1258]", None)))
-    df.withColumn("__ex", ex).select(
-      col(idCol),
-      nullIfEmpty(col("__ex.imdb")).as("imdb_id"),
-      nullIfEmpty(col("__ex.mc")).as("metacritic_id"),
-      nullIfEmpty(col("__ex.rt")).as("rotten_tomatoes_id"))
-  }
-
-  /** DOM twin of [[imdbRatings]]. */
-  def imdbRatingsDom(df: DataFrame, idCol: String): DataFrame = {
-    val ex = html_extract(col("html"), Seq(
-      ("rating", "[data-rating]", Some("data-rating")),
-      ("count",  "[data-rating-count]", Some("data-rating-count"))))
-    df.withColumn("__ex", ex).select(
-      col(idCol),
-      scaleScore(col("__ex.rating")).as("user_score"),
-      parseMagnitude(col("__ex.count")).cast("long").as("num_user"))
-  }
-
-  /** DOM twin of [[metacriticRatings]]: the section subtree is located
-    * structurally; the free-text sentiment phrases inside it keep the
-    * same numeric patterns (that text IS the data, not markup).
-    */
-  def metacriticRatingsDom(df: DataFrame, idCol: String): DataFrame = {
-    val ex = html_extract(col("html"), Seq(
-      ("critic_text",  "section#critic-reviews", None),
-      ("critic_score", "section#critic-reviews [score]", Some("score")),
-      ("user_text",    "section#user-reviews", None),
-      ("user_score",   "section#user-reviews [score]", Some("score"))))
-    def sentiments(sec: Column) = {
-      val pos = regexp_extract(sec, "([0-9]+) (?:Reviews|Ratings|Review|Rating)[^|]*positive", 1).cast("int")
-      val neu = regexp_extract(sec, "([0-9]+) (?:Reviews|Ratings|Review|Rating)[^|]*neutral", 1).cast("int")
-      val neg = regexp_extract(sec, "([0-9]+) (?:Reviews|Ratings|Review|Rating)[^|]*negative", 1).cast("int")
-      (pos, neu, neg)
-    }
-    def pct(sec: Column, label: String) =
-      regexp_extract(sec, "([0-9]+)%[^|]*" + label, 1).cast("int")
-    val withEx = df.withColumn("__ex", ex)
     val critic = col("__ex.critic_text")
     val user = col("__ex.user_text")
     val (cp, cn, cg) = sentiments(critic)
     val (up, un, ug) = sentiments(user)
-    withEx.select(
+    extract(df,
+      ("critic_text",  "section#critic-reviews", None),
+      ("critic_score", "section#critic-reviews [score]", Some("score")),
+      ("user_text",    "section#user-reviews", None),
+      ("user_score",   "section#user-reviews [score]", Some("score"))).select(
       col(idCol),
       scaleScore(col("__ex.critic_score")).as("critic_score"),
       (cp + cn + cg).as("num_critic"),
@@ -155,18 +88,19 @@ object Ratings {
       pct(user, "negative").as("user_negative"))
   }
 
-  /** DOM twin of [[rottenTomatoesRatings]]. */
-  def rottenTomatoesRatingsDom(df: DataFrame, idCol: String): DataFrame = {
-    val ex = html_extract(col("html"), Seq(
+  /** C12 clean_rotten_tomatoes_ratings (etl_task.py:416-447): critic and
+    * audience percent scores + comma-grouped review counts; each pair
+    * independently NULL on parse failure (the reference's try/except).
+    */
+  def rottenTomatoesRatings(df: DataFrame, idCol: String): DataFrame =
+    extract(df,
       ("cs", "[slot=criticsScore]", None),
       ("cr", "[slot=criticsReviews]", None),
       ("as", "[slot=audienceScore]", None),
-      ("ar", "[slot=audienceReviews]", None)))
-    df.withColumn("__ex", ex).select(
+      ("ar", "[slot=audienceReviews]", None)).select(
       col(idCol),
       parsePercent(col("__ex.cs")).as("critic_score"),
       parseGroupedCount(col("__ex.cr")).as("num_critic"),
       parsePercent(col("__ex.as")).as("user_score"),
       parseGroupedCount(col("__ex.ar")).as("num_user"))
-  }
 }

@@ -90,6 +90,28 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         n: Int, threshold: Double,
                         maxDf: Int = Int.MaxValue): DataFrame = {
+    val (sizes, inter) = shingleOverlap(docs, idCol, textCol, n, maxDf, "ngramJaccardPairs")
+    // integer union size + a threshold test on integers x one double
+    // multiply: exact, engine-independent (no rounding of the ratio)
+    inter
+      .join(sizes.withColumnRenamed(idCol, "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
+      .join(sizes.withColumnRenamed(idCol, "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
+      .withColumn("n_union", col("n_a") + col("n_b") - col("n_inter"))
+      .filter(col("n_inter") >= lit(threshold) * col("n_union"))
+      .withColumn("jaccard", col("n_inter") / col("n_union"))
+      .select("id_a", "id_b", "n_inter", "n_union", "jaccard")
+  }
+
+  /** The shingle-overlap core of [[ngramJaccardPairs]] and
+    * [[containmentPairs]]: the (id, shingle) index after the `maxDf`
+    * stop-shingle prune, landed once (eager checkpoint tagged
+    * `Dedup.<op>.shingles`) because both outputs read it. Returns the
+    * per-id shingle counts `(idCol, n_sh)` and, per CANONICAL pair
+    * (`id_a < id_b`) sharing a shingle, the intersection size
+    * `(id_a, id_b, n_inter)`.
+    */
+  private def shingleOverlap(docs: DataFrame, idCol: String, textCol: String,
+                             n: Int, maxDf: Int, op: String): (DataFrame, DataFrame) = {
     val all = shingles(docs, idCol, textCol, n)
     val pruned =
       if (maxDf == Int.MaxValue) all
@@ -105,21 +127,13 @@ object Dedup {
         // gracefully
         all.join(stop, Seq("shingle"), "left_anti")
       }
-    val sh = pruned.cache()
+    val sh = pruned.checkpointAt(s"Dedup.$op.shingles")
     val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"))
     val inter = sh.alias("a").join(sh.alias("b"),
         col("a.shingle") === col("b.shingle") && col(s"a.$idCol") < col(s"b.$idCol"))
       .groupBy(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
       .agg(count(lit(1)).as("n_inter"))
-    // integer union size + a threshold test on integers x one double
-    // multiply: exact, engine-independent (no rounding of the ratio)
-    inter
-      .join(sizes.withColumnRenamed(idCol, "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-      .join(sizes.withColumnRenamed(idCol, "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-      .withColumn("n_union", col("n_a") + col("n_b") - col("n_inter"))
-      .filter(col("n_inter") >= lit(threshold) * col("n_union"))
-      .withColumn("jaccard", col("n_inter") / col("n_union"))
-      .select("id_a", "id_b", "n_inter", "n_union", "jaccard")
+    (sizes, inter)
   }
 
   /** Directed containment join over word shingles: emit (contained,
@@ -141,22 +155,7 @@ object Dedup {
                        maxDf: Int = Int.MaxValue): DataFrame = {
     require(thresholdPermille >= 0 && thresholdPermille <= 1000,
       "threshold is a permille in [0, 1000]")
-    val all = shingles(docs, idCol, textCol, n)
-    val pruned =
-      if (maxDf == Int.MaxValue) all
-      else {
-        val stop = all.groupBy(col("shingle"))
-          .agg(count(lit(1)).as("__df"))
-          .filter(col("__df") > maxDf)
-          .select(col("shingle"))
-        all.join(stop, Seq("shingle"), "left_anti")
-      }
-    val sh = pruned.cache()
-    val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n_sh"))
-    val inter = sh.alias("a").join(sh.alias("b"),
-        col("a.shingle") === col("b.shingle") && col(s"a.$idCol") < col(s"b.$idCol"))
-      .groupBy(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .agg(count(lit(1)).as("n_inter"))
+    val (sizes, inter) = shingleOverlap(docs, idCol, textCol, n, maxDf, "containmentPairs")
     val directed = inter
       .select(col("id_a").as("id_contained"), col("id_b").as("id_container"),
         col("n_inter"))
@@ -194,7 +193,8 @@ object Dedup {
                       n: Int = 3, k: Int = 32, bands: Int = 8,
                       threshold: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
     val r = k / bands
-    val sigs = minhashSignatures(docs, idCol, textCol, n, k).cache()
+    val sigs = minhashSignatures(docs, idCol, textCol, n, k)
+      .checkpointAt("Dedup.minhashLshPairs.sigs")
     val buckets = lshBuckets(sigs, idCol, bands, r)
     // bucket build + degenerate-bucket guard + pair generation in ONE
     // shuffle: collect each bucket's id list, drop singleton and

@@ -19,38 +19,22 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "et", "les", "des"),
     "es" -> Seq("el", "la", "de", "los", "que"))
 
-  /** Count whole-word occurrences of `word` in a lowercased text column
+  /** Count whole-word occurrences of `word` in a text column, lowercased
     * (expression-only; used by both langId and quality scoring).
     */
-  def wordHits(textCol: String, word: String): Column =
-    size(regexp_extract_all(lower(col(textCol)), lit("\\b" + word + "\\b"), lit(0)))
+  def wordHits(text: Column, word: String): Column =
+    size(regexp_extract_all(lower(text), lit("\\b" + word + "\\b"), lit(0)))
 
   /** Language score = total stopword hits for that language's battery. */
-  def langScore(textCol: String, lang: String): Column =
-    stopwords.toMap.apply(lang).map(wordHits(textCol, _)).reduce(_ + _)
+  def langScore(text: Column, lang: String): Column =
+    stopwords.toMap.apply(lang).map(wordHits(text, _)).reduce(_ + _)
 
   /** Heuristic language ID: argmax of stopword-battery scores with fixed
     * precedence (en > de > fr > es) on ties; "und" (undetermined) when no
     * battery fires at all.
     */
-  def langId(textCol: String): Column = {
-    val scores = stopwords.map { case (lang, _) => lang -> langScore(textCol, lang) }
-    val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
-    scores.foldRight(lit("und"): Column) { case ((lang, s), elseCol) =>
-      when(s >= lit(1) && s === best, lang).otherwise(elseCol)
-    }
-  }
-
-  /** Stopword-battery hit count over an arbitrary text COLUMN (the
-    * Column-input twin of [[wordHits]], for derived texts like halves). */
-  def wordHitsOf(t: Column, word: String): Column =
-    size(regexp_extract_all(lower(t), lit("\\b" + word + "\\b"), lit(0)))
-
-  /** [[langId]] over an arbitrary text Column. */
-  def langIdOf(t: Column): Column = {
-    val scores = stopwords.map { case (lang, ws) =>
-      lang -> ws.map(wordHitsOf(t, _)).reduce(_ + _)
-    }
+  def langId(text: Column): Column = {
+    val scores = stopwords.map { case (lang, _) => lang -> langScore(text, lang) }
     val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
     scores.foldRight(lit("und"): Column) { case ((lang, s), elseCol) =>
       when(s >= lit(1) && s === best, lang).otherwise(elseCol)
@@ -73,8 +57,8 @@ object TextAnalysis {
     val first = expr(s"substring(`$textCol`, 1, length(`$textCol`) div 2)")
     val second = expr(s"substring(`$textCol`, (length(`$textCol`) div 2) + 1)")
     docs.select(col(idCol),
-      langIdOf(first).as("lang_first"),
-      langIdOf(second).as("lang_second"))
+      langId(first).as("lang_first"),
+      langId(second).as("lang_second"))
       .withColumn("consistent", col("lang_first") === col("lang_second"))
   }
 
@@ -90,7 +74,7 @@ object TextAnalysis {
     val alpha = length(regexp_replace(t, "[^A-Za-z]", ""))
     val punct = length(regexp_replace(t, "[^.,;:!?]", ""))
     val stops = stopwords.flatMap(_._2).distinct
-      .map(wordHits(textCol, _)).reduce(_ + _)
+      .map(wordHits(col(textCol), _)).reduce(_ + _)
     // ratios stay un-rounded: a single IEEE division of identical inputs is
     // bit-identical across engines, while decimal rounding of exact-half
     // values is implementation-defined and would diverge from the oracle
@@ -179,7 +163,7 @@ object TextAnalysis {
       .cast("long")
     val nAlphaWords = size(filter(toks, w => w.rlike("[a-z]"))).cast("long")
     val nStops = gopherStopwords
-      .map(w => when(wordHits(textCol, w) > 0, 1L).otherwise(0L))
+      .map(w => when(wordHits(col(textCol), w) > 0, 1L).otherwise(0L))
       .reduce(_ + _)
     docs.select(
       col(idCol),

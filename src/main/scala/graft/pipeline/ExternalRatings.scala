@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Ratings
+import graft.plans.Materialize.CheckpointOps
 
 /** F9 external_data_flow (/root/reference/src/movie_etl/flows/etl_flow.py:119-222):
   * wikidata page -> external ids -> three scrape/clean chains, each detail
@@ -24,7 +25,9 @@ object ExternalRatings {
     */
   def assemble(wikidataPages: DataFrame, imdbPages: DataFrame,
                metacriticPages: DataFrame, rtPages: DataFrame): RatingsTables = {
-    val ids = Ratings.wikidataIds(wikidataPages, "movie_id").cache()
+    // three joins read the id table: extract it once, eagerly
+    val ids = Ratings.wikidataIds(wikidataPages, "movie_id")
+      .checkpointAt("ExternalRatings.assemble.ids")
 
     val imdb = Ratings.imdbRatings(imdbPages, "imdb_id")
       .join(ids.filter(col("imdb_id").isNotNull).select("movie_id", "imdb_id"), "imdb_id")

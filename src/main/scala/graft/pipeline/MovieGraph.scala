@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Clean, Graph}
+import graft.plans.Materialize.CheckpointOps
 import graft.schema.Dimensions
 
 /** The end-to-end knowledge-graph build (SURVEY.md §2.4 flows F1-F10),
@@ -30,7 +31,8 @@ object MovieGraph {
     */
   def build(spark: SparkSession, cleanedMovies: DataFrame, collections: DataFrame,
             companies: DataFrame, persons: DataFrame): GraphTables = {
-    val movies = cleanedMovies.cache()
+    // every node and edge table reads the cleaned movies: land them once
+    val movies = cleanedMovies.checkpointAt("MovieGraph.build.movies")
 
     // ---- node tables (K3 semantics: keyed, first-write-wins dedup) ----
     val movieNodes = movies.select("movie_id", "title", "overview", "release_date",

@@ -64,15 +64,7 @@ object Sessionize {
                        gapMinutes: Long = 30,
                        watermarkDelay: String = "10 minutes"): Dataset[SessionOut] = {
     import events.sparkSession.implicits._
-    val gapMicros = gapMinutes * 60L * 1000000L
-
-    def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000) % 1000
-    def toTs(us: Long): Timestamp = {
-      val t = new Timestamp(us / 1000)
-      t.setNanos(((us % 1000000L) * 1000L).toInt)
-      t
-    }
-
+    val fold = new GapFold(gapMinutes)
     events.withWatermark("ts", watermarkDelay)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
@@ -82,34 +74,64 @@ object Sessionize {
             // session, drop its state
             val s = state.get
             state.remove()
-            Iterator.single(
-              SessionOut(user, toTs(s.start), toTs(s.lastMicros + gapMicros), s.n, s.sum))
+            Iterator.single(fold.close(user, s))
           } else {
-            val sorted = rows.toSeq.sortBy(e => micros(e.ts))
-            val out = scala.collection.mutable.ArrayBuffer[SessionOut]()
-            var cur = state.getOption.orNull
-            sorted.foreach { e =>
-              val m = micros(e.ts)
-              cur match {
-                case null =>
-                  cur = SessionState(m, m, 1, e.value)
-                case s if m - s.lastMicros < gapMicros =>
-                  cur = SessionState(s.start, m, s.n + 1, s.sum + e.value)
-                case s =>
-                  out += SessionOut(user, toTs(s.start), toTs(s.lastMicros + gapMicros), s.n, s.sum)
-                  cur = SessionState(m, m, 1, e.value)
-              }
-            }
+            val (out, cur) = fold.step(user, rows, state.getOption.orNull)
             if (cur != null) {
               state.update(cur)
               // close time must sit past the current watermark or Spark
               // rejects it; late stragglers can only push it forward
               state.setTimeoutTimestamp(math.max(
-                state.getCurrentWatermarkMs + 1, (cur.lastMicros + gapMicros) / 1000L))
+                state.getCurrentWatermarkMs + 1, fold.closeMs(cur)))
             }
-            out.iterator
+            out
           }
       }
+  }
+
+  /** The gap rule both custom-state paths share: a session absorbs an
+    * event less than `gapMinutes` after its last one and closes at
+    * last event + gap. Timestamps fold at microsecond precision.
+    */
+  private final class GapFold(gapMinutes: Long) extends Serializable {
+    private val gapMicros = gapMinutes * 60L * 1000000L
+
+    private def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000) % 1000
+    private def toTs(us: Long): Timestamp = {
+      val t = new Timestamp(us / 1000)
+      t.setNanos(((us % 1000000L) * 1000L).toInt)
+      t
+    }
+
+    /** Event-time millisecond at which `s` can no longer grow. */
+    def closeMs(s: SessionState): Long = (s.lastMicros + gapMicros) / 1000L
+
+    def close(user: Long, s: SessionState): SessionOut =
+      SessionOut(user, toTs(s.start), toTs(s.lastMicros + gapMicros), s.n, s.sum)
+
+    /** Fold one key's new rows, in event-time order, into its open
+      * session (`open`, null when none): returns the sessions a gap
+      * break closed and the session left open (null only when there
+      * was neither an open session nor a row).
+      */
+    def step(user: Long, rows: Iterator[SessionEvent],
+             open: SessionState): (Iterator[SessionOut], SessionState) = {
+      val out = scala.collection.mutable.ArrayBuffer[SessionOut]()
+      var cur = open
+      rows.toSeq.sortBy(e => micros(e.ts)).foreach { e =>
+        val m = micros(e.ts)
+        cur match {
+          case null =>
+            cur = SessionState(m, m, 1, e.value)
+          case s if m - s.lastMicros < gapMicros =>
+            cur = SessionState(s.start, m, s.n + 1, s.sum + e.value)
+          case s =>
+            out += close(user, s)
+            cur = SessionState(m, m, 1, e.value)
+        }
+      }
+      (out.iterator, cur)
+    }
   }
 
   /** [[statefulSessions]] on the modern `transformWithState` API
@@ -122,16 +144,8 @@ object Sessionize {
     */
   class GapSessionProcessor(gapMinutes: Long)
       extends org.apache.spark.sql.streaming.StatefulProcessor[Long, SessionEvent, SessionOut] {
-    private val gapMicros = gapMinutes * 60L * 1000000L
+    private val fold = new GapFold(gapMinutes)
     @transient private var session: org.apache.spark.sql.streaming.ValueState[SessionState] = _
-
-    private def micros(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000) % 1000
-    private def toTs(us: Long): Timestamp = {
-      val t = new Timestamp(us / 1000)
-      t.setNanos(((us % 1000000L) * 1000L).toInt)
-      t
-    }
-    private def closeMs(s: SessionState): Long = (s.lastMicros + gapMicros) / 1000L
 
     override def init(outputMode: OutputMode,
                       timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
@@ -141,27 +155,13 @@ object Sessionize {
 
     override def handleInputRows(user: Long, rows: Iterator[SessionEvent],
         timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[SessionOut] = {
-      val sorted = rows.toSeq.sortBy(e => micros(e.ts))
-      val out = scala.collection.mutable.ArrayBuffer[SessionOut]()
-      var cur = if (session.exists()) session.get() else null
-      sorted.foreach { e =>
-        val m = micros(e.ts)
-        cur match {
-          case null =>
-            cur = SessionState(m, m, 1, e.value)
-          case s if m - s.lastMicros < gapMicros =>
-            cur = SessionState(s.start, m, s.n + 1, s.sum + e.value)
-          case s =>
-            out += SessionOut(user, toTs(s.start), toTs(s.lastMicros + gapMicros), s.n, s.sum)
-            cur = SessionState(m, m, 1, e.value)
-        }
-      }
+      val (out, cur) = fold.step(user, rows, if (session.exists()) session.get() else null)
       if (cur != null) {
         session.update(cur)
         getHandle.registerTimer(math.max(
-          timerValues.getCurrentWatermarkInMs() + 1, closeMs(cur)))
+          timerValues.getCurrentWatermarkInMs() + 1, fold.closeMs(cur)))
       }
-      out.iterator
+      out
     }
 
     override def handleExpiredTimer(user: Long,
@@ -172,11 +172,11 @@ object Sessionize {
       if (!session.exists()) Iterator.empty
       else {
         val s = session.get()
-        if (timerValues.getCurrentWatermarkInMs() >= closeMs(s)) {
+        if (timerValues.getCurrentWatermarkInMs() >= fold.closeMs(s)) {
           session.clear()
-          Iterator.single(SessionOut(user, toTs(s.start), toTs(s.lastMicros + gapMicros), s.n, s.sum))
+          Iterator.single(fold.close(user, s))
         } else {
-          getHandle.registerTimer(closeMs(s))
+          getHandle.registerTimer(fold.closeMs(s))
           Iterator.empty
         }
       }
@@ -193,18 +193,5 @@ object Sessionize {
       .transformWithState(new GapSessionProcessor(gapMinutes),
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
         OutputMode.Append())
-  }
-
-  /** Flush helper for batch use of the stateful path: emits the final
-    * (still-open) session per user so batch totals reconcile.
-    */
-  def statefulSessionsBatch(events: Dataset[SessionEvent],
-                            gapMinutes: Long = 30): DataFrame = {
-    // In batch mode flatMapGroupsWithState sees each group exactly once and
-    // state dies with the job, so closed sessions come from the iterator
-    // and the trailing open session must be emitted inline. Reuse the
-    // declarative path as the batch answer; the stateful path is for
-    // streams. (Kept for API symmetry.)
-    sessionWindows(events.toDF(), "ts", "user_id", s"$gapMinutes minutes")
   }
 }

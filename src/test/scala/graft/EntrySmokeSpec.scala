@@ -3,8 +3,9 @@ package graft
 import graft.ops.Multimodal
 
 /** Driver-contract smoke: entry() on sf0.001 returns rows; every query in
-  * the registry runs on sf0.001 and leaves the session's confs and temp
-  * views as it found them; oracles exist for the SQL-expressible set.
+  * the registry runs on sf0.001 and leaves the session's confs, temp
+  * views and cache as it found them; oracles exist for the
+  * SQL-expressible set.
   */
 class EntrySmokeSpec extends SparkTestBase {
 
@@ -13,18 +14,22 @@ class EntrySmokeSpec extends SparkTestBase {
   }
 
   test("every registered query executes on sf0.001 and is non-empty") {
-    // what a query could leak into the session: explicitly set confs and
-    // temp views. The events reader pins its nanos-as-long scan conf on
-    // first use (a setting every events scan needs, not per-query
-    // state), so the snapshots start after one plain events read.
+    // what a query could leak into the session: explicitly set confs,
+    // temp views and cached relations (a cached intermediate would let
+    // a second run of the same query read the first run's data). The
+    // events reader pins its nanos-as-long scan conf on first use (a
+    // setting every events scan needs, not per-query state), so the
+    // snapshots start after one plain events read.
     def sessionState() = (spark.conf.getAll,
       spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet)
     Tables.events(spark, sf("sf0.001"))
+    spark.catalog.clearCache()
     SparkEntry.queries.foreach { case (name, fn) =>
       val before = sessionState()
       val n = fn(spark, sf("sf0.001")).count()
       assert(n > 0, s"query $name returned no rows on sf0.001")
       assert(sessionState() == before, s"query $name changed the session's confs or temp views")
+      assert(spark.sharedState.cacheManager.isEmpty, s"query $name left a cached relation")
     }
   }
 

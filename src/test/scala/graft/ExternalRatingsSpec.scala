@@ -33,7 +33,10 @@ class ExternalRatingsSpec extends SparkTestBase {
           <span slot="audienceScore">91%</span><a slot="audienceReviews">5,200 Ratings</a>"""))
       .toDF("rotten_tomatoes_id", "html")
 
+    spark.catalog.clearCache()
     val out = ExternalRatings.assemble(wikidata, imdb, metacritic, rt)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "assemble must not leave a cached relation behind")
     val i = out.imdb.orderBy("movie_id").collect()
     assert(i.map(_.getAs[Long]("movie_id")).toSeq == Seq(101L, 102L))
     assert(i.head.getAs[Int]("user_score") == 73)
@@ -45,6 +48,42 @@ class ExternalRatingsSpec extends SparkTestBase {
     assert(m.head.getAs[Int]("num_critic") == 50)
     val r = out.rottenTomatoes.collect()
     assert(r.length == 1 && r.head.getAs[Long]("num_user") == 5200L)
+  }
+
+  test("F9: messy markup (quote style, attribute order, split values) still fans out") {
+    // single-quoted and reordered attributes, comments splitting the
+    // values, inline markup around them: the same three pages a clean
+    // serializer would emit, after a template change
+    val wikidata = Seq((201L,
+      """<div class='wb-external-id' data-prop='P345'>tt92<!-- split -->00001</div>
+        |<div data-prop='P1712' title="mc"><!-- id -->movie/salt-flats</div>
+        |<span class="wb-external-id" data-prop='P1258'>m/salt<!-- -->_flats</span>"""
+        .stripMargin)).toDF("movie_id", "html")
+    val imdb = Seq(("tt9200001",
+      """<span class='star' data-rating='7.8'></span><div title="votes" data-rating-count='2.5K'></div>"""))
+      .toDF("imdb_id", "html")
+    val metacritic = Seq(("movie/salt-flats",
+      """<section id="critic-reviews"><div score="66"></div> 20 Reviews 50% positive | 10 Reviews 25% neutral | 10 Reviews 25% negative</section>"""))
+      .toDF("metacritic_id", "html")
+    val rt = Seq(("m/salt_flats",
+      """<span class='v' slot='criticsScore'><!-- c --><b>8<!-- -->1%</b></span>
+        |<a data-x="1" slot='criticsReviews'>3<!-- -->40 <i>Reviews</i></a>
+        |<span slot='audienceScore' class='v'>77%</span>
+        |<a slot='audienceReviews'>1,<!-- x -->200 <i>Ratings</i></a>""".stripMargin))
+      .toDF("rotten_tomatoes_id", "html")
+
+    val out = ExternalRatings.assemble(wikidata, imdb, metacritic, rt)
+    val i = out.imdb.collect()
+    assert(i.length == 1 && i.head.getAs[Long]("movie_id") == 201L)
+    assert(i.head.getAs[Int]("user_score") == 78)
+    assert(i.head.getAs[Long]("num_user") == 2500L)
+    val m = out.metacritic.collect()
+    assert(m.length == 1 && m.head.getAs[Long]("movie_id") == 201L)
+    assert(m.head.getAs[Int]("critic_score") == 66 && m.head.getAs[Int]("num_critic") == 40)
+    val r = out.rottenTomatoes.collect()
+    assert(r.length == 1 && r.head.getAs[Long]("movie_id") == 201L)
+    assert(r.head.getAs[Int]("critic_score") == 81 && r.head.getAs[Long]("num_critic") == 340L)
+    assert(r.head.getAs[Int]("user_score") == 77 && r.head.getAs[Long]("num_user") == 1200L)
   }
 
   test("foreachBatch incremental sink converges across overlapping batches") {

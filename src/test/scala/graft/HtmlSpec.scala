@@ -4,9 +4,9 @@ import graft.functions.Html
 import graft.functions.Html.{Elem, Text}
 import graft.operators.Ratings
 
-/** The lenient DOM parser + selector engine, and the property the DOM
-  * extraction twins exist for: markup noise that breaks the regex
-  * batteries does not break them.
+/** The lenient DOM parser + selector engine, and the property the C9-C12
+  * extractors rely on it for: markup noise (quote style, attribute order,
+  * comments, nested inline tags) does not break them.
   */
 class HtmlSpec extends SparkTestBase {
   import spark.implicits._
@@ -72,34 +72,6 @@ class HtmlSpec extends SparkTestBase {
     assert(Html.select(root, "section.reviews > div > span").map(_.text) == Vector("1"))
   }
 
-  test("DOM twins equal the regex batteries on clean pages") {
-    val wiki = Seq(("Q1",
-      """<div data-prop="P345" class="wb-external-id">tt1392170</div>
-        |<div data-prop="P1712" class="wb-external-id">movie/x</div>
-        |<div data-prop="P1258" class="wb-external-id">m/x</div>""".stripMargin))
-      .toDF("id", "html")
-    assert(Ratings.wikidataIdsDom(wiki, "id").collect().toSeq ==
-      Ratings.wikidataIds(wiki, "id").collect().toSeq)
-
-    val imdb = Seq(("tt1",
-      """<span data-rating="7.2"></span><div data-rating-count="1.4M"></div>"""))
-      .toDF("id", "html")
-    assert(Ratings.imdbRatingsDom(imdb, "id").collect().toSeq ==
-      Ratings.imdbRatings(imdb, "id").collect().toSeq)
-
-    val mc = Seq(("mc1",
-      """<section id="critic-reviews"><div score="81"></div> 55 Reviews 68% positive | 12 Reviews 22% neutral | 5 Reviews 10% negative</section> <section id="user-reviews"><div score="7.9"></div> 300 Ratings 75% positive | 60 Ratings 15% neutral | 40 Ratings 10% negative</section>"""))
-      .toDF("id", "html")
-    assert(Ratings.metacriticRatingsDom(mc, "id").collect().toSeq ==
-      Ratings.metacriticRatings(mc, "id").collect().toSeq)
-
-    val rt = Seq(("rt1",
-      """<div><span slot="criticsScore">93%</span><a slot="criticsReviews">412 Reviews</a><span slot="audienceScore">85%</span><a slot="audienceReviews">250,000+ Ratings</a></div>"""))
-      .toDF("id", "html")
-    assert(Ratings.rottenTomatoesRatingsDom(rt, "id").collect().toSeq ==
-      Ratings.rottenTomatoesRatings(rt, "id").collect().toSeq)
-  }
-
   test("messy markup: DOM extracts where the regex battery breaks") {
     // single-quoted attributes, reversed attribute order, a comment
     // splitting the tag from its text, nested inline markup in the value
@@ -107,13 +79,9 @@ class HtmlSpec extends SparkTestBase {
       """<span class='score' slot='criticsScore'><!-- c --><b>93%</b></span>
         |<a data-x="1" slot='criticsReviews'>412 <i>Reviews</i></a>""".stripMargin))
       .toDF("id", "html")
-    val dom = Ratings.rottenTomatoesRatingsDom(messy, "id").collect().head
+    val dom = Ratings.rottenTomatoesRatings(messy, "id").collect().head
     assert(dom.getInt(1) == 93 && dom.getLong(2) == 412L,
       "DOM path reads through quoting/nesting/comments")
-    val rx = Ratings.rottenTomatoesRatings(messy, "id").collect().head
-    assert(rx.isNullAt(1) && rx.isNullAt(2),
-      "the regex battery (double-quote anchored, text-adjacent) cannot — " +
-        "this asymmetry is the reason the DOM path exists")
   }
 
   test("html_extract: missing selector and missing attr yield null fields") {

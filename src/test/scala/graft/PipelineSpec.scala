@@ -19,6 +19,13 @@ class PipelineSpec extends SparkTestBase {
     TmdbCorpus.companies(spark),
     TmdbCorpus.persons(spark))
 
+  test("build leaves no cached relation behind") {
+    spark.catalog.clearCache()
+    MovieGraph.build(spark, Clean.movieDetails(TmdbCorpus.movies(spark)),
+      TmdbCorpus.collections(spark), TmdbCorpus.companies(spark), TmdbCorpus.persons(spark))
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("node tables: keys unique, only referenced collections fetched") {
     assert(graph.nodes("Movie").count() == 3)
     // collection 901 exists in the corpus but no movie references it (F3 guard)

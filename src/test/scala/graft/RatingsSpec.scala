@@ -2,8 +2,8 @@ package graft
 
 import graft.operators.Ratings
 
-/** C9-C12 extraction batteries over canonical page snippets (our
-  * serialization of the DOM shapes the reference scrapes).
+/** C9-C12 extractors over canonical page snippets (our serialization of
+  * the DOM shapes the reference scrapes), with literal expected values.
   */
 class RatingsSpec extends SparkTestBase {
   import spark.implicits._
@@ -47,6 +47,7 @@ class RatingsSpec extends SparkTestBase {
     assert(out.getInt(3) == 68 && out.getInt(4) == 22 && out.getInt(5) == 10)
     assert(out.getInt(6) == 79, "user fractional score x10")
     assert(out.getInt(7) == 400)
+    assert(out.getInt(8) == 75 && out.getInt(9) == 15 && out.getInt(10) == 10)
   }
 
   test("C12: rotten tomatoes with independent null pairs") {
