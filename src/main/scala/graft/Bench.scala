@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -43,6 +44,7 @@ object Bench {
     // are also named in an "errors" key on the output line.
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     val (gcCount0, gcMs0) = gcTotals()
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val results = selected.map { case (name, fn) =>
       val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
@@ -59,6 +61,9 @@ object Bench {
     // GC over the timed loop, all collectors: what the heap size costs
     // on this host's core count, next to the query times it bought
     val (gcCount1, gcMs1) = gcTotals()
+    // classes Janino compiled over the same loop: a warm re-run that
+    // hits the codegen cache compiles none
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
     // centisecond-rounded per-query values (trailing zeros stripped) keep
     // the ONE output line well under a bounded log-tail capture even at
     // ~85 queries; finer precision adds nothing at this noise floor. The
@@ -68,7 +73,8 @@ object Bench {
     def cents(v: Double): JBD = new JBD(v).setScale(2, RoundingMode.HALF_UP)
     def js(b: JBD): String = b.stripTrailingZeros.toPlainString
     val gcField =
-      s""""gc_count":${gcCount1 - gcCount0},"gc_s":${js(cents((gcMs1 - gcMs0) / 1e3))},"""
+      s""""gc_count":${gcCount1 - gcCount0},"gc_s":${js(cents((gcMs1 - gcMs0) / 1e3))},""" +
+        s""""codegen_compiles":$compiles,"""
     val rounded = results.map { case (k, v) => k -> cents(v) }
     val qs = rounded.map { case (k, b) => "\"" + k + "\":" + js(b) }
       .mkString("{", ",", "}")

@@ -236,6 +236,13 @@ object Queries {
     * `providerClass` pins a state store provider for queries whose
     * operator requires one (transformWithState needs RocksDB).
     *
+    * Artifact isolation is off inside the scope: each run executes on a
+    * cloned session with its own session id, and with isolation on that
+    * session's tasks get their own class loader, so the codegen cache
+    * (keyed by class loader and code) misses on every run and the
+    * stream's classes recompile each call. The engine adds no artifacts
+    * to any session, so isolation has nothing to isolate.
+    *
     * Conf set/restore is safe here: the streaming job runs to completion
     * (AvailableNow + awaitTermination) inside the scope, and the queries'
     * downstream BATCH plans execute after restore, at `.count()` time.
@@ -248,7 +255,8 @@ object Queries {
     val scoped = Seq(
       "spark.sql.shuffle.partitions" -> Some(statePartitions.toString),
       "spark.sql.streaming.noDataMicroBatches.enabled" -> Some(noDataBatch.toString),
-      "spark.sql.streaming.stateStore.providerClass" -> providerClass)
+      "spark.sql.streaming.stateStore.providerClass" -> providerClass,
+      "spark.sql.artifact.isolation.enabled" -> Some("false"))
     val explicit = conf.getAll
     val prev = scoped.map { case (k, _) => k -> explicit.get(k) }
     for ((k, v) <- scoped; x <- v) conf.set(k, x)
@@ -556,6 +564,9 @@ object Queries {
         .unionByName(nation(s, d).select(
           concat(lit("N"), col("n_nationkey").cast("string")).as("child"),
           concat(lit("R"), col("n_regionkey").cast("string")).as("parent")))
+        // landed once: every recursive step joins the view, which would
+        // otherwise plan and scan supplier and nation again per iteration
+        .transform(graft.plans.Materialize.checkpoint(_, "Queries.j4HierarchyRcte.edges"))
         .createOrReplaceTempView("graft_hier_edges")
       val out = s.sql("""
         WITH RECURSIVE anc(child, ancestor, depth) AS (
@@ -2373,8 +2384,6 @@ object Queries {
   private val seasonalResidualQ = Q(
     "seasonal_residual_outliers",
     (s, d) => {
-      val wCell = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("event_type"), col("hod"))
       val base = events(s, d).select(col("event_type"), col("event_id"),
           hour(col("ts")).cast("long").as("hod"),
           floor(col("value") * 100 + 0.5).cast("long").as("c"))
@@ -3012,8 +3021,7 @@ object Queries {
   // pair set (the minhash edge set is xxhash64-seeded, so no SQL engine
   // can reproduce it): same connected-components operator, hash-matched
   // end to end against a WITH RECURSIVE min-label closure. The
-  // minhash-edged composition stays covered by nearDupClusters's
-  // ScalaTest + the weekly-incremental integration test.
+  // minhash-edged composition stays covered by DedupSpec.
   // Shared oracle prefix for the component-based dedup queries: exact
   // 3-gram Jaccard pairs (maxDf=10) -> WITH RECURSIVE min-label closure
   // -> comp(node, component) + csize(component, cluster_size).

@@ -21,6 +21,14 @@ object GraftFunctions {
   /** Reference convention: empty string means missing (etl_task.py:189). */
   def nullIfEmpty(c: Column): Column = nullif(c, lit(""))
 
+  /** A scraped string (or a figure derived from one) as type `to`, NULL
+    * where it does not parse: '' from a pattern that missed, "tbd", a
+    * digit run past the type's range. This is the reference's
+    * try/except -> None; a plain cast fails the whole job on such a value
+    * under ANSI mode. Every cast of scraped input goes through here.
+    */
+  def tryParse(c: Column, to: String): Column = c.try_cast(to)
+
   /** Reference convention: zero means missing (etl_task.py:192-194). */
   def nullIfZero(c: Column): Column = nullif(c, lit(0))
 
@@ -58,7 +66,7 @@ object GraftFunctions {
   def parseMagnitude(c: Column): Column = {
     val num    = regexp_extract(c, "^([0-9]+(?:\\.[0-9]+)?)([KM]?)$", 1)
     val suffix = regexp_extract(c, "^([0-9]+(?:\\.[0-9]+)?)([KM]?)$", 2)
-    val base   = nullIfEmpty(num).cast("double")
+    val base   = tryParse(num, "double")
     when(suffix === "K", base * 1000d)
       .when(suffix === "M", base * 1000000d)
       .otherwise(base)
@@ -68,19 +76,20 @@ object GraftFunctions {
     * (etl_task.py:428-438: try/except -> None).
     */
   def parsePercent(c: Column): Column =
-    nullIfEmpty(regexp_extract(c, "([0-9]+)%", 1)).cast("int")
+    tryParse(regexp_extract(c, "([0-9]+)%", 1), "int")
 
   /** Parse comma-grouped counts "1,234" -> 1234 (etl_task.py:429,436). */
   def parseGroupedCount(c: Column): Column =
-    nullIfEmpty(regexp_replace(regexp_extract(c, "([0-9][0-9,]*)", 1), ",", ""))
-      .cast("long")
+    tryParse(regexp_replace(regexp_extract(c, "([0-9][0-9,]*)", 1), ",", ""), "long")
 
   /** Score scaling: 0-10 scale with a decimal point -> 0-100 int; already
     * 0-100 integral scores pass through (utils/etl.py:80; etl_task.py:378).
+    * NULL for a score that does not parse ("tbd").
     */
-  def scaleScore(c: Column): Column =
-    when(c.contains("."), (c.cast("double") * 10).cast("int"))
-      .otherwise(c.cast("double").cast("int"))
+  def scaleScore(c: Column): Column = {
+    val v = tryParse(c, "double")
+    tryParse(when(c.contains("."), v * 10).otherwise(v), "int")
+  }
 
   /** Synthesized edge identity "{head_key}-{tail_key}" (kg_task.py:56-61). */
   def relationshipId(headKey: Column, tailKey: Column): Column =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.StructType
@@ -75,15 +75,6 @@ object AsOf {
   def join(left: DataFrame, right: DataFrame, keyCol: String, tsCol: String,
            rightPayload: Seq[(String, String)]): DataFrame =
     asofImpl(left, right, keyCol, tsCol, rightPayload, forward = false)
-      .drop("__matched")
-
-  /** Forward as-of: for each left row, the EARLIEST right row with
-    * right.ts >= left.ts in the key group (DuckDB ASOF `<=` direction) —
-    * "what happened next" attribution.
-    */
-  def joinForward(left: DataFrame, right: DataFrame, keyCol: String, tsCol: String,
-                  rightPayload: Seq[(String, String)]): DataFrame =
-    asofImpl(left, right, keyCol, tsCol, rightPayload, forward = true)
       .drop("__matched")
 
   /** Inner forward variant: drop left rows with no following right row —

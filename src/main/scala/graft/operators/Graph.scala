@@ -83,7 +83,7 @@ object Graph {
           cp.write.mode("overwrite").parquet(path)
           written += name
           blocks.foreach(_.unpersist(blocking = false))
-          spark.read.parquet(path)
+          spark.read.schema(cp.schema).parquet(path)
         } else {
           checkpointed(name) = blocks
           cp
@@ -96,7 +96,8 @@ object Graph {
         // workDir is a request for durable rounds, honored at any size
         if (owned && written.size == 1)
           small = tableBytes(path) < RoundStore.smallGraphBytes
-        spark.read.parquet(path)
+        // the schema just written: reading it back infers nothing (no job)
+        spark.read.schema(df.schema).parquet(path)
       }
     }
 
@@ -180,12 +181,27 @@ object Graph {
     if (driverRows <= 0 || !valueKeyed(inputs.flatMap(_.schema.fields): _*)) None
     else {
       // lazy: a probe runs only while every earlier one fit
-      val probes = inputs.iterator.map(_.limit(driverRows + 1).collect())
+      val probes = inputs.iterator.map(probe(_, driverRows + 1))
         .takeWhile(p => p.length <= driverRows && !p.exists(_.anyNull)).toVector
       if (probes.length < inputs.length) None
       else twin(probes).map(out =>
         inputs.head.sparkSession.createDataFrame(out.toSeq.asJava, schema))
     }
+
+  /** At most `cap` rows of `df`: the capped, early-terminating take of
+    * `limit(cap).collect()`, run on the input's own plan. On a union
+    * input `limit` pushes a LocalLimit into each branch, whose generated
+    * code names its counter from a JVM-wide sequence, so every call
+    * compiled new classes; the input's own plan generates the same code
+    * each call.
+    */
+  private def probe(df: DataFrame, cap: Int): Array[Row] = {
+    val qe = df.queryExecution
+    val toRow = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(df.schema)
+      .resolveAndBind().createDeserializer()
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("probe"))(
+      qe.executedPlan.executeTake(cap)).map(toRow)
+  }
 
   /** J1/J2 "does this key already exist" probe, set-oriented: keep only
     * incoming rows whose key is NOT present (utils/etl.py:41-58, 169-181).
@@ -830,39 +846,11 @@ object Graph {
     parent.keySet().asScala.toSeq.map(n => Row(n, minOf.get(find(n))))
   }
 
-  /** Incremental connected components: fold a previous run's
-    * (node, component) labels in as star edges and union the new-batch
-    * edges — existing clusters enter pre-collapsed (diameter 1), so
-    * min-label converges in rounds proportional to how much the NEW
-    * edges bridge old clusters, not to corpus history. The weekly
-    * incremental shape: per run, work scales with the new batch plus
-    * touched clusters.
-    *
-    * Output contract matches [[connectedComponents]]; previously-labeled
-    * nodes keep their component unless a new edge merges clusters (the
-    * min id of the union wins, so labels stay stable under growth).
-    */
-  def incrementalComponents(prevLabels: DataFrame, newEdges: DataFrame,
-                            extraNodes: Option[DataFrame] = None,
-                            workDir: Option[String] = None): DataFrame = {
-    val starEdges = prevLabels
-      .select(col("node").as("src"), col("component").as("dst"))
-    connectedComponents(starEdges.unionByName(
-      newEdges.select(col("src"), col("dst"))), extraNodes = extraNodes,
-      workDir = workDir)
-  }
-
   /** K8 rollback semantics: cascading delete of one key across child
     * tables = anti-join rewrite (utils/etl.py:87-120).
     */
   def deleteByKey(table: DataFrame, victims: DataFrame, key: String): DataFrame =
     table.join(victims.select(key), Seq(key), "left_anti")
-
-  /** Edge-candidate helper: attach relationship ids without endpoint
-    * validation (for pre-validated inputs).
-    */
-  def withRelationshipId(df: DataFrame, headKey: Column, tailKey: Column): DataFrame =
-    df.withColumn("relationship_id", relationshipId(headKey, tailKey))
 
   /** The undirected simple graph of `edges` as canonical pairs (u, v),
     * u = the lesser endpoint: self-loops dropped, distinct. Lazy — each

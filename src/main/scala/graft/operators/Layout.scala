@@ -20,15 +20,18 @@ object Layout {
     * metadata — compute once with an agg, reuse across writes; passing
     * them explicitly keeps this a pure narrow projection).
     */
-  def zColumn(cols: Seq[(Column, Double, Double)], bits: Int): Column = {
-    val scaled = cols.map { case (c, lo, hi) =>
-      val span = math.max(hi - lo, java.lang.Double.MIN_VALUE)
-      // clamp into range so out-of-bounds stragglers still sort sanely
-      least(greatest(
-        floor((c.cast("double") - lit(lo)) / lit(span) * lit((1L << bits) - 1))
-          .cast("long"), lit(0L)), lit((1L << bits) - 1L))
-    }
-    z_value(array(scaled: _*), cols.size, bits)
+  def zColumn(cols: Seq[(Column, Double, Double)], bits: Int): Column =
+    z_value(array(cols.map(quantize(_, bits)): _*), cols.size, bits)
+
+  /** `c` min-max scaled from [lo, hi] onto [0, 2^bits), clamped into
+    * range so out-of-bounds stragglers still sort sanely.
+    */
+  private def quantize(c: (Column, Double, Double), bits: Int): Column = {
+    val (v, lo, hi) = c
+    val span = math.max(hi - lo, java.lang.Double.MIN_VALUE)
+    least(greatest(
+      floor((v.cast("double") - lit(lo)) / lit(span) * lit((1L << bits) - 1))
+        .cast("long"), lit(0L)), lit((1L << bits) - 1L))
   }
 
   /** Hilbert-curve column over a coordinate PAIR, scaled exactly like
@@ -39,50 +42,9 @@ object Layout {
     * fewer range-partitioned files at the same file count.
     */
   def hilbertColumn(xCol: (Column, Double, Double),
-                    yCol: (Column, Double, Double), bits: Int): Column = {
-    val scaled = Seq(xCol, yCol).map { case (c, lo, hi) =>
-      val span = math.max(hi - lo, java.lang.Double.MIN_VALUE)
-      least(greatest(
-        floor((c.cast("double") - lit(lo)) / lit(span) * lit((1L << bits) - 1))
-          .cast("long"), lit(0L)), lit((1L << bits) - 1L))
-    }
-    graft.functions.Expressions.hilbert_value(array(scaled: _*), bits)
-  }
-
-  /** Range-repartition by Z-value into `numFiles` files, sorted within
-    * each, and write. The range exchange samples the z distribution, so
-    * files get even row counts AND tight per-dimension min/max ranges.
-    */
-  def writeZOrdered(df: DataFrame, path: String,
-                    cols: Seq[(String, Double, Double)], bits: Int,
-                    numFiles: Int): Unit = {
-    val z = zColumn(cols.map { case (n, lo, hi) => (col(n), lo, hi) }, bits)
-    df.withColumn("__z", z)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(path)
-  }
-
-  /** Locality diagnostic: sum over files of the per-file min/max span
-    * product across `cols` (normalized by the global spans). A random
-    * layout scores ~numFiles (every file spans every dimension); a
-    * well-clustered one scores far below 1 per dimension pair. Reads
-    * footer-equivalent stats with one aggregation over
-    * `input_file_name`, no parquet internals.
-    */
-  def localityScore(read: DataFrame, cols: Seq[(String, Double, Double)]): Double = {
-    val aggs = cols.flatMap { case (n, _, _) =>
-      Seq(min(col(n)).as(s"__mn_$n"), max(col(n)).as(s"__mx_$n"))
-    }
-    val perFile = read
-      .groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-    val spanProduct = cols.map { case (n, lo, hi) =>
-      (col(s"__mx_$n").cast("double") - col(s"__mn_$n").cast("double")) / (hi - lo)
-    }.reduce(_ * _)
-    perFile.agg(sum(spanProduct)).head().getDouble(0)
-  }
+                    yCol: (Column, Double, Double), bits: Int): Column =
+    graft.functions.Expressions.hilbert_value(
+      array(quantize(xCol, bits), quantize(yCol, bits)), bits)
 
   /** Zone-map manifest: one row per data file with min/max for each
     * tracked column, stored as a PARQUET sidecar (`<path>.zonemap`) so

@@ -47,7 +47,7 @@ object Ratings {
       ("count",  "[data-rating-count]", Some("data-rating-count"))).select(
       col(idCol),
       scaleScore(col("__ex.rating")).as("user_score"),
-      parseMagnitude(col("__ex.count")).cast("long").as("num_user"))
+      tryParse(parseMagnitude(col("__ex.count")), "long").as("num_user"))
 
   /** C11 clean_metacritic_ratings (etl_task.py:382-414 + utils/etl.py:60-85):
     * critic (0-100) and user (0-10, x10-scaled when fractional) scores,
@@ -58,14 +58,12 @@ object Ratings {
     * not markup).
     */
   def metacriticRatings(df: DataFrame, idCol: String): DataFrame = {
-    def sentiments(sec: Column) = {
-      val pos = regexp_extract(sec, "([0-9]+) (?:Reviews|Ratings|Review|Rating)[^|]*positive", 1).cast("int")
-      val neu = regexp_extract(sec, "([0-9]+) (?:Reviews|Ratings|Review|Rating)[^|]*neutral", 1).cast("int")
-      val neg = regexp_extract(sec, "([0-9]+) (?:Reviews|Ratings|Review|Rating)[^|]*negative", 1).cast("int")
-      (pos, neu, neg)
-    }
+    def reviews(sec: Column, label: String) = tryParse(regexp_extract(sec,
+      "([0-9]+) (?:Reviews|Ratings|Review|Rating)[^|]*" + label, 1), "int")
+    def sentiments(sec: Column) =
+      (reviews(sec, "positive"), reviews(sec, "neutral"), reviews(sec, "negative"))
     def pct(sec: Column, label: String) =
-      regexp_extract(sec, "([0-9]+)%[^|]*" + label, 1).cast("int")
+      tryParse(regexp_extract(sec, "([0-9]+)%[^|]*" + label, 1), "int")
     val critic = col("__ex.critic_text")
     val user = col("__ex.user_text")
     val (cp, cn, cg) = sentiments(critic)

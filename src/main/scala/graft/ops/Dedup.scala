@@ -544,24 +544,12 @@ object Dedup {
       .distinct()
   }
 
-  /** Full dedup pipeline: near-dup pairs -> connected components ->
+  /** Near-dup clusters over ANY (id_a, id_b) pair set — minhash LSH,
+    * simhash, exact Jaccard, embedding-cosine — so the edge generator and
+    * the component solver verify independently: connected components,
     * canonical survivor per cluster (min id — first-write-wins, matching
-    * [[exact]]). Returns (doc_id, component, is_canonical, cluster_size);
-    * docs without any near-dup partner are their own singleton cluster.
-    */
-  def nearDupClusters(docs: DataFrame, idCol: String, textCol: String,
-                      n: Int = 3, k: Int = 32, bands: Int = 16,
-                      threshold: Double = 0.5): DataFrame =
-    clustersFromPairs(
-      minhashLshPairs(docs, idCol, textCol, n, k, bands, threshold)
-        .select(col("id_a"), col("id_b")),
-      docs, idCol)
-
-  /** Clustering half of [[nearDupClusters]], over ANY (id_a, id_b) pair
-    * set — minhash LSH, simhash, exact Jaccard, embedding-cosine — so the
-    * edge generator and the component solver verify independently.
-    * Returns (idCol, component, is_canonical, cluster_size); docs with no
-    * pair are singleton clusters.
+    * [[exact]]). Returns (idCol, component, is_canonical, cluster_size);
+    * docs with no pair are singleton clusters.
     */
   def clustersFromPairs(pairs: DataFrame, docs: DataFrame, idCol: String): DataFrame = {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Multimodal column plumbing: image/audio/video as `binary` columns
   * with typed metadata. Every kind is a REAL zero-dependency codec:
@@ -321,13 +320,6 @@ object Multimodal {
     }
   }
 
-  /** Feature table detached from payloads: the only shape that should ever
-    * reach a join or aggregation.
-    */
-  def featureTable(media: Dataset[MediaRow]): DataFrame =
-    extractFeatures(media).toDF()
-      .select(col("media_id"), col("kind"), col("n_bytes"), col("checksum"), col("feature"))
-
   /** Integer decode profile per media row — every value read out of the
     * DECODED payload (PPM header + pixels, WAV fmt/data chunks, GVID
     * frames), never from row metadata. All-integer so the numbers are
@@ -505,27 +497,6 @@ object Multimodal {
           val (w, h, rgb) = PpmCodec.decode(r.payload)
           r.copy(payload = PpmCodec.encode(outW, outH, resizeRgb(w, h, rgb, outW, outH)),
             width = outW, height = outH)
-        case other => other
-      }
-    }
-  }
-
-  /** Per-frame video resize: decode the GVID container, resample every
-    * REAL frame through the same nearest-neighbor kernel as
-    * [[resizeImages]], re-encode — the 1:1 video transform stage (same
-    * batch shape and byte-budget partitioning concerns as the image
-    * path, multiplied by frames-per-clip). Non-video kinds pass through.
-    */
-  def resizeVideoFrames(media: Dataset[MediaRow], outW: Int, outH: Int): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map {
-        case r if r.kind == "video" =>
-          val frames = VideoContainer.decode(r.payload).map { f =>
-            val (w, h, rgb) = PpmCodec.decode(f)
-            PpmCodec.encode(outW, outH, resizeRgb(w, h, rgb, outW, outH))
-          }
-          r.copy(payload = VideoContainer.encode(frames), width = outW, height = outH)
         case other => other
       }
     }

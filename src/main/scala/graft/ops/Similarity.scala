@@ -148,25 +148,6 @@ object Similarity {
       .select("probe_id", "cand_id", "hamming", "score", "rank")
   }
 
-  /** Random-hyperplane signature: bit i = sign(dot(v, r_i)) where r_i is a
-    * deterministic pseudo-random hyperplane derived from (seed, i, dim) —
-    * reproducible across runs and cluster sizes with no model state.
-    * Computed by the single tight-loop
-    * [[graft.functions.Expressions.HyperplaneSignatures]] expression.
-    */
-  def hyperplaneSignature(vec: Column, dim: Int, bits: Int, seed: Int = 42): Column =
-    element_at(graft.functions.Expressions.hyperplane_signatures(
-      vec, dim, bits, bands = 1, seed), 1)
-
-  /** Symmetric int8 quantization profile of an embedding column: per
-    * vector, scale = max|x| / 127 and q_i = floor(x_i / scale + 0.5)
-    * (half-up via floor — explicit, so both engines agree; banker's
-    * `round` differs between them). All-zero vectors quantize to zeros
-    * via the nullif(scale, 0) guard. Emitted as per-vector stats (sum /
-    * min / max / saturation count) rather than the int8 array itself:
-    * integer aggregates compare engine-exactly, and at 100 TB the stats
-    * are the validation artifact while the arrays stay columnar.
-    */
   /** Per-dimension feature profile of an embedding column: count,
     * positive count, min, max per dim (1-based) — the normalization /
     * clipping bounds a feature-scaling stage needs. One posexplode +
@@ -181,6 +162,15 @@ object Similarity {
         count(when(col("v") > 0, 1)).as("n_pos"),
         min(col("v")).as("vmin"), max(col("v")).as("vmax"))
 
+  /** Symmetric int8 quantization profile of an embedding column: per
+    * vector, scale = max|x| / 127 and q_i = floor(x_i / scale + 0.5)
+    * (half-up via floor — explicit, so both engines agree; banker's
+    * `round` differs between them). All-zero vectors quantize to zeros
+    * via the nullif(scale, 0) guard. Emitted as per-vector stats (sum /
+    * min / max / saturation count) rather than the int8 array itself:
+    * integer aggregates compare engine-exactly, and at 100 TB the stats
+    * are the validation artifact while the arrays stay columnar.
+    */
   def quantizeInt8Stats(embs: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val qArr = """transform(v, x -> CAST(coalesce(
                     floor(CAST(x AS DOUBLE) / nullif(scale, 0.0) + 0.5D),

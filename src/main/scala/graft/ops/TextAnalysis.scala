@@ -385,14 +385,6 @@ object TextAnalysis {
     */
   def fingerprint(text: Column): Column = md5(normalizeText(text))
 
-  /** Rolling-hash fingerprint (winnowing-style): minimum hash over word
-    * 4-shingles — a 1-permutation MinHash usable as a cheap near-dup
-    * prefilter. Reuses the tight-loop minhash expression with k=1.
-    */
-  def rollingFingerprint(textCol: String, n: Int = 4): Column =
-    element_at(graft.functions.Expressions.minhash_signature(
-      graft.functions.Expressions.word_shingles(tokens(col(textCol)), n), 1), 1)
-
   /** Benchmark decontamination: for every training document, the number
     * of distinct word n-grams it shares with a held-out benchmark set —
     * the standard test-set-leakage check run before training. Returns

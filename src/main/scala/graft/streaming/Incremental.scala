@@ -64,19 +64,6 @@ object Incremental {
         col(keyCol), col("n_events"), col("min_value"), col("max_value"))
   }
 
-  /** Streaming variant with event-time watermark: late rows beyond the
-    * watermark are dropped, matching the reference's "window closed, rerun
-    * appends are deduped" behavior. window() is epoch-aligned and
-    * 1970-01-01 was a Thursday, so a 4-day startTime offset Monday-aligns
-    * the buckets to agree with [[weeklyCounts]]'s date_trunc('week').
-    */
-  def streamingWeeklyCounts(events: DataFrame, tsCol: String, keyCol: String,
-                            watermark: String = "1 day"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), "7 days", "7 days", "4 days"), col(keyCol))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-
   /** At-least-once -> exactly-once: drop duplicate event ids within the
     * watermark horizon (the streaming analog of the reference's
     * dup-tolerant CREATE).
@@ -85,41 +72,6 @@ object Incremental {
                   watermark: String = "1 day"): DataFrame =
     events.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(idCol)
-
-  /** Stream-stream interval join: attribute each purchase to clicks by
-    * the same user within the trailing `horizon`. Both sides watermarked
-    * so join state is bounded — the state-retention condition Spark
-    * requires for stream-stream joins (click state expires once the
-    * purchase-side watermark passes click.ts + horizon).
-    */
-  def streamStreamAttribution(clicks: DataFrame, purchases: DataFrame,
-                              horizon: String = "1 hour",
-                              watermark: String = "2 hours"): DataFrame = {
-    val c = clicks.withWatermark("click_ts", watermark)
-    val p = purchases.withWatermark("purchase_ts", watermark)
-    p.join(c,
-      expr(s"""click_user = purchase_user AND
-               click_ts <= purchase_ts AND
-               click_ts >= purchase_ts - INTERVAL $horizon"""))
-  }
-
-  /** Streaming near-dup detection: each micro-batch of documents is
-    * MinHash-signed, appended idempotently to the persisted signature
-    * store, and compared ONLY against the store (new-vs-all, never
-    * all-vs-all) — the streaming form of the weekly incremental dedup.
-    * Discovered pairs land in `pairsPath`; replayed batches converge
-    * because the signature append is first-write-wins and re-discovered
-    * pairs are deduped against the pair table on write.
-    */
-  def streamingIncrementalDedup(docs: DataFrame, idCol: String, textCol: String,
-                                storePath: String, pairsPath: String,
-                                threshold: Double = 0.5):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val pairs = graft.ops.Dedup.incrementalMinhashPairs(
-        batch, idCol, textCol, storePath, threshold = threshold)
-      graft.operators.Sinks.appendDedup(pairs, pairsPath, Seq("id_a", "id_b"))
-    }
 
   /** Bounded-memory streaming dedup: per-shard bloom filters held in
     * flatMapGroupsWithState, emitting only first-seen ids. State is
@@ -151,17 +103,6 @@ object Incremental {
           fresh.iterator
       }
   }
-
-  /** Streaming -> idempotent table: each micro-batch lands through the
-    * dup-tolerant first-write-wins sink (K1/K3 semantics), so replayed or
-    * overlapping batches converge — the streaming form of the reference's
-    * weekly re-runnable load.
-    */
-  def foreachBatchAppend(stream: DataFrame, path: String, keys: Seq[String]):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, _: Long) => graft.operators.Sinks.appendDedup(batch, path, keys)
-    }
 
   /** Streaming -> partition-scoped MERGE: each micro-batch upserts
     * through [[graft.operators.Sinks.mergeUpsertPartitioned]], touching

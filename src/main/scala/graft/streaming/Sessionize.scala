@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -89,7 +89,7 @@ object Sessionize {
       }
   }
 
-  /** The gap rule both custom-state paths share: a session absorbs an
+  /** The gap rule of [[statefulSessions]]: a session absorbs an
     * event less than `gapMinutes` after its last one and closes at
     * last event + gap. Timestamps fold at microsecond precision.
     */
@@ -132,66 +132,5 @@ object Sessionize {
       }
       (out.iterator, cur)
     }
-  }
-
-  /** [[statefulSessions]] on the modern `transformWithState` API
-    * (Spark 4 StatefulProcessor + RocksDB state store): same gap
-    * semantics, but state is a typed ValueState and session expiry is an
-    * explicit event-time TIMER instead of a blanket group timeout — the
-    * shape that scales to many state variables and per-key timers. The
-    * query must run with the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`).
-    */
-  class GapSessionProcessor(gapMinutes: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, SessionEvent, SessionOut] {
-    private val fold = new GapFold(gapMinutes)
-    @transient private var session: org.apache.spark.sql.streaming.ValueState[SessionState] = _
-
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      session = getHandle.getValueState[SessionState]("session",
-        org.apache.spark.sql.Encoders.product[SessionState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(user: Long, rows: Iterator[SessionEvent],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[SessionOut] = {
-      val (out, cur) = fold.step(user, rows, if (session.exists()) session.get() else null)
-      if (cur != null) {
-        session.update(cur)
-        getHandle.registerTimer(math.max(
-          timerValues.getCurrentWatermarkInMs() + 1, fold.closeMs(cur)))
-      }
-      out
-    }
-
-    override def handleExpiredTimer(user: Long,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[SessionOut] = {
-      // stale-timer guard: a session extended after this timer was set is
-      // not closeable yet — re-arm at the true close time instead
-      if (!session.exists()) Iterator.empty
-      else {
-        val s = session.get()
-        if (timerValues.getCurrentWatermarkInMs() >= fold.closeMs(s)) {
-          session.clear()
-          Iterator.single(fold.close(user, s))
-        } else {
-          getHandle.registerTimer(fold.closeMs(s))
-          Iterator.empty
-        }
-      }
-    }
-  }
-
-  /** transformWithState driver for [[GapSessionProcessor]]. */
-  def statefulSessionsTws(events: Dataset[SessionEvent],
-                          gapMinutes: Long = 30,
-                          watermarkDelay: String = "10 minutes"): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events.withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user_id)
-      .transformWithState(new GapSessionProcessor(gapMinutes),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
   }
 }

@@ -65,15 +65,12 @@ class AsOfSpec extends SparkTestBase {
   }
 
   test("forward as-of picks the earliest following right row per key") {
-    val out = AsOf.joinForward(trades, quotes, "key", "ts", Seq("price" -> "next_price"))
-      .select("trade_id", "next_price").collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
-    assert(out(10L).contains(99.0), "10:06 trade -> 10:10 quote")
-    assert(out(11L).contains(101.0), "equal timestamps match (<= semantics)")
-    assert(out(12L).contains(100.0), "09:59 trade -> first quote of the day")
-    assert(out(13L).isEmpty, "no following quote -> null")
-    assert(out(14L).isEmpty)
-    val matched = AsOf.joinForwardMatched(trades, quotes, "key", "ts", Seq("price" -> "p"))
-    assert(matched.select("trade_id").as[Long].collect().toSet == Set(10L, 11L, 12L))
+    val out = AsOf.joinForwardMatched(trades, quotes, "key", "ts",
+        Seq("price" -> "next_price"))
+      .select("trade_id", "next_price").as[(Long, Double)].collect().toMap
+    assert(out(10L) == 99.0, "10:06 trade -> 10:10 quote")
+    assert(out(11L) == 101.0, "equal timestamps match (<= semantics)")
+    assert(out(12L) == 100.0, "09:59 trade -> first quote of the day")
+    assert(out.keySet == Set(10L, 11L, 12L), "no following quote -> no row")
   }
 }

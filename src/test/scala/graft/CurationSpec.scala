@@ -1,10 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Curation
+import graft.ops.TextAnalysis
 
-/** The end-to-end curation gate: each fixture doc is built to die at (or
-  * survive) a specific stage, so the report counts pin the whole chain.
+/** The corpus-curation stages (decontamination, repetition, sampling,
+  * hashed features, quality scoring and rules, language screening), each
+  * pinned on fixtures built to pass or fail it.
   */
 class CurationSpec extends SparkTestBase {
   import spark.implicits._
@@ -14,48 +15,19 @@ class CurationSpec extends SparkTestBase {
     "the library assistants sorted correspondence into labelled boxes for review"
 
   private val docs = Seq(
-    (1L, good),                                            // survives everything
-    (2L, good),                                            // exact dup of 1 -> dropped
-    (3L, good + " and then rested quietly"),               // near dup of 1 -> dropped
+    (1L, good),
+    (2L, good),
+    (3L, good + " and then rested quietly"),
     (4L, "reach me at jane.doe@example.com regarding the lighthouse inventory " +
          "schedule because the keeper needs replacement lamps delivered before " +
-         "the autumn storms arrive on the northern coast"), // PII; redacted, survives
-    (5L, "!!! ??? ,,, ... ;;; :::"),                       // punctuation soup -> quality gate
-    (6L, "short text"),                                    // below min tokens -> quality gate
+         "the autumn storms arrive on the northern coast"),
+    (5L, "!!! ??? ,,, ... ;;; :::"),
+    (6L, "short text"),
     (7L, "completely different prose describing the harvest festival where " +
          "villagers gathered baskets of apples pears and late summer plums")
   ).toDF("doc_id", "text")
 
-  test("each stage drops exactly its target documents; report counts agree") {
-    val (out, report) = Curation.curate(docs, "doc_id", "text",
-      minScore = 60.0, minTokens = 5, jaccardThreshold = 0.3)
-    val ids = out.select("doc_id").as[Long].collect().toSet
-    assert(report.input == 7)
-    assert(report.afterQuality == 5, "docs 5 and 6 die at the quality gate")
-    assert(report.afterExact == 4, "doc 2 collapses into doc 1")
-    assert(report.afterNearDup == 3, s"doc 3 clusters with doc 1; got $report")
-    assert(report.afterSample == 3, "full nibble set = no sampling")
-    assert(ids == Set(1L, 4L, 7L))
-    // PII never reaches the curated corpus
-    val t4 = out.filter(col("doc_id") === 4).select("text").as[String].collect().head
-    assert(t4.contains("<EMAIL>") && !t4.contains("example.com"))
-  }
-
-  test("curation is deterministic and idempotent") {
-    val (out1, r1) = Curation.curate(docs, "doc_id", "text", jaccardThreshold = 0.3)
-    val (out2, r2) = Curation.curate(docs, "doc_id", "text", jaccardThreshold = 0.3)
-    assert(r1 == r2)
-    assert(out1.collect().toSet == out2.collect().toSet)
-    // feeding the curated corpus back through drops nothing further
-    // except by sampling (disabled here)
-    val (again, r3) = Curation.curate(out1, "doc_id", "text", jaccardThreshold = 0.3)
-    assert(r3.afterSample == r1.afterSample)
-    assert(again.select("doc_id").as[Long].collect().toSet ==
-      out1.select("doc_id").as[Long].collect().toSet)
-  }
-
   test("decontamination flags exactly the docs sharing an n-gram with the benchmark") {
-    import graft.ops.TextAnalysis
     val bench = Seq(
       (100L, "what is the capital of france paris obviously")).toDF("doc_id", "text")
     val train = Seq(
@@ -80,7 +52,6 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("repetition stats: duplicate and top bigram fractions, short-doc zeros") {
-    import graft.ops.TextAnalysis
     val rep = Seq(
       (1L, "spam spam spam spam"),      // bigrams: 3x "spam spam"
       (2L, "one two three four"),       // 3 distinct bigrams
@@ -96,17 +67,20 @@ class CurationSpec extends SparkTestBase {
   }
 
   test("sampling keeps exactly the selected md5 nibbles") {
-    val (out, report) = Curation.curate(docs, "doc_id", "text",
-      jaccardThreshold = 0.3, sampleNibbles = "01234567")
-    assert(report.afterSample <= report.afterNearDup)
+    val out = TextAnalysis.sampleByContent(docs, "text", "01234567")
     val kept = out.select(substring(md5(col("text")), 1, 1)).as[String].collect()
     assert(kept.forall("01234567".contains(_)))
+    val md5Hex = (t: String) => java.security.MessageDigest.getInstance("MD5")
+      .digest(t.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val expected = docs.as[(Long, String)].collect()
+      .collect { case (id, t) if "01234567".contains(md5Hex(t).head) => id }.toSet
+    assert(out.select("doc_id").as[Long].collect().toSet == expected)
   }
 
   test("feature hashing: stable buckets, signed counts, sparse shape") {
     val fx = Seq(1L -> "alpha alpha alpha", 2L -> "alpha beta",
       3L -> "beta").toDF("doc_id", "text")
-    val f = graft.ops.TextAnalysis.hashedBowFeatures(fx, "doc_id", "text", 64)
+    val f = TextAnalysis.hashedBowFeatures(fx, "doc_id", "text", 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
       .toMap
     // one repeated token -> one sparse row, |signed_sum| == n (same
@@ -121,7 +95,7 @@ class CurationSpec extends SparkTestBase {
     // distinct tokens: doc 2 holds two buckets unless md5 collides at 64
     assert(f.keys.count(_._1 == 2L) == 2)
     // deterministic across evaluations
-    val again = graft.ops.TextAnalysis.hashedBowFeatures(fx, "doc_id", "text", 64)
+    val again = TextAnalysis.hashedBowFeatures(fx, "doc_id", "text", 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
       .toMap
     assert(again == f)
@@ -143,7 +117,7 @@ class CurationSpec extends SparkTestBase {
       // stopword fail: no required stopwords at all
       6L -> "cats dogs run far away very fast every single day")
       .toDF("doc_id", "text")
-    val r = graft.ops.TextAnalysis.gopherRules(fixture, "doc_id", "text")
+    val r = TextAnalysis.gopherRules(fixture, "doc_id", "text")
       .collect().map(x => x.getLong(0) -> x).toMap
     assert(r(1L).getBoolean(11), "doc 1 must pass the full battery")
     assert(!r(2L).getBoolean(6), "doc 2 must fail word_count_ok")
@@ -158,13 +132,13 @@ class CurationSpec extends SparkTestBase {
   test("linear quality scorer: integer dot product over hashed features") {
     val fx = Seq(1L -> "alpha alpha beta", 2L -> "alpha beta",
       3L -> "gamma").toDF("doc_id", "text")
-    val out = graft.ops.TextAnalysis.linearQualityScore(fx, "doc_id", "text", 64)
+    val out = TextAnalysis.linearQualityScore(fx, "doc_id", "text", 64)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getBoolean(3))).toMap
     // recompute the expected score from the featurizer + weight formula —
     // the scorer must be exactly sum(w[bucket] * signed_sum) with
     // w[b] = (b * 2654435761) mod 1001 - 500
-    val feats = graft.ops.TextAnalysis.hashedBowFeatures(fx, "doc_id", "text", 64)
+    val feats = TextAnalysis.hashedBowFeatures(fx, "doc_id", "text", 64)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3))
     def w(b: Long): Long = java.lang.Math.floorMod(b * 2654435761L, 1001L) - 500L
     val expected = feats.groupBy(_._1._1).map { case (doc, rows) =>
@@ -176,7 +150,7 @@ class CurationSpec extends SparkTestBase {
       assert(nb == feats.count(_._1._1 == doc), s"active buckets for $doc")
     }
     // deterministic across evaluations (a model, not a sample)
-    val again = graft.ops.TextAnalysis.linearQualityScore(fx, "doc_id", "text", 64)
+    val again = TextAnalysis.linearQualityScore(fx, "doc_id", "text", 64)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getBoolean(3))).toMap
     assert(again == out)
@@ -193,7 +167,7 @@ class CurationSpec extends SparkTestBase {
       // no stopword evidence anywhere: und == und counts consistent
       (3L, "zzz qqq xxx www yyy vvv"))
       .toDF("doc_id", "text")
-    val out = graft.ops.TextAnalysis.langConsistency(docs, "doc_id", "text")
+    val out = TextAnalysis.langConsistency(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) ->
         (r.getString(1), r.getString(2), r.getBoolean(3))).toMap
     assert(out(1L)._3 == false && out(1L)._1 == "en" && out(1L)._2 == "de",

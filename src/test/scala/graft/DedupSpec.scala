@@ -366,8 +366,9 @@ class DedupSpec extends SparkTestBase {
   }
 
   test("near-dup clusters: pairs collapse to one canonical survivor") {
-    val out = Dedup.nearDupClusters(docs, "doc_id", "text",
+    val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
       n = 3, k = 32, bands = 16, threshold = 0.4)
+    val out = Dedup.clustersFromPairs(pairs.select("id_a", "id_b"), docs, "doc_id")
     val rows = out.collect().map(r =>
       r.getLong(0) -> (r.getLong(1), r.getBoolean(2), r.getLong(3))).toMap
     // 1, 2, 4 form one near-dup cluster with 1 canonical
@@ -409,40 +410,6 @@ class DedupSpec extends SparkTestBase {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(p2b == p2)
     assert(spark.read.parquet(store).count() == 5)
-  }
-
-  test("weekly incremental clustering equals a full recompute") {
-    import graft.operators.Graph
-    val store = java.nio.file.Files.createTempDirectory("graft_wk_").toString + "/sigs"
-    val week1 = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog near the river bank"),
-      (2L, "the quick brown fox jumps over the lazy dog near the river bank"),
-      (3L, "completely different content about spark catalyst optimizer rules"))
-      .toDF("doc_id", "text")
-    val week2 = Seq(
-      (4L, "the quick brown fox jumps over the lazy dog near the river bank"),
-      (5L, "fresh unrelated words that match nothing else in the corpus"),
-      (6L, "fresh unrelated words that match nothing else in the corpus"))
-      .toDF("doc_id", "text")
-
-    def pairs(batch: org.apache.spark.sql.DataFrame) =
-      Dedup.incrementalMinhashPairs(batch, "doc_id", "text", store,
-          n = 3, k = 32, bands = 16, threshold = 0.4)
-        .select(col("id_a").as("src"), col("id_b").as("dst"))
-
-    val labels1 = Graph.connectedComponents(pairs(week1),
-      extraNodes = Some(week1.select(col("doc_id").as("node"))))
-    // week 2: probe only new-vs-all, fold week-1 labels in as star edges
-    val labels2 = Graph.incrementalComponents(labels1, pairs(week2),
-        extraNodes = Some(week2.select(col("doc_id").as("node"))))
-      .as[(Long, Long)].collect().toMap
-
-    // full recompute over both weeks must agree exactly
-    val full = Dedup.nearDupClusters(week1.unionByName(week2), "doc_id", "text",
-        threshold = 0.4)
-      .select(col("doc_id"), col("component")).as[(Long, Long)].collect().toMap
-    assert(labels2 == full, s"incremental $labels2 != full $full")
-    assert(labels2(4L) == 1L && labels2(6L) == 5L && labels2(3L) == 3L)
   }
 
   test("embedding cosine pairs respect blocking") {

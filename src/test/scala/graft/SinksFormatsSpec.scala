@@ -507,18 +507,4 @@ class SinksFormatsSpec extends SparkTestBase {
     assert(back.agg(sum("l_quantity")).collect().head.getDouble(0)
       == src.agg(sum("l_quantity")).collect().head.getDouble(0))
   }
-
-  test("typed Dataset aggregation matches the untyped plan") {
-    val typed = TypedApi.returnFlagTotals(spark, sf("sf0.001"))
-      .collect().map(t => t.flag -> (t.totalQty, t.n)).toMap
-    val untyped = Tables.lineitem(spark, sf("sf0.001"))
-      .groupBy("l_returnflag")
-      .agg(sum("l_quantity").as("q"), count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2))).toMap
-    assert(typed.keySet == untyped.keySet)
-    typed.foreach { case (k, (q, n)) =>
-      assert(n == untyped(k)._2)
-      assert(math.abs(q - untyped(k)._1) < 1e-6)
-    }
-  }
 }

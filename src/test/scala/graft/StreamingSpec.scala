@@ -26,26 +26,19 @@ class StreamingSpec extends SparkTestBase {
   test("streaming weekly counts match the batch transform") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[Ev]
-    val q = Incremental.streamingWeeklyCounts(mem.toDF(), "ts", "event_type")
+    // the one transform, unchanged, over a stream and over the batch
+    val q = Incremental.weeklyCounts(mem.toDF(), "ts", "event_type")
       .writeStream.outputMode("complete").format("memory")
       .queryName("weekly_out").start()
     try {
       mem.addData(rows: _*)
       q.processAllAvailable()
       val got = spark.table("weekly_out")
-        .select(col("window.start").as("ws"), col("event_type"), col("n_events"), col("sum_value"))
         .as[(Timestamp, String, Long, Double)].collect().toSet
-      val batch = rows.toDF()
-        .groupBy(window(col("ts"), "7 days", "7 days", "4 days"), col("event_type"))
-        .agg(count(lit(1)).as("n"), sum("value").as("v"))
-        .select(col("window.start"), col("event_type"), col("n"), col("v"))
+      val batch = Incremental.weeklyCounts(rows.toDF(), "ts", "event_type")
         .as[(Timestamp, String, Long, Double)].collect().toSet
       assert(got == batch)
       assert(got.toSeq.map(_._3).sum == 4)
-      // streaming buckets must share the batch weeklyCounts Monday anchor
-      val wk = Incremental.weeklyCounts(rows.toDF(), "ts", "event_type")
-        .select(col("week_start")).as[Timestamp].collect().toSet
-      assert(got.map(_._1) == wk, "streaming weeks must be Monday-aligned like date_trunc")
     } finally q.stop()
   }
 
@@ -142,49 +135,6 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("transformWithState sessionizer: gap break + timer expiry (RocksDB store)") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.Sessionize.{SessionEvent, statefulSessionsTws}
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val mem = MemoryStream[SessionEvent]
-    val q = statefulSessionsTws(mem.toDS()).writeStream
-      .outputMode("append").format("memory").queryName("tws_sess").start()
-    try {
-      mem.addData(
-        SessionEvent(5, ts("2024-02-01 10:00:00"), 1.0),
-        SessionEvent(5, ts("2024-02-01 10:10:00"), 2.0))
-      q.processAllAvailable()
-      assert(spark.table("tws_sess").count() == 0, "open session not yet emitted")
-      // same key past the gap: closes session 1 by gap break
-      mem.addData(SessionEvent(5, ts("2024-02-01 12:00:00"), 4.0))
-      q.processAllAvailable()
-      val afterBreak = spark.table("tws_sess")
-        .as[graft.streaming.Sessionize.SessionOut].collect()
-      assert(afterBreak.length == 1)
-      assert(afterBreak.head.n_events == 2 && afterBreak.head.sum_value == 3.0)
-      assert(afterBreak.head.session_end == ts("2024-02-01 10:40:00"))
-      // another key far in the future advances the watermark past
-      // 12:30 -> key 5's second session closes via its event-time TIMER
-      mem.addData(SessionEvent(6, ts("2024-02-01 15:00:00"), 9.0))
-      q.processAllAvailable()
-      mem.addData(SessionEvent(6, ts("2024-02-01 15:01:00"), 1.0))
-      q.processAllAvailable()
-      val all = spark.table("tws_sess")
-        .as[graft.streaming.Sessionize.SessionOut].collect()
-      val second = all.filter(s => s.user_id == 5 && s.n_events == 1)
-      assert(second.length == 1, s"timer must close the trailing session; got ${all.toSeq}")
-      assert(second.head.session_end == ts("2024-02-01 12:30:00"))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("transformWithState MapState leaderboard carries counts across batches") {
     implicit val sqlCtx = spark.sqlContext
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
@@ -218,57 +168,6 @@ class StreamingSpec extends SparkTestBase {
         case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
       }
     }
-  }
-
-  test("stream-stream interval join attributes purchases to in-horizon clicks") {
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[(Long, Timestamp)]
-    val purchases = MemoryStream[(Long, Timestamp, Double)]
-    val joined = graft.streaming.Incremental.streamStreamAttribution(
-      clicks.toDF().toDF("click_user", "click_ts"),
-      purchases.toDF().toDF("purchase_user", "purchase_ts", "amount"))
-    val q = joined.writeStream.outputMode("append").format("memory")
-      .queryName("attrib_out").start()
-    try {
-      clicks.addData((1L, ts("2024-03-01 10:00:00")), (2L, ts("2024-03-01 10:05:00")))
-      purchases.addData(
-        (1L, ts("2024-03-01 10:30:00"), 9.99),   // in horizon of user 1's click
-        (2L, ts("2024-03-01 12:00:00"), 5.00))   // click 2h earlier -> outside 1h horizon
-      q.processAllAvailable()
-      val got = spark.table("attrib_out")
-        .select("purchase_user", "click_user", "amount")
-        .as[(Long, Long, Double)].collect().toSet
-      assert(got == Set((1L, 1L, 9.99)))
-    } finally q.stop()
-  }
-
-  test("streaming incremental dedup: pairs accumulate new-vs-store, replay converges") {
-    implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdedup_").toString
-    val store = s"$dir/store"; val pairs = s"$dir/pairs"
-    val mem = MemoryStream[(Long, String)]
-    val q = Incremental.streamingIncrementalDedup(
-        mem.toDF().toDF("doc_id", "text"), "doc_id", "text", store, pairs,
-        threshold = 0.5)
-      .start()
-    try {
-      mem.addData((1L, "the quick brown fox jumps over the lazy dog"),
-                  (2L, "an entirely different document about spark"))
-      q.processAllAvailable()
-      // batch 2 contains a near-dup of doc 1 plus a replay of doc 2
-      mem.addData((3L, "the quick brown fox jumps over the lazy dog"),
-                  (2L, "an entirely different document about spark"))
-      q.processAllAvailable()
-      val got = spark.read.parquet(pairs)
-        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-      assert(got == Set((1L, 3L)), s"got $got")
-      assert(spark.read.parquet(store).count() == 3, "one signature per unique doc")
-      // replaying the whole second batch must not duplicate anything
-      mem.addData((3L, "the quick brown fox jumps over the lazy dog"))
-      q.processAllAvailable()
-      assert(spark.read.parquet(pairs).count() == 1)
-      assert(spark.read.parquet(store).count() == 3)
-    } finally q.stop()
   }
 
   test("streaming partitioned merge: overlapping micro-batches converge to the one-batch table") {
@@ -379,6 +278,19 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("AvailableNow reruns reuse their generated code: no recompiles on the second run") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val run = SparkEntry.queries("incr_running_totals")
+    def compiles(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      run(spark, sf("sf0.001")).collect()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    compiles()
+    val second = compiles()
+    assert(second == 0, s"the second run recompiled $second classes")
+  }
+
   test("trailing window filter bounds (exclusive start, inclusive end)") {
     val df = rows.toDF()
     val got = Incremental.trailingWindow(df, "ts", "2024-01-10 10:00:00", 7)
@@ -410,13 +322,16 @@ class StreamingSpec extends SparkTestBase {
     purch1.coalesce(1).write.mode("append").parquet(purchDir)
     clicks2.coalesce(1).write.mode("append").parquet(clickDir)
     purch2.coalesce(1).write.mode("append").parquet(purchDir)
+    val attributed = expr("""click_user = purchase_user AND click_ts <= purchase_ts AND
+                click_ts >= purchase_ts - INTERVAL 1 HOUR""")
     val committed = new java.util.concurrent.CopyOnWriteArrayList[Long]()
     def run(crashAtBatch: Option[Long]) = {
       val cs = spark.readStream.schema(clicks1.schema)
         .option("maxFilesPerTrigger", 1).parquet(clickDir)
       val ps = spark.readStream.schema(purch1.schema)
         .option("maxFilesPerTrigger", 1).parquet(purchDir)
-      Incremental.streamStreamAttribution(cs, ps)
+      ps.withWatermark("purchase_ts", "2 hours")
+        .join(cs.withWatermark("click_ts", "2 hours"), attributed)
         .select(col("purchase_user"), col("purchase_ts"), col("amount"),
           col("click_user"), col("click_ts"))
         .writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
@@ -443,9 +358,7 @@ class StreamingSpec extends SparkTestBase {
       .select("purchase_user", "click_user", "amount")
       .as[(Long, Long, Double)].collect().toSet
     // batch oracle: the same interval join run as one batch query
-    val oracle = purch1.union(purch2).join(clicks1.union(clicks2),
-        expr("""click_user = purchase_user AND click_ts <= purchase_ts AND
-                click_ts >= purchase_ts - INTERVAL 1 HOUR"""))
+    val oracle = purch1.union(purch2).join(clicks1.union(clicks2), attributed)
       .select("purchase_user", "click_user", "amount")
       .as[(Long, Long, Double)].collect().toSet
     assert(oracle.nonEmpty && got == oracle,
