@@ -81,7 +81,7 @@ object Queries {
     * what makes raw-label blocking quadratic), capped at
     * `maxDriverLabels` so a mis-used high-cardinality blocking column
     * degrades to the r14 distributed count join instead of flooding the
-    * driver (the appendDedup maxPruned pattern). From those counts:
+    * driver. From those counts:
     *
     *  - every label fits one shard (true at sf0.01/sf0.1; sf1+ labels
     *    exceed the cap) → key on the raw label, NO join at all —
@@ -3436,7 +3436,7 @@ object Queries {
         "embedding", k = 5, kCells = 8, nProbe = 3)
     },
     // End-to-end oracle made possible by scaled-integer Lloyd
-    // (Similarity.trainIvf): the codebook is pure BIGINT arithmetic —
+    // (Similarity.ivfTopK's training): the codebook is pure BIGINT arithmetic —
     // micro-unit quantization, integer squared-L2 argmin with ties to
     // the lowest cell, per-dim integer mean via truncating division
     // (Scala Long `/` = SQL integer `//`) — so the oracle REPLAYS
@@ -3452,7 +3452,7 @@ object Queries {
     s"list_sum(list_transform(range(1, ${dim + 1}), " +
       s"i -> ($v.vq[i] - $c.vq[i]) * ($v.vq[i] - $c.vq[i])))"
 
-  /** Shared Lloyd-replay WITH-prefix — Similarity.trainIvf stated in SQL:
+  /** Shared Lloyd-replay WITH-prefix — Similarity's IVF training stated in SQL:
     * micro-unit quantized corpus `ve(vec_id, embedding, vq)`,
     * deterministic lowest-id init `c0`, `iters` unrolled
     * assignment+integer-mean rounds, final cell assignment
@@ -5813,7 +5813,7 @@ object Queries {
                             ELSE 0 END) AS BIGINT) AS sum_bucket
             FROM documents GROUP BY 1"""))
 
-  // streaming ingest dedup via dropDuplicatesWithinWatermark: two
+  // streaming ingest dedup via Incremental.dedupStream: two
   // overlapping micro-batch drops (every event_id % 3 == 2 row arrives
   // twice) flow through watermark-bounded dedup state into a parquet
   // sink; the final table must equal exact DISTINCT over the log. The
@@ -5841,10 +5841,9 @@ object Queries {
       val shards = stateShardsFor(ev.count())
       runAvailableNow(s, ckpt, statePartitions = shards, noDataBatch = false,
           providerClass = Some(RocksDbProvider)) {
-        s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", 1).parquet(inDir)
-          .withWatermark("ts", "90 days")
-          .dropDuplicatesWithinWatermark("event_id")
+        Incremental.dedupStream(s.readStream.schema(ev.schema)
+            .option("maxFilesPerTrigger", 1).parquet(inDir),
+            "ts", "event_id", watermark = "90 days")
           .writeStream.format("parquet").option("path", table)
       }
       s.read.parquet(table)

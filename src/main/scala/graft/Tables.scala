@@ -35,14 +35,9 @@ object Tables {
         spark.read.parquet(s"$dir/$name.parquet"))
     else spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Drop cached relations: all entries for `spark` (e.g. on session
-    * stop), or only those under `dir` when given.
-    */
-  def invalidate(spark: SparkSession, dir: Option[String] = None): Unit =
-    resolved.keys.foreach { case k @ (s, path) =>
-      if (s == spark && dir.forall(d => path.startsWith(d + "/")))
-        resolved.remove(k)
-    }
+  /** Drop every cached relation of `spark` (e.g. on session stop). */
+  def invalidate(spark: SparkSession): Unit =
+    resolved.keys.foreach { case k @ (s, _) => if (s == spark) resolved.remove(k) }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")

@@ -1327,12 +1327,6 @@ object Expressions {
     * selector, attr?) where attr None extracts trimmed text. */
   def html_extract(html: Column, specs: Seq[(String, String, Option[String])]): Column =
     column(HtmlExtract(expression(html), specs))
-  /** Trimmed text of the first selector match, null when absent. */
-  def html_text(html: Column, selector: String): Column =
-    html_extract(html, Seq(("v", selector, None))).getField("v")
-  /** Attribute of the first selector match, null when absent. */
-  def html_attr(html: Column, selector: String, attr: String): Column =
-    html_extract(html, Seq(("v", selector, Some(attr)))).getField("v")
   /** Whole-page visible text (script/style excluded), whitespace-collapsed. */
   def html_to_text(html: Column): Column = column(HtmlToText(expression(html)))
   /** Unicode NFC canonical composition (UAX #15). */

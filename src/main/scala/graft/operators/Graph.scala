@@ -19,22 +19,18 @@ object Graph {
     * read the files (an executor loss replays from the last round's files
     * where a truncated in-memory lineage would fail the job).
     *
-    * When no `workDir` is given the store owns a driver-local temp dir —
-    * addressed with an explicit `file:` scheme so it never resolves
-    * against a configured cluster default FS — and [[cleanupExcept]]
-    * deletes every intermediate round after the final table is written,
-    * so repeated calls don't leak the whole edge set per invocation. On a
-    * cluster, pass `workDir` (HDFS/object store) and manage its lifecycle
-    * with the job.
+    * The store owns a driver-local temp dir — addressed with an explicit
+    * `file:` scheme so it never resolves against a configured cluster
+    * default FS — and [[cleanupExcept]] deletes every intermediate round
+    * after the final table is written, so repeated calls don't leak the
+    * whole edge set per invocation.
     */
-  private final class RoundStore(spark: SparkSession, workDir: Option[String]) {
-    private val owned = workDir.isEmpty
-    // owned temp rounds prefer the RAM-backed scratch root (the
+  private final class RoundStore(spark: SparkSession) {
+    // temp rounds prefer the RAM-backed scratch root (the
     // Queries.scratchDir policy): the first save always lands on files,
     // and on the bench host the JVM tmpdir is the data disk — round
     // tables are transient by construction, so tmpfs is the right tier.
-    // Clusters pass workDir (HDFS/object store) and are unaffected.
-    private val base = workDir.getOrElse {
+    private val base = {
       val shm = java.nio.file.Paths.get("/dev/shm")
       val dir =
         if (java.nio.file.Files.isDirectory(shm) &&
@@ -92,9 +88,7 @@ object Graph {
         val path = s"$base/$name"
         df.write.mode("overwrite").parquet(path)
         written += name
-        // adaptive mode applies only to the OWNED temp dir: an explicit
-        // workDir is a request for durable rounds, honored at any size
-        if (owned && written.size == 1)
+        if (written.size == 1)
           small = tableBytes(path) < RoundStore.smallGraphBytes
         // the schema just written: reading it back infers nothing (no job)
         spark.read.schema(df.schema).parquet(path)
@@ -116,14 +110,13 @@ object Graph {
         .getContentSummary(p).getLength
     }
 
-    /** Drop every owned round except `keep` (the tables the returned
-      * frame may still read): unpersist the other in-memory rounds'
-      * checkpoint blocks, which would otherwise stay in the block manager
-      * until a GC lets the ContextCleaner find them, and delete the other
-      * file tables. No-op when the caller owns the dir (its rounds are
-      * all files, by request).
+    /** Drop every round except `keep` (the tables the returned frame
+      * may still read): unpersist the other in-memory rounds' checkpoint
+      * blocks, which would otherwise stay in the block manager until a
+      * GC lets the ContextCleaner find them, and delete the other file
+      * tables.
       */
-    def cleanupExcept(keep: String*): Unit = if (owned) {
+    def cleanupExcept(keep: String*): Unit = {
       val ks = keep.toSet
       checkpointed.filterNot { case (name, _) => ks(name) }
         .values.flatten.foreach(_.unpersist(blocking = false))
@@ -270,7 +263,6 @@ object Graph {
     * distributed loop, which shares the blowup across executors.
     */
   def ancestorClosure(edges: DataFrame, maxDepth: Int = 20,
-                      workDir: Option[String] = None,
                       driverRows: Int = 100000): DataFrame = {
     val spark = edges.sparkSession
     val cp = edges.select(col("child"), col("parent"))
@@ -292,7 +284,7 @@ object Graph {
     // write-then-read: one computation per frontier, lineage truncated via
     // reliable files (an executor loss replays from the last frontier,
     // where localCheckpoint would fail the job)
-    val store = new RoundStore(spark, workDir)
+    val store = new RoundStore(spark)
     val first = store.save(src.select(col("child"), col("parent").as("ancestor"),
       lit(1).as("depth")), "frontier-1")
     // later rounds join against the SAVED depth-1 table, not the input
@@ -407,10 +399,9 @@ object Graph {
   def pageRankScaled(edges: DataFrame, nodes: DataFrame,
                      iterations: Int = 5,
                      baseScaled: Long = 1000000000L,
-                     workDir: Option[String] = None,
                      checkpointInterval: Int = 10,
                      driverRows: Int = 100000): DataFrame =
-    pageRank(edges, lit(1L), nodes, None, iterations, baseScaled, workDir,
+    pageRank(edges, lit(1L), nodes, None, iterations, baseScaled,
       checkpointInterval, driverRows)
 
   /** Personalized PageRank, integer-scaled like [[pageRankScaled]]:
@@ -434,10 +425,9 @@ object Graph {
   def personalizedPageRankScaled(edges: DataFrame, nodes: DataFrame,
                                  seeds: DataFrame, iterations: Int = 5,
                                  baseScaled: Long = 1000000000L,
-                                 workDir: Option[String] = None,
                                  checkpointInterval: Int = 10,
                                  driverRows: Int = 100000): DataFrame =
-    pageRank(edges, lit(1L), nodes, Some(seeds), iterations, baseScaled, workDir,
+    pageRank(edges, lit(1L), nodes, Some(seeds), iterations, baseScaled,
       checkpointInterval, driverRows)
 
   /** Edge-weighted PageRank: rank flows along each out-edge in
@@ -457,10 +447,9 @@ object Graph {
   def pageRankWeightedScaled(edges: DataFrame, nodes: DataFrame,
                              iterations: Int = 5,
                              baseScaled: Long = 1000000000L,
-                             workDir: Option[String] = None,
                              checkpointInterval: Int = 10,
                              driverRows: Int = 100000): DataFrame =
-    pageRank(edges, col("w"), nodes, None, iterations, baseScaled, workDir,
+    pageRank(edges, col("w"), nodes, None, iterations, baseScaled,
       checkpointInterval, driverRows)
 
   /** The one loop behind the three PageRank entries: each edge carries
@@ -472,8 +461,7 @@ object Graph {
     */
   private def pageRank(edges: DataFrame, w: Column, nodes: DataFrame,
                        seeds: Option[DataFrame], iterations: Int, baseScaled: Long,
-                       workDir: Option[String], checkpointInterval: Int,
-                       driverRows: Int): DataFrame = {
+                       checkpointInterval: Int, driverRows: Int): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
     // an int/short/byte weight widens to long (the driver twin reads
@@ -488,7 +476,7 @@ object Graph {
       Some(driverPageRank(p(0), p(1), p.lift(2), iterations, baseScaled))
     }
     if (driver.isDefined) return driver.get
-    val store = new RoundStore(edges.sparkSession, workDir)
+    val store = new RoundStore(edges.sparkSession)
     // materialize (src, dst, w, Σw) once: every round joins against it
     val e = store.save(
       ew.join(ew.groupBy(col("src")).agg(sum(col("w")).as("sw")), "src")
@@ -589,7 +577,6 @@ object Graph {
   def hitsScaled(edges: DataFrame, nodes: DataFrame,
                  iterations: Int = 3,
                  scale: Long = 1000000L,
-                 workDir: Option[String] = None,
                  checkpointInterval: Int = 10,
                  driverRows: Int = 100000): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
@@ -603,7 +590,7 @@ object Graph {
       Some(driverHits(p(0), p(1), iterations, scale))
     }
     if (driver.isDefined) return driver.get
-    val store = new RoundStore(edges.sparkSession, workDir)
+    val store = new RoundStore(edges.sparkSession)
     // node-restricted edge table, materialized once; every half-round
     // is one equi-join + one map-side-combinable sum against it
     val e = store.save(
@@ -707,12 +694,10 @@ object Graph {
     * one interval's rounds from the last files — the standard
     * checkpoint-interval tradeoff of iterative graph processing.
     *
-    * Fault tolerance: each materialization is a parquet table under
-    * `workDir` (reliable storage, single computation) rather than
-    * `localCheckpoint` — an executor loss at 100 TB replays from the
-    * last round's files instead of failing the job on truncated lineage.
-    * Pass `workDir` on a cluster (HDFS/object store); the tmp-dir default
-    * is for local runs.
+    * Fault tolerance: on a big graph each materialization is a
+    * [[RoundStore]] parquet table (single computation) rather than
+    * `localCheckpoint` — an executor loss replays from the last round's
+    * files instead of failing the job on truncated lineage.
     *
     * `edges` needs (src, dst) columns; output (node, component) where
     * component = min node id in the cluster. Isolated nodes only appear
@@ -720,13 +705,12 @@ object Graph {
     */
   def connectedComponents(edges: DataFrame,
                           extraNodes: Option[DataFrame] = None,
-                          workDir: Option[String] = None,
                           checkpointInterval: Int = 2,
                           driverRows: Int = 100000): DataFrame = {
     val spark = edges.sparkSession
     // write-then-read materialization: one job computes and lands the
     // round on reliable storage; downstream rounds read the files
-    val store = new RoundStore(spark, workDir)
+    val store = new RoundStore(spark)
     def save(df: DataFrame, name: String): DataFrame = store.save(df, name)
     // materialize the edge list FIRST: the symmetric union references
     // `edges` twice, so building sym straight from the input would run
@@ -954,11 +938,7 @@ object Graph {
     // round's frontier join references it, so without truncation the
     // caller's edge subtree replays per hop — maxHops redundant
     // derivations plus a plan that grows with depth
-    val adj = edges
-      .select(col(srcCol).as("a"), col(dstCol).as("b"))
-      .union(edges.select(col(dstCol).as("a"), col(srcCol).as("b")))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val adj = bothWays(undirected(edges, srcCol, dstCol))
       .checkpointAt("Graph.bfsHops.adj")
     val seedSet = seeds.select(col(seedCol).as("vertex")).distinct()
     // Adaptive small-graph path ([[onDriver]]): probes on the
@@ -974,13 +954,13 @@ object Graph {
         Some(driverBfsHops(p(0), p(1), maxHops))
       }
     if (driver.isDefined) return driver.get
-    var frontier = seedSet.localCheckpoint(true)
+    var frontier = seedSet.checkpointAt("Graph.bfsHops.round")
     val layers = scala.collection.mutable.ArrayBuffer(
       frontier.withColumn("hop", lit(0L)))
     for (h <- 1 to maxHops) {
       frontier = frontier.join(adj, col("vertex") === col("a"))
         .select(col("b").as("vertex")).distinct()
-        .localCheckpoint(true)
+        .checkpointAt("Graph.bfsHops.round")
       layers += frontier.withColumn("hop", lit(h.toLong))
     }
     layers.reduce(_.union(_))
@@ -1061,13 +1041,13 @@ object Graph {
     if (driver.isDefined) return driver.get
     var labels = seedSet
       .withColumn("cost", lit(0L))
-      .localCheckpoint(true)
+      .checkpointAt("Graph.ssspBounded.round")
     for (_ <- 1 to maxHops) {
       val relaxed = labels.join(adj, col("vertex") === col("a"))
         .select(col("b").as("vertex"), (col("cost") + col("w")).as("cost"))
       labels = labels.union(relaxed)
         .groupBy(col("vertex")).agg(min(col("cost")).as("cost"))
-        .localCheckpoint(true)
+        .checkpointAt("Graph.ssspBounded.round")
     }
     labels
   }
@@ -1219,7 +1199,7 @@ object Graph {
     if (driver.isDefined) return driver.get
     var labels = adj.select(col("a").as("vertex")).distinct()
       .withColumn("label", col("vertex"))
-      .localCheckpoint(true)
+      .checkpointAt("Graph.labelPropagation.round")
     for (_ <- 1 to rounds) {
       labels = labels
         .join(adj, col("vertex") === col("a"))
@@ -1228,7 +1208,7 @@ object Graph {
         .groupBy(col("vx").as("vertex"))
         .agg(min_by(col("label"), struct((-col("n")).as("neg_n"),
           col("label").as("l"))).as("label"))
-        .localCheckpoint(true)
+        .checkpointAt("Graph.labelPropagation.round")
     }
     labels
   }
@@ -1308,7 +1288,7 @@ object Graph {
         .join(keep.select(col("x").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("x").as("v")), Seq("v"), "left_semi")
         .select(col("u"), col("v"))
-        .localCheckpoint(true)
+        .checkpointAt("Graph.kCore.round")
     }
     live.select(col("u").as("x"))
       .union(live.select(col("v").as("x")))

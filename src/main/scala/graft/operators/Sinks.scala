@@ -11,11 +11,11 @@ import org.apache.spark.sql.types.StructType
   */
 object Sinks {
 
-  /** Most distinct partition values a batch may pin before appendDedup
-    * falls back to the unpruned anti-join (a batch legitimately touching
-    * more partitions than this is effectively a full-table probe anyway).
+  /** Most distinct partition values one [[mergeUpsertPartitioned]]
+    * batch may touch (a batch touching more is effectively a full-table
+    * merge).
     */
-  val maxPrunedPartitions: Int = 1000
+  private val maxPrunedPartitions: Int = 1000
 
   private def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -98,48 +98,19 @@ object Sinks {
 
   /** K1/K2/K3: append rows whose key is not already present (duplicate-key
     * tolerant insert). Batch-internal dups collapse first; the anti-join
-    * against the current table enforces cross-run idempotency.
-    *
-    * At 100 TB the anti-join must not scan the whole store per batch:
-    * pass `partitionCol` (a column of `df`, used as the store's
-    * partitionBy key) and the store read is pruned to only the partition
-    * values present in the incoming batch — a weekly batch then probes
-    * ~one partition, not the full history. The pruning narrows the
-    * uniqueness guarantee to per-partition-value: a key must always
-    * carry the same partition value (derive it from the key, or include
-    * it in `keys`), or replays landing in a different partition would
-    * re-insert it. Without a transactional table format this is the
-    * standard idempotent-append shape; Delta/Iceberg MERGE is the
-    * production upgrade path.
+    * against the current table enforces cross-run idempotency. Without a
+    * transactional table format this is the standard idempotent-append
+    * shape; Delta/Iceberg MERGE is the production upgrade path.
     */
-  def appendDedup(df: DataFrame, path: String, keys: Seq[String],
-                  partitionCol: Option[String] = None,
-                  maxPruned: Int = maxPrunedPartitions): Unit = {
+  def appendDedup(df: DataFrame, path: String, keys: Seq[String]): Unit = {
     val spark = df.sparkSession
     val batch = df.dropDuplicates(keys)
     val fresh =
-      if (exists(spark, path)) {
-        val current = spark.read.parquet(path)
-        val pruned = partitionCol match {
-          case Some(pc) =>
-            // driver-held partition-value list (small by construction: a
-            // batch touches few partitions); becomes a PartitionFilter on
-            // the store scan so untouched partitions are never read.
-            // Capped: a mis-chosen high-cardinality partitionCol (e.g. the
-            // key itself) must degrade to the unpruned anti-join, not
-            // collect unbounded values to the driver and build a huge
-            // isInCollection predicate.
-            val cap = maxPruned
-            val vals = batch.select(col(pc)).distinct().limit(cap + 1)
-              .collect().map(_.get(0))
-            if (vals.length > cap) current
-            else current.filter(col(pc).isInCollection(vals.toSeq))
-          case None => current
-        }
-        batch.join(pruned.select(keys.map(col): _*), keys, "left_anti")
-      } else batch
+      if (exists(spark, path))
+        batch.join(spark.read.parquet(path).select(keys.map(col): _*), keys, "left_anti")
+      else batch
     // Stage the anti-joined batch to durable files FIRST, then move the
-    // staged part-files into the table: the scan of `current` completes
+    // staged part-files into the table: the scan of the table completes
     // before the target is touched (no read/write race), nothing pins in
     // executor memory (an executor loss mid-staging is an ordinary task
     // retry, where a lost localCheckpoint block failed the batch), and
@@ -152,22 +123,16 @@ object Sinks {
     // capture hook before materializing (see graft.plans.Materialize)
     graft.plans.Materialize.record(fresh, s"Sinks.appendDedup($path)")
     val stagePath = path + "__stage-" + java.util.UUID.randomUUID().toString
-    partitionCol match {
-      case Some(pc) =>
-        fresh.write.mode(SaveMode.Overwrite).partitionBy(pc).parquet(stagePath)
-      case None => fresh.write.mode(SaveMode.Overwrite).parquet(stagePath)
-    }
+    fresh.write.mode(SaveMode.Overwrite).parquet(stagePath)
     val src = new Path(stagePath)
     val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dst = new Path(path)
     fs.mkdirs(dst)
-    def move(dir: Path, rel: String): Unit =
-      fs.listStatus(dir).foreach { st =>
+    def move(): Unit =
+      fs.listStatus(src).foreach { st =>
         val name = st.getPath.getName
-        if (st.isDirectory) move(st.getPath, if (rel.isEmpty) name else s"$rel/$name")
-        else if (name.startsWith("part-")) {
-          val target = new Path(dst, if (rel.isEmpty) name else s"$rel/$name")
-          fs.mkdirs(target.getParent)
+        if (name.startsWith("part-")) {
+          val target = new Path(dst, name)
           if (!fs.rename(st.getPath, target))
             throw new java.io.IOException(
               s"appendDedup: staging rename ${st.getPath} -> $target failed")
@@ -180,7 +145,7 @@ object Sinks {
     // again, skips the rows that landed, and re-stages only the missing
     // ones (the same convergence the dedup-append contract guarantees
     // across overlapping runs).
-    try move(src, "")
+    try move()
     finally fs.delete(src, true)
   }
 
@@ -553,7 +518,7 @@ object Sinks {
     * so a NULL payload field is a value, not a wildcard.
     *
     * One full-outer shuffle on the key; with both snapshots bucketed by
-    * the key (see [[writeBucketed]]) the exchange disappears and the
+    * the key (see [[writeBucketedAt]]) the exchange disappears and the
     * diff is a zipped per-bucket merge.
     */
   def diffSnapshots(prev: DataFrame, cur: DataFrame, keys: Seq[String]): DataFrame = {
@@ -572,19 +537,12 @@ object Sinks {
       .select((keys.map(col) :+ col("change")): _*)
   }
 
-  /** Bucketed table write: co-locates join keys so equi-joins between
-    * tables bucketed the same way need NO shuffle — the batch analog of
-    * pre-partitioning a 100 TB fact table once to serve many joins.
-    */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, key).sortBy(key)
-      .format("parquet").saveAsTable(table)
-
-  /** [[writeBucketed]] at an explicit location (external table): the same
-    * co-location contract, but the parquet lands under `path` instead of
-    * the session warehouse — the form a pipeline uses to park bucketed
-    * intermediates on scratch/object storage. Any prior registration of
+  /** Bucketed table write at an explicit location (external table):
+    * co-locates join keys so equi-joins between tables bucketed the same
+    * way need NO shuffle — the batch analog of pre-partitioning a 100 TB
+    * fact table once to serve many joins. The parquet lands under `path`,
+    * not the session warehouse, the form a pipeline uses to park
+    * bucketed intermediates on scratch/object storage. Any prior registration of
     * `table` is dropped first (the files of a previous EXTERNAL
     * registration are the caller's to manage), so re-runs re-register
     * cleanly against their own fresh path.
@@ -712,7 +670,6 @@ object Sinks {
     */
   def mergeUpsertPartitioned(df0: DataFrame, path: String, keys: Seq[String],
                              partCol: String,
-                             maxPruned: Int = maxPrunedPartitions,
                              strict: Boolean = false): Unit = {
     require(keys.nonEmpty)
     val df = graft.plans.Materialize.record(df0,
@@ -723,13 +680,13 @@ object Sinks {
       batch.write.partitionBy(partCol).parquet(path)
       return
     }
-    val parts = batch.select(partCol).distinct().limit(maxPruned + 1).collect()
+    val parts = batch.select(partCol).distinct().limit(maxPrunedPartitions + 1).collect()
       .map(_.get(0))
     require(!parts.contains(null),
       s"mergeUpsertPartitioned: batch has rows with null $partCol — null " +
         "partition values cannot be pruned safely; filter or default them first")
-    require(parts.length <= maxPruned,
-      s"mergeUpsertPartitioned: batch touches > $maxPruned partitions — " +
+    require(parts.length <= maxPrunedPartitions,
+      s"mergeUpsertPartitioned: batch touches > $maxPrunedPartitions partitions — " +
         "effectively a full-table merge; use mergeUpsert or raise the cap")
     val cur = spark.read.parquet(path)
       .filter(col(partCol).isin(parts: _*)) // planning-time partition pruning

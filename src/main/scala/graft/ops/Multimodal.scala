@@ -6,8 +6,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * with typed metadata. Every kind is a REAL zero-dependency codec:
   * audio = RIFF/WAVE PCM16 ([[WavCodec]]), image = PPM P6
   * ([[PpmCodec]]), video = a length-prefixed container of PPM frames
-  * ([[VideoContainer]]); features and transforms (resize, frame
-  * sampling) operate on decoded samples/pixels. Compressed interchange
+  * ([[VideoContainer]]); every feature operates on decoded
+  * samples/pixels. Compressed interchange
   * formats (JPEG/H.264/MP3) would need external codec libraries this
   * container deliberately avoids — swapping a codec changes only the
   * decode call, never the Spark plumbing.
@@ -109,9 +109,6 @@ object Multimodal {
 
   case class MediaRow(media_id: Long, kind: String, payload: Array[Byte],
                       width: Int, height: Int, sample_rate: Int)
-
-  case class MediaFeatures(media_id: Long, kind: String, n_bytes: Long,
-                           checksum: Long, feature: Array[Float])
 
   /** Minimal binary PPM (P6, maxval 255) codec — the simplest real image
     * container; zero dependencies, readable by any image tool.
@@ -235,100 +232,14 @@ object Multimodal {
     }
   }
 
-  /** Decode / feature-extract — every known kind is a real decode:
-    *  - audio: WAV PCM16 -> acoustic features (RMS, zero-crossing rate,
-    *    peak, mean, energy split, duration) from decoded samples;
-    *  - image: PPM -> per-channel means, luma mean/variance, dimensions
-    *    from decoded pixels;
-    *  - video: GVID frame container -> frame count, dimensions, temporal
-    *    luma mean/variance, first/last frame luma from decoded frames.
-    * (Compressed interchange formats — JPEG/H.264/MP3 — need external
-    * codec libraries this container lacks; unknown kinds fall back to a
-    * byte-profile feature so the operator total-functions over any input.)
-    */
-  /** Fallback feature for kinds without a codec and structurally-empty
-    * media (e.g. a valid zero-frame video container): a stride-sampled
-    * byte profile, total over any payload including the empty one.
-    */
-  private def byteProfile(payload: Array[Byte]): Array[Float] = {
-    val n = payload.length.max(1)
-    Array.tabulate(8)(i =>
-      payload.iterator.drop(i).grouped(8).map(_.head.toFloat).sum / n)
-  }
-
-  def extractFeatures(media: Dataset[MediaRow], partitions: Int = 0): Dataset[MediaFeatures] = {
-    import media.sparkSession.implicits._
-    val sized = if (partitions > 0) media.repartition(partitions) else media
-    sized.mapPartitions { rows =>
-      rows.map { r =>
-        val checksum = r.payload.foldLeft(0L)((acc, b) => acc * 31 + b)
-        val feature = r.kind match {
-          case "audio" =>
-            val (sr, s) = WavCodec.decodePcm16(r.payload)
-            val n = s.length.max(1)
-            val rms = math.sqrt(s.foldLeft(0d)((a, x) => a + x.toDouble * x) / n)
-            val zc = (1 until s.length).count(i => (s(i) >= 0) != (s(i - 1) >= 0))
-            val peak = s.foldLeft(0)((a, x) => a.max(math.abs(x.toInt)))
-            val mean = s.foldLeft(0d)(_ + _) / n
-            val half = n / 2
-            val e1 = s.take(half).foldLeft(0d)((a, x) => a + x.toDouble * x)
-            val e2 = s.drop(half).foldLeft(0d)((a, x) => a + x.toDouble * x)
-            Array(rms.toFloat, zc.toFloat / n, peak.toFloat, mean.toFloat,
-              e1.toFloat, e2.toFloat, n.toFloat, n.toFloat / sr)
-          case "image" =>
-            val (w, h, rgb) = PpmCodec.decode(r.payload)
-            val n = (w * h).max(1)
-            var rSum = 0L; var gSum = 0L; var bSum = 0L
-            var lSum = 0d; var l2Sum = 0d
-            var p = 0
-            while (p < rgb.length) {
-              val rv = rgb(p) & 0xff; val gv = rgb(p + 1) & 0xff; val bv = rgb(p + 2) & 0xff
-              rSum += rv; gSum += gv; bSum += bv
-              val luma = 0.299 * rv + 0.587 * gv + 0.114 * bv
-              lSum += luma; l2Sum += luma * luma
-              p += 3
-            }
-            val lMean = lSum / n
-            Array(w.toFloat, h.toFloat, (rSum.toDouble / n).toFloat,
-              (gSum.toDouble / n).toFloat, (bSum.toDouble / n).toFloat,
-              lMean.toFloat, (l2Sum / n - lMean * lMean).toFloat, n.toFloat)
-          case "video" =>
-            val frames = VideoContainer.decode(r.payload).map(PpmCodec.decode)
-            if (frames.isEmpty) byteProfile(r.payload) // valid zero-frame clip
-            else {
-              val nf = frames.length
-              val lumas = frames.map { case (w, h, rgb) =>
-                var l = 0d
-                var p = 0
-                while (p < rgb.length) {
-                  l += 0.299 * (rgb(p) & 0xff) + 0.587 * (rgb(p + 1) & 0xff) +
-                    0.114 * (rgb(p + 2) & 0xff)
-                  p += 3
-                }
-                l / (w * h).max(1)
-              }
-              val mean = lumas.sum / nf
-              val varr = lumas.map(l => (l - mean) * (l - mean)).sum / nf
-              val (w0, h0, _) = frames.head
-              Array(nf.toFloat, w0.toFloat, h0.toFloat, mean.toFloat, varr.toFloat,
-                lumas.head.toFloat, lumas.last.toFloat, (w0 * h0).toFloat)
-            }
-          case _ => byteProfile(r.payload)
-        }
-        MediaFeatures(r.media_id, r.kind, r.payload.length.toLong, checksum, feature)
-      }
-    }
-  }
-
   /** Integer decode profile per media row — every value read out of the
     * DECODED payload (PPM header + pixels, WAV fmt/data chunks, GVID
     * frames), never from row metadata. All-integer so the numbers are
     * engine-exact: an oracle that knows the generator's closed-form
     * integer math (gradient channel values, header lengths, sample
     * counts) can rebuild each one independently, which makes this the
-    * end-to-end encode→decode correctness gate; the float feature path
-    * ([[extractFeatures]]) remains the codec-only rows-only residue.
-    * Kind-inapplicable columns are NULL.
+    * end-to-end encode→decode correctness gate. Kind-inapplicable
+    * columns are NULL.
     */
   case class MediaDecodeStats(media_id: Long, kind: String, n_bytes: Long,
                               img_w: Option[Long], img_h: Option[Long],
@@ -378,15 +289,14 @@ object Multimodal {
     }
   }
 
-  /** Scaled-integer feature profile — the oracled twin of the float
-    * [[extractFeatures]] path. Every value is computed FROM THE DECODED
+  /** Scaled-integer feature profile. Every value is computed FROM THE DECODED
     * payload in 64-bit integer space (micro-units via truncating
     * division, milli-weight luma 299r+587g+114b, exact integer variance
     * numerator n·Σl² − (Σl)²), so an oracle that knows the generator's
     * closed form rebuilds each number independently and the row
     * hash-matches. Columns stay clear of the seeded-random payload
     * components (image B channel, audio noise samples) — those remain
-    * covered by the float path and the codec round-trip specs.
+    * covered by the codec round-trip specs.
     * Kind-inapplicable columns are NULL.
     */
   case class MediaFeatureStats(media_id: Long, kind: String, n_bytes: Long,
@@ -459,79 +369,11 @@ object Multimodal {
     }
   }
 
-  /** Image resize (nearest-neighbor) over the REAL PPM payloads: decode,
-    * sample, re-encode — a genuine 1:1 media transform with the batch
-    * shape of a production resize stage (narrow mapPartitions, payloads
-    * in, payloads out; non-image kinds pass through untouched). At scale
-    * this is the op you size partitions around: output rows are
-    * w*h*3-byte bound, so repartition by target byte budget first.
-    */
-  /** Nearest-neighbor RGB resample — the shared kernel under image and
-    * per-frame video resize.
-    */
-  private def resizeRgb(w: Int, h: Int, rgb: Array[Byte],
-                        outW: Int, outH: Int): Array[Byte] = {
-    val out = new Array[Byte](outW * outH * 3)
-    var p = 0
-    var y = 0
-    while (y < outH) {
-      val sy = y * h / outH
-      var x = 0
-      while (x < outW) {
-        val sx = x * w / outW
-        val sp = (sy * w + sx) * 3
-        out(p) = rgb(sp); out(p + 1) = rgb(sp + 1); out(p + 2) = rgb(sp + 2)
-        p += 3
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
-  def resizeImages(media: Dataset[MediaRow], outW: Int, outH: Int): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map {
-        case r if r.kind == "image" =>
-          val (w, h, rgb) = PpmCodec.decode(r.payload)
-          r.copy(payload = PpmCodec.encode(outW, outH, resizeRgb(w, h, rgb, outW, outH)),
-            width = outW, height = outH)
-        case other => other
-      }
-    }
-  }
-
-  case class FrameFeatures(media_id: Long, frame_idx: Int, offset_bytes: Long,
-                           frame_checksum: Long)
-
-  /** Frame sampling — the 1 -> N media expansion: decode the GVID
-    * container and emit one row per `stride`-th REAL frame, carrying the
-    * frame's byte offset within the container and a checksum of its PPM
-    * bytes. The flatMap batch shape and row multiplication are exactly
-    * the production keyframe-sampling stage.
-    */
-  def sampleFrames(media: Dataset[MediaRow], stride: Int = 2): Dataset[FrameFeatures] = {
-    import media.sparkSession.implicits._
-    media.filter(_.kind == "video").flatMap { r =>
-      val frames = VideoContainer.decode(r.payload)
-      var off = 8L // magic + count
-      frames.zipWithIndex.flatMap { case (f, i) =>
-        val frameOff = off + 4 // past the length prefix
-        off += 4 + f.length
-        if (i % stride == 0)
-          Some(FrameFeatures(r.media_id, i, frameOff,
-            f.foldLeft(0L)((acc, b) => acc * 31 + b)))
-        else None
-      }
-    }
-  }
-
   case class FrameDecodeStats(media_id: Long, frame_idx: Long,
                               frame_w: Long, frame_h: Long,
                               px_r_sum: Long, px_g_sum: Long, px_b_sum: Long)
 
-  /** Per-frame decode statistics — [[sampleFrames]]'s 1→N expansion
+  /** Per-frame decode statistics — the 1→N keyframe-sampling expansion
     * driven all the way to pixels: every `stride`-th frame decodes to
     * REAL RGB and emits exact integer channel sums, the per-keyframe
     * signal a video pipeline keys shot detection and frame-level dedup

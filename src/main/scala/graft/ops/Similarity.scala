@@ -28,8 +28,6 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Exact top-k cosine neighbors for each probe. Probes (small) are
     * broadcast against the corpus; ranking uses the *rounded* score plus
     * id as tie-break so results are stable across engines and FP orders.
@@ -212,32 +210,19 @@ object Similarity {
   private def nearestCellQ(vq: Column, centroids: Array[Array[Long]]): Column =
     graft.functions.Expressions.nearest_cell_q(vq, centroids)
 
-  /** Train a tiny IVF codebook in scaled-integer space: deterministic
-    * init (lowest-id vectors, micro-unit quantized), `iters` Lloyd
-    * rounds where assignment is integer squared-L2 argmin and the update
-    * is per-dimension integer mean (BIGINT sum, truncating division —
-    * both order-independent), so the resulting codebook is bit-identical
-    * on any engine and partitioning — the `pagerank_scaled` treatment
-    * applied to k-means. Empty cells keep their previous centroid. The
-    * codebook is driver-held model state (kCells x dim longs — bytes,
-    * not data), the standard IVF shape: training touches the corpus
-    * `iters` times, each round one narrow assignment pass + one
-    * (cell, dim)-keyed integer mean.
-    */
-  def trainIvf(corpus: DataFrame, idCol: String, vecCol: String,
-               kCells: Int, iters: Int = 2): Array[Array[Long]] = {
-    // materialize the quantized projection once — each Lloyd round is a
-    // driver round-trip, and without this every round re-reads and
-    // re-quantizes the source (NOTE: localCheckpoint truncates lineage,
-    // so a lost block fails the job and the caller must retry)
-    val vq = corpus.select(col(idCol).as("__id"), quantized(col(vecCol)).as("vq"))
-      .checkpointAt("Similarity.ivfTrain.vq")
-    trainIvfQuantized(vq, kCells, iters)
-  }
-
-  /** Lloyd loop over an already-quantized (`__id`, `vq`) table — shared
-    * by [[trainIvf]] and [[ivfTopK]] so the caller can reuse one
-    * materialized quantized corpus for training AND final assignment.
+  /** Train a tiny IVF codebook in scaled-integer space over an
+    * already-quantized (`__id`, `vq`) table: deterministic init
+    * (lowest-id vectors), `iters` Lloyd rounds where assignment is
+    * integer squared-L2 argmin and the update is per-dimension integer
+    * mean (BIGINT sum, truncating division — both order-independent),
+    * so the resulting codebook is bit-identical on any engine and
+    * partitioning — the `pagerank_scaled` treatment applied to k-means.
+    * Empty cells keep their previous centroid. The codebook is
+    * driver-held model state (kCells x dim longs — bytes, not data),
+    * the standard IVF shape: training touches the corpus `iters` times,
+    * each round one narrow assignment pass + one (cell, dim)-keyed
+    * integer mean. Callers pass the one materialized quantized corpus
+    * they also use for the final assignment.
     */
   private def trainIvfQuantized(vq: DataFrame, kCells: Int,
                                 iters: Int): Array[Array[Long]] = {
@@ -266,13 +251,12 @@ object Similarity {
     * visits only its `nProbe` closest cells and re-ranks exactly inside
     * them. Recall grows with nProbe; brute force is the recall oracle.
     * Cell geometry runs entirely in the quantized-integer space of
-    * [[trainIvf]] (ties on distance break to the lowest cell), so the
+    * [[trainIvfQuantized]] (ties on distance break to the lowest cell), so the
     * candidate sets — and with the rounded-score re-rank, the full
     * result — are engine-exact and DuckDB-oracle-checkable.
     */
   def ivfTopK(corpus: DataFrame, probes: DataFrame, idCol: String, vecCol: String,
-              k: Int, kCells: Int = 16, nProbe: Int = 3,
-              codebook: Option[Array[Array[Long]]] = None): DataFrame = {
+              k: Int, kCells: Int = 16, nProbe: Int = 3): DataFrame = {
     // one materialized pass carries everything training and assignment
     // need (vectors, norms, quantized coords): the Lloyd rounds and the
     // final cell assignment all read this in-memory table instead of
@@ -281,7 +265,7 @@ object Similarity {
     val prepared = corpus.select(col(idCol).as("__id"), col(vecCol).as("cand_vec"),
         norm(col(vecCol)).as("cand_norm"), quantized(col(vecCol)).as("vq"))
       .checkpointAt("Similarity.ivfServe.prepared")
-    val centroids = codebook.getOrElse(trainIvfQuantized(prepared, kCells, iters = 2))
+    val centroids = trainIvfQuantized(prepared, kCells, iters = 2)
     val c = prepared.select(col("__id").as("cand_id"), col("cand_vec"),
       col("cand_norm"), nearestCellQ(col("vq"), centroids).as("cell"))
     // probe side: nProbe nearest cells by (integer dist, cell) through
@@ -312,7 +296,7 @@ object Similarity {
     * (kCells grows with n, cell population stays ~n/kCells).
     *
     * Engine-exact end to end: clustering is the scaled-integer Lloyd
-    * of [[trainIvf]] (BIGINT arithmetic, deterministic init, ties to
+    * of [[trainIvfQuantized]] (BIGINT arithmetic, deterministic init, ties to
     * the lowest cell), so cell membership is bit-identical on any
     * engine; the prune rule is declarative — a vector is dropped when
     * its rounded cosine to ANY lower-id member of its cell reaches
@@ -353,12 +337,15 @@ object Similarity {
       .select(col("vec_id"), col("cell"), col("__dup").isNull.as("kept"))
   }
 
+  private def subVec(s: Int, subDim: Int): Column =
+    slice(col("vq"), s * subDim + 1, subDim)
+
   /** Product quantization (Jégou et al. 2011, TPAMI): split the vector
     * into `m` contiguous subspaces and train an independent `kSub`-cell
     * codebook per subspace — a vector compresses to m small codes
     * (m bytes at kSub<=256), the memory-bound ANN representation at
     * 100 TB (64 float dims -> 8 bytes, 32x). Training is the same
-    * scaled-integer Lloyd as [[trainIvf]] per subspace, FUSED: each
+    * scaled-integer Lloyd as [[trainIvfQuantized]] per subspace, FUSED: each
     * round runs ONE job for all m subspaces (per-subspace assignment
     * columns, union'd (sub, cell, pos) integer-mean agg) instead of m
     * sequential trainings — m times fewer driver round trips, identical
@@ -368,16 +355,6 @@ object Similarity {
     *
     * Returns codebooks(sub)(cell)(dimWithinSub).
     */
-  def trainPq(corpus: DataFrame, idCol: String, vecCol: String,
-              m: Int, subDim: Int, kSub: Int, iters: Int = 2): Array[Array[Array[Long]]] = {
-    val prepared = corpus.select(col(idCol).as("__id"), quantized(col(vecCol)).as("vq"))
-      .checkpointAt("Similarity.pqTrain.prepared")
-    trainPqQuantized(prepared, m, subDim, kSub, iters)
-  }
-
-  private def subVec(s: Int, subDim: Int): Column =
-    slice(col("vq"), s * subDim + 1, subDim)
-
   private def trainPqQuantized(prepared: DataFrame, m: Int, subDim: Int,
                                kSub: Int, iters: Int): Array[Array[Array[Long]]] = {
     // one init job seeds every subspace: the kSub lowest-id full vectors,
@@ -410,19 +387,17 @@ object Similarity {
     * total integer reconstruction error (squared L2 in micro-units
     * between the quantized vector and its per-subspace centroids) — the
     * audit table a PQ index build emits. Codes and error are pure BIGINT
-    * arithmetic on the deterministic [[trainPq]] codebooks, so the whole
+    * arithmetic on the deterministic [[trainPqQuantized]] codebooks, so the whole
     * table is engine-exact. One narrow pass over the corpus after
     * training; nothing shuffles.
     */
   def pqCodes(corpus: DataFrame, idCol: String, vecCol: String,
               m: Int = 8, subDim: Int = 8, kSub: Int = 16,
-              iters: Int = 2,
-              codebook: Option[Array[Array[Array[Long]]]] = None): DataFrame = {
+              iters: Int = 2): DataFrame = {
     val prepared = corpus.select(col(idCol).as("vec_id"), quantized(col(vecCol)).as("vq"))
       .checkpointAt("Similarity.pqIndex.prepared")
-    val codebooks = codebook.getOrElse(trainPqQuantized(
-      prepared.withColumnRenamed("vec_id", "__id")
-        .select(col("__id"), col("vq")), m, subDim, kSub, iters))
+    val codebooks = trainPqQuantized(prepared.withColumnRenamed("vec_id", "__id")
+      .select(col("__id"), col("vq")), m, subDim, kSub, iters)
     val codeCols = (0 until m).map(s =>
       nearestCellQ(subVec(s, subDim), codebooks(s)).as(s"code_$s"))
     val withCodes = prepared.select(col("vec_id") +: col("vq") +: codeCols: _*)
@@ -458,12 +433,11 @@ object Similarity {
     */
   def pqAdcTopK(corpus: DataFrame, probes: DataFrame, idCol: String,
                 vecCol: String, k: Int, m: Int = 8, subDim: Int = 8,
-                kSub: Int = 16, iters: Int = 2,
-                codebook: Option[Array[Array[Array[Long]]]] = None): DataFrame = {
+                kSub: Int = 16, iters: Int = 2): DataFrame = {
     val prepared = corpus.select(col(idCol).as("cand_id"), quantized(col(vecCol)).as("vq"))
       .checkpointAt("Similarity.pqServe.prepared")
-    val codebooks = codebook.getOrElse(trainPqQuantized(
-      prepared.select(col("cand_id").as("__id"), col("vq")), m, subDim, kSub, iters))
+    val codebooks = trainPqQuantized(
+      prepared.select(col("cand_id").as("__id"), col("vq")), m, subDim, kSub, iters)
     val codeCols = (0 until m).map(s =>
       nearestCellQ(subVec(s, subDim), codebooks(s)).as(s"__code_$s"))
     val coded = prepared.select(col("cand_id") +: codeCols: _*)
@@ -775,10 +749,8 @@ object Similarity {
     */
   def marginMineAnn(src: DataFrame, tgt: DataFrame, idCol: String,
                     vecCol: String, k: Int, kCells: Int = 0,
-                    nProbe: Int = 3, iters: Int = 2,
-                    codebook: Option[Array[Array[Long]]] = None): DataFrame =
-    marginMineFrom(
-      annCandidates(src, tgt, idCol, vecCol, kCells, nProbe, iters, codebook), k)
+                    nProbe: Int = 3, iters: Int = 2): DataFrame =
+    marginMineFrom(annCandidates(src, tgt, idCol, vecCol, kCells, nProbe, iters), k)
 
   /** The candidate stage of [[marginMineAnn]], exposed so plan-shape
     * tests can assert the cell join's exchange structure (the mining
@@ -787,8 +759,7 @@ object Similarity {
     */
   private[graft] def annCandidates(src: DataFrame, tgt: DataFrame,
                     idCol: String, vecCol: String, kCells: Int,
-                    nProbe: Int, iters: Int,
-                    codebook: Option[Array[Array[Long]]]): DataFrame = {
+                    nProbe: Int, iters: Int): DataFrame = {
     val sq = src.select(col(idCol).as("src_id"),
       quantized(col(vecCol)).as("__sv")).checkpointAt("Similarity.marginMineAnn.src")
     val tq = tgt.select(col(idCol).as("tgt_id"),
@@ -801,14 +772,13 @@ object Similarity {
       if (kCells > 0) kCells
       else math.min(4096L, math.max(4L,
         math.sqrt((sq.count() + tq.count()).toDouble).toLong / 2)).toInt
-    val centroids = codebook.getOrElse {
-      // train over src ∪ tgt so an oracle can replay the Lloyd loop
-      // from the union corpus; ids should be disjoint across sides
-      // (a shared id appears twice in the per-cell integer means)
-      val union = sq.select(col("src_id").as("__id"), col("__sv").as("vq"))
-        .unionByName(tq.select(col("tgt_id").as("__id"), col("__tv").as("vq")))
+    // train over src ∪ tgt so an oracle can replay the Lloyd loop
+    // from the union corpus; ids should be disjoint across sides
+    // (a shared id appears twice in the per-cell integer means)
+    val union = sq.select(col("src_id").as("__id"), col("__sv").as("vq"))
+      .unionByName(tq.select(col("tgt_id").as("__id"), col("__tv").as("vq")))
+    val centroids =
       trainIvfQuantized(union.checkpointAt("Similarity.marginMineAnn.codebookUnion"), kc, iters)
-    }
     val tCells = tq.select(col("tgt_id"), col("__tv"),
       nearestCellQ(col("__tv"), centroids).as("cell"))
     // probe side mirrors ivfTopK: nProbe nearest cells by (integer

@@ -104,24 +104,6 @@ object TmdbSchemas {
       StructField("wikidata_id", StringType),
       StructField("imdb_id", StringType))))))
 
-  /** /discover/movie page (FIXTURES.md; only results[].id is consumed by
-    * the reference — etl_task.py:68).
-    */
-  val discoverPage: StructType = StructType(Seq(
-    StructField("page", IntegerType),
-    StructField("total_pages", IntegerType),
-    StructField("total_results", IntegerType),
-    StructField("results", ArrayType(StructType(Seq(
-      StructField("adult", BooleanType),
-      StructField("genre_ids", ArrayType(LongType)),
-      StructField("id", LongType),
-      StructField("original_language", StringType),
-      StructField("popularity", DoubleType),
-      StructField("release_date", StringType),
-      StructField("title", StringType),
-      StructField("vote_average", DoubleType),
-      StructField("vote_count", LongType)))))))
-
   val collectionDetails: StructType = StructType(Seq(
     StructField("id", LongType),
     StructField("name", StringType),

@@ -131,7 +131,8 @@ class HtmlSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     val df = spark.range(50).select(
       concat(lit("<div data-v=\""), col("id"), lit("\">t</div>")).as("html"))
-      .select(graft.functions.Expressions.html_attr(col("html"), "[data-v]", "data-v").as("v"))
+      .select(graft.functions.Expressions.html_extract(col("html"),
+        Seq(("v", "[data-v]", Some("data-v")))).getField("v").as("v"))
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*(1)") || plan.contains("WholeStageCodegen"))
     assert(df.count() == 50)

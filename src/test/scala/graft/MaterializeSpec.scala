@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import graft.operators.Graph
 import graft.plans.Materialize
 import graft.plans.Materialize.CheckpointOps
 
@@ -29,6 +30,22 @@ class MaterializeSpec extends SparkTestBase {
     // hook is uninstalled afterwards: a new seam records nothing
     Materialize.checkpoint(docs.limit(1), "spec.after")
     assert(seen.size == 2, "capture must not outlive withCapture")
+    // the per-round graph loops, forced distributed: every round crosses
+    // the seam (the seed round plus one per hop/round; kCore's seed is
+    // its canonical edge set)
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("s", "d")
+    val seeds = Seq(1L).toDF("v")
+    val tags = scala.collection.mutable.ArrayBuffer.empty[String]
+    Materialize.withCapture((tag, _) => tags += tag) {
+      Graph.bfsHops(edges, "s", "d", seeds, "v", maxHops = 2, driverRows = 0).collect()
+      Graph.ssspBounded(edges.withColumn("w", lit(1L)), "s", "d", "w", seeds, "v",
+        maxHops = 2, driverRows = 0).collect()
+      Graph.labelPropagation(edges, "s", "d", rounds = 2, driverRows = 0).collect()
+      Graph.kCore(edges, "s", "d", k = 2L, rounds = 2, driverRows = 0).collect()
+    }
+    val perRound = tags.filter(_.endsWith(".round")).groupBy(identity).view.mapValues(_.size).toMap
+    assert(perRound == Map("Graph.bfsHops.round" -> 3, "Graph.ssspBounded.round" -> 3,
+      "Graph.labelPropagation.round" -> 3, "Graph.kCore.round" -> 2), tags)
   }
 
   test("nested withCapture restores the OUTER hook, not null") {

@@ -5,7 +5,7 @@ import graft.ops.Multimodal.WavCodec
 
 /** The de-stubbed audio path: WAV PCM16 must round-trip exactly, and the
   * extracted features must reflect the actual decoded signal (not byte
-  * soup) — a pure tone's RMS and zero-crossing rate are predictable.
+  * soup) — a pure tone's duration and fmt fields are predictable.
   */
 class MultimodalSpec extends SparkTestBase {
 
@@ -37,7 +37,7 @@ class MultimodalSpec extends SparkTestBase {
     assert(sr == 8000 && back.sameElements(samples))
   }
 
-  test("audio features come from the decoded signal: pure tone RMS and ZCR") {
+  test("audio features come from the decoded signal: pure tone duration and fmt fields") {
     import spark.implicits._
     val sr = 16000
     val freq = 400.0
@@ -46,12 +46,10 @@ class MultimodalSpec extends SparkTestBase {
       (math.sin(2 * math.Pi * freq * i / sr) * amp).toShort)
     val media = Seq(Multimodal.MediaRow(1L, "audio",
       WavCodec.encodePcm16(samples, sr), 0, 0, sr)).toDS()
-    val f = Multimodal.extractFeatures(media).collect().head.feature
-    // RMS of a sine = amp / sqrt(2); ZCR = 2 crossings per cycle
-    assert(math.abs(f(0) - amp / math.sqrt(2)) < amp * 0.01, s"rms=${f(0)}")
-    assert(math.abs(f(1) - 2 * freq / sr) < 0.005, s"zcr=${f(1)}")
-    assert(math.abs(f(2) - amp) < amp * 0.01, s"peak=${f(2)}")
-    assert(math.abs(f(7) - 0.25f) < 0.001, "duration = 4000 samples / 16 kHz")
+    val f = Multimodal.featureStats(media).collect().head
+    assert(f.aud_duration_micros.contains(250000L), "duration = 4000 samples / 16 kHz")
+    assert(f.aud_byte_rate.contains(2L * sr) && f.aud_block_align.contains(2L))
+    assert(f.img_n_px.isEmpty && f.vid_n_frames.isEmpty, "other kinds' columns are NULL")
   }
 
   test("PPM P6 encode/decode round-trips pixels, tolerates comments") {
@@ -74,34 +72,9 @@ class MultimodalSpec extends SparkTestBase {
     val rgb = Array.fill(8 * 4)(Array(200.toByte, 100.toByte, 50.toByte)).flatten
     val media = Seq(Multimodal.MediaRow(1L, "image",
       PpmCodec.encode(8, 4, rgb), 8, 4, 0)).toDS()
-    val f = Multimodal.extractFeatures(media).collect().head.feature
-    assert(f(0) == 8f && f(1) == 4f)
-    assert(f(2) == 200f && f(3) == 100f && f(4) == 50f)
-    assert(math.abs(f(6)) < 1e-3, "solid color => zero luma variance")
-  }
-
-  test("nearest-neighbor resize produces valid PPMs at the target size") {
-    val media = Multimodal.syntheticMedia(spark, 30)
-    val resized = Multimodal.resizeImages(media, 8, 8)
-    val images = resized.filter(_.kind == "image").collect()
-    assert(images.nonEmpty)
-    images.foreach { r =>
-      val (w, h, rgb) = Multimodal.PpmCodec.decode(r.payload)
-      assert(w == 8 && h == 8 && rgb.length == 8 * 8 * 3)
-      assert(r.width == 8 && r.height == 8)
-    }
-    // non-image rows pass through byte-identical
-    val audioBefore = media.filter(_.kind == "audio").collect().map(_.payload.toSeq).toSet
-    val audioAfter = resized.filter(_.kind == "audio").collect().map(_.payload.toSeq).toSet
-    assert(audioBefore == audioAfter)
-    // resizing a solid color keeps every pixel
-    import spark.implicits._
-    val solid = Array.fill(6 * 5)(Array(9.toByte, 8.toByte, 7.toByte)).flatten
-    val one = Seq(Multimodal.MediaRow(9L, "image",
-      Multimodal.PpmCodec.encode(6, 5, solid), 6, 5, 0)).toDS()
-    val (_, _, outRgb) = Multimodal.PpmCodec.decode(
-      Multimodal.resizeImages(one, 3, 2).collect().head.payload)
-    assert(outRgb.grouped(3).forall(px => px(0) == 9 && px(1) == 8 && px(2) == 7))
+    val f = Multimodal.featureStats(media).collect().head
+    assert(f.img_n_px.contains(32L) && f.img_aspect_micro.contains(2000000L))
+    assert(f.img_r_micromean.contains(200000000L) && f.img_g_micromean.contains(100000000L))
   }
 
   test("zero-frame video containers feature-extract instead of crashing") {
@@ -110,9 +83,11 @@ class MultimodalSpec extends SparkTestBase {
     val empty = VideoContainer.encode(Seq.empty)
     assert(VideoContainer.decode(empty).isEmpty)
     val media = Seq(Multimodal.MediaRow(7L, "video", empty, 0, 0, 0)).toDS()
-    val f = Multimodal.extractFeatures(media).collect().head
-    assert(f.feature.length == 8, "falls back to the byte-profile feature")
+    val f = Multimodal.featureStats(media).collect().head
     assert(f.n_bytes == empty.length.toLong)
+    assert(f.vid_n_frames.isEmpty && f.vid_luma_milli_sum.isEmpty, "no frames, no frame stats")
+    val d = Multimodal.decodeStats(media).collect().head
+    assert(d.n_bytes == empty.length.toLong && d.n_frames.isEmpty && d.vid_rgb_sum.isEmpty)
   }
 
   test("truncated PPM payloads are rejected, not zero-padded") {
@@ -133,9 +108,8 @@ class MultimodalSpec extends SparkTestBase {
       assert(sr == r.sample_rate)
       assert(s.length >= 256)
     }
-    val feats = Multimodal.extractFeatures(media).toDF()
-    assert(feats.columns.sameElements(
-      Array("media_id", "kind", "n_bytes", "checksum", "feature")))
+    val feats = Multimodal.featureStats(media).toDF()
+    assert(feats.columns.take(3).sameElements(Array("media_id", "kind", "n_bytes")))
     assert(feats.count() == 30)
   }
 

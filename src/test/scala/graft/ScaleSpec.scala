@@ -11,28 +11,6 @@ import graft.operators.Sinks
 class ScaleSpec extends SparkTestBase {
   import spark.implicits._
 
-  test("bucketed co-located join plans without a shuffle exchange") {
-    // clear stale managed-table locations from previous JVMs (the
-    // in-memory catalog forgets them, so Overwrite alone cannot)
-    Seq("bk_left", "bk_right").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = new org.apache.hadoop.fs.Path(s"/tmp/graft-warehouse/$t")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-    val left = (1 to 10000).map(i => (i.toLong % 500, i)).toDF("k", "v1")
-    val right = (1 to 8000).map(i => (i.toLong % 500, i * 2)).toDF("k", "v2")
-    Sinks.writeBucketed(left, "bk_left", "k", 8)
-    Sinks.writeBucketed(right, "bk_right", "k", 8)
-    // merge hint pins sort-merge join (no global conf mutation): with both
-    // sides bucketed+sorted on k, neither side needs an exchange
-    val joined = spark.table("bk_left")
-      .join(spark.table("bk_right").hint("merge"), "k")
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"bucketed join must not shuffle; plan:\n$plan")
-    assert(joined.count() > 0)
-  }
-
   test("writeBucketedAt (external path): co-located join plans without a shuffle exchange") {
     Seq("bk_ext_left", "bk_ext_right").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     val dir = java.nio.file.Files.createTempDirectory("graft_bkt_ext_").toString
@@ -53,16 +31,12 @@ class ScaleSpec extends SparkTestBase {
   }
 
   test("snapshot diff over bucketed snapshots plans without a shuffle exchange") {
-    Seq("bk_snap_prev", "bk_snap_cur").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val p = new org.apache.hadoop.fs.Path(s"/tmp/graft-warehouse/$t")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_bkt_snap_").toString
     val prev = (1 to 5000).map(i => (i.toLong, s"v$i")).toDF("k", "v")
     val cur = (3 to 5002).map(i => (i.toLong, if (i % 10 == 0) "CHANGED" else s"v$i"))
       .toDF("k", "v")
-    Sinks.writeBucketed(prev, "bk_snap_prev", "k", 8)
-    Sinks.writeBucketed(cur, "bk_snap_cur", "k", 8)
+    Sinks.writeBucketedAt(prev, "bk_snap_prev", "k", 8, s"$dir/prev")
+    Sinks.writeBucketedAt(cur, "bk_snap_cur", "k", 8, s"$dir/cur")
     val diff = Sinks.diffSnapshots(
       spark.table("bk_snap_prev"), spark.table("bk_snap_cur").hint("merge"), Seq("k"))
     val plan = diff.queryExecution.executedPlan.toString
@@ -463,8 +437,7 @@ class ScaleSpec extends SparkTestBase {
       // candidate stage: visible pre-checkpoint, so the cell join's
       // exchanges can be asserted directly
       val cand = graft.ops.Similarity.annCandidates(
-        src, tgt, "vec_id", "embedding", kCells = 4, nProbe = 2, iters = 2,
-        codebook = None)
+        src, tgt, "vec_id", "embedding", kCells = 4, nProbe = 2, iters = 2)
       cand.collect()
       val candPlan = cand.queryExecution.executedPlan.toString
       assert(!candPlan.contains("BroadcastExchange"),

@@ -10,7 +10,8 @@ class SimilaritySpec extends SparkTestBase {
     val df = Seq((Array(1f, 2f, 3f), Array(4f, 5f, 6f))).toDF("a", "b")
     val r = df.select(
       Similarity.dot(col("a"), col("b")).as("d"),
-      Similarity.cosine(col("a"), col("a")).as("self")).collect().head
+      (Similarity.dot(col("a"), col("a")) /
+        (Similarity.norm(col("a")) * Similarity.norm(col("a")))).as("self")).collect().head
     assert(r.getDouble(0) == 32.0)
     assert(math.abs(r.getDouble(1) - 1.0) < 1e-12)
   }
@@ -335,9 +336,13 @@ class SimilaritySpec extends SparkTestBase {
     val corpus = (0 until 40).map { i =>
       (i.toLong, Array.tabulate(4)(j => math.cos(i * 3 + j).toFloat))
     }.toDF("vec_id", "embedding")
-    val c1 = Similarity.trainIvf(corpus, "vec_id", "embedding", 4)
-    val c2 = Similarity.trainIvf(corpus, "vec_id", "embedding", 4)
-    assert(c1.map(_.toSeq).toSeq == c2.map(_.toSeq).toSeq)
+    // the codebook is trained inside each call: identical rows from two
+    // calls mean identical cells
+    def run() = Similarity.ivfTopK(corpus, corpus.filter(col("vec_id") < 8),
+        "vec_id", "embedding", k = 3, kCells = 4, nProbe = 1)
+      .as[(Long, Long, Double, Int)].collect().toSet
+    val r1 = run()
+    assert(r1.nonEmpty && r1 == run())
   }
 
   test("semanticDedup: planted near-dups dropped, lowest id kept, distinct kept") {

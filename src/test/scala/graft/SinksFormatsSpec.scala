@@ -423,38 +423,21 @@ class SinksFormatsSpec extends SparkTestBase {
       "replayed key 3 keeps its first-written NULL title")
   }
 
-  test("partitioned appendDedup converges and prunes the store probe") {
-    val dir = Files.createTempDirectory("graft_part_").toString + "/store"
+  test("appendDedup converges under replay; the first write wins") {
+    val dir = Files.createTempDirectory("graft_append_").toString + "/store"
     val week1 = Seq((1L, "2024-01-01", "a"), (2L, "2024-01-01", "b"))
       .toDF("id", "week", "v")
-    val week2 = Seq((2L, "2024-01-01", "DUP"), (3L, "2024-01-08", "c"))
+    val week2 = Seq((2L, "2024-01-08", "DUP"), (3L, "2024-01-08", "c"), (3L, "2024-01-08", "c"))
       .toDF("id", "week", "v")
-    Sinks.appendDedup(week1, dir, Seq("id"), partitionCol = Some("week"))
-    Sinks.appendDedup(week2, dir, Seq("id"), partitionCol = Some("week"))
-    Sinks.appendDedup(week2, dir, Seq("id"), partitionCol = Some("week")) // replay
+    Sinks.appendDedup(week1, dir, Seq("id"))
+    Sinks.appendDedup(week2, dir, Seq("id"))
+    Sinks.appendDedup(week2, dir, Seq("id")) // replay
     val back = spark.read.parquet(dir)
-    assert(back.count() == 3)
+    assert(back.count() == 3, "batch-internal and cross-run duplicates both collapse")
     assert(back.filter(col("id") === 2).collect().head.getAs[String]("v") == "b",
-      "first write wins across partitions")
-    // the store is laid out by partition value, so batch probes prune
-    val weeks = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("week="))
-    assert(weeks.toSet == Set("week=2024-01-01", "week=2024-01-08"))
-  }
-
-  test("appendDedup past the partition-value cap degrades to the unpruned probe") {
-    val dir = Files.createTempDirectory("graft_cap_").toString + "/store"
-    val b1 = Seq((1L, "p1", "a"), (2L, "p2", "b"), (3L, "p3", "c"))
-      .toDF("id", "part", "v")
-    val b2 = Seq((3L, "p3", "DUP"), (4L, "p4", "d"), (5L, "p5", "e"))
-      .toDF("id", "part", "v")
-    // cap of 2 < 3 distinct batch values: must fall back (correctly) to
-    // the full anti-join rather than collect/pin every value
-    Sinks.appendDedup(b1, dir, Seq("id"), partitionCol = Some("part"), maxPruned = 2)
-    Sinks.appendDedup(b2, dir, Seq("id"), partitionCol = Some("part"), maxPruned = 2)
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 5)
-    assert(back.filter(col("id") === 3).collect().head.getAs[String]("v") == "c",
-      "first write wins through the fallback path")
+      "first write wins across batches")
+    assert(!new java.io.File(dir).getParentFile.list().exists(_.contains("__stage-")),
+      "the stage dir never outlives the append")
   }
 
   test("snapshot diff classifies added/removed/changed and treats NULL as a value") {

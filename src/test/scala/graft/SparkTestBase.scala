@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = {
     // a static conf, so a system property read when the first session
-    // is built; ScaleSpec looks for its managed tables here
+    // is built; keeps any managed table out of the checkout
     System.setProperty("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
     Bench.session("4")
   }

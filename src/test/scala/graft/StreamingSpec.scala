@@ -84,55 +84,32 @@ class StreamingSpec extends SparkTestBase {
       val s1 = got.find(s => s._1 == 5L && s._4 == 2).get
       assert(s1._3 == ts("2024-02-01 10:40:00"), "session end = last event + gap")
     } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState sessionizer closes sessions across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.Sessionize.{SessionEvent, statefulSessions}
-    val mem = MemoryStream[SessionEvent]
-    val q = statefulSessions(mem.toDS()).writeStream
-      .outputMode("append").format("memory").queryName("state_sess").start()
+    // append mode across batches: a session is emitted once, when the
+    // watermark passes its end; a gap-breaking event closes its own
+    // user's session and, through the watermark, every other user's
+    val mem2 = MemoryStream[Ev]
+    val q2 = graft.streaming.Sessionize.streamingSessions(
+        mem2.toDF(), "ts", "user_id", gap = "30 minutes", watermark = "10 minutes")
+      .writeStream.outputMode("append").format("memory")
+      .queryName("sess_append").start()
+    def closed = spark.table("sess_append")
+      .select("user_id", "session_end", "n_events", "sum_value")
+      .as[(Long, Timestamp, Long, Double)].collect().toSet
     try {
-      mem.addData(
-        SessionEvent(5, ts("2024-02-01 10:00:00"), 1.0),
-        SessionEvent(5, ts("2024-02-01 10:10:00"), 2.0))
-      q.processAllAvailable()
-      assert(spark.table("state_sess").count() == 0, "open session not yet emitted")
-      // second batch: an event past the gap closes the first session
-      mem.addData(SessionEvent(5, ts("2024-02-01 12:00:00"), 4.0))
-      q.processAllAvailable()
-      val closed = spark.table("state_sess")
-        .as[graft.streaming.Sessionize.SessionOut].collect()
-      assert(closed.length == 1)
-      assert(closed.head.n_events == 2 && closed.head.sum_value == 3.0)
-      assert(closed.head.session_end == ts("2024-02-01 10:40:00"))
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState emits the final session on event-time timeout") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.Sessionize.{SessionEvent, statefulSessions}
-    val mem = MemoryStream[SessionEvent]
-    val q = statefulSessions(mem.toDS()).writeStream
-      .outputMode("append").format("memory").queryName("timeout_sess").start()
-    try {
-      mem.addData(
-        SessionEvent(7, ts("2024-02-01 10:00:00"), 1.0),
-        SessionEvent(7, ts("2024-02-01 10:10:00"), 2.0))
-      q.processAllAvailable()
-      assert(spark.table("timeout_sess").count() == 0, "still open")
-      // an unrelated key far in the future advances the watermark past
-      // 10:40 (last event + gap); key 7's open session must close
-      mem.addData(SessionEvent(8, ts("2024-02-01 13:00:00"), 5.0))
-      q.processAllAvailable()
-      mem.addData(SessionEvent(8, ts("2024-02-01 13:01:00"), 1.0))
-      q.processAllAvailable()
-      val closed = spark.table("timeout_sess")
-        .as[graft.streaming.Sessionize.SessionOut].collect()
-      assert(closed.length == 1 && closed.head.user_id == 7)
-      assert(closed.head.n_events == 2 && closed.head.sum_value == 3.0)
-      assert(closed.head.session_end == ts("2024-02-01 10:40:00"))
-    } finally q.stop()
+      mem2.addData(
+        Ev(20, ts("2024-02-01 10:00:00"), 5, "click", 1.0),
+        Ev(21, ts("2024-02-01 10:10:00"), 5, "click", 2.0),
+        Ev(22, ts("2024-02-01 10:00:00"), 7, "click", 1.0),
+        Ev(23, ts("2024-02-01 10:10:00"), 7, "click", 2.0))
+      q2.processAllAvailable()
+      assert(closed.isEmpty, "open sessions are not emitted")
+      mem2.addData(Ev(24, ts("2024-02-01 12:00:00"), 5, "click", 4.0))
+      q2.processAllAvailable()
+      assert(closed == Set(
+        (5L, ts("2024-02-01 10:40:00"), 2L, 3.0),
+        (7L, ts("2024-02-01 10:40:00"), 2L, 3.0)),
+        "both 10:00 sessions closed; user 5's 12:00 session stays open")
+    } finally q2.stop()
   }
 
   test("transformWithState MapState leaderboard carries counts across batches") {
