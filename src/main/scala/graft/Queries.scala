@@ -29,46 +29,10 @@ object Queries {
 
   final case class Q(name: String, fn: QueryFn, oracle: Option[String])
 
-  /** Per-call scratch dir for the incremental-store queries: RAM-backed
-    * /dev/shm when available so bench timings of `incr_*`/indexed
-    * queries measure the OPERATOR, not disk-write variance of the temp
-    * store (the bench-noise watch item); falls back to the JVM temp dir.
-    * Every created dir is registered with a JVM shutdown hook that
-    * removes it recursively — /dev/shm is RAM, and best-of-N bench runs
-    * reconstruct these stores per invocation, so leaked dirs would
-    * accumulate in tmpfs across a long session and squeeze the host.
+  /** Drop every per-call scratch store created so far ([[Scratch.drain]]),
+    * between queries and outside any timer.
     */
-  private val scratchCreated =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-
-  private lazy val scratchCleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      scratchCreated.forEach(root => deleteTree(root)), "graft-scratch-cleanup"))
-
-  /** Eagerly delete every scratch store created so far. Safe BETWEEN
-    * ledger queries: each query call constructs its own per-call store
-    * (nothing is shared across queries or repeats), so once a query's
-    * result is materialized its scratch is garbage. The shutdown hook
-    * alone lets scratch ACCUMULATE across a long in-fleet run — on a
-    * /dev/shm scratch root that is RAM, and the squeeze lands on
-    * whichever store-heavy query runs late in the fleet (the r15
-    * re-measure attributed incr_simhash_pairs' 110.9 s sweep reading vs
-    * 15.3 s isolated to exactly this class of pressure). Verify and
-    * Bench drain between queries, outside any timer.
-    */
-  def drainScratch(): Unit =
-    Iterator.continually(scratchCreated.poll()).takeWhile(_ != null)
-      .foreach(deleteTree)
-
-  /** Best-effort recursive delete, deepest entries first. */
-  private def deleteTree(root: java.nio.file.Path): Unit =
-    try {
-      val walk = java.nio.file.Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => try java.nio.file.Files.deleteIfExists(p)
-          catch { case _: Exception => () })
-      finally walk.close()
-    } catch { case _: Exception => () }
+  def drainScratch(): Unit = Scratch.drain()
 
   /** Shard-capped block key for the label-blocked embedding queries
     * (`dedup_embedding_cosine`, `knn_graph_blocked`): an oversized label
@@ -132,18 +96,6 @@ object Queries {
     }
   }
 
-  private def scratchDir(prefix: String): String = {
-    scratchCleanupHook
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val dir =
-      if (java.nio.file.Files.isDirectory(shm) &&
-          java.nio.file.Files.isWritable(shm))
-        java.nio.file.Files.createTempDirectory(shm, prefix)
-      else java.nio.file.Files.createTempDirectory(prefix)
-    scratchCreated.add(dir)
-    dir.toString
-  }
-
   /** Land the N micro-batch input drops of a streaming query as exactly
     * one parquet file each under `inDir`, in drop order. The drops are
     * WRITTEN CONCURRENTLY (driver-thread job overlap — each tiny
@@ -202,7 +154,7 @@ object Queries {
           java.nio.file.attribute.FileTime.fromMillis(t0 + i * 1000L))
       }
       // staging (and any crc sidecars) is garbage once the moves land
-      deleteTree(stageRoot)
+      Scratch.deleteTree(stageRoot)
     }
   }
 
@@ -1696,7 +1648,7 @@ object Queries {
   private val incrSessionStream = Q(
     "incr_session_stream",
     (s, d) => {
-      val base = scratchDir("graft_sess_stream_")
+      val base = Scratch.dir("graft_sess_stream_")
       val inDir = s"$base/in"; val ckpt = s"$base/ckpt"
       val ev = events(s, d).select(col("event_id"), col("ts"), col("user_id"),
         col("value"))
@@ -1873,7 +1825,7 @@ object Queries {
   private val incrWeeklyMerge = Q(
     "incr_weekly_merge",
     (s, d) => {
-      val base = scratchDir("graft_incr_wm_")
+      val base = Scratch.dir("graft_incr_wm_")
       val inDir = s"$base/in"; val table = s"$base/table"; val ckpt = s"$base/ckpt"
       val ev = events(s, d).select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
@@ -1909,7 +1861,7 @@ object Queries {
   private val jsonlRoundtrip = Q(
     "jsonl_roundtrip",
     (s, d) => {
-      val base = scratchDir("graft_jsonl_")
+      val base = Scratch.dir("graft_jsonl_")
       val docs = documents(s, d).select(col("doc_id"), col("source"), col("text"))
       docs.coalesce(4).write.mode("overwrite").json(s"$base/docs")
       s.read.schema(docs.schema).json(s"$base/docs")
@@ -1939,7 +1891,7 @@ object Queries {
     "incr_bloom_dedup",
     (s, d) => {
       import s.implicits._
-      val base = scratchDir("graft_incr_bloom_")
+      val base = Scratch.dir("graft_incr_bloom_")
       val inDir = s"$base/in"; val outDir = s"$base/out"; val ckpt = s"$base/ckpt"
       val ev = events(s, d).select(col("event_id"))
       writeDrops(inDir, Seq(
@@ -2941,7 +2893,7 @@ object Queries {
     "incr_minhash_pairs",
     (s, d) => {
       val docs = documents(s, d)
-      val dir = scratchDir("graft_incr_mh_") + "/store"
+      val dir = Scratch.dir("graft_incr_mh_") + "/store"
       val old = docs.filter(col("doc_id") % 10 =!= 0)
       val fresh = docs.filter(col("doc_id") % 10 === 0)
       // seed append runs at call time; the old-vs-old result is discarded
@@ -3007,7 +2959,7 @@ object Queries {
     "incr_simhash_pairs",
     (s, d) => {
       val docs = documents(s, d)
-      val dir = scratchDir("graft_incr_sh_") + "/store"
+      val dir = Scratch.dir("graft_incr_sh_") + "/store"
       val old = docs.filter(col("doc_id") % 10 =!= 0)
       val fresh = docs.filter(col("doc_id") % 10 === 0)
       Dedup.incrementalSimhashPairs(old, "doc_id", "text", dir,
@@ -3785,7 +3737,7 @@ object Queries {
     "ann_lsh_indexed",
     (s, d) => {
       val emb = embeddings(s, d)
-      val dir = scratchDir("graft_lshidx_") + "/index"
+      val dir = Scratch.dir("graft_lshidx_") + "/index"
       Similarity.appendLshIndex(emb, "vec_id", "embedding", dir,
         dim = 64, bits = 8, bands = 16)
       Similarity.lshTopKIndexed(emb.filter(col("vec_id") < 10), "vec_id",
@@ -4294,7 +4246,7 @@ object Queries {
   private val orcRoundtrip = Q(
     "orc_roundtrip",
     (s, d) => {
-      val base = scratchDir("graft_orc_")
+      val base = Scratch.dir("graft_orc_")
       val docs = documents(s, d).select(col("doc_id"), col("source"), col("text"))
       docs.coalesce(4).write.mode("overwrite").orc(s"$base/docs")
       s.read.schema(docs.schema).orc(s"$base/docs")
@@ -4630,7 +4582,7 @@ object Queries {
   private val mergeUpsertQ = Q(
     "merge_upsert",
     (s, d) => {
-      val dir = scratchDir("graft_merge_")
+      val dir = Scratch.dir("graft_merge_")
       val path = s"$dir/customers"
       customer(s, d).filter(col("c_custkey") % 3 =!= 0)
         .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
@@ -4661,7 +4613,7 @@ object Queries {
   private val bucketedJoinColocated = Q(
     "bucketed_join_colocated",
     (s, d) => {
-      val dir = scratchDir("graft_bktjoin_")
+      val dir = Scratch.dir("graft_bktjoin_")
       operators.Sinks.writeBucketedAt(
         orders(s, d).select(col("o_custkey"), col("o_totalprice")),
         "graft_bkt_orders", "o_custkey", 8, s"$dir/orders")
@@ -4695,7 +4647,7 @@ object Queries {
   private val partitionPrunedScan = Q(
     "partition_pruned_scan",
     (s, d) => {
-      val dir = scratchDir("graft_part_")
+      val dir = Scratch.dir("graft_part_")
       val ev = events(s, d).select(col("event_id"), col("event_type"), col("value"))
       operators.Sinks.writePartitioned(ev, s"$dir/events", "event_type")
       s.read.parquet(s"$dir/events")
@@ -4719,7 +4671,7 @@ object Queries {
   private val tableTimeTravel = Q(
     "table_time_travel",
     (s, d) => {
-      val dir = scratchDir("graft_ttt_") + "/events"
+      val dir = Scratch.dir("graft_ttt_") + "/events"
       val ev = events(s, d).select(col("event_id"), col("event_type"),
         col("value"))
       operators.Sinks.commitVersion(ev.filter(col("event_type") === "click"), dir)
@@ -4755,7 +4707,7 @@ object Queries {
   private val zonemapPrunedScan = Q(
     "zonemap_pruned_scan",
     (s, d) => {
-      val dir = scratchDir("graft_zm_") + "/events"
+      val dir = Scratch.dir("graft_zm_") + "/events"
       val ev = events(s, d).select(col("event_id"), col("ts"), col("value"))
       ev.repartitionByRange(16, col("ts")).sortWithinPartitions("ts")
         .write.mode("overwrite").parquet(dir)
@@ -4786,7 +4738,7 @@ object Queries {
   private val mergeUpsertPartitionedQ = Q(
     "merge_upsert_partitioned",
     (s, d) => {
-      val dir = scratchDir("graft_pmerge_")
+      val dir = Scratch.dir("graft_pmerge_")
       val path = s"$dir/events"
       val ev = events(s, d).select(col("event_id"), col("event_type"), col("value"))
       ev.filter(col("event_id") % 3 =!= 0)
@@ -4824,7 +4776,7 @@ object Queries {
   private val compactRoundtrip = Q(
     "compact_roundtrip",
     (s, d) => {
-      val dir = scratchDir("graft_compact_")
+      val dir = Scratch.dir("graft_compact_")
       val path = s"$dir/orders"
       orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
         .repartition(64).write.parquet(path)
@@ -5134,7 +5086,7 @@ object Queries {
       // double-written postings. A failed ingest installs nothing, so
       // the next call rebuilds; later calls serve the completed store.
       val dir = bm25IdxDirs.computeIfAbsent(d, _ => {
-        val idx = scratchDir("graft_bm25idx_") + "/index"
+        val idx = Scratch.dir("graft_bm25idx_") + "/index"
         TextAnalysis.buildBm25Index(documents(s, d), "doc_id", "text", idx,
           batchId = Some("full"))
         idx
@@ -5789,7 +5741,7 @@ object Queries {
   private val schemaEvolutionQ = Q(
     "schema_evolution_merge",
     (s, d) => {
-      val base = scratchDir("graft_schemaevo_")
+      val base = Scratch.dir("graft_schemaevo_")
       val docs = documents(s, d)
       docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("source"), col("n_chars"))
@@ -5824,7 +5776,7 @@ object Queries {
   private val incrStreamDedup = Q(
     "incr_stream_dedup",
     (s, d) => {
-      val base = scratchDir("graft_sdedup_")
+      val base = Scratch.dir("graft_sdedup_")
       val inDir = s"$base/in"; val table = s"$base/table"; val ckpt = s"$base/ckpt"
       val ev = events(s, d).select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
@@ -5868,7 +5820,7 @@ object Queries {
   private val incrStreamJoin = Q(
     "incr_stream_join",
     (s, d) => {
-      val base = scratchDir("graft_sjoin_")
+      val base = Scratch.dir("graft_sjoin_")
       val ev = events(s, d)
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("ts").as("click_ts"),
@@ -6043,7 +5995,7 @@ object Queries {
     "incr_running_totals",
     (s, d) => {
       import s.implicits._
-      val base = scratchDir("graft_tws_")
+      val base = Scratch.dir("graft_tws_")
       val inDir = s"$base/in"; val outDir = s"$base/out"; val ckpt = s"$base/ckpt"
       val ev = events(s, d).select(col("event_id"), col("user_id"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
@@ -6080,7 +6032,7 @@ object Queries {
     "incr_stream_topk",
     (s, d) => {
       import s.implicits._
-      val base = scratchDir("graft_twstopk_")
+      val base = Scratch.dir("graft_twstopk_")
       val inDir = s"$base/in"; val outDir = s"$base/out"; val ckpt = s"$base/ckpt"
       val ev = events(s, d).select(col("event_id"), col("event_type"),
         col("user_id"))
@@ -6132,7 +6084,7 @@ object Queries {
   private val incrStreamOuterJoin = Q(
     "incr_stream_outer_join",
     (s, d) => {
-      val base = scratchDir("graft_sojoin_")
+      val base = Scratch.dir("graft_sojoin_")
       val ev = events(s, d)
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("ts").as("click_ts"),

@@ -725,8 +725,8 @@ object Expressions {
     * buffers like collect_list's). This buffer is ONE row, so raise the
     * threshold generously when tasks carry many groups; at the default
     * the plan is hash-flavored but high-cardinality tasks quietly sort
-    * their tail. [[GraftExtensions]] sets it to 1e6 when installed
-    * (unless the user set it explicitly).
+    * their tail. The session profile (`graft.Bench.session`) sets it
+    * to 1e6.
     *
     * Null `ord` loses to any non-null value (DESC NULLS LAST, the
     * window semantics this replaces), so an all-null group still keeps

@@ -334,7 +334,7 @@ object Html {
   }
 
   /** All elements matching `selector`, document order. */
-  def select(root: Elem, selector: String): Vector[Elem] =
+  private[graft] def select(root: Elem, selector: String): Vector[Elem] =
     selectParsed(root, parseSelector(selector))
 
   private[functions] def selectParsed(root: Elem,

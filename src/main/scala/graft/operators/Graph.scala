@@ -26,19 +26,11 @@ object Graph {
     * whole edge set per invocation.
     */
   private final class RoundStore(spark: SparkSession) {
-    // temp rounds prefer the RAM-backed scratch root (the
-    // Queries.scratchDir policy): the first save always lands on files,
-    // and on the bench host the JVM tmpdir is the data disk — round
-    // tables are transient by construction, so tmpfs is the right tier.
-    private val base = {
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      val dir =
-        if (java.nio.file.Files.isDirectory(shm) &&
-            java.nio.file.Files.isWritable(shm))
-          java.nio.file.Files.createTempDirectory(shm, "graft-rounds")
-        else java.nio.file.Files.createTempDirectory("graft-rounds")
-      "file:" + dir.toString
-    }
+    // temp rounds live under the shared scratch root (graft.Scratch):
+    // the first save always lands on files, and round tables are
+    // transient by construction, so tmpfs is the right tier. A kept
+    // file-backed final round goes with the next Scratch.drain.
+    private val base = "file:" + graft.Scratch.dir("graft-rounds")
     private val written = mutable.ArrayBuffer.empty[String]
     // the RDDs each in-memory round's localCheckpoint persisted, by round
     private val checkpointed =

@@ -39,9 +39,12 @@ import org.apache.spark.sql.types._
   *    the heap operator DROPS null/NaN scores, while row_number ranks
   *    them, so floating or nullable scores must keep the window path.
   *
-  * Disable with `spark.graft.topkRewrite.enabled=false`.
+  * Installed by [[TopKRewrite.install]], and from then on part of every
+  * plan the session optimizes. Spark's own
+  * `spark.sql.optimizer.excludedRules=graft.plans.TopKRewrite` switches
+  * it off.
   */
-case class TopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
+object TopKRewrite extends Rule[LogicalPlan] {
 
   private def integral(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType => true
@@ -154,9 +157,7 @@ case class TopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     else Some((bounds.flatMap(rankLimit(_, rank)).min, residual))
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!java.lang.Boolean.parseBoolean(
-        spark.conf.get("spark.graft.topkRewrite.enabled", "true"))) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case Project(projectList,
           Filter(cond,
@@ -197,17 +198,14 @@ case class TopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           else Filter(residual.reduceLeft(And), topk)
         Project(projectList, filtered)
     }
-  }
-}
 
-object TopKRewrite {
   /** Install rule + strategy on a running session (idempotent). */
   def install(spark: SparkSession): Unit = {
     org.apache.spark.sql.graftbridge.TopKPerKey.install(spark)
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val cur = classic.experimental.extraOptimizations
-    if (!cur.exists(_.isInstanceOf[TopKRewrite])) {
-      classic.experimental.extraOptimizations = cur :+ TopKRewrite(spark)
+    if (!cur.contains(TopKRewrite)) {
+      classic.experimental.extraOptimizations = cur :+ TopKRewrite
     }
   }
 }

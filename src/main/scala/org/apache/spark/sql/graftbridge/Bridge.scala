@@ -20,13 +20,4 @@ object Bridge {
     * for `ExpectsInputTypes`; Spark keeps TypeCollection private[sql].
     */
   val integralKey: AbstractDataType = TypeCollection(LongType, IntegerType, ShortType, ByteType)
-
-  /** Register a function builder on an ALREADY-RUNNING session (the
-    * extensions path only applies at session construction).
-    */
-  def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-                       builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 }

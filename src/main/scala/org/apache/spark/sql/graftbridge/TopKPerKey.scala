@@ -41,7 +41,9 @@ import org.apache.spark.util.collection.ExternalSorter
   * requires ClusteredDistribution, so Spark inserts the hash exchange
   * only when the partial output isn't already partitioned on the keys.
   * Registered via `TopKPerKey.install(spark)` (experimental
-  * extraStrategies) or GraftExtensions.
+  * extraStrategies), which [[TopKPerKey.apply]] and
+  * `graft.plans.TopKRewrite.install` call on first use; the strategy
+  * then stays on the session.
   */
 case class TopKPerKeyPlan(keys: Seq[Expression], score: Expression, k: Int,
                           smallest: Boolean, tieBreak: Option[Expression],

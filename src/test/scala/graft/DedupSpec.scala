@@ -31,6 +31,11 @@ class DedupSpec extends SparkTestBase {
     assert(out.select("doc_id").as[Long].collect().toSet == Set(2L, 4L))
     assert(out.columns.toSeq == Seq("doc_id", "text", "q"),
       "survivors keep their full original row")
+    // the 2-arg max_by_row underneath: the argmax by ord, no tie slot
+    val best = Seq((1L, 10L), (2L, 30L), (3L, 20L)).toDF("x", "ord")
+      .agg(graft.functions.Expressions.max_by_row(struct($"x"), $"ord").as("b"))
+      .select("b.x").as[Long].head()
+    assert(best == 2L, "argmax by ord picks x=2")
   }
 
   test("incremental simhash: new-vs-store pairs only, store grows idempotently") {

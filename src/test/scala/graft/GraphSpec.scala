@@ -296,19 +296,21 @@ class GraphSpec extends SparkTestBase {
 
   test("iterative operators clean owned temp work dirs down to the final table") {
     import scala.jdk.CollectionConverters._
-    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    // the round stores land under the shared scratch root
     def roundDirs: Set[java.nio.file.Path] =
-      java.nio.file.Files.list(tmp).iterator().asScala
+      java.nio.file.Files.list(Scratch.root).iterator().asScala
         .filter(_.getFileName.toString.startsWith("graft-rounds")).toSet
     val before = roundDirs
 
+    // driverRows = 0: both ops take the distributed round loop
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("src", "dst")
-    assert(Graph.connectedComponents(edges).count() == 5)
+    assert(Graph.connectedComponents(edges, driverRows = 0).count() == 5)
     val parents = Seq((2L, 1L), (3L, 2L)).toDF("child", "parent")
-    assert(Graph.ancestorClosure(parents).count() == 3)
+    assert(Graph.ancestorClosure(parents, driverRows = 0).count() == 3)
 
-    // tiny graphs take the checkpointed round path: the results are
-    // self-contained, so the owned work dirs are removed entirely
+    // tiny graphs checkpoint every round after the first in memory: the
+    // results are self-contained, so the owned work dirs are removed
+    // entirely
     val created = roundDirs -- before
     assert(created.isEmpty, s"leaked owned work dirs: $created")
   }

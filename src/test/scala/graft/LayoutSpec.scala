@@ -17,11 +17,8 @@ class LayoutSpec extends SparkTestBase {
   }
 
   test("z_value: null coordinates cluster at the origin, deterministically") {
-    // registered here (not only in SkewExtensionsSpec) for suite-order
-    // independence
-    graft.GraftExtensions.register(spark)
-    val out = spark.sql(
-      "SELECT z_value(array(CAST(NULL AS BIGINT), 3L), 2, 2) AS z")
+    val out = Seq((Option.empty[Long], Option(3L))).toDF("x", "y")
+      .select(z_value(array($"x", $"y"), 2, 2).as("z"))
       .head().getLong(0)
     // coords (0, 3): bits y0->pos1, y1->pos3 -> 0b1010 = 10
     assert(out == 10L, s"null x must read as 0: got $out")

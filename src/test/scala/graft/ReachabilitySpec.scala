@@ -9,14 +9,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * ARCHITECTURE.md's "Public operators with no caller outside the tests"
   * with the reason it stays. The scan strips comments and string
   * literals first, so a name that only a doc comment or a SQL string
-  * mentions has no caller.
+  * mentions has no caller. A use of `member` counts for `Obj.member`
+  * only in the file that declares it or in a file that names `Obj` (a
+  * qualified use or an import), so `DataFrame.select` is no caller of
+  * another object's `select`.
   */
 class ReachabilitySpec extends AnyFunSuite {
 
   /** Mirrors ARCHITECTURE.md's no-caller section, entry for entry. */
   private val allowed = Set(
     "Graph.upsertNodes", "Sinks.exportKgCsv", "MovieGraph.companyAncestry",
-    "ExternalRatings.assemble",
+    "Clean.personDetails", "ExternalRatings.assemble",
     "Fetch.fetch", "Fetch.HttpTransport", "Sinks.appendJdbc", "Sinks.seedFromCsv",
     "Sinks.writeCsv", "Sinks.bulkEdgesFromCsv",
     "SparkEntry.entry", "Materialize.withCapture",
@@ -96,16 +99,24 @@ class ReachabilitySpec extends AnyFunSuite {
   }
 
   private def unreferenced(): Set[String] = {
-    val main = sources("src/main/scala").map(p => strip(Files.readString(p)))
-    val corpus = (main ++ sources("perfbench/src").map(p => strip(Files.readString(p))))
-      .mkString("\n")
-    def tally(names: Iterator[String]) = names.toSeq.groupBy(identity).view.mapValues(_.size)
-    val uses = tally(ident.findAllIn(corpus))
-    val defs = tally(declared.findAllMatchIn(corpus).map(_.group(1)))
-    main.flatMap(members).filter { m =>
-      val name = m.split('.')(1)
-      uses.getOrElse(name, 0) <= defs.getOrElse(name, 0)
-    }.toSet
+    val main = sources("src/main/scala").map(p => p -> strip(Files.readString(p)))
+    def tally(names: Iterator[String]) = names.toSeq.groupBy(identity).view.mapValues(_.size).toMap
+    // per file: its text, identifier counts and the declarations among them
+    val files = (main ++ sources("perfbench/src").map(p => p -> strip(Files.readString(p))))
+      .map { case (p, text) =>
+        (p, text, tally(ident.findAllIn(text)),
+          tally(declared.findAllMatchIn(text).map(_.group(1))))
+      }
+    main.flatMap { case (home, text) => members(text).map(home -> _) }.filter {
+      case (home, m) =>
+        val Array(obj, name) = m.split('.')
+        files.collect {
+          case (p, text, uses, defs) if p == home || uses.contains(obj) =>
+            // `Obj(...)` calls `Obj.apply`
+            val calls = if (name == "apply") raw"\b$obj\s*\(".r.findAllIn(text).size else 0
+            uses.getOrElse(name, 0) - defs.getOrElse(name, 0) + calls
+        }.sum <= 0
+    }.map(_._2).toSet
   }
 
   test("every public member under src/main has a caller or a documented reason") {

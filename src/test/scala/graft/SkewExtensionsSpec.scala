@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Skew
 
@@ -131,59 +130,5 @@ class SkewExtensionsSpec extends SparkTestBase {
         .select("k", "v", "name").as[(Long, Int, String)]
       assert(aqeOff.collect().toSet == plain)
     } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
-
-  test("extensions register SQL functions with tight-loop implementations") {
-    // getOrCreate returns the suite session, which Bench.session builds
-    // without extensions, so use runtime registration (the next test
-    // checks the builder path installs the same functions)
-    val s2 = spark
-    GraftExtensions.register(s2)
-    val r = s2.sql(
-        """SELECT float_vector_dot(array(cast(1.0 as float), cast(2.0 as float)),
-          |                        array(cast(3.0 as float), cast(4.0 as float))) AS d,
-          |       simhash60(array('a','b')) AS sh,
-          |       size(minhash_signature(array('x','y'), 8)) AS mk,
-          |       size(word_shingles(array('a','b','c'), 2)) AS ws,
-          |       signature_agreement(array(1L, 2L, 3L), array(1L, 9L, 3L)) AS sa
-          |""".stripMargin).collect().head
-    assert(r.getDouble(0) == 11.0)
-    assert(r.getLong(1) != 0L)
-    assert(r.getInt(2) == 8)
-    assert(r.getInt(3) == 2)
-    assert(r.getLong(4) == 2L)
-
-    val r2 = s2.sql(
-        """SELECT size(sorted_id_pairs(array(3L, 1L, 2L))) AS np,
-          |       ngram_stats(array('a','b','a','b'), 2).total AS nt,
-          |       z_value(array(3L, 1L), 2, 2) AS z
-          |""".stripMargin).collect().head
-    assert(r2.getInt(0) == 3)
-    assert(r2.getLong(1) == 3L)
-
-    // aggregate + hash-derivation registrations
-    val r3 = s2.sql(
-        """SELECT md5_bits('probe', 2) AS mb,
-          |       max_by_row(named_struct('v', x), named_struct('q', q)).v AS best
-          |FROM VALUES (1L, 10L), (2L, 30L), (3L, 20L) AS t(x, q)
-          |""".stripMargin).collect().head
-    assert(r3.getLong(0) >= 0L && r3.getLong(0) <= 255L)
-    assert(r3.getLong(1) == 2L, "argmax by q picks x=2")
-    assert(r2.getLong(2) == 7L)
-  }
-
-  test("builder extension and runtime register install the same SQL functions") {
-    val injected =
-      org.apache.spark.sql.graftbridge.InjectedFunctions.names(new GraftExtensions)
-    // a fresh session of the suite's context: its registry holds only the
-    // builtins, and register's confs and rules stay off the suite session
-    val fresh = spark.newSession()
-    val registry = fresh.sessionState.functionRegistry
-    val builtins = registry.listFunction().map(_.funcName).toSet
-    GraftExtensions.register(fresh)
-    val registered = registry.listFunction().map(_.funcName).toSet -- builtins
-    assert(registered.contains("nfc_normalize") && registered.contains("max_by_row"))
-    assert(injected == registered,
-      s"builder only: ${injected -- registered}; register only: ${registered -- injected}")
   }
 }

@@ -22,6 +22,25 @@ class TopKRewriteSpec extends SparkTestBase {
   private def physical(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** `read` of `df` planned with the rule excluded, the un-rewritten
+    * reference; the conf is restored after. Its plan must keep the
+    * window and hold no heap operator.
+    */
+  private def reference[T](df: DataFrame)(read: DataFrame => T): T = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "graft.plans.TopKRewrite")
+    try {
+      val plan = physical(df)
+      assert(plan.contains("Window") && !plan.contains("TopKPerKey"),
+        s"the reference must keep the window:\n$plan")
+      read(df)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
   private def declarativeTopK(k: Int): DataFrame = {
     val w = Window.partitionBy($"k").orderBy($"score".desc, $"id".asc)
     data.withColumn("rn", row_number().over(w))
@@ -35,10 +54,7 @@ class TopKRewriteSpec extends SparkTestBase {
     assert(plan.contains("TopKPerKey"), s"expected the heap operator:\n$plan")
     assert(!plan.contains("Window"), s"window must be rewritten away:\n$plan")
     // ground truth from the un-rewritten formulation
-    spark.conf.set("spark.graft.topkRewrite.enabled", "false")
-    val expected =
-      try declarativeTopK(5).as[(Long, Long, Long)].collect().toSet
-      finally spark.conf.set("spark.graft.topkRewrite.enabled", "true")
+    val expected = reference(declarativeTopK(5))(_.as[(Long, Long, Long)].collect().toSet)
     val got = df.as[(Long, Long, Long)].collect().toSet
     assert(got == expected)
     assert(got.size == 16 * 5)
@@ -51,11 +67,8 @@ class TopKRewriteSpec extends SparkTestBase {
       .select("k", "id")
     assert(physical(df).contains("TopKPerKey"))
     val got = df.as[(Long, Long)].collect().toSet
-    spark.conf.set("spark.graft.topkRewrite.enabled", "false")
-    val expected =
-      try data.withColumn("rn", row_number().over(w)).filter($"rn" < 4)
-        .select("k", "id").as[(Long, Long)].collect().toSet
-      finally spark.conf.set("spark.graft.topkRewrite.enabled", "true")
+    val expected = reference(data.withColumn("rn", row_number().over(w))
+      .filter($"rn" < 4).select("k", "id"))(_.as[(Long, Long)].collect().toSet)
     assert(got == expected && got.size == 16 * 3)
   }
 
@@ -83,11 +96,6 @@ class TopKRewriteSpec extends SparkTestBase {
       .select("k", "id")
     assert(!physical(noTie).contains("TopKPerKey"),
       "missing tie-break must keep the window")
-
-    // kill switch
-    spark.conf.set("spark.graft.topkRewrite.enabled", "false")
-    try assert(!physical(declarativeTopK(5)).contains("TopKPerKey"))
-    finally spark.conf.set("spark.graft.topkRewrite.enabled", "true")
   }
 
   test("rank(): fires over an aggregate that proves tie-freeness, matches window") {
@@ -107,11 +115,8 @@ class TopKRewriteSpec extends SparkTestBase {
     val plan = physical(df)
     assert(plan.contains("TopKPerKey"), s"rank over aggregate must rewrite:\n$plan")
     assert(!plan.contains("Window"), s"window must be rewritten away:\n$plan")
-    spark.conf.set("spark.graft.topkRewrite.enabled", "false")
-    val expected =
-      try agg.withColumn("r", rank().over(w)).filter($"r" <= 4)
-        .select("k", "item", "s").as[(Long, Long, Long)].collect().toSet
-      finally spark.conf.set("spark.graft.topkRewrite.enabled", "true")
+    val expected = reference(agg.withColumn("r", rank().over(w)).filter($"r" <= 4)
+      .select("k", "item", "s"))(_.as[(Long, Long, Long)].collect().toSet)
     assert(df.as[(Long, Long, Long)].collect().toSet == expected)
     assert(expected.size == 16 * 4)
   }
@@ -157,12 +162,9 @@ class TopKRewriteSpec extends SparkTestBase {
       s"a conjunct rank bound must still rewrite:\n$plan")
     assert(!plan.contains("Window"), s"window must be gone:\n$plan")
     // semantics: residual prunes the already-selected top-5, never changes it
-    spark.conf.set("spark.graft.topkRewrite.enabled", "false")
-    val expected =
-      try data.withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 5 && $"id" % 2 === 0)
-        .select("k", "id", "score").as[(Long, Long, Long)].collect().toSet
-      finally spark.conf.set("spark.graft.topkRewrite.enabled", "true")
+    val expected = reference(data.withColumn("rn", row_number().over(w))
+      .filter($"rn" <= 5 && $"id" % 2 === 0)
+      .select("k", "id", "score"))(_.as[(Long, Long, Long)].collect().toSet)
     assert(df.as[(Long, Long, Long)].collect().toSet == expected)
     // two rank bounds take the tightest; rank referenced by the residual
     // (rn % 2 = 0 is not a bare bound) must keep the window
@@ -221,10 +223,7 @@ class TopKRewriteSpec extends SparkTestBase {
           base.withColumn("r", r).filter(cond).select("k", "id", "score")
         }
         val got = build().as[(Long, Long, Long)].collect().sorted.toSeq
-        spark.conf.set("spark.graft.topkRewrite.enabled", "false")
-        val expected =
-          try build().as[(Long, Long, Long)].collect().sorted.toSeq
-          finally spark.conf.set("spark.graft.topkRewrite.enabled", "true")
+        val expected = reference(build())(_.as[(Long, Long, Long)].collect().sorted.toSeq)
         assert(got == expected,
           s"rewrite changed results for shape (rows=$nRows keys=$nKeys " +
             s"scores=$nScores rank=$useRank agg=$aggr tie=$withTie " +
